@@ -71,9 +71,14 @@ object Bench {
     // column and elide final sorts, timing a different (cheaper) plan.
     def exec(name: String): Double = {
       val t0 = System.nanoTime()
+      // NonFatal only: after an OOM the JVM is not fit to time anything
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
 

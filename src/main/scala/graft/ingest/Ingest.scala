@@ -145,7 +145,7 @@ object Ingest {
     // idiom) published with the layout — without it, a caller reusing
     // an outDir with a different source file silently got the previous
     // run's routing (r13 ADVICE).
-    val inputKey = graft.ops.Partitioned.sourceKey(Seq(path))
+    val inputKey = graft.ops.Staged.sourceKey(Seq(path))
     val keyFile = "_graft_input_key"
     def publishedKey(): Option[String] = {
       val kp = new org.apache.hadoop.fs.Path(s"$outDir/$keyFile")
@@ -158,10 +158,10 @@ object Ingest {
       }
     }
     def complete() = Seq("staging", "clean", "quarantine")
-      .forall(p => graft.ops.Partitioned.successExists(s, s"$outDir/$p")) &&
+      .forall(p => graft.ops.Staged.successExists(s, s"$outDir/$p")) &&
       publishedKey().contains(inputKey)
     if (!complete()) {
-      graft.ops.Partitioned.buildAtomically(s, outDir, () => complete()) { tmp =>
+      graft.ops.Staged.buildAtomically(s, outDir, () => complete()) { tmp =>
         val staging = s"$tmp/staging"
         s.read.text(path)
           .select(col("value"), reason.as("reason"))

@@ -10,7 +10,23 @@ import graft.ingest.{Ingest, PPComplete}
   */
 object IngestQueries {
 
-  val fixturePath = "/root/repo/src/test/resources/pp_complete.csv"
+  /** The fixture directory of the checkout this code was compiled in:
+    * the first ancestor of the class location
+    * (`<checkout>/target/scala-2.13/classes`) holding
+    * `src/test/resources`, else the one under the working directory.
+    * The engine and its DuckDB oracles read the same absolute files.
+    */
+  private val fixtureDir: String = {
+    val classes = java.nio.file.Paths.get(
+      getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    Iterator.iterate(classes)(_.getParent).takeWhile(_ != null)
+      .map(_.resolve("src/test/resources"))
+      .find(java.nio.file.Files.isDirectory(_))
+      .getOrElse(java.nio.file.Paths.get("src/test/resources").toAbsolutePath)
+      .toString
+  }
+
+  val fixturePath = s"$fixtureDir/pp_complete.csv"
 
   /** Headerless all-string scan → positional names → strict timestamp.
     * Empty fields stay '' (never NULL); `\N` is the only NULL token.
@@ -71,7 +87,7 @@ object IngestQueries {
     * query goes through UrlCsvSource and q_ingest_pp keeps the
     * all-quoted fixture.
     */
-  val unquotedFixturePath = "/root/repo/src/test/resources/pp_complete_unquoted.csv"
+  val unquotedFixturePath = s"$fixtureDir/pp_complete_unquoted.csv"
 
   val qUrlSourceUnquoted = Q(
     "q_url_source_unquoted",
@@ -106,7 +122,7 @@ object IngestQueries {
     * comma-free dialect — the contract that makes the oracle's
     * line-split replay exact (see [[graft.ingest.Ingest.quarantineIngest]]).
     */
-  val quarantineFixturePath = "/root/repo/src/test/resources/pp_complete_quarantine.csv"
+  val quarantineFixturePath = s"$fixtureDir/pp_complete_quarantine.csv"
 
   /** E9 (r12) — quarantine ingest, VERDICT r11 #3: run the
     * classify-and-route pipeline, then read the VERDICTS BACK FROM THE
@@ -142,17 +158,6 @@ object IngestQueries {
              ORDER BY transaction_unique_id, reason""")
   )
 
-  /** Content-keyed location for the JSONL copy of `documents` (the
-    * [[Partitioned]] layout-reuse pattern: written once per sf dir,
-    * reused across Bench's three passes). */
-  private def jsonlDir(d: String): String = {
-    val f = java.nio.file.Paths.get(s"$d/documents.parquet")
-    val sig =
-      s"$f:${java.nio.file.Files.size(f)}:${java.nio.file.Files.getLastModifiedTime(f).toMillis}"
-    s"${System.getProperty("java.io.tmpdir")}/graft_docs_jsonl_" +
-      Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(sig))
-  }
-
   /** E9 — JSONL source+sink round-trip. JSON Lines is the de-facto LLM
     * corpus interchange format; this query writes `documents` as
     * gzipped JSONL and reads it back with an EXPLICIT schema (schema
@@ -167,10 +172,9 @@ object IngestQueries {
   val qJsonlRoundtrip = Q(
     "q_jsonl_roundtrip",
     (s, d) => {
-      val out = jsonlDir(d)
-      if (!Partitioned.successExists(s, out))
-        Tables.documents(s, d)
-          .write.mode("overwrite").option("compression", "gzip").json(out)
+      val out = Staged.layout(s, "docs_jsonl", Seq(s"$d/documents.parquet")) { tmp =>
+        Tables.documents(s, d).write.option("compression", "gzip").json(tmp)
+      }
       s.read
         .schema(Tables.documents(s, d).schema) // explicit: no inference scan
         .json(out)
@@ -179,16 +183,6 @@ object IngestQueries {
     },
     Some("SELECT doc_id, lang, n_chars, text FROM documents ORDER BY doc_id")
   )
-
-  /** Content-keyed location for the ORC copy (same layout-reuse pattern
-    * as [[jsonlDir]]). */
-  private def orcDir(d: String): String = {
-    val f = java.nio.file.Paths.get(s"$d/events.parquet")
-    val sig =
-      s"$f:${java.nio.file.Files.size(f)}:${java.nio.file.Files.getLastModifiedTime(f).toMillis}"
-    s"${System.getProperty("java.io.tmpdir")}/graft_events_orc_" +
-      Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(sig))
-  }
 
   /** E9 — ORC source+sink round-trip, the columnar-interchange twin of
     * [[qJsonlRoundtrip]]: `events` written as zlib ORC and read back.
@@ -206,10 +200,9 @@ object IngestQueries {
   val qOrcRoundtrip = Q(
     "q_orc_roundtrip",
     (s, d) => {
-      val out = orcDir(d)
-      if (!Partitioned.successExists(s, out))
-        Tables.events(s, d)
-          .write.mode("overwrite").option("compression", "zlib").orc(out)
+      val out = Staged.layout(s, "events_orc", Seq(s"$d/events.parquet")) { tmp =>
+        Tables.events(s, d).write.option("compression", "zlib").orc(tmp)
+      }
       s.read
         .orc(out) // self-describing columnar schema — no inference scan
         .where(col("event_type") === "click")
@@ -219,12 +212,6 @@ object IngestQueries {
     Some("""SELECT event_id, ts, user_id, value FROM events
             WHERE event_type = 'click' ORDER BY event_id""")
   )
-
-  /** Content-keyed location for the Avro copy (same layout-reuse
-    * pattern as [[jsonlDir]]/[[orcDir]]). */
-  private def avroDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_events_avro_" +
-      Partitioned.sourceKey(Seq(s"$d/events.parquet"))
 
   /** E9 — AVRO source+sink round-trip, the ROW-MAJOR interchange twin
     * of [[qOrcRoundtrip]]: `events` written as deflate Avro container
@@ -244,9 +231,9 @@ object IngestQueries {
   val qAvroRoundtrip = Q(
     "q_avro_roundtrip",
     (s, d) => {
-      val out = avroDir(d)
-      if (!Partitioned.successExists(s, out))
-        graft.sources.AvroIo.write(Tables.events(s, d), out)
+      val out = Staged.layout(s, "events_avro", Seq(s"$d/events.parquet")) { tmp =>
+        graft.sources.AvroIo.write(Tables.events(s, d), tmp)
+      }
       s.read
         .format(graft.sources.AvroSource.Name)
         .option("path", out)

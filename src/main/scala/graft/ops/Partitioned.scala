@@ -19,107 +19,8 @@ import org.apache.spark.sql.functions._
   */
 object Partitioned {
 
-  /** Cache key for a derived layout: the SOURCE PATH plus the source
-    * file's size and mtime — regenerated testdata at the same path gets
-    * a fresh key, so a stale /tmp layout from a previous corpus can
-    * never serve (it would silently diverge from the oracle, which
-    * always reads the live file). Full md5 of the signature, not a
-    * 32-bit hash: at 2³² a birthday collision between two corpora is a
-    * real hazard for a shared tmpdir, and a collision here silently
-    * serves the WRONG index.
-    */
-  private[graft] def sourceKey(paths: Seq[String]): String = {
-    val sig = paths.map { p =>
-      val f = java.nio.file.Paths.get(p)
-      val (sz, mt) =
-        if (java.nio.file.Files.exists(f))
-          (java.nio.file.Files.size(f), java.nio.file.Files.getLastModifiedTime(f).toMillis)
-        else (0L, 0L)
-      s"$p:$sz:$mt"
-    }.mkString("|")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(sig.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
-  /** Multi-file layout builds are NOT atomic by default: a concurrent
-    * builder of the same key (or a crash between part writes) could
-    * leave a partially-overwritten layout whose parts disagree. This
-    * helper gives the standard fix — build every part under a private
-    * temp dir, then RENAME the whole dir into place (one FS metadata op
-    * on a local/HDFS filesystem); a racer that finds the target already
-    * renamed discards its own build. Readers therefore only ever see a
-    * complete layout or none.
-    *
-    * `complete` is the caller's layout-completeness predicate (defaults
-    * to a top-level `_SUCCESS` probe; multi-part layouts pass their own
-    * all-parts check). A pre-existing target is deleted ONLY while it
-    * is known-incomplete (a crashed earlier build) — a PUBLISHED layout
-    * is never deleted, so a concurrent reader of the live path cannot
-    * hit missing files mid-swap.
-    *
-    * Race handling is Hadoop-rename-aware: `fs.rename(tmp, out)` onto
-    * an EXISTING directory does not refuse — HDFS (and the local FS's
-    * copy fallback) moves tmp INTO the target as a child and returns
-    * true, which would silently nest a loser's full duplicate build
-    * inside the published layout (duplicate rows on recursive
-    * listings). So a racer (1) re-checks completeness immediately
-    * before renaming and discards its tmp if a winner is already in
-    * place, and (2) after a "successful" rename verifies that
-    * `out/<tmp-basename>` does NOT exist — if it does, the rename was
-    * actually a nest-into-winner, so the nested copy is deleted and
-    * the race treated as lost. A rename failure with a complete winner
-    * in place is likewise a lost race (discard tmp); a rename failure
-    * with NO winner throws instead of silently returning a path that
-    * doesn't exist.
-    */
-  private[graft] def buildAtomically(s: SparkSession, out: String,
-      complete: () => Boolean = null)(
-      build: String => Unit): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val outPath = new org.apache.hadoop.fs.Path(out)
-    val fs = outPath.getFileSystem(conf)
-    val isComplete: () => Boolean =
-      if (complete != null) complete else () => successExists(s, out)
-    val tmp = new org.apache.hadoop.fs.Path(
-      out + ".build-" + java.util.UUID.randomUUID().toString)
-    build(tmp.toString)
-    if (fs.exists(outPath) && !isComplete()) fs.delete(outPath, true)
-    // lost-race fast path: a complete winner published while we built
-    if (isComplete()) { fs.delete(tmp, true); return }
-    if (!fs.rename(tmp, outPath)) {
-      fs.delete(tmp, true)
-      if (!isComplete())
-        throw new java.io.IOException(
-          s"atomic publish of $out failed: rename refused and no complete layout occupies the target")
-    } else {
-      // rename returned true — but if a winner appeared between the
-      // completeness check and the rename, Hadoop moved tmp INTO it as
-      // a child rather than refusing. Detect and discard the nested
-      // duplicate; the winner's layout stays published.
-      val nested = new org.apache.hadoop.fs.Path(outPath, tmp.getName)
-      if (fs.exists(nested)) fs.delete(nested, true)
-      if (!isComplete())
-        throw new java.io.IOException(
-          s"atomic publish of $out failed: rename landed but the layout is incomplete")
-    }
-  }
-
-  /** Cached-layout guard through the HADOOP FileSystem, not java.io —
-    * on any non-local deployment (the object-store layouts these
-    * queries model) a `java.io.File` check always misses, silently
-    * rewriting the layout on every invocation. Same FS resolution as
-    * the writes/listings it guards.
-    */
-  private[graft] def successExists(s: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Per-source location for the partitioned copy (content-keyed — see
-    * [[sourceKey]]; sf0.01 verify and sf0.1 bench never collide either).
-    */
-  private def layoutDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_events_by_day_${sourceKey(Seq(s"$d/events.parquet"))}"
+  /** The source every events-derived layout here is keyed on. */
+  private def eventsSrc(d: String): Seq[String] = Seq(s"$d/events.parquet")
 
   /** Date-partitioned copy of events, written once per sf dir (reused on
     * later calls — Bench invokes each query three times). The write is a
@@ -127,15 +28,12 @@ object Partitioned {
     * maintain this layout in production; the read back is a partitioned
     * scan whose `day` column comes from directory names, not file data.
     */
-  def eventsByDay(s: SparkSession, d: String): DataFrame = {
-    val out = layoutDir(d)
-    if (!successExists(s, out)) {
+  def eventsByDay(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Staged.layout(s, "events_by_day", eventsSrc(d)) { tmp =>
       Tables.events(s, d)
         .withColumn("day", to_date(col("ts")))
-        .write.mode("overwrite").partitionBy("day").parquet(out)
-    }
-    s.read.parquet(out)
-  }
+        .write.partitionBy("day").parquet(tmp)
+    })
 
   /** One-day slice of the partitioned layout: the scan must prune to the
     * single `day=2024-01-15` directory (29 of 30 partitions never
@@ -164,9 +62,9 @@ object Partitioned {
     * dir (the one-shot layout job), read back through the catalog.
     */
   private def bucketedDb(s: SparkSession, d: String): String = {
-    // content-keyed like layoutDir: regenerated source tables get a new
-    // database, never a stale bucketed copy
-    val db = "graft_bkt_" + sourceKey(Seq(s"$d/lineitem.parquet", s"$d/orders.parquet"))
+    // content-keyed like a staged layout: regenerated source tables get
+    // a new database, never a stale bucketed copy
+    val db = "graft_bkt_" + Staged.sourceKey(Seq(s"$d/lineitem.parquet", s"$d/orders.parquet"))
     if (!s.catalog.databaseExists(db)) {
       // a crashed previous run can leave the warehouse dir without the
       // catalog entry — clear it before CREATE. Resolve the REAL
@@ -225,14 +123,16 @@ object Partitioned {
     * thing that kills scan throughput at 100 TB (every file is a task +
     * a footer read + an object-store GET).
     */
-  private[ops] def smallFilesDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_lineitem_small_${sourceKey(Seq(s"$d/lineitem.parquet"))}"
+  private[ops] def smallFiles(s: SparkSession, d: String): String =
+    Staged.layout(s, "lineitem_small", Seq(s"$d/lineitem.parquet")) { tmp =>
+      Tables.lineitem(s, d).repartition(64).write.parquet(tmp)
+    }
 
   /** Output location for the compacted copy (overwritten every run —
     * the compaction IS the operator under test, unlike the cached input
     * layout above). */
   private[ops] def compactedDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_lineitem_compacted_${sourceKey(Seq(s"$d/lineitem.parquet"))}"
+    Staged.path("lineitem_compacted", Seq(s"$d/lineitem.parquet"))
 
   /** Target compacted-file payload. 4 MiB here so the test corpora
     * actually produce a multi-file range layout; a production lake sets
@@ -256,10 +156,7 @@ object Partitioned {
   val qCompact = Q(
     "q_compact",
     (s, d) => {
-      val small = smallFilesDir(d)
-      if (!successExists(s, small))
-        Tables.lineitem(s, d).repartition(64)
-          .write.mode("overwrite").parquet(small)
+      val small = smallFiles(s, d)
       val targetBytes = s.conf.getOption(COMPACT_TARGET_BYTES_CONF)
         .map(_.toLong).getOrElse(4L << 20)
       // Hadoop FS, not java.io: on a cluster this path is object storage
@@ -295,42 +192,36 @@ object Partitioned {
   // column; the manifest prunes on any clustered column at FILE
   // granularity without moving data into directories.
 
-  private[ops] def eventsClusteredDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_events_clustered_${sourceKey(Seq(s"$d/events.parquet"))}"
+  // `m1`: manifest rows name files relative to the layout root
+  private val ClusteredName = "events_clustered_m1"
 
   private[ops] def manifestDir(layout: String): String = s"$layout/_graft_manifest"
 
   /** ts-range-clustered events copy (16 files, disjoint ts ranges) plus
     * its stats manifest: one row per data file with min/max ts, row
     * count, and null count. The manifest is built from the written
-    * files themselves (group by `input_file_name`), so it can never
-    * disagree with the data; it is file-count-sized — at 100 TB that is
-    * ~400k rows of metadata, which is exactly what Delta checkpoints /
-    * Iceberg manifest files hold. Written once per sf dir (guarded like
-    * every cached layout here).
+    * files themselves (group by `input_file_name`, recorded as the file
+    * name relative to the layout root), so it can never disagree with
+    * the data; it is file-count-sized — at 100 TB that is ~400k rows of
+    * metadata, which is exactly what Delta checkpoints / Iceberg
+    * manifest files hold. Staged once per sf dir.
     */
-  def eventsClustered(s: SparkSession, d: String): String = {
-    val out = eventsClusteredDir(d)
-    // guard on the MANIFEST's _SUCCESS — it is written last, so a crash
-    // between the data write and the stats build can never leave a
-    // guard-passing layout with no (or stale) manifest
-    if (!successExists(s, manifestDir(out))) {
+  def eventsClustered(s: SparkSession, d: String): String =
+    Staged.layout(s, ClusteredName, eventsSrc(d)) { tmp =>
       Tables.events(s, d)
         .repartitionByRange(16, col("ts"))
         .sortWithinPartitions("ts")
-        .write.mode("overwrite").parquet(out)
-      s.read.parquet(out)
-        .groupBy(input_file_name().as("file"))
+        .write.parquet(tmp)
+      s.read.parquet(tmp)
+        .groupBy(substring_index(input_file_name(), "/", -1).as("file"))
         .agg(
           min(col("ts")).as("ts_min"),
           max(col("ts")).as("ts_max"),
           count(lit(1)).as("n_rows"),
           count(when(col("ts").isNull, 1)).as("n_null_ts"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(manifestDir(out))
+        .write.parquet(manifestDir(tmp))
     }
-    out
-  }
 
   /** Plan-time file pruning: keep a data file iff its [ts_min, ts_max]
     * intersects [lo, hi) — or it holds null ts rows and the predicate
@@ -360,7 +251,7 @@ object Partitioned {
       val mn = r.getAs[Any]("ts_min")
       val mx = r.getAs[Any]("ts_max")
       mn != null && mx != null && micros(mx) >= loU && micros(mn) < hiU
-    }.map(_.getAs[String]("file")).toSeq
+    }.map(r => s"$layout/${r.getAs[String]("file")}").toSeq
     val base = Tables.normalizeTs(
       if (selected.isEmpty)
         s.read.parquet(layout).limit(0) // schema-preserving empty relation
@@ -408,9 +299,6 @@ object Partitioned {
   // working for layouts with no bucket discipline at all.
   // ---------------------------------------------------------------------
 
-  private def eventsBloomDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_events_bloom_${sourceKey(Seq(s"$d/events.parquet"))}"
-
   private val BloomK = 6 // double-hashed probes per key
   private val BloomSeed1 = 0x9e3779b9L
   private val BloomSeed2 = 0x85ebca6bL
@@ -431,7 +319,8 @@ object Partitioned {
 
   /** Two-epoch bucketed layout (8-way then 16-way by user_id over the
     * event_id halves) plus its Bloom manifest: one row per (file, word)
-    * with the OR of the 64-bit word's set bits — built as one
+    * with the OR of the 64-bit word's set bits, the file named relative
+    * to the layout root (`epoch=N/part-…`) — built as one
     * explode + groupBy over the written files themselves (never
     * disagreeing with the data), file-count × m/64 rows of metadata.
     * One GLOBAL m, sized to the largest file (next power of two of
@@ -439,30 +328,28 @@ object Partitioned {
     * same for every file and the probe reads k pushdown-filtered
     * manifest rows per file instead of the whole manifest.
     */
-  private[ops] def eventsBloomLayout(s: SparkSession, d: String): String = {
-    val out = eventsBloomDir(d)
-    if (!successExists(s, manifestDir(out))) {
+  private[ops] def eventsBloomLayout(s: SparkSession, d: String): String =
+    // `m1`: manifest rows name files relative to the layout root
+    Staged.layout(s, "events_bloom_m1", eventsSrc(d), Seq("_graft_manifest/_SUCCESS")) { tmp =>
       val ev = Tables.events(s, d)
       val mid = ev.agg(max(col("event_id"))).head().getLong(0) / 2
       ev.where(col("event_id") <= mid).repartition(8, col("user_id"))
-        .write.mode("overwrite").parquet(s"$out/epoch=1")
+        .write.parquet(s"$tmp/epoch=1")
       ev.where(col("event_id") > mid).repartition(16, col("user_id"))
-        .write.mode("overwrite").parquet(s"$out/epoch=2")
-      val data = s.read.parquet(out)
+        .write.parquet(s"$tmp/epoch=2")
+      val data = s.read.parquet(tmp)
       val maxRows = data.groupBy(input_file_name()).count()
         .agg(max(col("count"))).head().getLong(0)
       val m = java.lang.Long.highestOneBit(math.max(64L, 8L * maxRows) * 2 - 1)
       data
-        .select(input_file_name().as("file"),
+        .select(substring_index(input_file_name(), "/", -2).as("file"),
           explode(array(bloomPositions(col("user_id"), m): _*)).as("pos"))
         .groupBy(col("file"), (col("pos") / 64).cast("long").as("word"))
         .agg(bit_or(expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))")).as("bits"))
         .withColumn("bloom_m", lit(m))
         .coalesce(1)
-        .write.mode("overwrite").parquet(manifestDir(out))
+        .write.parquet(manifestDir(tmp))
     }
-    out
-  }
 
   /** Plan-time Bloom pruning for `user_id = user`: evaluate the SAME
     * position expression the build used (driver-side, one-row plan),
@@ -489,7 +376,7 @@ object Partitioned {
       .groupBy(_.getAs[String]("file"))
       .view.mapValues(_.map(r => r.getAs[Long]("word") -> r.getAs[Long]("bits")).toMap)
     // the file universe comes from the manifest (its keys are the
-    // input_file_name URIs the build recorded — the readable truth),
+    // root-relative file names the build recorded — the readable truth),
     // one pushdown-pruned column read, file-count-sized after distinct
     val total = s.read.parquet(manifest).select("file").distinct()
       .collect().map(_.getString(0)).toSeq.sorted
@@ -499,7 +386,7 @@ object Partitioned {
     }
     val base =
       if (selected.isEmpty) s.read.parquet(layout).limit(0)
-      else s.read.parquet(selected: _*)
+      else s.read.parquet(selected.map(f => s"$layout/$f"): _*)
     (Tables.normalizeTs(base).where(col("user_id") === lit(user)),
       selected.size, total.size)
   }
@@ -528,19 +415,19 @@ object Partitioned {
   // snapshot versioning (time travel)
   // ---------------------------------------------------------------------
 
-  // the `m2` tag names the MANIFEST FORMAT (full file list per version,
-  // Iceberg-style) — bumping it on a format change invalidates cached
-  // layouts written under the old reader contract
-  private def versionedDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_events_versioned_m2_${sourceKey(Seq(s"$d/events.parquet"))}"
-
-  private def listParquet(s: SparkSession, dir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+  /** The parquet files directly under `root/sub`, sorted, as
+    * `sub/<name>` paths relative to `root` — the form every manifest
+    * here records (Delta's convention), because a staged layout is
+    * built under a directory that is renamed when it publishes.
+    */
+  private def listParquet(s: SparkSession, root: String, sub: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(s"$root/$sub")
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq
-      .map(_.getPath.toString)
+      .map(_.getPath.getName)
       .filter(_.endsWith(".parquet"))
+      .map(n => s"$sub/$n")
       .sorted
   }
 
@@ -559,41 +446,44 @@ object Partitioned {
     * the table, and every earlier version stays byte-identical on disk.
     */
   private[ops] def eventsVersioned(s: SparkSession, d: String): String =
-    buildVersioned(s, d, versionedDir(d), withCompaction = false)
+    // the `m3` tag (here and on the vacuum layout) names the MANIFEST
+    // FORMAT (full file list per version, Iceberg-style, root-relative
+    // names) — bumping it on a format change invalidates cached layouts
+    // written under the old reader contract
+    Staged.layout(s, "events_versioned_m3", eventsSrc(d), Seq("_graft_versions/_SUCCESS"))(
+      buildVersioned(s, d, _, withCompaction = false))
 
+  /** Write the versioned layout under `root`; its manifest names files
+    * relative to `root`. */
   private[ops] def buildVersioned(
-      s: SparkSession, d: String, root: String, withCompaction: Boolean): String = {
+      s: SparkSession, d: String, root: String, withCompaction: Boolean): Unit = {
     val data = s"$root/data"
-    val mdir = s"$root/_graft_versions"
-    if (!successExists(s, mdir)) {
-      val ev = Tables.events(s, d)
-      ev.where(col("event_id") % 10 < 8)
-        .repartitionByRange(8, col("event_id"))
-        .write.mode("overwrite").parquet(data)
-      val v1 = listParquet(s, data)
-      ev.where(col("event_id") % 10 >= 8)
-        .repartition(2) // batch-sized shuffle: the append costs the batch
-        .write.mode("append").parquet(data)
-      val v2 = listParquet(s, data)
-      // v3 (vacuum lifecycle only): COMPACTION commit — rewrite the head
-      // into 2 range-clustered files; the new manifest lists ONLY them,
-      // retiring every v1/v2 file from the head without touching bytes
-      val v3 =
-        if (!withCompaction) Seq.empty
-        else {
-          Tables.normalizeTs(s.read.parquet(v2: _*))
-            .repartitionByRange(2, col("event_id"))
-            .sortWithinPartitions("event_id")
-            .write.mode("append").parquet(data)
-          listParquet(s, data).filterNot(v2.toSet)
-        }
-      import s.implicits._
-      (v1.map(f => (f, 1)) ++ v2.map(f => (f, 2)) ++ v3.map(f => (f, 3)))
-        .toDF("file", "version")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(mdir)
-    }
-    root
+    val ev = Tables.events(s, d)
+    ev.where(col("event_id") % 10 < 8)
+      .repartitionByRange(8, col("event_id"))
+      .write.mode("overwrite").parquet(data)
+    val v1 = listParquet(s, root, "data")
+    ev.where(col("event_id") % 10 >= 8)
+      .repartition(2) // batch-sized shuffle: the append costs the batch
+      .write.mode("append").parquet(data)
+    val v2 = listParquet(s, root, "data")
+    // v3 (vacuum lifecycle only): COMPACTION commit — rewrite the head
+    // into 2 range-clustered files; the new manifest lists ONLY them,
+    // retiring every v1/v2 file from the head without touching bytes
+    val v3 =
+      if (!withCompaction) Seq.empty
+      else {
+        Tables.normalizeTs(s.read.parquet(v2.map(f => s"$root/$f"): _*))
+          .repartitionByRange(2, col("event_id"))
+          .sortWithinPartitions("event_id")
+          .write.mode("append").parquet(data)
+        listParquet(s, root, "data").filterNot(v2.toSet)
+      }
+    import s.implicits._
+    (v1.map(f => (f, 1)) ++ v2.map(f => (f, 2)) ++ v3.map(f => (f, 3)))
+      .toDF("file", "version")
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$root/_graft_versions")
   }
 
   /** Snapshot read AS OF `version`: the visible file set is a manifest
@@ -607,7 +497,7 @@ object Partitioned {
       .where(col("version") === version)
       .collect().map(_.getAs[String]("file")).toSeq.sorted
     require(files.nonEmpty, s"no files visible at version $version")
-    Tables.normalizeTs(s.read.parquet(files: _*))
+    Tables.normalizeTs(s.read.parquet(files.map(f => s"$root/$f"): _*))
   }
 
   /** VACUUM: physically delete every data file not visible at any
@@ -620,17 +510,16 @@ object Partitioned {
     * reclaims. Returns (files before, files after).
     */
   def vacuum(s: SparkSession, root: String, horizon: Int): (Int, Int) = {
-    val data = s"$root/data"
     val keep = s.read.parquet(s"$root/_graft_versions")
       .where(col("version") >= horizon)
       .collect().map(_.getAs[String]("file")).toSet
     require(keep.nonEmpty, s"vacuum horizon $horizon would empty the table")
-    val all = listParquet(s, data)
-    val fs = new org.apache.hadoop.fs.Path(data)
+    val all = listParquet(s, root, "data")
+    val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     all.filterNot(keep).foreach(f =>
-      fs.delete(new org.apache.hadoop.fs.Path(f), false))
-    (all.size, listParquet(s, data).size)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$root/$f"), false))
+    (all.size, listParquet(s, root, "data").size)
   }
 
   /** Per-type stats of the VERSION-1 snapshot, read while the v2 append
@@ -660,9 +549,6 @@ object Partitioned {
             ORDER BY event_type""")
   )
 
-  private def vacuumDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_events_vacuum_m2_${sourceKey(Seq(s"$d/events.parquet"))}"
-
   /** The full lake-maintenance LIFECYCLE on its own layout copy (so
     * [[qTimeTravel]]'s history stays intact): initial load (v1) →
     * append (v2) → compaction commit (v3, head rewritten into 2 files,
@@ -675,7 +561,8 @@ object Partitioned {
     * collapse, sub-horizon read failure, and vacuum idempotence).
     */
   private[ops] def vacuumedLayout(s: SparkSession, d: String): String =
-    buildVersioned(s, d, vacuumDir(d), withCompaction = true)
+    Staged.layout(s, "events_vacuum_m3", eventsSrc(d), Seq("_graft_versions/_SUCCESS"))(
+      buildVersioned(s, d, _, withCompaction = true))
 
   val qVacuum = Q(
     "q_vacuum",
@@ -697,9 +584,6 @@ object Partitioned {
             ORDER BY event_type""")
   )
 
-  private def evolvedDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_events_evolved_m1_${sourceKey(Seq(s"$d/events.parquet"))}"
-
   /** SCHEMA EVOLUTION read — the lake reality that a long-lived table's
     * files do not share one schema: the early batch was written before
     * the `value` column existed, the later batch carries it. Spark's
@@ -717,17 +601,16 @@ object Partitioned {
     * hash-verifies both the union schema and the null-filling.
     */
   private[ops] def eventsEvolved(s: SparkSession, d: String): DataFrame = {
-    val out = evolvedDir(d)
-    if (!successExists(s, out)) {
+    val out = Staged.layout(s, "events_evolved_m1", eventsSrc(d)) { tmp =>
       val ev = Tables.events(s, d)
       // old batch: written before `value` existed
       ev.where(col("event_id") % 10 < 8)
         .select("event_id", "user_id", "event_type", "ts")
-        .write.mode("overwrite").parquet(out)
+        .write.parquet(tmp)
       // new batch: schema grew; append files carry the extra column
       ev.where(col("event_id") % 10 >= 8)
         .select("event_id", "user_id", "event_type", "ts", "value")
-        .write.mode("append").parquet(out)
+        .write.mode("append").parquet(tmp)
     }
     Tables.normalizeTs(s.read.option("mergeSchema", "true").parquet(out))
   }
@@ -910,8 +793,6 @@ object Partitioned {
   // deletion vectors (merge-on-read row-level delete)
   // ---------------------------------------------------------------------
 
-  private def dvDir(d: String): String = s"${eventsClusteredDir(d)}_dv"
-
   /** Build the deletion-vector side table for the clustered events
     * layout: the positions — (file, row_index), NO payload columns — of
     * every row hit by the delete predicate (user_id % 10 = 3, the
@@ -922,12 +803,13 @@ object Partitioned {
     * (PartitionedSpec asserts byte-identical listings) — that is the
     * merge-on-read trade: delete commits cost O(deleted positions), the
     * debt is paid at read time until the next compaction rewrite
-    * ([[qCompact]]) folds the DVs in.
+    * ([[qCompact]]) folds the DVs in. The positions name the clustered
+    * layout's files by their published paths, so the DV table is staged
+    * under the clustered layout's name.
     */
   private[ops] def buildDeletionVectors(s: SparkSession, d: String): (String, String) = {
     val layout = eventsClustered(s, d)
-    val dv = dvDir(d)
-    if (!successExists(s, dv)) {
+    val dv = Staged.layout(s, s"${ClusteredName}_dv", eventsSrc(d)) { tmp =>
       s.read.parquet(layout)
         .select(
           col("_metadata.file_path").as("file"),
@@ -936,7 +818,7 @@ object Partitioned {
         .where(col("user_id") % 10 === 3)
         .select("file", "pos")
         .coalesce(1)
-        .write.mode("overwrite").parquet(dv)
+        .write.parquet(tmp)
     }
     (layout, dv)
   }
@@ -974,8 +856,6 @@ object Partitioned {
             ORDER BY event_id""")
   )
 
-  private def dvCompactDir(d: String): String = s"${eventsClusteredDir(d)}_dvc"
-
   /** DV FOLD-IN COMPACTION (r7) — the maintenance op that PAYS the
     * merge-on-read debt [[qDeletionVectors]] takes on: survivors (base
     * anti DV) rewritten into 4 ts-range-clustered files; after the
@@ -989,9 +869,8 @@ object Partitioned {
     * oracle verbatim — the hash match proves the fold preserved every
     * surviving row.
     */
-  private[ops] def dvCompactedLayout(s: SparkSession, d: String): String = {
-    val out = dvCompactDir(d)
-    if (!successExists(s, out)) {
+  private[ops] def dvCompactedLayout(s: SparkSession, d: String): String =
+    Staged.layout(s, s"${ClusteredName}_dvc", eventsSrc(d)) { tmp =>
       val (layout, dv) = buildDeletionVectors(s, d)
       val dvDf = s.read.parquet(dv)
       s.read.parquet(layout)
@@ -1001,10 +880,8 @@ object Partitioned {
         .drop("file", "pos")
         .repartitionByRange(4, col("ts"))
         .sortWithinPartitions("ts")
-        .write.mode("overwrite").parquet(out)
+        .write.parquet(tmp)
     }
-    out
-  }
 
   val qDvCompact = Q(
     "q_dv_compact",
@@ -1088,7 +965,8 @@ object Partitioned {
     }
   }
 
-  private def commitLogDir(root: String): String = s"$root/_graft_log"
+  private val CommitLog = "_graft_log"
+  private def commitLogDir(root: String): String = s"$root/$CommitLog"
   private def versionFile(logDir: String, v: Int): String =
     f"$logDir/v$v%05d.txt"
 
@@ -1335,9 +1213,6 @@ object Partitioned {
       s"rewrite of ${retired.size}→${produced.size} files lost $maxAttempts CAS races in $logDir")
   }
 
-  private def ccCommitDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_events_cc_commit_${sourceKey(Seq(s"$d/events.parquet"))}"
-
   /** The declared layout: base load committed as v1, then TWO WRITERS
     * on real threads race to append the held-out rows (split by parity)
     * through [[commitAppend]] — whichever loses the v2 CAS rebases and
@@ -1350,49 +1225,34 @@ object Partitioned {
     * of exactly-once: a lost commit drops rows, a double-applied one
     * doubles them, and either breaks the hash.
     */
-  private[ops] def concurrentCommitLayout(s: SparkSession, d: String): String = {
-    val root = ccCommitDir(d)
+  private[ops] def concurrentCommitLayout(s: SparkSession, d: String): String =
     // completeness = the v3 manifest exists (base + two racing appends);
     // version files publish atomically LAST per commit, so this is the
     // layout's _SUCCESS analogue
-    def complete() = {
-      val p = new org.apache.hadoop.fs.Path(versionFile(commitLogDir(root), 3))
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-    }
-    if (!complete()) {
-      buildAtomically(s, root, () => complete()) { tmp =>
-        val log = commitLogDir(tmp)
-        val ev = Tables.events(s, d)
-        // manifests record TABLE-RELATIVE paths (Delta's convention):
-        // the layout publishes by directory rename, so absolute paths
-        // staged under the build dir would go stale at publish
-        def rel(sub: String): Seq[String] =
-          listParquet(s, s"$tmp/$sub")
-            .map(f => sub + "/" + f.substring(f.lastIndexOf('/') + 1))
-        ev.where(col("event_id") % 10 < 8)
-          .repartitionByRange(8, col("event_id"))
-          .write.mode("overwrite").parquet(s"$tmp/base")
-        require(commitAppend(s, log, rel("base")) == 1)
-        val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-        val writers = Seq(("a", 0), ("b", 1)).map { case (nm, par) =>
-          new Thread(() => {
-            try {
-              ev.where(col("event_id") % 10 >= 8 && col("event_id") % 2 === par)
-                .repartition(2) // batch-sized shuffle: a commit costs the batch
-                .write.mode("overwrite").parquet(s"$tmp/batch_$nm")
-              commitAppend(s, log, rel(s"batch_$nm"))
-            } catch { case t: Throwable => failures.add(t) }
-          }, s"graft-cc-writer-$nm")
-        }
-        writers.foreach(_.start())
-        writers.foreach(_.join())
-        if (!failures.isEmpty) throw failures.peek()
-        require(headVersion(s, log) == 3,
-          s"two racing appends over v1 must land v2 and v3, got head ${headVersion(s, log)}")
+    Staged.layout(s, "events_cc_commit", eventsSrc(d), Seq(versionFile(CommitLog, 3))) { tmp =>
+      val log = commitLogDir(tmp)
+      val ev = Tables.events(s, d)
+      ev.where(col("event_id") % 10 < 8)
+        .repartitionByRange(8, col("event_id"))
+        .write.mode("overwrite").parquet(s"$tmp/base")
+      require(commitAppend(s, log, listParquet(s, tmp, "base")) == 1)
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val writers = Seq(("a", 0), ("b", 1)).map { case (nm, par) =>
+        new Thread(() => {
+          try {
+            ev.where(col("event_id") % 10 >= 8 && col("event_id") % 2 === par)
+              .repartition(2) // batch-sized shuffle: a commit costs the batch
+              .write.mode("overwrite").parquet(s"$tmp/batch_$nm")
+            commitAppend(s, log, listParquet(s, tmp, s"batch_$nm"))
+          } catch { case t: Throwable => failures.add(t) }
+        }, s"graft-cc-writer-$nm")
       }
+      writers.foreach(_.start())
+      writers.foreach(_.join())
+      if (!failures.isEmpty) throw failures.peek()
+      require(headVersion(s, log) == 3,
+        s"two racing appends over v1 must land v2 and v3, got head ${headVersion(s, log)}")
     }
-    root
-  }
 
   /** Head-snapshot read through the commit log — the same
     * metadata-then-pruned-scan shape as [[snapshotRead]].
@@ -1403,9 +1263,6 @@ object Partitioned {
     require(files.nonEmpty, s"empty commit log under $root")
     Tables.normalizeTs(s.read.parquet(files.map(f => s"$root/$f"): _*))
   }
-
-  private def ckptCommitDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_events_ckpt_commit_${sourceKey(Seq(s"$d/events.parquet"))}"
 
   /** The checkpointed-log layout: ONE ranged write of the events table
     * produces 14 files, committed as 14 sequential incremental appends
@@ -1419,31 +1276,22 @@ object Partitioned {
     * law: a file lost to truncation-gone-wrong or double-applied by
     * replay breaks the hash.
     */
-  private[ops] def checkpointCommitLayout(s: SparkSession, d: String): String = {
-    val root = ckptCommitDir(d)
-    def complete() = {
-      val p = new org.apache.hadoop.fs.Path(checkpointFile(commitLogDir(root), CheckpointInterval))
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
+  private[ops] def checkpointCommitLayout(s: SparkSession, d: String): String =
+    Staged.layout(s, "events_ckpt_commit", eventsSrc(d),
+        Seq(checkpointFile(CommitLog, CheckpointInterval))) { tmp =>
+      val log = commitLogDir(tmp)
+      Tables.events(s, d)
+        .repartitionByRange(14, col("event_id"))
+        .write.mode("overwrite").parquet(s"$tmp/data")
+      val files = listParquet(s, tmp, "data")
+      require(files.size > CheckpointInterval,
+        s"need >$CheckpointInterval files to cross the checkpoint cadence, got ${files.size}")
+      files.foreach(f => commitAppend(s, log, Seq(f)))
+      require(headVersion(s, log) == files.size)
+      val dropped = truncateLog(s, log)
+      require(dropped == CheckpointInterval - 1,
+        s"truncation must remove v1..v${CheckpointInterval - 1}, removed $dropped")
     }
-    if (!complete()) {
-      buildAtomically(s, root, () => complete()) { tmp =>
-        val log = commitLogDir(tmp)
-        Tables.events(s, d)
-          .repartitionByRange(14, col("event_id"))
-          .write.mode("overwrite").parquet(s"$tmp/data")
-        val files = listParquet(s, s"$tmp/data")
-          .map(f => "data/" + f.substring(f.lastIndexOf('/') + 1)).sorted
-        require(files.size > CheckpointInterval,
-          s"need >$CheckpointInterval files to cross the checkpoint cadence, got ${files.size}")
-        files.foreach(f => commitAppend(s, log, Seq(f)))
-        require(headVersion(s, log) == files.size)
-        val dropped = truncateLog(s, log)
-        require(dropped == CheckpointInterval - 1,
-          s"truncation must remove v1..v${CheckpointInterval - 1}, removed $dropped")
-      }
-    }
-    root
-  }
 
   val qCommitCheckpoint = Q(
     "q_commit_checkpoint",

@@ -23,6 +23,9 @@ object Similarity {
   import Tables._
   import graft.functions.VectorExprs.{dot, sqDist}
 
+  /** The source every embeddings-derived layout here is keyed on. */
+  private def embSrc(d: String): Seq[String] = Seq(s"$d/embeddings.parquet")
+
   private def norm2(a: Column): Column = dot(a, a)
 
   /** Driver-side fetch of the query vector (vec_id = 0) — ONE 1-row
@@ -860,26 +863,21 @@ object Similarity {
     // b is part of the cache key: a layout built at one bit width must
     // never serve a probe computed at another (the occupancy formula is
     // a tunable, not a content property of the corpus)
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_sub_b${b}_" +
-      Partitioned.sourceKey(Seq(s"$d/embeddings.parquet"))
-    if (!Partitioned.successExists(s, out)) {
-      Partitioned.buildAtomically(s, out) { tmp =>
-        val emb = embeddings(s, d)
-          .where(col("vec_id") =!= 0)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        assertLayoutSchema(
-          emb.select(col("vec_id"), col("v"), bucketCol(b).as("bucket")))
-          // ONE file per bucket directory: without this, every write
-          // task emits a fragment into every partition dir (measured
-          // 47 705 files over 4 095 dirs at sf10 — footer reads and
-          // listing swamped the probe, 8.1 s vs plain IVF's 5.6 s).
-          // The shuffle is bounded by bucket size; the probe pays
-          // directory listing ∝ |buckets| and opens 3·(b+1) files.
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-      }
+    Staged.layout(s, s"ivf_sub_b$b", embSrc(d)) { tmp =>
+      val emb = embeddings(s, d)
+        .where(col("vec_id") =!= 0)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      assertLayoutSchema(
+        emb.select(col("vec_id"), col("v"), bucketCol(b).as("bucket")))
+        // ONE file per bucket directory: without this, every write
+        // task emits a fragment into every partition dir (measured
+        // 47 705 files over 4 095 dirs at sf10 — footer reads and
+        // listing swamped the probe, 8.1 s vs plain IVF's 5.6 s).
+        // The shuffle is bounded by bucket size; the probe pays
+        // directory listing ∝ |buckets| and opens 3·(b+1) files.
+        .repartition(col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
     }
-    out
   }
 
   /** FLAT-PROBE IVF (r10, bucket economics right-sized r11) — the
@@ -1040,32 +1038,26 @@ object Similarity {
     * atomic whole-layout publish, as [[ivfSubLayout]].
     */
   def ivfSegmentedLayout(s: SparkSession, d: String): String = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_segs_" +
-      Partitioned.sourceKey(Seq(s"$d/embeddings.parquet"))
     val parts = for {
       seg <- Seq("seg_a", "seg_b"); p <- Seq("data", "meta.parquet")
     } yield s"$seg/$p"
-    def complete() = parts.forall(p => Partitioned.successExists(s, s"$out/$p"))
-    if (!complete()) {
-      Partitioned.buildAtomically(s, out, () => complete()) { tmp =>
-        for ((seg, pred) <- Seq(
-            ("seg_a", col("vec_id") % 10 < 9),
-            ("seg_b", col("vec_id") % 10 >= 9))) {
-          val src = embeddings(s, d)
-            .where(col("vec_id") =!= 0 && pred)
-            .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-          val n = src.count()
-          val b = flatLayoutBits(n)
-          assertLayoutSchema(
-              src.select(col("vec_id"), col("v"), bucketCol(b).as("bucket")))
-            .repartition(col("bucket"))
-            .write.mode("overwrite").partitionBy("bucket").parquet(s"$tmp/$seg/data")
-          s.range(1).select(lit(n).as("n"), lit(b).as("b"))
-            .write.mode("overwrite").parquet(s"$tmp/$seg/meta.parquet")
-        }
+    Staged.layout(s, "ivf_segs", embSrc(d), parts.map(p => s"$p/_SUCCESS")) { tmp =>
+      for ((seg, pred) <- Seq(
+          ("seg_a", col("vec_id") % 10 < 9),
+          ("seg_b", col("vec_id") % 10 >= 9))) {
+        val src = embeddings(s, d)
+          .where(col("vec_id") =!= 0 && pred)
+          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+        val n = src.count()
+        val b = flatLayoutBits(n)
+        assertLayoutSchema(
+            src.select(col("vec_id"), col("v"), bucketCol(b).as("bucket")))
+          .repartition(col("bucket"))
+          .write.mode("overwrite").partitionBy("bucket").parquet(s"$tmp/$seg/data")
+        s.range(1).select(lit(n).as("n"), lit(b).as("b"))
+          .write.mode("overwrite").parquet(s"$tmp/$seg/meta.parquet")
       }
     }
-    out
   }
 
   /** Segment metadata (dataDir, n, b) read back from the layout's 1-row
@@ -1144,38 +1136,33 @@ object Similarity {
     */
   def ivfMergedLayout(s: SparkSession, d: String, bTot: Int): String = {
     val segRoot = ivfSegmentedLayout(s, d)
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_merged_b${bTot}_" +
-      Partitioned.sourceKey(Seq(s"$d/embeddings.parquet"))
-    if (!Partitioned.successExists(s, out)) {
-      Partitioned.buildAtomically(s, out) { tmp =>
-        val conf = s.sparkContext.hadoopConfiguration
-        val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(conf)
-        val (pass, rebucket) = segMeta(s, segRoot).partition(_._3 == bTot)
-        if (rebucket.nonEmpty)
-          assertLayoutSchema(
-              rebucket.map { case (dir, _, _) =>
-                s.read.parquet(dir).select(col("vec_id"), col("v")) }
-                .reduce(_ unionAll _)
-                .select(col("vec_id"), col("v"), bucketCol(bTot).as("bucket")))
-            .repartition(col("bucket"))
-            .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-        for (((dir, _, _), si) <- pass.zipWithIndex) {
-          val segPath = new org.apache.hadoop.fs.Path(dir)
-          for (st <- fs.listStatus(segPath) if st.getPath.getName.startsWith("bucket=")) {
-            val dstDir = new org.apache.hadoop.fs.Path(tmp, st.getPath.getName)
-            fs.mkdirs(dstDir)
-            for ((f, fi) <- fs.listStatus(st.getPath).toSeq.zipWithIndex
-                 if f.getPath.getName.endsWith(".parquet"))
-              org.apache.hadoop.fs.FileUtil.copy(fs, f.getPath, fs,
-                new org.apache.hadoop.fs.Path(dstDir, f"seg$si%02d-$fi%03d.parquet"),
-                false, conf)
-          }
+    Staged.layout(s, s"ivf_merged_b$bTot", embSrc(d)) { tmp =>
+      val conf = s.sparkContext.hadoopConfiguration
+      val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(conf)
+      val (pass, rebucket) = segMeta(s, segRoot).partition(_._3 == bTot)
+      if (rebucket.nonEmpty)
+        assertLayoutSchema(
+            rebucket.map { case (dir, _, _) =>
+              s.read.parquet(dir).select(col("vec_id"), col("v")) }
+              .reduce(_ unionAll _)
+              .select(col("vec_id"), col("v"), bucketCol(bTot).as("bucket")))
+          .repartition(col("bucket"))
+          .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
+      for (((dir, _, _), si) <- pass.zipWithIndex) {
+        val segPath = new org.apache.hadoop.fs.Path(dir)
+        for (st <- fs.listStatus(segPath) if st.getPath.getName.startsWith("bucket=")) {
+          val dstDir = new org.apache.hadoop.fs.Path(tmp, st.getPath.getName)
+          fs.mkdirs(dstDir)
+          for ((f, fi) <- fs.listStatus(st.getPath).toSeq.zipWithIndex
+               if f.getPath.getName.endsWith(".parquet"))
+            org.apache.hadoop.fs.FileUtil.copy(fs, f.getPath, fs,
+              new org.apache.hadoop.fs.Path(dstDir, f"seg$si%02d-$fi%03d.parquet"),
+              false, conf)
         }
-        if (rebucket.isEmpty)
-          fs.create(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")).close()
       }
+      if (rebucket.isEmpty)
+        fs.create(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")).close()
     }
-    out
   }
 
   /** The post-merge probe: [[flatProbe]] — the IDENTICAL code path as
@@ -2048,25 +2035,20 @@ object Similarity {
     * the offline index build of a ColBERT/PLAID serving stack.
     */
   def maxsimBucketLayout(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_maxsim_buckets_" +
-      Partitioned.sourceKey(Seq(s"$d/embeddings.parquet"))
-    if (!Partitioned.successExists(s, out)) {
-      Partitioned.buildAtomically(s, out) { tmp =>
-        embeddings(s, d)
-          .where(col("vec_id") =!= 0)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-          .select(col("vec_id"), col("v"),
-            explode(array((0 until 4).map(facetBucketCol): _*)).as("bucket_l"))
-          // posted as INT explicitly: parquet partition-directory
-          // inference reads the value back as Int regardless, so an
-          // implicitly-Long posting would make the probe's INSET
-          // partition filter depend on a silent coercion (ADVICE r9)
-          .select(col("vec_id"), col("v"),
-            col("bucket_l").cast("int").as("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-      }
+    Staged.layout(s, "maxsim_buckets", embSrc(d)) { tmp =>
+      embeddings(s, d)
+        .where(col("vec_id") =!= 0)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+        .select(col("vec_id"), col("v"),
+          explode(array((0 until 4).map(facetBucketCol): _*)).as("bucket_l"))
+        // posted as INT explicitly: parquet partition-directory
+        // inference reads the value back as Int regardless, so an
+        // implicitly-Long posting would make the probe's INSET
+        // partition filter depend on a silent coercion (ADVICE r9)
+        .select(col("vec_id"), col("v"),
+          col("bucket_l").cast("int").as("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
     }
-    out
   }
 
   /** ROUTED MAXSIM OVER THE MATERIALIZED LAYOUT (r9) — the production

@@ -18,6 +18,9 @@ import org.apache.spark.sql.types.DecimalType
 object TextOps {
   import Tables._
 
+  /** The source every documents-derived layout here is keyed on. */
+  private def docsSrc(d: String): Seq[String] = Seq(s"$d/documents.parquet")
+
   /** E12: per-language corpus stats in one aggregate. */
   val qTextStats = Q(
     "q_text_stats",
@@ -873,31 +876,25 @@ object TextOps {
     * search system amortizes across queries.
     */
   def invertedIndexLayout(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_bm25_index_" +
-      Partitioned.sourceKey(Seq(s"$d/documents.parquet"))
     val parts = Seq("postings.parquet", "dict.parquet", "stats.parquet")
-    def complete() = parts.forall(p => Partitioned.successExists(s, s"$out/$p"))
-    if (!complete()) {
-      // all three parts build under a temp dir and publish in ONE
-      // rename — readers never see a layout whose parts disagree
-      Partitioned.buildAtomically(s, out, () => complete()) { tmp =>
-        val posts = documents(s, d)
-          .select(col("doc_id"),
-            size(split(col("text"), " ")).cast("long").as("dl"),
-            explode(split(col("text"), " ")).as("term"))
-          .groupBy("term", "doc_id")
-          .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
-        posts.write.mode("overwrite").parquet(s"$tmp/postings.parquet")
-        s.read.parquet(s"$tmp/postings.parquet")
-          .groupBy("term").agg(count(lit(1)).as("df"))
-          .write.mode("overwrite").parquet(s"$tmp/dict.parquet")
-        documents(s, d)
-          .agg(count(lit(1)).as("n_docs"),
-            sum(size(split(col("text"), " ")).cast("long")).as("sum_dl"))
-          .write.mode("overwrite").parquet(s"$tmp/stats.parquet")
-      }
+    // all three parts build under a temp dir and publish in ONE
+    // rename — readers never see a layout whose parts disagree
+    Staged.layout(s, "bm25_index", docsSrc(d), parts.map(p => s"$p/_SUCCESS")) { tmp =>
+      val posts = documents(s, d)
+        .select(col("doc_id"),
+          size(split(col("text"), " ")).cast("long").as("dl"),
+          explode(split(col("text"), " ")).as("term"))
+        .groupBy("term", "doc_id")
+        .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
+      posts.write.mode("overwrite").parquet(s"$tmp/postings.parquet")
+      s.read.parquet(s"$tmp/postings.parquet")
+        .groupBy("term").agg(count(lit(1)).as("df"))
+        .write.mode("overwrite").parquet(s"$tmp/dict.parquet")
+      documents(s, d)
+        .agg(count(lit(1)).as("n_docs"),
+          sum(size(split(col("text"), " ")).cast("long")).as("sum_dl"))
+        .write.mode("overwrite").parquet(s"$tmp/stats.parquet")
     }
-    out
   }
 
   /** BM25 OVER POSTINGS (r8) — the production lexical retriever:
@@ -935,37 +932,31 @@ object TextOps {
     * cache + atomic whole-layout publish, as [[invertedIndexLayout]].
     */
   def segmentedIndexLayout(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_bm25_segs_" +
-      Partitioned.sourceKey(Seq(s"$d/documents.parquet"))
     val parts = for {
       seg <- Seq("seg_a", "seg_b")
       p <- Seq("postings.parquet", "dict.parquet", "stats.parquet")
     } yield s"$seg/$p"
-    def complete() = parts.forall(p => Partitioned.successExists(s, s"$out/$p"))
-    if (!complete()) {
-      Partitioned.buildAtomically(s, out, () => complete()) { tmp =>
-        for ((seg, pred) <- Seq(
-            ("seg_a", col("doc_id") % 10 < 9),
-            ("seg_b", col("doc_id") % 10 >= 9))) {
-          val docs = documents(s, d).where(pred)
-          docs
-            .select(col("doc_id"),
-              size(split(col("text"), " ")).cast("long").as("dl"),
-              explode(split(col("text"), " ")).as("term"))
-            .groupBy("term", "doc_id")
-            .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
-            .write.mode("overwrite").parquet(s"$tmp/$seg/postings.parquet")
-          s.read.parquet(s"$tmp/$seg/postings.parquet")
-            .groupBy("term").agg(count(lit(1)).as("df"))
-            .write.mode("overwrite").parquet(s"$tmp/$seg/dict.parquet")
-          docs
-            .agg(count(lit(1)).as("n_docs"),
-              sum(size(split(col("text"), " ")).cast("long")).as("sum_dl"))
-            .write.mode("overwrite").parquet(s"$tmp/$seg/stats.parquet")
-        }
+    Staged.layout(s, "bm25_segs", docsSrc(d), parts.map(p => s"$p/_SUCCESS")) { tmp =>
+      for ((seg, pred) <- Seq(
+          ("seg_a", col("doc_id") % 10 < 9),
+          ("seg_b", col("doc_id") % 10 >= 9))) {
+        val docs = documents(s, d).where(pred)
+        docs
+          .select(col("doc_id"),
+            size(split(col("text"), " ")).cast("long").as("dl"),
+            explode(split(col("text"), " ")).as("term"))
+          .groupBy("term", "doc_id")
+          .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
+          .write.mode("overwrite").parquet(s"$tmp/$seg/postings.parquet")
+        s.read.parquet(s"$tmp/$seg/postings.parquet")
+          .groupBy("term").agg(count(lit(1)).as("df"))
+          .write.mode("overwrite").parquet(s"$tmp/$seg/dict.parquet")
+        docs
+          .agg(count(lit(1)).as("n_docs"),
+            sum(size(split(col("text"), " ")).cast("long")).as("sum_dl"))
+          .write.mode("overwrite").parquet(s"$tmp/$seg/stats.parquet")
       }
     }
-    out
   }
 
   /** The q_bm25_postings oracle — whole-corpus scoring of the 4 query
@@ -1796,16 +1787,10 @@ object TextOps {
 
   def mergedSegmentLayout(s: org.apache.spark.sql.SparkSession, d: String): String = {
     val segs = segmentedIndexLayout(s, d)
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_bm25_merged_" +
-      Partitioned.sourceKey(Seq(s"$d/documents.parquet"))
     val parts = Seq("postings.parquet", "dict.parquet", "stats.parquet")
-    def complete() = parts.forall(p => Partitioned.successExists(s, s"$out/$p"))
-    if (!complete()) {
-      Partitioned.buildAtomically(s, out, () => complete()) { tmp =>
-        writeMergedSegment(s, Seq(s"$segs/seg_a", s"$segs/seg_b"), tmp)
-      }
+    Staged.layout(s, "bm25_merged", docsSrc(d), parts.map(p => s"$p/_SUCCESS")) { tmp =>
+      writeMergedSegment(s, Seq(s"$segs/seg_a", s"$segs/seg_b"), tmp)
     }
-    out
   }
 
   val qBm25Merge = Q(
@@ -1825,36 +1810,30 @@ object TextOps {
     ("seg_03", 3, 4), ("seg_04", 5, 8), ("seg_05", 9, 15))
 
   def multiSegmentIndexLayout(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_bm25_multi_" +
-      Partitioned.sourceKey(Seq(s"$d/documents.parquet"))
     val parts = for {
       (seg, _, _) <- multiSegRanges
       p <- Seq("postings.parquet", "dict.parquet", "stats.parquet")
     } yield s"$seg/$p"
-    def complete() = parts.forall(p => Partitioned.successExists(s, s"$out/$p"))
-    if (!complete()) {
-      Partitioned.buildAtomically(s, out, () => complete()) { tmp =>
-        for ((seg, lo, hi) <- multiSegRanges) {
-          val docs = documents(s, d)
-            .where(col("doc_id") % 16 >= lo && col("doc_id") % 16 <= hi)
-          docs
-            .select(col("doc_id"),
-              size(split(col("text"), " ")).cast("long").as("dl"),
-              explode(split(col("text"), " ")).as("term"))
-            .groupBy("term", "doc_id")
-            .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
-            .write.mode("overwrite").parquet(s"$tmp/$seg/postings.parquet")
-          s.read.parquet(s"$tmp/$seg/postings.parquet")
-            .groupBy("term").agg(count(lit(1)).as("df"))
-            .write.mode("overwrite").parquet(s"$tmp/$seg/dict.parquet")
-          docs
-            .agg(count(lit(1)).as("n_docs"),
-              sum(size(split(col("text"), " ")).cast("long")).as("sum_dl"))
-            .write.mode("overwrite").parquet(s"$tmp/$seg/stats.parquet")
-        }
+    Staged.layout(s, "bm25_multi", docsSrc(d), parts.map(p => s"$p/_SUCCESS")) { tmp =>
+      for ((seg, lo, hi) <- multiSegRanges) {
+        val docs = documents(s, d)
+          .where(col("doc_id") % 16 >= lo && col("doc_id") % 16 <= hi)
+        docs
+          .select(col("doc_id"),
+            size(split(col("text"), " ")).cast("long").as("dl"),
+            explode(split(col("text"), " ")).as("term"))
+          .groupBy("term", "doc_id")
+          .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
+          .write.mode("overwrite").parquet(s"$tmp/$seg/postings.parquet")
+        s.read.parquet(s"$tmp/$seg/postings.parquet")
+          .groupBy("term").agg(count(lit(1)).as("df"))
+          .write.mode("overwrite").parquet(s"$tmp/$seg/dict.parquet")
+        docs
+          .agg(count(lit(1)).as("n_docs"),
+            sum(size(split(col("text"), " ")).cast("long")).as("sum_dl"))
+          .write.mode("overwrite").parquet(s"$tmp/$seg/stats.parquet")
       }
     }
-    out
   }
 
   /** TIERED MERGE POLICY (r11, VERDICT r10 next #6) — the DECISION
@@ -1880,45 +1859,39 @@ object TextOps {
 
   def tieredIndexLayout(s: org.apache.spark.sql.SparkSession, d: String): String = {
     val multi = multiSegmentIndexLayout(s, d)
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_bm25_tiered_" +
-      Partitioned.sourceKey(Seq(s"$d/documents.parquet"))
     val parts = (0 until TieredK).flatMap(i =>
       Seq("postings.parquet", "dict.parquet", "stats.parquet")
         .map(p => s"final_$i/$p")) :+ "merge_log.parquet"
-    def complete() = parts.forall(p => Partitioned.successExists(s, s"$out/$p"))
-    if (!complete()) {
-      Partitioned.buildAtomically(s, out, () => complete()) { tmp =>
-        def nDocs(dir: String): Long =
-          s.read.parquet(s"$dir/stats.parquet").head().getAs[Long]("n_docs")
-        var live = multiSegRanges.map { case (seg, _, _) =>
-          (s"$multi/$seg", seg, nDocs(s"$multi/$seg"))
-        }.toVector
-        val log = Vector.newBuilder[(Int, String, String, Long, Long)]
-        var gen = 0
-        while (live.size > TieredK) {
-          val sorted = live.sortBy { case (_, name, n) => (n, name) }
-          val a = sorted(0); val b = sorted(1)
-          val name = s"m$gen"
-          writeMergedSegment(s, Seq(a._1, b._1), s"$tmp/$name")
-          log += ((gen, a._2, b._2, a._3, b._3))
-          live = sorted.drop(2) :+ ((s"$tmp/$name", name, a._3 + b._3))
-          gen += 1
-        }
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        live.sortBy { case (_, name, n) => (-n, name) }.zipWithIndex.foreach {
-          case ((dir, _, _), i) =>
-            if (dir.startsWith(tmp))
-              fs.rename(new org.apache.hadoop.fs.Path(dir),
-                new org.apache.hadoop.fs.Path(s"$tmp/final_$i"))
-            else writeMergedSegment(s, Seq(dir), s"$tmp/final_$i")
-        }
-        import s.implicits._
-        log.result().toDF("gen", "left", "right", "left_docs", "right_docs")
-          .coalesce(1).write.mode("overwrite").parquet(s"$tmp/merge_log.parquet")
+    Staged.layout(s, "bm25_tiered", docsSrc(d), parts.map(p => s"$p/_SUCCESS")) { tmp =>
+      def nDocs(dir: String): Long =
+        s.read.parquet(s"$dir/stats.parquet").head().getAs[Long]("n_docs")
+      var live = multiSegRanges.map { case (seg, _, _) =>
+        (s"$multi/$seg", seg, nDocs(s"$multi/$seg"))
+      }.toVector
+      val log = Vector.newBuilder[(Int, String, String, Long, Long)]
+      var gen = 0
+      while (live.size > TieredK) {
+        val sorted = live.sortBy { case (_, name, n) => (n, name) }
+        val a = sorted(0); val b = sorted(1)
+        val name = s"m$gen"
+        writeMergedSegment(s, Seq(a._1, b._1), s"$tmp/$name")
+        log += ((gen, a._2, b._2, a._3, b._3))
+        live = sorted.drop(2) :+ ((s"$tmp/$name", name, a._3 + b._3))
+        gen += 1
       }
+      val fs = new org.apache.hadoop.fs.Path(tmp)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      live.sortBy { case (_, name, n) => (-n, name) }.zipWithIndex.foreach {
+        case ((dir, _, _), i) =>
+          if (dir.startsWith(tmp))
+            fs.rename(new org.apache.hadoop.fs.Path(dir),
+              new org.apache.hadoop.fs.Path(s"$tmp/final_$i"))
+          else writeMergedSegment(s, Seq(dir), s"$tmp/final_$i")
+      }
+      import s.implicits._
+      log.result().toDF("gen", "left", "right", "left_docs", "right_docs")
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/merge_log.parquet")
     }
-    out
   }
 
   /** Post-policy retrieval: probe the [[TieredK]] `final_i` segments

@@ -680,50 +680,43 @@ object Replay {
       .drop("rr", "skey")
   }
 
-  /** CONTENT-KEYED staged-shard cache (r13 VERDICT): the ts-round-robin
-    * staging re-sorted and re-wrote the corpus on EVERY replay (3 bench
-    * passes × each queue query × scales). The shard logs are a pure
-    * function of (source file, query feed: column set + sentinel shape
-    * + shard count), so they publish ONCE under the content-keyed
-    * layout idiom ([[graft.ops.Partitioned.sourceKey]] +
-    * `buildAtomically`) and every replay HARD-LINKS them into its
-    * private live dir — the broker's ack = physical drop deletes the
-    * LINKS, never the cached inodes, so the live queue keeps its
-    * cannot-relist-history contract while warm replays skip the
-    * staging job entirely (`df` is by-name: on a warm hit no Spark job
-    * runs at all, not even the sharding plan's offset collect). Falls
-    * back to a per-file copy where the tmp filesystem refuses links.
+  /** Hard-link each of `files` into `dir` under its own name — where
+    * the filesystem refuses links, a copy that keeps the mtime (the
+    * FileStreamSource ordering contract is stamped at build time).
+    * Deleting a linked file from `dir` drops the link, never the staged
+    * inode.
     */
-  /** CONTENT-KEYED staged-LAYOUT cache (r15 — the r14 queue-shard idiom
-    * generalized to file-source replay dirs, per the r14 VERDICT ruling
-    * that staging is input plumbing, not the measured operator): a
-    * replay input layout that is a PURE FUNCTION of its source file
-    * (`build` must be deterministic, including mtime stamps) publishes
-    * ONCE under [[graft.ops.Partitioned.sourceKey]] + `buildAtomically`,
-    * and every replay HARD-LINKS the files into its own private live
-    * dir — the first run still pays the build, a data change changes
-    * the key, and deleting the live dir after the replay only drops
-    * links. Mtimes ride the shared inode (the FileStreamSource ordering
-    * contract is stamped at build time); the copy fallback re-stamps
-    * from the cached file.
+  private def linkInto(dir: java.nio.file.Path, files: Seq[java.nio.file.Path]): Unit =
+    files.foreach { f =>
+      val dst = dir.resolve(f.getFileName.toString)
+      try java.nio.file.Files.createLink(dst, f)
+      catch {
+        case _: UnsupportedOperationException =>
+          java.nio.file.Files.copy(f, dst, java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
+      }
+    }
+
+  /** Staged replay input (r15 — the r14 queue-shard idiom generalized
+    * to file-source replay dirs, per the r14 VERDICT ruling that
+    * staging is input plumbing, not the measured operator): a replay
+    * input layout that is a PURE FUNCTION of its source file (`build`
+    * must be deterministic, including mtime stamps) is staged ONCE
+    * ([[graft.ops.Staged.layout]]), and every replay HARD-LINKS the
+    * files into its own private live dir — the first run still pays
+    * the build, a data change changes the key, and deleting the live
+    * dir after the replay only drops links.
     */
   private def linkedStagedLayout(s: SparkSession, tag: String, srcPaths: Seq[String],
       livePrefix: String)(build: java.nio.file.Path => Unit): java.nio.file.Path = {
     import java.nio.file.{Files, Paths}
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_stage_" +
-      graft.ops.Partitioned.sourceKey(srcPaths)
-    def complete() = graft.ops.Partitioned.successExists(s, root)
-    if (!complete()) {
-      graft.ops.Partitioned.buildAtomically(s, root, () => complete()) { tmp =>
-        val p = Paths.get(tmp)
-        Files.createDirectories(p)
-        build(p)
-        Files.write(p.resolve("_SUCCESS"), Array.emptyByteArray)
-      }
+    val root = graft.ops.Staged.layout(s, s"${tag}_stage", srcPaths) { tmp =>
+      val p = Paths.get(tmp)
+      Files.createDirectories(p)
+      build(p)
+      Files.write(p.resolve("_SUCCESS"), Array.emptyByteArray)
     }
     val live = Files.createTempDirectory(livePrefix)
-    val rootP = Paths.get(root)
-    val listing = Files.list(rootP)
+    val listing = Files.list(Paths.get(root))
     val files =
       try {
         import scala.jdk.CollectionConverters._
@@ -731,46 +724,35 @@ object Replay {
           .filter(_.getFileName.toString.endsWith(".parquet"))
           .toSeq.sortBy(_.getFileName.toString)
       } finally listing.close()
-    files.foreach { f =>
-      val dst = live.resolve(f.getFileName.toString)
-      try Files.createLink(dst, f)
-      catch {
-        case _: UnsupportedOperationException =>
-          Files.copy(f, dst)
-          Files.setLastModifiedTime(dst, Files.getLastModifiedTime(f))
-      }
-    }
+    linkInto(live, files)
     live
   }
 
+  /** Staged queue shards (r13 VERDICT): the ts-round-robin staging
+    * re-sorted and re-wrote the corpus on EVERY replay (3 bench passes
+    * × each queue query × scales). The shard logs are a pure function
+    * of (source file, query feed: column set + sentinel shape + shard
+    * count), so they are staged ONCE ([[graft.ops.Staged.layout]]) and
+    * every replay HARD-LINKS them into its private live dir — the
+    * broker's ack = physical drop deletes the LINKS, never the staged
+    * inodes, so the live queue keeps its cannot-relist-history contract
+    * while warm replays skip the staging job entirely (`df` is by-name:
+    * on a warm hit no Spark job runs at all, not even the sharding
+    * plan's offset collect).
+    */
   private def stageShardsCached(s: SparkSession, name: String, df: => DataFrame,
       schema: StructType, srcPath: String, tag: String, nShards: Int,
       liveDir: java.nio.file.Path, rowsPerBatch: Int, hold: Boolean,
       sentinel: Option[org.apache.spark.sql.Row] = None): Unit = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_queue_stage_" +
-      graft.ops.Partitioned.sourceKey(Seq(srcPath)) + s"_${tag}_n$nShards"
-    def complete() = graft.ops.Partitioned.successExists(s, root)
-    if (!complete()) {
-      graft.ops.Partitioned.buildAtomically(s, root, () => complete()) { tmp =>
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
-        val n = graft.sources.QueueBroker.writeShardLogs(df, tmp)
-        require(n == nShards, s"staged $n shards, expected $nShards")
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(tmp, "_SUCCESS"), Array.emptyByteArray)
-      }
+    val root = graft.ops.Staged.layout(s, s"queue_stage_${tag}_n$nShards", Seq(srcPath)) { tmp =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
+      val n = graft.sources.QueueBroker.writeShardLogs(df, tmp)
+      require(n == nShards, s"staged $n shards, expected $nShards")
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(tmp, "_SUCCESS"), Array.emptyByteArray)
     }
-    val rootP = java.nio.file.Paths.get(root)
-    (0 until nShards).foreach { i =>
-      Seq(f"shard-$i%05d.log", f"shard-$i%05d.count").foreach { fn =>
-        val src = rootP.resolve(fn)
-        val dst = liveDir.resolve(fn)
-        try java.nio.file.Files.createLink(dst, src)
-        catch {
-          case _: UnsupportedOperationException =>
-            java.nio.file.Files.copy(src, dst)
-        }
-      }
-    }
+    linkInto(liveDir, (0 until nShards).flatMap(i =>
+      Seq(f"shard-$i%05d.log", f"shard-$i%05d.count").map(java.nio.file.Paths.get(root, _))))
     graft.sources.QueueBroker.registerStaged(
       name, schema, liveDir.toString, nShards, rowsPerBatch, hold, sentinel)
   }

@@ -1,34 +1,67 @@
 package graft.tools
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Scratch dev probe — timing + final AQE plan for one query at an
-  * arbitrary sf dir. Not part of the shipped surface.
+/** Dev probe for declared queries, run against the sf dir named by
+  * `SPARK_GRAFT_SF_DIR` on `SPARK_GRAFT_CPUS` cores (the
+  * [[graft.Bench]] environment). Not part of the shipped surface.
+  *
+  *   sbt "runMain graft.tools.Probe plan q1,q2,... [outDir suffix]"
+  *   sbt "runMain graft.tools.Probe time q1,q2,... [--jobs]"
+  *
+  * `plan` prints each query's formatted physical plan, or writes it to
+  * `outDir/<query>_<suffix>.txt` so plans can be diffed across a
+  * change (the `plans/rNN/` artifacts). `time` runs each query twice
+  * into a `noop` sink, prints both wall times (the first includes any
+  * cold staging build) and then the final adaptive plan; `--jobs`
+  * prints every Spark job's wall time instead of the plan.
+  * [[graft.PlanDump]] generates the curated `PLANS.md`.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val dir = args(1)
-    val trace = args.length > 2 && args(2) == "--jobs"
-    val spark = graft.Sessions.local(32)
+    val usage = "usage: Probe plan <q1,q2,...> [outDir suffix] | Probe time <q1,q2,...> [--jobs]"
+    require(args.length >= 2 && Set("plan", "time")(args(0)), usage)
+    val names = args(1).split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      throw new IllegalArgumentException("SPARK_GRAFT_SF_DIR must name an sf dir"))
+    val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    if (trace)
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        private val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          starts.put(j.jobId, System.nanoTime())
-        override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val t0 = starts.remove(j.jobId)
-          println(f"JOB ${j.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-        }
-      })
-    for (i <- 1 to 2) {
-      val t0 = System.nanoTime()
-      val df = graft.SparkEntry.queries(name)(spark, dir)
-      df.write.format("noop").mode("overwrite").save()
-      println(f"RUN$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      if (i == 2 && !trace)
-        println(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+    def query(n: String): DataFrame = graft.SparkEntry.queries(n)(spark, d)
+    def formatted(df: DataFrame): String =
+      df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+    if (args(0) == "plan") {
+      val outDir = args.lift(2).map { dir =>
+        require(args.length > 3, usage)
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+      }
+      for (n <- names) outDir match {
+        case Some(dir) =>
+          val f = dir.resolve(s"${n}_${args(3)}.txt")
+          java.nio.file.Files.writeString(f, formatted(query(n)))
+          println(s"WROTE $f")
+        case None => println(formatted(query(n)))
+      }
+    } else {
+      val jobs = args.drop(2).contains("--jobs")
+      if (jobs)
+        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+          private val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+          override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            starts.put(j.jobId, System.nanoTime())
+          override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+            val t0 = starts.remove(j.jobId)
+            println(f"JOB ${j.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.3f s")
+          }
+        })
+      for (n <- names; i <- 1 to 2) {
+        val t0 = System.nanoTime()
+        val df = query(n)
+        df.write.format("noop").mode("overwrite").save()
+        println(f"TIMING $n run$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
+        if (i == 2 && !jobs) println(formatted(df))
+      }
     }
     spark.stop()
   }

@@ -46,7 +46,7 @@ class PartitionedSpec extends SparkSpec {
     spark.conf.set(Partitioned.COMPACT_TARGET_BYTES_CONF, (64L << 10).toString)
     try {
       assert(Partitioned.qCompact.fn(spark, sf0001).count() > 0)
-      val before = parquetFiles(Partitioned.smallFilesDir(sf0001)).size
+      val before = parquetFiles(Partitioned.smallFiles(spark, sf0001)).size
       val afterFiles = parquetFiles(Partitioned.compactedDir(sf0001))
       assert(before == 64, s"small-file input layout must be 64 files, was $before")
       assert(afterFiles.size > 1, "target forced a multi-file layout")
@@ -98,7 +98,7 @@ class PartitionedSpec extends SparkSpec {
     }
     val skipped = (all -- selected).toSeq
     assert(skipped.nonEmpty)
-    val leaked = spark.read.parquet(skipped: _*)
+    val leaked = spark.read.parquet(skipped.map(f => s"$layout/$f"): _*)
       .where(col("ts") >= lo && col("ts") < hi).count()
     assert(leaked == 0, s"skipped files held $leaked qualifying rows")
   }
@@ -227,55 +227,6 @@ class PartitionedSpec extends SparkSpec {
     // idempotent: nothing left to reclaim
     val (b2, a2) = Partitioned.vacuum(spark, root, horizon = 3)
     assert(b2 == 2 && a2 == 2)
-  }
-
-  test("buildAtomically: a lost race discards the loser's build and never touches the winner") {
-    val root = java.nio.file.Files.createTempDirectory("graft_atomic_spec_")
-    val out = root.resolve("layout").toString
-    // winner publishes first
-    Partitioned.buildAtomically(spark, out) { tmp =>
-      spark.range(3).toDF("winner").write.parquet(tmp)
-    }
-    val winnerFiles = new java.io.File(out).listFiles().map(_.getName).toSet
-    // loser builds a DIFFERENT layout against the same target
-    Partitioned.buildAtomically(spark, out) { tmp =>
-      spark.range(100).toDF("loser").write.parquet(tmp)
-    }
-    // winner untouched byte-for-byte (same file set, same schema), no
-    // .build- temp dirs left, nothing nested inside the layout
-    assert(new java.io.File(out).listFiles().map(_.getName).toSet == winnerFiles)
-    assert(spark.read.parquet(out).columns.toSeq == Seq("winner"))
-    assert(!root.toFile.listFiles().exists(_.getName.contains(".build-")),
-      "loser's temp build dir not cleaned up")
-  }
-
-  test("buildAtomically: a winner appearing between the completeness check and the rename is not corrupted") {
-    // Hadoop rename(tmp, existing-dir) moves tmp INSIDE the target and
-    // returns true — the loser must detect and delete the nested copy.
-    // Simulate the race window with a side-effecting completeness
-    // predicate: it publishes the winner DURING the loser's pre-rename
-    // check, so the loser's rename lands on an occupied target.
-    val root = java.nio.file.Files.createTempDirectory("graft_atomic_race_")
-    val out = root.resolve("layout").toString
-    var checks = 0
-    val complete = () => {
-      checks += 1
-      val exists = Partitioned.successExists(spark, out)
-      if (!exists && checks == 1) {
-        // the racing winner publishes now (post-build, pre-rename)
-        spark.range(5).toDF("winner").write.parquet(out)
-        false // loser still believes the target is free
-      } else exists
-    }
-    Partitioned.buildAtomically(spark, out, complete) { tmp =>
-      spark.range(200).toDF("loser").write.parquet(tmp)
-    }
-    // winner's layout intact and readable; the loser's nested duplicate
-    // (out/<tmp-basename>) was detected and removed
-    assert(spark.read.parquet(out).columns.toSeq == Seq("winner"))
-    assert(spark.read.parquet(out).count() == 5)
-    assert(!new java.io.File(out).listFiles().exists(_.getName.contains(".build-")),
-      "loser's build nested inside the published layout")
   }
 
   test("commit CAS: put-if-absent — first writer wins, loser sees false, content is the winner's") {
