@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession, Row}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.{Date, Timestamp}
+import graft.functions.PricePaidParse
 
 /** The reference pipeline (ops 1-16 of SURVEY §2.A), re-expressed as one
   * lazy Spark plan instead of a driver-side chunk loop.
@@ -62,39 +63,67 @@ object Ingest {
   }
 
   /** op-4: headerless all-string CSV scan with the reference's NULL
-    * discipline (§1.5): QUOTED empty fields stay `''` (emptyValue
-    * override — Spark's default would null them) and the literal `\N`
+    * discipline (§1.5): QUOTED empty fields stay `''` and the literal `\N`
     * token is NULL (COPY `NULL '\N'`).
     *
-    * Caveat: an UNQUOTED empty field reads as NULL — Spark's builtin
-    * CSV options cannot distinguish unquoted-empty from the null token
-    * at parser level. The real pp-complete.txt quotes every field, so
-    * this never fires on reference data. The DSv2 UrlCsvSource DOES
-    * implement the exact reference semantics (unquoted empty → '', only
-    * `\N` → NULL — `main.py:208`), proven by q_url_source_unquoted; this
-    * builtin path's divergence on unquoted-empty is the known residual.
+    * Parse path: a text scan of the raw lines, the CSV source's blank-line
+    * filter (drop a line Java `String.trim` would empty), then one codegen
+    * splitter ([[graft.functions.PricePaidParse.line]]). Its fast path
+    * splits a canonical line — exactly 16 fields, each `"…"` or unquoted,
+    * printable ASCII, no `"` or `\` inside a field: the shape of the real
+    * pp-complete.txt — straight from its bytes. Every other line
+    * takes the per-row fallback, `from_csv` with the dialect's CSV
+    * options (`nullValue` `\N`, `emptyValue` `''`, PERMISSIVE): the same
+    * univocity parser the CSV file source runs on the same line.
+    * The results are exact because the text source splits lines where the
+    * CSV source does (LF, CR, CRLF), the filter keeps the same lines, and
+    * the fast path accepts only lines on which univocity's tokens are the
+    * bytes between the delimiters; `IngestParseLawSpec` pins the whole
+    * read against the builtin CSV scan as a multiset.
+    *
+    * Caveat: an UNQUOTED empty field reads as NULL, on both paths — the
+    * builtin CSV options cannot distinguish unquoted-empty from the null
+    * token at parser level, and the fast path reproduces that. The real
+    * pp-complete.txt quotes every field, so this never fires on reference
+    * data. The DSv2 UrlCsvSource DOES implement the exact reference
+    * semantics (unquoted empty → '', only `\N` → NULL — `main.py:208`),
+    * proven by q_url_source_unquoted; this path's divergence on
+    * unquoted-empty is the known residual.
     */
-  def readRaw(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .schema(PPComplete.rawSchema)
-      .option("header", "false")
-      .option("nullValue", "\\N")
-      .option("emptyValue", "")
-      .option("mode", "PERMISSIVE")
-      .csv(path)
+  def readRaw(spark: SparkSession, path: String): DataFrame = {
+    val value = col("value")
+    val univocity = from_csv(value, PPComplete.rawSchema,
+      Map("nullValue" -> "\\N", "emptyValue" -> "", "mode" -> "PERMISSIVE"))
+    spark.read.text(path)
+      .where(PricePaidParse.nonBlank(value))
+      .select(PricePaidParse.line(value, univocity).as("fields"))
+      .select("fields.*")
+  }
 
-  /** ops 5+6: positional rename (toDF is implicit in the schema read) +
-    * strict datetime typing. The reference aborts on a malformed date
-    * (`main.py:218-222` raises); under Spark 4's default ANSI mode this
+  /** ops 5+6: positional rename (the field names of [[readRaw]]'s schema)
+    * + strict datetime typing. The reference aborts on a malformed date
+    * (`main.py:218-222` raises); under Spark 4's default ANSI mode the
     * strict `to_timestamp` throws INSIDE the scan of whatever job
     * evaluates it, so fail-on-malformed needs no validation pass of its
     * own — [[rethrowMalformed]] translates the ANSI error at the one
     * job that reads the data (the write).
+    *
+    * Parse path: [[graft.functions.PricePaidParse.utcMinute]] — a
+    * fixed-width `yyyy-MM-dd HH:mm` parser computes the UTC micros of
+    * every well-formed value, and every other value (malformed, out of
+    * range, NULL) is evaluated by the unchanged `to_timestamp`, so a
+    * malformed date still throws in the write job. The fixed-width result
+    * is exact: it accepts only values the strict pattern parses (year
+    * 1000-9999, a valid calendar date, hour ≤ 23, minute ≤ 59, nothing
+    * else) and only when the session zone is UTC and the parser policy is
+    * not LEGACY; otherwise every row goes to `to_timestamp`. The
+    * quarantine classifier uses the same parser over `try_to_timestamp`.
     */
   def typed(raw: DataFrame): DataFrame =
     raw.withColumn(
       "transaction_date",
-      to_timestamp(col("transaction_date"), PPComplete.dateTimeFormat)
+      PricePaidParse.utcMinute(col("transaction_date"),
+        to_timestamp(col("transaction_date"), PPComplete.dateTimeFormat))
     )
 
   /** BAD-RECORDS QUARANTINE ingest (r12) — the production complement of
@@ -106,9 +135,9 @@ object Ingest {
     *
     * Shape: ONE scan of the input classifies every line — token count
     * first (`bad_columns`), then the strict §1.6 date parse
-    * (`bad_date`, via `try_to_timestamp`: the non-throwing twin of the
-    * ANSI parse [[typed]] relies on) — and writes a reason-partitioned
-    * staging (no shuffle: classification is a per-row codegen
+    * (`bad_date`, via [[typed]]'s date parser over `try_to_timestamp`:
+    * the non-throwing twin of the ANSI parse [[typed]] relies on) — and
+    * writes a reason-partitioned staging (no shuffle: classification is a per-row codegen
     * projection, the write fans out by partition column). The clean
     * sink is then a partition-PRUNED re-read of `reason=ok` projected
     * through the exact §1.5 discipline (unquoted empty → `''`, the bare
@@ -133,7 +162,8 @@ object Ingest {
     val nCols = PPComplete.columns.length
     val parts = split(col("value"), ",", -1)
     val reason = when(size(parts) =!= lit(nCols), lit("bad_columns"))
-      .when(try_to_timestamp(element_at(parts, 3), lit(PPComplete.dateTimeFormat)).isNull,
+      .when(PricePaidParse.utcMinute(element_at(parts, 3),
+        try_to_timestamp(element_at(parts, 3), lit(PPComplete.dateTimeFormat))).isNull,
         lit("bad_date"))
       .otherwise(lit("ok"))
     // the three sinks publish ATOMICALLY (r12 ADVICE): all writes land

@@ -436,11 +436,18 @@ class QueriesPlanSpec extends SparkSpec {
 
   test("ingest plan is shuffle-free (scan -> cast, no Exchange)") {
     pinsViaHelper("q_ingest_pp")
-    val p = graft.ingest.Ingest
+    val qe = graft.ingest.Ingest
       .typed(graft.ingest.Ingest.readRaw(spark, graft.ops.IngestQueries.fixturePath))
       .queryExecution
-      .explainString(ExplainMode.fromString("formatted"))
+    val p = qe.explainString(ExplainMode.fromString("formatted"))
     assert(!p.contains("Exchange"), "ingest pipeline acquired a shuffle")
+    // the scan is the byte-level parse path: a text scan feeding the
+    // native line splitter and date parser, with no CSV scan left
+    val tree = qe.executedPlan.toString
+    assert(tree.contains("FileScan text"), s"ingest scan is not a text scan:\n$tree")
+    assert(!tree.contains("FileScan csv"), s"the builtin CSV scan came back:\n$tree")
+    assert(tree.contains("graft_pp_line(") && tree.contains("graft_utc_minute("),
+      s"native split or date parse missing from the scan stage:\n$tree")
   }
 
   test("q_window_range: keyed window only — no Window without partitionBy") {
