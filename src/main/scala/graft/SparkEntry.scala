@@ -17,26 +17,7 @@ object SparkEntry {
     Relational.all ++ IngestQueries.all ++ Dedup.all ++ TextOps.all ++
       Similarity.all ++ Multimodal.all ++ Partitioned.all ++ Sampling.all ++
       Quality.all ++ Composite.all ++ Curation.all ++ Graph.all ++ Vocab.all ++
-      Seq(AutoDateAgg.qAutoDateAgg, TopKAgg.qTopkPerKey,
-        graft.streaming.Replay.qStreamWindow,
-        graft.streaming.Replay.qStreamJoin,
-        graft.streaming.Replay.qStreamDedup,
-        graft.streaming.Replay.qStreamDedupQueue,
-        graft.streaming.Replay.qStreamWindowQueue,
-        graft.streaming.Replay.qStreamSessionsQueue,
-        graft.streaming.Replay.qStreamJoinQueue,
-        graft.streaming.Replay.qSessions,
-        graft.streaming.Replay.qStreamSessions,
-        graft.streaming.Replay.qStreamQuality,
-        graft.streaming.Replay.qStreamIncrementalDedup,
-        graft.streaming.Replay.qStreamCdc,
-        graft.streaming.Replay.qStreamTopk,
-        graft.streaming.Replay.qStreamJoinOuter,
-        graft.streaming.Replay.qStreamSliding,
-        graft.streaming.Replay.qStreamFunnel,
-        graft.streaming.Replay.qStreamAnomaly,
-        graft.streaming.Replay.qStreamSample,
-        graft.streaming.Replay.qStreamPit)
+      Seq(AutoDateAgg.qAutoDateAgg, TopKAgg.qTopkPerKey) ++ graft.streaming.Replay.all
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * the reference's own pipeline shape — ingest the pp-complete fixture,

@@ -123,11 +123,7 @@ object Replay {
     */
   def replayWindowedCounts(spark: SparkSession, d: String): DataFrame = {
     val live = sentinelReplayDir(spark, d)
-    val out = java.nio.file.Files.createTempDirectory("swindow-out-")
-    try
-      replayToParquet(
-        windowedCountsDrained(readEvents(spark, live.toString)),
-        out.toString + "/counts")
+    try replayToParquet(windowedCountsDrained(readEvents(spark, live.toString)), sinkDir("window"))
     finally graft.FsUtil.deleteRecursively(live)
   }
 
@@ -197,17 +193,59 @@ object Replay {
 
   private def unloadStateStores(): Unit = stateStoreUnloadAll()
 
-  /** Replay an append-mode stream to a TEMP PARQUET sink and hand back a
+  /** The one streaming sink: drain an append-mode `stream` into a
+    * parquet sink at `outDir` and return the terminated query. It owns
+    * the whole lifecycle — state-store sizing ([[withStatePartitions]]),
+    * the state-store unload and, when `ckptDir` is None, a checkpoint
+    * of its own — and releases all three in `finally`, so a replay that
+    * throws leaves no running query, no changed conf and no checkpoint
+    * behind.
+    *
+    * The trigger follows from the stream's own sources. A file source
+    * knows its end, so `Trigger.AvailableNow` drains it. A
+    * [[graft.sources.QueueTable]] cannot: AvailableNow cannot drive a
+    * source without SupportsTriggerAvailableNow (Spark wraps one and
+    * processes only the FIRST admitted batch), and a queue does not know
+    * its end offset up front — so a stream that reads any queue
+    * triggers continuously and stops once `processAllAvailable` proves
+    * the broker has revealed nothing new: the live-deployment drain.
+    */
+  private def drain(stream: DataFrame, outDir: String,
+      ckptDir: Option[String]): org.apache.spark.sql.streaming.StreamingQuery = {
+    import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
+    val readsQueue = stream.queryExecution.logical.exists {
+      case r: StreamingRelationV2 => r.table.isInstanceOf[graft.sources.QueueTable]
+      case _                      => false
+    }
+    val ckpt = ckptDir.getOrElse(
+      java.nio.file.Files.createTempDirectory("replay-ckpt-").toString)
+    try withStatePartitions(stream.sparkSession) {
+      val q = stream.writeStream
+        .format("parquet")
+        .outputMode(OutputMode.Append())
+        .trigger(if (readsQueue) Trigger.ProcessingTime(0L) else Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt)
+        .option("path", outDir)
+        .start()
+      try { if (readsQueue) q.processAllAvailable() else q.awaitTermination() }
+      finally q.stop()
+      q.awaitTermination()
+      q
+    } finally {
+      unloadStateStores()
+      if (ckptDir.isEmpty) graft.FsUtil.deleteRecursively(java.nio.file.Paths.get(ckpt))
+    }
+  }
+
+  /** Replay an append-mode stream to a parquet sink and hand back a
     * lazy batch read of the sink directory — the production wiring for
     * unbounded output: the write is executor-parallel, nothing
     * accumulates on the driver (a memory sink would pin the full result
     * set there — linear in the input for a join, dead at 100 TB).
     */
   def replayToParquet(stream: DataFrame, outDir: String): DataFrame = {
-    val ckpt = java.nio.file.Files.createTempDirectory("replay-ckpt-")
-    val out = replayToParquet(stream, outDir, ckpt.toString)
-    graft.FsUtil.deleteRecursively(ckpt)
-    out
+    drain(stream, outDir, None)
+    readSink(stream, outDir)
   }
 
   /** Checkpoint-explicit variant: re-invoking with the SAME checkpoint
@@ -217,21 +255,21 @@ object Replay {
     * ReplaySpec's restart test).
     */
   def replayToParquet(stream: DataFrame, outDir: String, ckptDir: String): DataFrame = {
-    val spark = stream.sparkSession
-    withStatePartitions(spark) {
-      val q = stream.writeStream
-        .format("parquet")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .option("path", outDir)
-        .start()
-      q.awaitTermination()
-      unloadStateStores()
-    }
-    // explicit schema: a zero-row replay leaves no data file to infer from
-    spark.read.schema(stream.schema).parquet(outDir)
+    drain(stream, outDir, Some(ckptDir))
+    readSink(stream, outDir)
   }
+
+  // explicit schema: a zero-row replay leaves no data file to infer from
+  private def readSink(stream: DataFrame, outDir: String): DataFrame =
+    stream.sparkSession.read.schema(stream.schema).parquet(outDir)
+
+  /** A fresh sink directory for a declared replay. The replay hands back
+    * a lazy read of it, so it cannot be deleted when the replay returns;
+    * it is reclaimed at JVM exit instead.
+    */
+  private def sinkDir(tag: String): String =
+    graft.FsUtil.deleteOnExit(
+      java.nio.file.Files.createTempDirectory(s"replay-$tag-out-")).toString
 
   /** Plan-audit hook (PLANS.md): replay `stream` to exhaustion against a
     * throwaway parquet sink and return the FINAL micro-batch's executed
@@ -241,26 +279,12 @@ object Replay {
     * queries return the sink read-back, whose plan is just a parquet
     * scan, so this is the only way to put the streaming shape on audit.
     */
-  def lastExecutionPlan(stream: DataFrame, outDir: String): String = {
-    val spark = stream.sparkSession
-    val ckpt = java.nio.file.Files.createTempDirectory("replay-ckpt-")
-    try withStatePartitions(spark) {
-      val q = stream.writeStream
-        .format("parquet")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt.toString)
-        .option("path", outDir)
-        .start()
-      q.awaitTermination()
-      unloadStateStores()
-      q match {
-        case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
-          w.streamingQuery.lastExecution
-            .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      }
-    } finally graft.FsUtil.deleteRecursively(ckpt)
-  }
+  def lastExecutionPlan(stream: DataFrame, outDir: String): String =
+    drain(stream, outDir, None) match {
+      case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
+        w.streamingQuery.lastExecution
+          .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    }
 
   /** Declared query — ORACLED: a sentinel-drained Append replay is
     * trigger-invariant (event time drives every aggregate, and the
@@ -346,10 +370,7 @@ object Replay {
     * must never accumulate on the driver).
     */
   def replayRangeJoin(spark: SparkSession, dir: String): DataFrame =
-    replayToParquet(
-      rangeJoinStream(spark, dir),
-      java.nio.file.Files.createTempDirectory("replay-join-out-").toString
-    )
+    replayToParquet(rangeJoinStream(spark, dir), sinkDir("join"))
 
   /** COUNT-TARGETED event-time-sliced staged copy of the raw events
     * file (r11) — the [[pitReplayDir]] one-write staging applied to
@@ -393,10 +414,7 @@ object Replay {
     val hp = new org.apache.hadoop.fs.Path(glob)
     val hfs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
     val srcFiles = hfs.globStatus(hp).map(_.getPath).sortBy(_.getName)
-    linkedStagedLayout(s, "sjoin", srcFiles.map(_.toUri.getPath).toSeq,
-      "replay-sjoin-in-") { live =>
-      import java.nio.file.{Files, StandardCopyOption}
-      import java.nio.file.attribute.FileTime
+    linkedStagedLayout(s, "sjoin", srcFiles.map(_.toUri.getPath).toSeq) { live =>
       val longShape = tsIsLong(s, glob)
       val raw = s.read.schema(if (longShape) rawSchema else rawSchemaNtz).parquet(glob)
       val tsuSql =
@@ -414,7 +432,7 @@ object Replay {
         val dst = live.resolve("000.parquet")
         hfs.copyToLocalFile(srcFiles.head,
           new org.apache.hadoop.fs.Path(dst.toString))
-        Files.setLastModifiedTime(dst, FileTime.fromMillis(1000000000000L))
+        stampSlot(dst, 0)
       } else {
         val (lo, width) =
           if (nSlices == 1L) (0L, Long.MaxValue)
@@ -424,27 +442,7 @@ object Replay {
             val (l, h) = (bounds.getLong(0), bounds.getLong(1))
             (l, math.max(1L, (h - l) / nSlices + 1L))
           }
-        val wkCol = expr(s"($tsuSql - ${lo}L) div ${width}L")
-        val staged = Files.createTempDirectory("sjoin-staged-")
-        raw.withColumn("pslice", wkCol)
-          .repartition(col("pslice"))
-          .write.mode("overwrite").partitionBy("pslice").parquet(staged.toString)
-        val slices = for {
-          wd <- new java.io.File(staged.toString).listFiles().toSeq
-          if wd.getName.startsWith("pslice=")
-        } yield (wd.getName.stripPrefix("pslice=").toLong, wd)
-        var slot = 0
-        for ((w, dir0) <- slices.sortBy(_._1)) {
-          val fs = dir0.listFiles().filter(_.getName.endsWith(".parquet"))
-          require(fs.length == 1,
-            s"slice $w staged ${fs.length} files — the one-task-per-slice repartition contract broke")
-          Files.move(fs.head.toPath, live.resolve(f"$slot%03d.parquet"),
-            StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(live.resolve(f"$slot%03d.parquet"),
-            FileTime.fromMillis(1000000000000L + slot * 60000L))
-          slot += 1
-        }
-        graft.FsUtil.deleteRecursively(staged)
+        writeSlices(raw, expr(s"($tsuSql - ${lo}L) div ${width}L"), live)
       }
     }
   }
@@ -483,7 +481,6 @@ object Replay {
     "q_stream_sliding",
     (s, d) => {
       val live = sentinelReplayDir(s, d)
-      val out = java.nio.file.Files.createTempDirectory("sslide-out-")
       val counts =
         try {
           val stream = readEvents(s, live.toString)
@@ -492,7 +489,7 @@ object Replay {
             .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("event_type"))
             .agg(count(lit(1)).as("n_events"))
             .select(col("w.start").as("window_start"), col("event_type"), col("n_events"))
-          replayToParquet(stream, out.toString + "/counts")
+          replayToParquet(stream, sinkDir("slide"))
         } finally graft.FsUtil.deleteRecursively(live)
       counts.orderBy("window_start", "event_type")
     },
@@ -551,9 +548,8 @@ object Replay {
     "q_stream_join_outer",
     (s, d) => {
       val live = sentinelReplayDir(s, d)
-      val out = java.nio.file.Files.createTempDirectory("sjoin-outer-out-")
       val res =
-        try replayToParquet(rangeJoinOuterStream(s, live.toString), out.toString + "/rows")
+        try replayToParquet(rangeJoinOuterStream(s, live.toString), sinkDir("jouter"))
         finally graft.FsUtil.deleteRecursively(live)
       res.orderBy("user_id", "a_id", "b_id")
     },
@@ -583,10 +579,7 @@ object Replay {
     * (see [[replayToParquet]]).
     */
   def replayDedup(spark: SparkSession, dir: String): DataFrame =
-    replayToParquet(
-      dedupStream(readEvents(spark, dir)),
-      java.nio.file.Files.createTempDirectory("replay-dedup-out-").toString
-    )
+    replayToParquet(dedupStream(readEvents(spark, dir)), sinkDir("dedup"))
 
   val qStreamDedup: graft.ops.Q = graft.ops.Q(
     "q_stream_dedup",
@@ -598,34 +591,6 @@ object Replay {
     Some("""SELECT DISTINCT user_id, event_type FROM events
             ORDER BY user_id, event_type""")
   )
-
-  /** Drain a stream fed by a rate-limited [[graft.sources.QueueBroker]]
-    * queue to a temp parquet sink. Trigger.AvailableNow cannot drive a
-    * source without SupportsTriggerAvailableNow (Spark wraps one and
-    * processes only the FIRST admitted batch), and a queue genuinely
-    * does not know its end offset up front — so this variant triggers
-    * continuously and returns once `processAllAvailable` proves the
-    * broker has revealed nothing new: the live-deployment drain.
-    */
-  def replayQueueToParquet(stream: DataFrame, outDir: String): DataFrame = {
-    val spark = stream.sparkSession
-    val ckpt = java.nio.file.Files.createTempDirectory("replay-ckpt-")
-    withStatePartitions(spark) {
-      val q = stream.writeStream
-        .format("parquet")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.ProcessingTime(0L))
-        .option("checkpointLocation", ckpt.toString)
-        .option("path", outDir)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      q.awaitTermination()
-      unloadStateStores()
-    }
-    graft.FsUtil.deleteRecursively(ckpt)
-    spark.read.schema(stream.schema).parquet(outDir)
-  }
 
   /** Shard a ts-carrying frame ROUND-ROBIN over its GLOBAL event-time
     * order — the queue feeds' frontier-alignment stage: the broker's
@@ -706,8 +671,8 @@ object Replay {
     * the build, a data change changes the key, and deleting the live
     * dir after the replay only drops links.
     */
-  private def linkedStagedLayout(s: SparkSession, tag: String, srcPaths: Seq[String],
-      livePrefix: String)(build: java.nio.file.Path => Unit): java.nio.file.Path = {
+  private def linkedStagedLayout(s: SparkSession, tag: String, srcPaths: Seq[String])(
+      build: java.nio.file.Path => Unit): java.nio.file.Path = {
     import java.nio.file.{Files, Paths}
     val root = graft.ops.Staged.layout(s, s"${tag}_stage", srcPaths) { tmp =>
       val p = Paths.get(tmp)
@@ -715,7 +680,7 @@ object Replay {
       build(p)
       Files.write(p.resolve("_SUCCESS"), Array.emptyByteArray)
     }
-    val live = Files.createTempDirectory(livePrefix)
+    val live = Files.createTempDirectory(s"replay-$tag-in-")
     val listing = Files.list(Paths.get(root))
     val files =
       try {
@@ -726,6 +691,69 @@ object Replay {
       } finally listing.close()
     linkInto(live, files)
     live
+  }
+
+  /** Stamp the `slot`-th file of a staged replay layout: mtimes 60 s
+    * apart, because with `maxFilesPerTrigger=1` FileStreamSource
+    * delivers files oldest-mtime-first, one per micro-batch.
+    */
+  private def stampSlot(f: java.nio.file.Path, slot: Int): Unit =
+    java.nio.file.Files.setLastModifiedTime(f,
+      java.nio.file.attribute.FileTime.fromMillis(1000000000000L + slot * 60000L))
+
+  /** A drain-sentinel replay layout over one source file: the file as
+    * `00.parquet`, then `sentinel` written as ONE file `01.parquet`, a
+    * minute later, so the sentinel arrives as the final micro-batch.
+    */
+  private def sentinelLayout(s: SparkSession, tag: String, src: String)(
+      sentinel: => DataFrame): java.nio.file.Path =
+    linkedStagedLayout(s, tag, Seq(src)) { live =>
+      import java.nio.file.{Files, Paths, StandardCopyOption}
+      // Files.copy on a DIRECTORY-style dataset would copy an empty dir
+      // entry and the replay source would silently read zero data rows —
+      // fail loudly instead (the successExists hadoop-FS discipline)
+      require(Files.isRegularFile(Paths.get(src)),
+        s"replay fixture must be a single-file parquet dataset: $src")
+      Files.copy(Paths.get(src), live.resolve("00.parquet"), StandardCopyOption.REPLACE_EXISTING)
+      stampSlot(live.resolve("00.parquet"), 0)
+      val tmp = Files.createTempDirectory(s"$tag-file-")
+      sentinel.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val listing = Files.list(tmp)
+      val part =
+        try listing.filter(_.toString.endsWith(".parquet")).findFirst.get
+        finally listing.close()
+      Files.move(part, live.resolve("01.parquet"), StandardCopyOption.REPLACE_EXISTING)
+      stampSlot(live.resolve("01.parquet"), 1)
+      graft.FsUtil.deleteRecursively(tmp)
+    }
+
+  /** Stage `df` into `live` as one file per distinct `key` value, in key
+    * order: ONE partitioned write (never a per-slice job loop), where
+    * repartitioning on the same key lands each slice in ONE task and so
+    * in exactly one file; then driver-side moves to `000.parquet`,
+    * `001.parquet`, … stamped in key order ([[stampSlot]]). The key is
+    * a partition column, so it never lands in the data files.
+    */
+  private def writeSlices(df: DataFrame, key: org.apache.spark.sql.Column,
+      live: java.nio.file.Path): Unit = {
+    import java.nio.file.{Files, StandardCopyOption}
+    val staged = Files.createTempDirectory("slices-staged-")
+    df.withColumn("pslice", key)
+      .repartition(col("pslice"))
+      .write.mode("overwrite").partitionBy("pslice").parquet(staged.toString)
+    val slices = for {
+      wd <- new java.io.File(staged.toString).listFiles().toSeq
+      if wd.getName.startsWith("pslice=")
+    } yield (wd.getName.stripPrefix("pslice=").toLong, wd)
+    for (((k, dir), slot) <- slices.sortBy(_._1).zipWithIndex) {
+      val fs = dir.listFiles().filter(_.getName.endsWith(".parquet"))
+      require(fs.length == 1,
+        s"slice $k staged ${fs.length} files — the one-task-per-slice repartition contract broke")
+      val dst = live.resolve(f"$slot%03d.parquet")
+      Files.move(fs.head.toPath, dst, StandardCopyOption.REPLACE_EXISTING)
+      stampSlot(dst, slot)
+    }
+    graft.FsUtil.deleteRecursively(staged)
   }
 
   /** Staged queue shards (r13 VERDICT): the ts-round-robin staging
@@ -786,6 +814,25 @@ object Replay {
     evts.schema
   }
 
+  /** Open one queue-fed events stream for `body`: a private live dir,
+    * a uniquely named queue registered over the shared staging
+    * ([[stageEventsQueue]]), and the [[graft.sources.QueueSource]]
+    * stream reading it. The queue is removed and its live dir deleted
+    * when `body` returns or throws.
+    */
+  private def withEventsQueue[T](s: SparkSession, d: String, tag: String, nShards: Int,
+      rowsPerBatch: Int, sentinel: Boolean)(body: DataFrame => T): T = {
+    val live = java.nio.file.Files.createTempDirectory(s"queue-log-$tag-")
+    val name = s"events-$tag-" + java.util.UUID.randomUUID()
+    try {
+      stageEventsQueue(s, d, name, live, nShards, rowsPerBatch, sentinel)
+      body(s.readStream.format(graft.sources.QueueSource.Name).option("queue", name).load())
+    } finally {
+      graft.sources.QueueBroker.remove(name)
+      graft.FsUtil.deleteRecursively(live)
+    }
+  }
+
   /** [[dedupStream]] — the IDENTICAL operator — fed through the
     * [[graft.sources.QueueSource]] micro-batch source instead of the
     * file source: the broker reveals ≤ rowsPerBatch rows per trigger
@@ -816,29 +863,12 @@ object Replay {
     // driver-side toLocalIterator (~39 k rows/s, 257 s at sf10 — the
     // round's scale-killer); stageShards writes and serves every shard
     // executor-side, the driver handles offsets only.
-    val stageDir = java.nio.file.Files.createTempDirectory("queue-log-")
-    val name = "events-" + java.util.UUID.randomUUID()
     // rowsPerBatch ≤ 0: the broker derives the rate limit from its own
     // staged totals — no separate corpus count() (r13 late fix).
     // Staging rides the shared content-keyed superset cache (r15); no
     // sentinel — the dedup replay drains by file exhaustion.
-    stageEventsQueue(s, d, name, stageDir, nShards, rowsPerBatch, sentinel = false)
-    try {
-      val stream = s.readStream
-        .format(graft.sources.QueueSource.Name)
-        .option("queue", name)
-        .load()
-      replayQueueToParquet(
-        dedupStream(stream),
-        // the returned frame lazily reads this sink, so it cannot be
-        // deleted here — registered for JVM-exit cleanup instead (the
-        // r12 ADVICE leak: 3 Bench passes × scales left one key-set
-        // dir each)
-        graft.FsUtil.deleteOnExit(
-          java.nio.file.Files.createTempDirectory("replay-qdedup-out-")).toString)
-    } finally {
-      graft.sources.QueueBroker.remove(name)
-      graft.FsUtil.deleteRecursively(stageDir)
+    withEventsQueue(s, d, "d", nShards, rowsPerBatch, sentinel = false) { stream =>
+      replayToParquet(dedupStream(stream), sinkDir("qdedup"))
     }
   }
 
@@ -885,21 +915,8 @@ object Replay {
     // watermark is the global MAX event time, so one early sentinel
     // would drop every other shard's tail as late (see the LogQueue
     // scaladoc; measured)
-    val stageDir = java.nio.file.Files.createTempDirectory("queue-log-w-")
-    val name = "events-w-" + java.util.UUID.randomUUID()
-    stageEventsQueue(s, d, name, stageDir, nShards, rowsPerBatch, sentinel = true)
-    try {
-      val stream = s.readStream
-        .format(graft.sources.QueueSource.Name)
-        .option("queue", name)
-        .load()
-      replayQueueToParquet(
-        windowedCountsDrained(stream),
-        graft.FsUtil.deleteOnExit(
-          java.nio.file.Files.createTempDirectory("replay-qwindow-out-")).toString)
-    } finally {
-      graft.sources.QueueBroker.remove(name)
-      graft.FsUtil.deleteRecursively(stageDir)
+    withEventsQueue(s, d, "w", nShards, rowsPerBatch, sentinel = true) { stream =>
+      replayToParquet(windowedCountsDrained(stream), sinkDir("qwindow"))
     }
   }
 
@@ -1055,11 +1072,6 @@ object Replay {
             ORDER BY user_id, session_start""")
   )
 
-  /** Run sessionization over a directory of event files, streaming
-    * emitted sessions straight to a parquet sink — the production wiring
-    * (executor-parallel write, nothing accumulates on the driver) —
-    * then hand back the sink contents as a lazy Dataset.
-    */
   /** Declared query — ORACLED: the custom stateful operator
     * ([[sessionize]], flatMapGroupsWithState) replayed to a parquet
     * sink, with an END-OF-STREAM SENTINEL event appended as a second
@@ -1076,16 +1088,12 @@ object Replay {
     "q_stream_sessions",
     (s, d) => {
       val live = sentinelReplayDir(s, d)
-      val out = java.nio.file.Files
-        .createTempDirectory("replay-sess-out-").toString + "/sessions"
-      val sessions = replaySessions(s, live.toString, out)
-        .toDF()
-        .where(org.apache.spark.sql.functions.col("user_id") =!= -1L)
+      // the replay fully consumes its input; only the sink (lazily read)
+      // must survive — don't leave an events copy per run in /tmp
+      try replaySessions(s, live.toString, sinkDir("sess")).toDF()
+        .where(col("user_id") =!= -1L)
         .orderBy("user_id", "session_start")
-      // the replay has fully consumed its inputs; only `out` (lazily
-      // read) must survive — don't leave an events copy per run in /tmp
-      graft.FsUtil.deleteRecursively(live)
-      sessions
+      finally graft.FsUtil.deleteRecursively(live)
     },
     qSessions.oracle
   )
@@ -1108,22 +1116,8 @@ object Replay {
   def replaySessionsQueue(s: SparkSession, d: String, rowsPerBatch: Int = 0,
       nShards: Int = 8): DataFrame = {
     import s.implicits._
-    val stageDir = java.nio.file.Files.createTempDirectory("queue-log-s-")
-    val name = "events-s-" + java.util.UUID.randomUUID()
-    stageEventsQueue(s, d, name, stageDir, nShards, rowsPerBatch, sentinel = true)
-    try {
-      val stream = s.readStream
-        .format(graft.sources.QueueSource.Name)
-        .option("queue", name)
-        .load()
-        .as[Evt]
-      replayQueueToParquet(
-        sessionize(stream).toDF(),
-        graft.FsUtil.deleteOnExit(
-          java.nio.file.Files.createTempDirectory("replay-qsess-out-")).toString)
-    } finally {
-      graft.sources.QueueBroker.remove(name)
-      graft.FsUtil.deleteRecursively(stageDir)
+    withEventsQueue(s, d, "s", nShards, rowsPerBatch, sentinel = true) { stream =>
+      replayToParquet(sessionize(stream.as[Evt]).toDF(), sinkDir("qsess"))
     }
   }
 
@@ -1165,37 +1159,21 @@ object Replay {
     */
   def replayRangeJoinQueue(s: SparkSession, d: String, rowsPerBatch: Int = 0,
       nShards: Int = 8): DataFrame = {
-    val liveA = java.nio.file.Files.createTempDirectory("queue-log-ja-")
-    val liveB = java.nio.file.Files.createTempDirectory("queue-log-jb-")
-    val nameA = "events-ja-" + java.util.UUID.randomUUID()
-    val nameB = "events-jb-" + java.util.UUID.randomUUID()
-    stageEventsQueue(s, d, nameA, liveA, nShards, rowsPerBatch, sentinel = true)
-    // warm by construction: links the same logs A staged
-    stageEventsQueue(s, d, nameB, liveB, nShards, rowsPerBatch, sentinel = true)
-    try {
-      val horizon = to_timestamp(lit("2099-01-01 00:00:00"))
-      def topic(name: String) = s.readStream
-        .format(graft.sources.QueueSource.Name)
-        .option("queue", name)
-        .load()
-      val a = topic(nameA)
-        .select(col("user_id"), col("event_id").as("a_id"), col("ts").as("a_ts"))
-        .withWatermark("a_ts", "1 hour")
-        .where(col("a_ts") < horizon)
-      val b = topic(nameB)
-        .select(col("user_id").as("b_user"), col("event_id").as("b_id"),
-          col("ts").as("b_ts"))
-        .withWatermark("b_ts", "1 hour")
-        .where(col("b_ts") < horizon)
-      replayQueueToParquet(
-        graft.ops.Relational.bucketedRangeJoin(a, b),
-        graft.FsUtil.deleteOnExit(
-          java.nio.file.Files.createTempDirectory("replay-qjoin-out-")).toString)
-    } finally {
-      graft.sources.QueueBroker.remove(nameA)
-      graft.sources.QueueBroker.remove(nameB)
-      graft.FsUtil.deleteRecursively(liveA)
-      graft.FsUtil.deleteRecursively(liveB)
+    val horizon = to_timestamp(lit("2099-01-01 00:00:00"))
+    withEventsQueue(s, d, "ja", nShards, rowsPerBatch, sentinel = true) { topicA =>
+      // warm by construction: links the same logs A staged
+      withEventsQueue(s, d, "jb", nShards, rowsPerBatch, sentinel = true) { topicB =>
+        val a = topicA
+          .select(col("user_id"), col("event_id").as("a_id"), col("ts").as("a_ts"))
+          .withWatermark("a_ts", "1 hour")
+          .where(col("a_ts") < horizon)
+        val b = topicB
+          .select(col("user_id").as("b_user"), col("event_id").as("b_id"),
+            col("ts").as("b_ts"))
+          .withWatermark("b_ts", "1 hour")
+          .where(col("b_ts") < horizon)
+        replayToParquet(graft.ops.Relational.bucketedRangeJoin(a, b), sinkDir("qjoin"))
+      }
     }
   }
 
@@ -1254,7 +1232,7 @@ object Replay {
         qualityGate(
           s.readStream.schema(docSchema).option("maxFilesPerTrigger", "1")
             .parquet(s"$d/documents*.parquet")),
-        java.nio.file.Files.createTempDirectory("replay-quality-out-").toString
+        sinkDir("quality")
       ).orderBy("doc_id"),
     Some {
       val rows = graft.ops.Quality.VOCAB
@@ -1298,7 +1276,7 @@ object Replay {
         anomalyGate(
           readEvents(s, s"$d/events*.parquet"),
           graft.ops.Sampling.eventTypeStats(graft.ops.Tables.events(s, d))),
-        java.nio.file.Files.createTempDirectory("replay-anom-out-").toString
+        sinkDir("anom")
       ).orderBy("event_id"),
     Some("""WITH stats AS (
               SELECT event_type AS g,
@@ -1364,10 +1342,8 @@ object Replay {
         .parquet(s"$d/documents*.parquet")
         .select(col("doc_id"), col("text"))
         .as[(Long, String)]
-      replayToParquet(
-        dedupIngest(docs).toDF("doc_id"),
-        java.nio.file.Files.createTempDirectory("replay-increvdedup-out-").toString
-      ).orderBy("doc_id")
+      replayToParquet(dedupIngest(docs).toDF("doc_id"), sinkDir("increvdedup"))
+        .orderBy("doc_id")
     },
     Some("""SELECT min(doc_id) AS doc_id FROM documents
             GROUP BY text ORDER BY doc_id""")
@@ -1433,26 +1409,13 @@ object Replay {
     (s, d) => {
       import s.implicits._
       val live = sentinelReplayDir(s, d)
-      val out = java.nio.file.Files.createTempDirectory("replay-cdc-out-").toString + "/cdc"
-      val evts = readEvents(s, live.toString)
-        .select("event_id", "ts", "user_id", "event_type", "value").as[CdcEvt]
-      val ckpt = java.nio.file.Files.createTempDirectory("cdc-ckpt-")
-      withStatePartitions(s) {
-        val q = cdcApply(evts).writeStream
-          .format("parquet")
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt.toString)
-          .option("path", out)
-          .start()
-        q.awaitTermination()
-      unloadStateStores()
-      }
-      graft.FsUtil.deleteRecursively(ckpt)
-      graft.FsUtil.deleteRecursively(live)
-      s.read.parquet(out)
-        .where(col("user_id") =!= -1L)
-        .orderBy("user_id")
+      try {
+        val evts = readEvents(s, live.toString)
+          .select("event_id", "ts", "user_id", "event_type", "value").as[CdcEvt]
+        replayToParquet(cdcApply(evts).toDF(), sinkDir("cdc"))
+          .where(col("user_id") =!= -1L)
+          .orderBy("user_id")
+      } finally graft.FsUtil.deleteRecursively(live)
     },
     graft.ops.Dedup.qCdcApply.oracle
   )
@@ -1573,26 +1536,13 @@ object Replay {
     (s, d) => {
       import s.implicits._
       val live = sentinelReplayDir(s, d)
-      val out = java.nio.file.Files.createTempDirectory("replay-funnel-out-").toString + "/funnel"
-      val evts = readEvents(s, live.toString)
-        .select("event_id", "ts", "user_id", "event_type", "value").as[CdcEvt]
-      val ckpt = java.nio.file.Files.createTempDirectory("funnel-ckpt-")
-      withStatePartitions(s) {
-        val q = funnelStream(evts).writeStream
-          .format("parquet")
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt.toString)
-          .option("path", out)
-          .start()
-        q.awaitTermination()
-      unloadStateStores()
-      }
-      graft.FsUtil.deleteRecursively(ckpt)
-      graft.FsUtil.deleteRecursively(live)
-      s.read.parquet(out)
-        .where(col("user_id") =!= -1L)
-        .orderBy("user_id")
+      try {
+        val evts = readEvents(s, live.toString)
+          .select("event_id", "ts", "user_id", "event_type", "value").as[CdcEvt]
+        replayToParquet(funnelStream(evts).toDF(), sinkDir("funnel"))
+          .where(col("user_id") =!= -1L)
+          .orderBy("user_id")
+      } finally graft.FsUtil.deleteRecursively(live)
     },
     graft.ops.Composite.qFunnel.oracle
   )
@@ -1607,14 +1557,9 @@ object Replay {
     // published once, hard-linked per replay (r15 — the content-keyed
     // layout idiom; previously every replay paid a full file copy plus
     // a 1-row Spark write job for the sentinel)
-    linkedStagedLayout(s, "sentinel", Seq(s"$d/events.parquet"), "replay-sentinel-in-") { live =>
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      import java.nio.file.attribute.FileTime
-      val src = Paths.get(s"$d/events.parquet")
-      Files.copy(src, live.resolve("00.parquet"), StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(live.resolve("00.parquet"), FileTime.fromMillis(1000000000000L))
+    sentinelLayout(s, "sentinel", s"$d/events.parquet") {
       val sentinelSecs = 4102444800L // 2100-01-01T00:00Z
-      val longShape = tsIsLong(s, src.toString)
+      val longShape = tsIsLong(s, s"$d/events.parquet")
       val row =
         if (longShape)
           org.apache.spark.sql.Row(-1L, sentinelSecs * 1000000000L, -1L, "sentinel", 0.0, "{}")
@@ -1622,35 +1567,18 @@ object Replay {
           org.apache.spark.sql.Row(-1L,
             java.time.LocalDateTime.ofEpochSecond(sentinelSecs, 0, java.time.ZoneOffset.UTC),
             -1L, "sentinel", 0.0, "{}")
-      val tmp = Files.createTempDirectory("sentinel-file-")
       s.createDataFrame(java.util.List.of(row), if (longShape) rawSchema else rawSchemaNtz)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val listing = Files.list(tmp)
-      val part =
-        try listing.filter(_.toString.endsWith(".parquet")).findFirst.get
-        finally listing.close()
-      Files.move(part, live.resolve("01.parquet"), StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(live.resolve("01.parquet"), FileTime.fromMillis(1000000060000L))
-      graft.FsUtil.deleteRecursively(tmp)
     }
 
+  /** Run sessionization over a directory of event files, streaming
+    * emitted sessions straight to a parquet sink — the production wiring
+    * (executor-parallel write, nothing accumulates on the driver) —
+    * then hand back the sink contents as a lazy Dataset.
+    */
   def replaySessions(spark: SparkSession, dir: String, outDir: String): Dataset[Session] = {
     import spark.implicits._
     val evts = readEvents(spark, dir).select("event_id", "ts", "user_id").as[Evt]
-    val ckpt = java.nio.file.Files.createTempDirectory("sess-ckpt-")
-    withStatePartitions(spark) {
-      val q = sessionize(evts).writeStream
-        .format("parquet")
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt.toString)
-        .option("path", outDir)
-        .start()
-      q.awaitTermination()
-      unloadStateStores()
-    }
-    graft.FsUtil.deleteRecursively(ckpt)
-    spark.read.parquet(outDir).as[Session]
+    replayToParquet(sessionize(evts).toDF(), outDir).as[Session]
   }
 
   /** Shard count for the streaming sampler's bottom-k state — the
@@ -1672,30 +1600,11 @@ object Replay {
     * rides the DATA path and is recognized by its impossible id.
     */
   private[graft] def docSentinelDir(s: SparkSession, d: String): java.nio.file.Path =
-    linkedStagedLayout(s, "docsent", Seq(s"$d/documents.parquet"), "replay-docsent-in-") { live =>
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      import java.nio.file.attribute.FileTime
-      val src = Paths.get(s"$d/documents.parquet")
-      // Files.copy on a DIRECTORY-style dataset would copy an empty dir
-      // entry and the replay source would silently read zero data rows —
-      // fail loudly instead (the successExists hadoop-FS discipline)
-      require(Files.isRegularFile(src),
-        s"replay fixture must be a single-file parquet dataset: $src")
-      Files.copy(src, live.resolve("00.parquet"),
-        StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(live.resolve("00.parquet"), FileTime.fromMillis(1000000000000L))
-      val rows: java.util.List[org.apache.spark.sql.Row] =
+    sentinelLayout(s, "docsent", s"$d/documents.parquet") {
+      s.createDataFrame(
         java.util.List.of((0L until SampleShards).map(i =>
-          org.apache.spark.sql.Row(-1L - i, "drain", "xx", "drain", 0L)): _*)
-      val tmp = Files.createTempDirectory("docsent-file-")
-      s.createDataFrame(rows, docSchema).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val listing = Files.list(tmp)
-      val part =
-        try listing.filter(_.toString.endsWith(".parquet")).findFirst.get
-        finally listing.close()
-      Files.move(part, live.resolve("01.parquet"), StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(live.resolve("01.parquet"), FileTime.fromMillis(1000000060000L))
-      graft.FsUtil.deleteRecursively(tmp)
+          org.apache.spark.sql.Row(-1L - i, "drain", "xx", "drain", 0L)): _*),
+        docSchema)
     }
 
   /** Sharded streaming BOTTOM-K state fold: per shard keep the k docs
@@ -1727,22 +1636,6 @@ object Replay {
       }
   }
 
-  /** STREAMING WEIGHTED SAMPLE (E16 × E14) — q_weighted_sample as a
-    * sample-on-ingest operator: the replication-min-hash priority is a
-    * pure per-row expression (identical Column tree to the batch
-    * query), so the bottom-k BY PRIORITY is a deterministic set and
-    * the streaming fold just maintains it — per shard, k rows of
-    * state, O(shards·k) total regardless of stream length. The final
-    * batch step merges the 8 shard flushes (≤ 8k rows) into the global
-    * bottom-20, which equals the batch bottom-20 because each shard's
-    * global members are necessarily within that shard's own bottom-k.
-    * ORACLED with q_weighted_sample's own algebra (minus the lang
-    * column the state never carries): the hash match proves the
-    * streamed sample IS the batch sample — trigger-split invariance
-    * comes free from determinism, and ReplaySpec adds the two-phase
-    * displacement law (a later batch's lower priority evicts an
-    * earlier batch's member).
-    */
   /** The replication-min-hash priority stream over a staged sentinel
     * dir — the q_stream_sample input, shared with the PlanDump audit
     * hook so the plan on file is the plan the declared query runs.
@@ -1761,18 +1654,31 @@ object Replay {
       .as[WDoc]
   }
 
+  /** STREAMING WEIGHTED SAMPLE (E16 × E14) — q_weighted_sample as a
+    * sample-on-ingest operator: the replication-min-hash priority is a
+    * pure per-row expression (identical Column tree to the batch
+    * query), so the bottom-k BY PRIORITY is a deterministic set and
+    * the streaming fold just maintains it — per shard, k rows of
+    * state, O(shards·k) total regardless of stream length. The final
+    * batch step merges the 8 shard flushes (≤ 8k rows) into the global
+    * bottom-20, which equals the batch bottom-20 because each shard's
+    * global members are necessarily within that shard's own bottom-k.
+    * ORACLED with q_weighted_sample's own algebra (minus the lang
+    * column the state never carries): the hash match proves the
+    * streamed sample IS the batch sample — trigger-split invariance
+    * comes free from determinism, and ReplaySpec adds the two-phase
+    * displacement law (a later batch's lower priority evicts an
+    * earlier batch's member).
+    */
   val qStreamSample: graft.ops.Q = graft.ops.Q(
     "q_stream_sample",
     (s, d) => {
       val live = docSentinelDir(s, d)
-      try {
-        val docs = weightedDocStream(s, live.toString)
-        replayToParquet(
-          sampleStream(docs, 20).toDF(),
-          java.nio.file.Files.createTempDirectory("replay-wsample-out-").toString)
-          .orderBy("priority", "doc_id").limit(20)
-          .select("doc_id", "w", "priority")
-      } finally graft.FsUtil.deleteRecursively(live)
+      try replayToParquet(sampleStream(weightedDocStream(s, live.toString), 20).toDF(),
+          sinkDir("wsample"))
+        .orderBy("priority", "doc_id").limit(20)
+        .select("doc_id", "w", "priority")
+      finally graft.FsUtil.deleteRecursively(live)
     },
     Some("""SELECT doc_id,
                    least(CAST(len(string_split(text,' ')) AS BIGINT), 8) AS w,
@@ -1821,55 +1727,23 @@ object Replay {
     // links it (r15 — the r14 VERDICT ruling extending the queue-shard
     // staging idiom to this layout; the maxFilesPerTrigger=1 per-week
     // commit ordering below is SEMANTIC and unchanged)
-    linkedStagedLayout(s, "pit", Seq(s"$d/events.parquet"), "replay-pit-in-") { live =>
-      import java.nio.file.{Files, StandardCopyOption}
-      import java.nio.file.attribute.FileTime
-      val ev = graft.ops.Tables.events(s, d)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          unix_micros(col("ts")).as("tsu"), col("value"))
-        .withColumn("wk", expr("tsu div 604800000000"))
-      val staged = ev
+    linkedStagedLayout(s, "pit_m1", Seq(s"$d/events.parquet")) { live =>
+      val staged = graft.ops.Tables.events(s, d)
         .where(col("event_type").isin("purchase", "click"))
         .select(
           when(col("event_type") === "purchase", 0).otherwise(1).as("kind"),
-          col("event_id"), col("user_id"), col("tsu"), col("wk"), col("value"))
-      // ONE partitioned write stages every week as ONE slice holding
-      // BOTH kinds (r11 one-write rule; r15 halves the trigger count:
-      // the operator folds a batch's versions BEFORE its probes emit —
-      // see [[pitStream]]'s mixed-batch contract — so week w's atomic
-      // publish of features+probes in one micro-batch preserves the
-      // `v.wk <= p.wk` serve cadence exactly, and one file per week is
-      // robust to weeks missing a kind where any fixed files-per-
-      // trigger pairing would misalign). partitionBy on a COPY of the
-      // key keeps wk in the data files (the stream reader's schema
-      // needs it); repartition on the same key lands each week in ONE
-      // task, so each dir holds exactly ONE file; an empty week
-      // produces no dir at all (dynamic partition writes skip them).
-      val stagedir = Files.createTempDirectory("pit-staged-")
-      staged
-        .withColumn("pwk", col("wk"))
-        .repartition(col("pwk"))
-        .write.mode("overwrite").partitionBy("pwk")
-        .parquet(stagedir.toString)
-      // post-hoc mtime stamping in week-ascending order — the mtime
-      // contract documented on the reader below is applied AFTER the
-      // one write, driver-side file moves only
-      val slices = for {
-        wd <- new java.io.File(stagedir.toString).listFiles().toSeq
-        if wd.getName.startsWith("pwk=")
-      } yield (wd.getName.stripPrefix("pwk=").toLong, wd)
-      var slot = 0
-      for ((w, dir) <- slices.sortBy(_._1)) {
-        val fs = dir.listFiles().filter(_.getName.endsWith(".parquet"))
-        require(fs.length == 1,
-          s"PIT slice wk=$w staged ${fs.length} files — the one-task-per-slice repartition contract broke")
-        Files.move(fs.head.toPath, live.resolve(f"$slot%02d.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(live.resolve(f"$slot%02d.parquet"),
-          FileTime.fromMillis(1000000000000L + slot * 60000L))
-        slot += 1
-      }
-      graft.FsUtil.deleteRecursively(stagedir)
+          col("event_id"), col("user_id"), unix_micros(col("ts")).as("tsu"),
+          expr("unix_micros(ts) div 604800000000").as("wk"), col("value"))
+      // ONE slice per week holding BOTH kinds (r11 one-write rule; r15
+      // halves the trigger count: the operator folds a batch's versions
+      // BEFORE its probes emit — see [[pitStream]]'s mixed-batch
+      // contract — so week w's atomic publish of features+probes in one
+      // micro-batch preserves the `v.wk <= p.wk` serve cadence exactly,
+      // and one file per week is robust to weeks missing a kind where
+      // any fixed files-per-trigger pairing would misalign). The slice
+      // key is a COPY of wk, so wk stays in the data files (the stream
+      // reader's schema needs it); an empty week produces no file.
+      writeSlices(staged, col("wk"), live)
     }
 
   /** ONLINE POINT-IN-TIME ENRICHMENT — the serving-side state fold:
@@ -1939,9 +1813,7 @@ object Replay {
           .option("maxFilesPerTrigger", "1")
           .parquet(s"$live/*.parquet")
           .as[PitRow]
-        replayToParquet(
-          pitStream(rows).toDF(),
-          java.nio.file.Files.createTempDirectory("replay-pit-out-").toString)
+        replayToParquet(pitStream(rows).toDF(), sinkDir("pit"))
           .orderBy("event_id")
           .select("event_id", "user_id", "probe_wk", "feature_value", "feature_version")
       } finally graft.FsUtil.deleteRecursively(live)
@@ -1967,4 +1839,9 @@ object Replay {
             FROM j WHERE rn = 1
             ORDER BY event_id""")
   )
+
+  val all: Seq[graft.ops.Q] = Seq(qStreamWindow, qStreamJoin, qStreamDedup, qStreamDedupQueue,
+    qStreamWindowQueue, qStreamSessionsQueue, qStreamJoinQueue, qSessions, qStreamSessions,
+    qStreamQuality, qStreamIncrementalDedup, qStreamCdc, qStreamTopk, qStreamJoinOuter,
+    qStreamSliding, qStreamFunnel, qStreamAnomaly, qStreamSample, qStreamPit)
 }

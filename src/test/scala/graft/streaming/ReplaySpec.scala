@@ -662,6 +662,82 @@ class ReplaySpec extends SparkSpec {
     }
   }
 
+  test("a replay that throws mid-stream releases its query, conf and checkpoint, on both triggers") {
+    import org.apache.spark.sql.types._
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def checkpoints(): Set[String] = {
+      val listing = Files.list(tmp)
+      try {
+        import scala.jdk.CollectionConverters._
+        listing.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("replay-ckpt-")).toSet
+      } finally listing.close()
+    }
+    // throws on one row; every other row passes
+    def boomAt(c: org.apache.spark.sql.Column, v: Long) =
+      when(c === v, raise_error(lit(s"boom at $v"))).isNull
+    // file source (Trigger.AvailableNow): a stateful windowed replay
+    // whose third of four micro-batches carries the throwing row
+    val dir = sliceEvents(4, sentinel = true)
+    val ids = batchEvents(dir).where(col("user_id") =!= -1L)
+      .orderBy("ts", "event_id").select("event_id").collect().map(_.getLong(0))
+    val boomId = ids(ids.length * 5 / 8)
+    val fileStream = Replay.windowedCountsDrained(
+      Replay.readEvents(spark, dir).where(boomAt(col("event_id"), boomId)))
+    // queue source (ProcessingTime + processAllAvailable): stateful
+    // dedup over a 4-row-per-trigger queue, throwing on its 7th row
+    val queue = "replay-failure-" + java.util.UUID.randomUUID()
+    graft.sources.QueueBroker.register(queue,
+      StructType(Seq(StructField("x", LongType))), 4,
+      (0L until 12L).map(i => org.apache.spark.sql.Row(i)).iterator)
+    val queueStream = spark.readStream.format(graft.sources.QueueSource.Name)
+      .option("queue", queue).load()
+      .where(boomAt(col("x"), 6L))
+      .dropDuplicates("x")
+    try for ((stream, boom) <- Seq(fileStream -> s"boom at $boomId", queueStream -> "boom at 6")) {
+      val key = "spark.sql.shuffle.partitions"
+      val before = spark.conf.get(key)
+      val ckptsBefore = checkpoints()
+      val out = Files.createTempDirectory("replay-failure-out-")
+      val e = intercept[Exception](Replay.replayToParquet(stream, out.toString))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains(boom)),
+        s"the replay's own failure must reach the caller, got $e")
+      assert(spark.streams.active.isEmpty, "a failed replay left its query running")
+      assert(spark.conf.get(key) == before, "a failed replay left the state-partition conf set")
+      assert(checkpoints() -- ckptsBefore == Set.empty,
+        s"a failed replay leaked its checkpoint: ${checkpoints() -- ckptsBefore}")
+      graft.FsUtil.deleteRecursively(out)
+    } finally graft.sources.QueueBroker.remove(queue)
+  }
+
+  test("one sink: src/main starts a stream only in Replay's drain, and names sink dirs only in sinkDir") {
+    val walk = Files.walk(Paths.get("src/main"))
+    val sources =
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      } finally walk.close()
+    assert(sources.size > 50, s"source walk found only ${sources.size} files")
+    def text(f: Path) = new String(Files.readAllBytes(f), "UTF-8")
+    def occurrences(t: String, word: String) =
+      Iterator.iterate(t.indexOf(word))(i => t.indexOf(word, i + 1)).takeWhile(_ >= 0).toSeq
+    val starts = for (f <- sources; i <- occurrences(text(f), ".writeStream")) yield (f.toString, i)
+    val replay = "src/main/scala/graft/streaming/Replay.scala"
+    assert(starts.map(_._1) == Seq(replay), s"streams started outside one drain: $starts")
+    val src = text(Paths.get(replay))
+    // a definition runs from its `private def` to the next blank line
+    def inside(name: String, i: Int) = {
+      val at = src.indexOf(s"private def $name(")
+      at >= 0 && i > at && i < src.indexOf("\n\n", at)
+    }
+    assert(inside("drain", starts.head._2),
+      "the one .writeStream must sit inside Replay's private drain")
+    val sinkDirs = occurrences(src, "-out-")
+    assert(sinkDirs.size == 1 && inside("sinkDir", sinkDirs.head),
+      "a declared replay's sink dir must come from sinkDir, which registers it for exit cleanup")
+  }
+
   test("state-store unload resolution degrades to a no-op when the private API is absent") {
     // the eager unloadAll is an opportunistic memory optimization riding
     // a private[sql] method via reflection — a Spark rename must produce
