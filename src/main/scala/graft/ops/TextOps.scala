@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
@@ -687,50 +687,20 @@ object TextOps {
             FROM documents ORDER BY doc_id""")
   )
 
-  /** BM25 RETRIEVAL SCORING (r7) — Robertson/Okapi BM25 (k1=1.2, b=0.75),
-    * the lexical-retrieval baseline every RAG pipeline ranks against
-    * (and the hard-negative miner for embedding training). Exact-
-    * arithmetic form per the repo's no-transcendentals discipline: the
-    * tf saturation term is cleared of fractions by multiplying through
-    * by 20·Σdl —
-    *   tf·(k1+1) / (tf + k1(1−b+b·dl/avgdl))
-    *     = 44·tf·Σdl / (20·tf·Σdl + 6·Σdl + 18·dl·N)
-    * (avgdl = Σdl/N), and the idf is the rational Robertson form
-    * WITHOUT the log: (N−df+½)/(df+½) = (2N−2df+1)/(2df+1) — exact
-    * BIGINTs everywhere, each term's score ONE division×division×
-    * multiply IEEE chain written token-identically in both dialects,
-    * summed in fixed left-to-right term order. Monotonicity vs the
-    * log form differs only in scale compression, not ranking direction
-    * per term (both decrease in df) — the q_tfidf linear-idf trade.
-    *
-    * Scale: corpus stats (N, Σdl, per-term df) are ONE map-side-combined
-    * aggregation to a SINGLE row broadcast back onto the scan; per-doc
-    * tf is an array-filter projection (no explode, no shuffle); the
-    * ranking is a top-20 TakeOrderedAndProject — never a global sort.
-    * At 100 TB: stats row is O(|query|), the scan runs at full speed,
-    * and the only data-scale movement is the top-k funnel's k rows per
-    * partition. Overflow bound: 20·tf·Σdl ≤ 20·dl_max·Σdl — at Σdl =
-    * 10^13 tokens and dl_max 10^4 that is 2·10^18 < 2^63; shard the
-    * corpus (per-split stats) before that point.
+  /** The query terms every BM25 query here scores, in the fixed
+    * left-to-right order their per-term scores are summed in.
     */
-  /** The q_bm25 scoring relation before its top-k funnel — shared with
-    * [[qRerank]] so the retrieval stage of the two-tower serving
-    * composition is BY CONSTRUCTION the declared retriever.
+  private val bm25Terms = Seq("dup", "query", "batch", "vector")
+
+  /** The BM25 score of [[bm25Terms]] over the columns `tf_<t>`,
+    * `df_<t>`, `dl`, `n_docs` and `sum_dl` — the exact-rational form
+    * documented on [[qBm25]], ONE expression for the full scan
+    * ([[bm25Scored]]) and the index probe ([[probeIndex]]), so a probe
+    * score is bit-identical to the scan score of the same document (a
+    * term the document lacks contributes exactly +0.0).
     */
-  private[ops] def bm25Scored(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val qterms = Seq("dup", "query", "batch", "vector")
-    val base = documents(s, d).select(
-      (col("doc_id") +:
-        size(split(col("text"), " ")).cast("long").as("dl") +:
-        qterms.map(t =>
-          size(filter(split(col("text"), " "), x => x === lit(t)))
-            .cast("long").as(s"tf_$t"))): _*)
-    val aggs =
-      sum(col("dl")).as("sum_dl") +:
-        qterms.map(t =>
-          sum(when(col(s"tf_$t") > 0, 1L).otherwise(0L)).as(s"df_$t"))
-    val stats = base.agg(count(lit(1)).as("n_docs"), aggs: _*)
-    def termScore(t: String) = {
+  private def bm25Score: Column =
+    bm25Terms.map { t =>
       val tf = col(s"tf_$t"); val df = col(s"df_$t")
       val num = lit(44L) * tf * col("sum_dl")
       val den = lit(20L) * tf * col("sum_dl") + lit(6L) * col("sum_dl") +
@@ -738,14 +708,29 @@ object TextOps {
       (num.cast("double") / den.cast("double")) *
         ((lit(2L) * col("n_docs") - lit(2L) * df + lit(1L)).cast("double") /
           (lit(2L) * df + lit(1L)).cast("double"))
-    }
+    }.reduceLeft(_ + _).as("score")
+
+  /** The q_bm25 scoring relation before its top-k funnel — shared with
+    * [[qRerank]] so the retrieval stage of the two-tower serving
+    * composition is BY CONSTRUCTION the declared retriever.
+    */
+  private[ops] def bm25Scored(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
+    val base = documents(s, d).select(
+      (col("doc_id") +:
+        size(split(col("text"), " ")).cast("long").as("dl") +:
+        bm25Terms.map(t =>
+          size(filter(split(col("text"), " "), x => x === lit(t)))
+            .cast("long").as(s"tf_$t"))): _*)
+    val aggs =
+      sum(col("dl")).as("sum_dl") +:
+        bm25Terms.map(t =>
+          sum(when(col(s"tf_$t") > 0, 1L).otherwise(0L)).as(s"df_$t"))
+    val stats = base.agg(count(lit(1)).as("n_docs"), aggs: _*)
     base.crossJoin(broadcast(stats))
       .select(
         (col("doc_id") +: col("dl") +:
-          qterms.map(t => col(s"tf_$t")) :+
-          qterms.map(termScore).reduceLeft(_ + _).as("score")): _*)
+          bm25Terms.map(t => col(s"tf_$t")) :+ bm25Score): _*)
   }
-
   /** The q_bm25 oracle's base/stats CTEs and score expression — ONE
     * text, consumed by both the q_bm25 and q_rerank oracles so the
     * reranker's retrieval stage cannot drift from the retriever.
@@ -778,6 +763,32 @@ object TextOps {
                  + (CAST(44*tf_vector*sum_dl AS DOUBLE) / CAST(20*tf_vector*sum_dl + 6*sum_dl + 18*dl*n_docs AS DOUBLE))
                      * (CAST(2*n_docs - 2*df_vector + 1 AS DOUBLE) / CAST(2*df_vector + 1 AS DOUBLE))"""
 
+  /** BM25 RETRIEVAL SCORING (r7) — Robertson/Okapi BM25 (k1=1.2, b=0.75),
+    * the lexical-retrieval baseline every RAG pipeline ranks against
+    * (and the hard-negative miner for embedding training). Exact-
+    * arithmetic form per the repo's no-transcendentals discipline: the
+    * tf saturation term is cleared of fractions by multiplying through
+    * by 20·Σdl —
+    *   tf·(k1+1) / (tf + k1(1−b+b·dl/avgdl))
+    *     = 44·tf·Σdl / (20·tf·Σdl + 6·Σdl + 18·dl·N)
+    * (avgdl = Σdl/N), and the idf is the rational Robertson form
+    * WITHOUT the log: (N−df+½)/(df+½) = (2N−2df+1)/(2df+1) — exact
+    * BIGINTs everywhere, each term's score ONE division×division×
+    * multiply IEEE chain written token-identically in both dialects,
+    * summed in fixed left-to-right term order. Monotonicity vs the
+    * log form differs only in scale compression, not ranking direction
+    * per term (both decrease in df) — the q_tfidf linear-idf trade.
+    *
+    * Scale: corpus stats (N, Σdl, per-term df) are ONE map-side-combined
+    * aggregation to a SINGLE row broadcast back onto the scan; per-doc
+    * tf is an array-filter projection (no explode, no shuffle); the
+    * ranking is a top-20 TakeOrderedAndProject — never a global sort.
+    * At 100 TB: stats row is O(|query|), the scan runs at full speed,
+    * and the only data-scale movement is the top-k funnel's k rows per
+    * partition. Overflow bound: 20·tf·Σdl ≤ 20·dl_max·Σdl — at Σdl =
+    * 10^13 tokens and dl_max 10^4 that is 2·10^18 < 2^63; shard the
+    * corpus (per-split stats) before that point.
+    */
   val qBm25 = Q(
     "q_bm25",
     (s, d) =>
@@ -790,7 +801,6 @@ object TextOps {
             FROM base, stats
             ORDER BY score DESC, doc_id LIMIT 20""")
   )
-
 
   /** INVERTED-INDEX BUILD (r7) — blocked delta-encoded posting lists,
     * the physical layout a lexical search index (Lucene-style) actually
@@ -855,10 +865,15 @@ object TextOps {
             ORDER BY term, block_id""")
   )
 
-  /** Materialized inverted-index LAYOUT for the probe-path retriever
-    * ([[qBm25Postings]]) — the three files a lexical index actually
-    * ships, built ONCE per corpus (memoized via the [[Partitioned]]
-    * content-key idiom) and read by every query after:
+  /** The three parts of an index segment, each a parquet directory. */
+  private val segmentParts = Seq("postings.parquet", "dict.parquet", "stats.parquet")
+
+  /** The completion markers of the segment parts under `prefix`. */
+  private def segmentMarkers(prefix: String): Seq[String] =
+    segmentParts.map(p => s"$prefix$p/_SUCCESS")
+
+  /** THE segment writer: index `docs` into `dir` as the three files a
+    * lexical index actually ships —
     *
     *  - `postings.parquet` (term, doc_id, tf, dl): one row per distinct
     *    (term, doc) with the term frequency and the doc length
@@ -871,38 +886,129 @@ object TextOps {
     *  - `stats.parquet` (n_docs, sum_dl): ONE row of corpus constants.
     *
     * Build cost is one explode + one (term, doc_id) groupBy over the
-    * corpus — the same work `q_inverted_index` already pays — plus two
-    * cheap rollups; at 100 TB this is the offline index build every
-    * search system amortizes across queries.
+    * documents — the same work `q_inverted_index` already pays — plus
+    * two cheap rollups. Every index layout here writes its segments
+    * through it: [[invertedIndexLayout]] one over the corpus,
+    * [[segmentsLayout]] one per doc predicate.
     */
-  def invertedIndexLayout(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val parts = Seq("postings.parquet", "dict.parquet", "stats.parquet")
-    // all three parts build under a temp dir and publish in ONE
-    // rename — readers never see a layout whose parts disagree
-    Staged.layout(s, "bm25_index", docsSrc(d), parts.map(p => s"$p/_SUCCESS")) { tmp =>
-      val posts = documents(s, d)
-        .select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("dl"),
-          explode(split(col("text"), " ")).as("term"))
-        .groupBy("term", "doc_id")
-        .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
-      posts.write.mode("overwrite").parquet(s"$tmp/postings.parquet")
-      s.read.parquet(s"$tmp/postings.parquet")
-        .groupBy("term").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(s"$tmp/dict.parquet")
-      documents(s, d)
-        .agg(count(lit(1)).as("n_docs"),
-          sum(size(split(col("text"), " ")).cast("long")).as("sum_dl"))
-        .write.mode("overwrite").parquet(s"$tmp/stats.parquet")
+  private def writeSegment(s: org.apache.spark.sql.SparkSession,
+      docs: DataFrame, dir: String): Unit = {
+    docs
+      .select(col("doc_id"),
+        size(split(col("text"), " ")).cast("long").as("dl"),
+        explode(split(col("text"), " ")).as("term"))
+      .groupBy("term", "doc_id")
+      .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
+      .write.mode("overwrite").parquet(s"$dir/postings.parquet")
+    s.read.parquet(s"$dir/postings.parquet")
+      .groupBy("term").agg(count(lit(1)).as("df"))
+      .write.mode("overwrite").parquet(s"$dir/dict.parquet")
+    docs
+      .agg(count(lit(1)).as("n_docs"),
+        sum(size(split(col("text"), " ")).cast("long")).as("sum_dl"))
+      .write.mode("overwrite").parquet(s"$dir/stats.parquet")
+  }
+
+  /** Materialized inverted-index LAYOUT for the probe-path retriever
+    * ([[qBm25Postings]]): ONE [[writeSegment]] over the whole corpus,
+    * built ONCE per corpus (content-keyed by [[Staged]]) and read by
+    * every query after. All three parts build under a temp dir and
+    * publish in ONE rename — readers never see a layout whose parts
+    * disagree. At 100 TB this is the offline index build every search
+    * system amortizes across queries.
+    */
+  def invertedIndexLayout(s: org.apache.spark.sql.SparkSession, d: String): String =
+    Staged.layout(s, "bm25_index", docsSrc(d), segmentMarkers("")) { tmp =>
+      writeSegment(s, documents(s, d), tmp)
     }
+
+  /** A segmented index layout `name`: one [[writeSegment]] per
+    * (segment name, doc predicate), each segment a subdirectory with
+    * its own postings/dict/stats, published together as one layout.
+    * Content-keyed cache + atomic whole-layout publish, as
+    * [[invertedIndexLayout]].
+    */
+  private def segmentsLayout(s: org.apache.spark.sql.SparkSession, d: String,
+      name: String, segs: Seq[(String, Column)]): String =
+    Staged.layout(s, name, docsSrc(d), segs.flatMap { case (seg, _) => segmentMarkers(s"$seg/") }) { tmp =>
+      for ((seg, pred) <- segs) writeSegment(s, documents(s, d).where(pred), s"$tmp/$seg")
+    }
+
+  /** Segmented (Lucene-style) index layout: TWO independently-built
+    * segments — seg_a holds `doc_id % 10 < 9` (the established corpus),
+    * seg_b the rest (the freshly-absorbed batch). The point of the
+    * layout: absorbing a batch WRITES ONE NEW SEGMENT and never touches
+    * the old one (maintenance ∝ batch, the q_incremental_dedup
+    * economics applied to index build); the query side combines
+    * segments because every BM25 statistic is ADDITIVE (df, n_docs,
+    * Σdl are monoids).
+    */
+  def segmentedIndexLayout(s: org.apache.spark.sql.SparkSession, d: String): String =
+    segmentsLayout(s, d, "bm25_segs", Seq(
+      "seg_a" -> (col("doc_id") % 10 < 9),
+      "seg_b" -> (col("doc_id") % 10 >= 9)))
+
+  /** The q_bm25_postings oracle — whole-corpus scoring of the
+    * [[bm25Terms]], assembled from the q_bm25 oracle's CTEs and score
+    * text. SHARED VERBATIM by every probe query ([[qBm25Segments]],
+    * [[qBm25Merge]], [[qBm25Tiered]]): each probe path must equal the
+    * full scan, so one oracle text proves them all.
+    */
+  private val bm25PostingsOracle: String =
+    s"""WITH $bm25OracleCte
+            SELECT doc_id, dl,
+                   CAST((CASE WHEN tf_dup > 0 THEN 1 ELSE 0 END)
+                      + (CASE WHEN tf_query > 0 THEN 1 ELSE 0 END)
+                      + (CASE WHEN tf_batch > 0 THEN 1 ELSE 0 END)
+                      + (CASE WHEN tf_vector > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_terms,
+                   $bm25ScoreSql
+                   AS score
+            FROM base, stats
+            WHERE tf_dup + tf_query + tf_batch + tf_vector > 0
+            ORDER BY score DESC, doc_id LIMIT 20"""
+
+  /** THE index probe, over any list of segment directories (one for a
+    * single-build or merged index): union the segments' postings for
+    * the [[bm25Terms]] ONLY (the `term IN (...)` predicate pushes into
+    * every parquet scan — the corpus text is never read), pivot the
+    * matched postings to one row per candidate doc, sum per-term dfs
+    * across the dicts and n_docs/Σdl across the stats at query time —
+    * legal because every BM25 statistic is additive — and score with
+    * [[bm25Score]]. A single segment's stats row already is the total,
+    * so it joins as read, without an aggregate.
+    */
+  private def probeIndex(s: org.apache.spark.sql.SparkSession,
+      segDirs: Seq[String]): DataFrame = {
+    def seg(p: String) =
+      segDirs.map(sd => s.read.parquet(s"$sd/$p")).reduce(_ unionAll _)
+    val posts = seg("postings.parquet").where(col("term").isin(bm25Terms: _*))
+    val aggs =
+      max("dl").as("dl") +:
+        (bm25Terms.map(t =>
+          coalesce(sum(when(col("term") === lit(t), col("tf"))), lit(0L))
+            .as(s"tf_$t")) :+
+          count(lit(1)).as("n_terms"))
+    val cand = posts.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
+    val dfs = bm25Terms.map(t =>
+      coalesce(sum(when(col("term") === lit(t), col("df"))), lit(0L)).as(s"df_$t"))
+    val dfRow = seg("dict.parquet")
+      .where(col("term").isin(bm25Terms: _*))
+      .agg(dfs.head, dfs.tail: _*)
+    val stats =
+      if (segDirs.size == 1) seg("stats.parquet")
+      else seg("stats.parquet").agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
+    cand.crossJoin(broadcast(dfRow)).crossJoin(broadcast(stats))
+      .select(col("doc_id"), col("dl"), col("n_terms"), bm25Score)
+      .orderBy(desc("score"), col("doc_id"))
+      .limit(20)
   }
 
   /** BM25 OVER POSTINGS (r8) — the production lexical retriever:
     * [[qBm25]] proved the scoring math by scanning every document;
     * THIS query scores only documents the index says match, which is
     * the shape that works at 100 TB (the knn_join / knn_join_ann
-    * pairing, applied to retrieval). Probe algebra: read the
-    * [[invertedIndexLayout]] postings for the query terms ONLY (the
+    * pairing, applied to retrieval). Probe algebra ([[probeIndex]]
+    * over the one segment): read the [[invertedIndexLayout]] postings for the query terms ONLY (the
     * `term IN (...)` predicate pushes into the parquet scan — the
     * corpus text is never read), pivot the matched postings to one row
     * per candidate doc, join the TWO one-row broadcast sides (df
@@ -921,132 +1027,14 @@ object TextOps {
     * corpus size — the gap VERDICT r7 called the one remaining
     * documented-shape-without-shipped-scale-path.
     */
-  /** Segmented (Lucene-style) index layout: TWO independently-built
-    * segments — seg_a holds `doc_id % 10 < 9` (the established corpus),
-    * seg_b the rest (the freshly-absorbed batch) — each with its own
-    * postings/dict/stats. The point of the layout: absorbing a batch
-    * WRITES ONE NEW SEGMENT and never touches the old one (maintenance
-    * ∝ batch, the q_incremental_dedup economics applied to index
-    * build); the query side combines segments because every BM25
-    * statistic is ADDITIVE (df, n_docs, Σdl are monoids). Content-keyed
-    * cache + atomic whole-layout publish, as [[invertedIndexLayout]].
-    */
-  def segmentedIndexLayout(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val parts = for {
-      seg <- Seq("seg_a", "seg_b")
-      p <- Seq("postings.parquet", "dict.parquet", "stats.parquet")
-    } yield s"$seg/$p"
-    Staged.layout(s, "bm25_segs", docsSrc(d), parts.map(p => s"$p/_SUCCESS")) { tmp =>
-      for ((seg, pred) <- Seq(
-          ("seg_a", col("doc_id") % 10 < 9),
-          ("seg_b", col("doc_id") % 10 >= 9))) {
-        val docs = documents(s, d).where(pred)
-        docs
-          .select(col("doc_id"),
-            size(split(col("text"), " ")).cast("long").as("dl"),
-            explode(split(col("text"), " ")).as("term"))
-          .groupBy("term", "doc_id")
-          .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
-          .write.mode("overwrite").parquet(s"$tmp/$seg/postings.parquet")
-        s.read.parquet(s"$tmp/$seg/postings.parquet")
-          .groupBy("term").agg(count(lit(1)).as("df"))
-          .write.mode("overwrite").parquet(s"$tmp/$seg/dict.parquet")
-        docs
-          .agg(count(lit(1)).as("n_docs"),
-            sum(size(split(col("text"), " ")).cast("long")).as("sum_dl"))
-          .write.mode("overwrite").parquet(s"$tmp/$seg/stats.parquet")
-      }
-    }
-  }
-
-  /** The q_bm25_postings oracle — whole-corpus scoring of the 4 query
-    * terms. SHARED VERBATIM with [[qBm25Segments]]: both probe paths
-    * must equal the full scan, so one oracle text proves both.
-    */
-  private val bm25PostingsOracle: String =
-    """WITH base AS (
-              SELECT doc_id,
-                     CAST(len(string_split(text,' ')) AS BIGINT) AS dl,
-                     CAST(len(list_filter(string_split(text,' '), x -> x = 'dup')) AS BIGINT) AS tf_dup,
-                     CAST(len(list_filter(string_split(text,' '), x -> x = 'query')) AS BIGINT) AS tf_query,
-                     CAST(len(list_filter(string_split(text,' '), x -> x = 'batch')) AS BIGINT) AS tf_batch,
-                     CAST(len(list_filter(string_split(text,' '), x -> x = 'vector')) AS BIGINT) AS tf_vector
-              FROM documents),
-            stats AS (
-              SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                     CAST(sum(dl) AS BIGINT) AS sum_dl,
-                     CAST(sum(CASE WHEN tf_dup > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_dup,
-                     CAST(sum(CASE WHEN tf_query > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_query,
-                     CAST(sum(CASE WHEN tf_batch > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_batch,
-                     CAST(sum(CASE WHEN tf_vector > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_vector
-              FROM base)
-            SELECT doc_id, dl,
-                   CAST((CASE WHEN tf_dup > 0 THEN 1 ELSE 0 END)
-                      + (CASE WHEN tf_query > 0 THEN 1 ELSE 0 END)
-                      + (CASE WHEN tf_batch > 0 THEN 1 ELSE 0 END)
-                      + (CASE WHEN tf_vector > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_terms,
-                   (CAST(44*tf_dup*sum_dl AS DOUBLE) / CAST(20*tf_dup*sum_dl + 6*sum_dl + 18*dl*n_docs AS DOUBLE))
-                     * (CAST(2*n_docs - 2*df_dup + 1 AS DOUBLE) / CAST(2*df_dup + 1 AS DOUBLE))
-                 + (CAST(44*tf_query*sum_dl AS DOUBLE) / CAST(20*tf_query*sum_dl + 6*sum_dl + 18*dl*n_docs AS DOUBLE))
-                     * (CAST(2*n_docs - 2*df_query + 1 AS DOUBLE) / CAST(2*df_query + 1 AS DOUBLE))
-                 + (CAST(44*tf_batch*sum_dl AS DOUBLE) / CAST(20*tf_batch*sum_dl + 6*sum_dl + 18*dl*n_docs AS DOUBLE))
-                     * (CAST(2*n_docs - 2*df_batch + 1 AS DOUBLE) / CAST(2*df_batch + 1 AS DOUBLE))
-                 + (CAST(44*tf_vector*sum_dl AS DOUBLE) / CAST(20*tf_vector*sum_dl + 6*sum_dl + 18*dl*n_docs AS DOUBLE))
-                     * (CAST(2*n_docs - 2*df_vector + 1 AS DOUBLE) / CAST(2*df_vector + 1 AS DOUBLE))
-                   AS score
-            FROM base, stats
-            WHERE tf_dup + tf_query + tf_batch + tf_vector > 0
-            ORDER BY score DESC, doc_id LIMIT 20"""
-
-  /** The single-segment probe algebra of [[qBm25Postings]], factored so
-    * the MERGED layout ([[qBm25Merge]]) probes through the IDENTICAL
-    * code path — the two queries differ only in which index directory
-    * they read, and both carry [[bm25PostingsOracle]] verbatim.
-    */
-  private def bm25Probe(s: org.apache.spark.sql.SparkSession, ix: String): DataFrame = {
-    val qterms = Seq("dup", "query", "batch", "vector")
-    val posts = s.read.parquet(s"$ix/postings.parquet")
-      .where(col("term").isin(qterms: _*))
-    val aggs =
-      max("dl").as("dl") +:
-        (qterms.map(t =>
-          coalesce(sum(when(col("term") === lit(t), col("tf"))), lit(0L))
-            .as(s"tf_$t")) :+
-          count(lit(1)).as("n_terms"))
-    val cand = posts.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-    val dfRow = s.read.parquet(s"$ix/dict.parquet")
-      .where(col("term").isin(qterms: _*))
-      .agg(
-        coalesce(sum(when(col("term") === lit(qterms.head), col("df"))), lit(0L))
-          .as(s"df_${qterms.head}"),
-        qterms.tail.map(t =>
-          coalesce(sum(when(col("term") === lit(t), col("df"))), lit(0L))
-            .as(s"df_$t")): _*)
-    val stats = s.read.parquet(s"$ix/stats.parquet")
-    def termScore(t: String) = {
-      val tf = col(s"tf_$t"); val df = col(s"df_$t")
-      val num = lit(44L) * tf * col("sum_dl")
-      val den = lit(20L) * tf * col("sum_dl") + lit(6L) * col("sum_dl") +
-        lit(18L) * col("dl") * col("n_docs")
-      (num.cast("double") / den.cast("double")) *
-        ((lit(2L) * col("n_docs") - lit(2L) * df + lit(1L)).cast("double") /
-          (lit(2L) * df + lit(1L)).cast("double"))
-    }
-    cand.crossJoin(broadcast(dfRow)).crossJoin(broadcast(stats))
-      .select(col("doc_id"), col("dl"), col("n_terms"),
-        qterms.map(termScore).reduceLeft(_ + _).as("score"))
-      .orderBy(desc("score"), col("doc_id"))
-      .limit(20)
-  }
-
   val qBm25Postings = Q(
     "q_bm25_postings",
-    (s, d) => bm25Probe(s, invertedIndexLayout(s, d)),
+    (s, d) => probeIndex(s, Seq(invertedIndexLayout(s, d))),
     Some(bm25PostingsOracle)
   )
 
   /** SEGMENTED-INDEX RETRIEVAL (r9) — q_bm25_postings over the
-    * [[segmentedIndexLayout]]: probe BOTH segments' postings (term
+    * [[segmentedIndexLayout]]: [[probeIndex]] over BOTH segments (term
     * pushdown into each scan, documents.parquet absent from the plan)
     * and combine statistics AT QUERY TIME — per-term df sums across
     * segment dicts, n_docs/Σdl sum across segment stats — legal
@@ -1062,62 +1050,141 @@ object TextOps {
     * TakeOrderedAndProject. Maintenance: a new batch = one new
     * segment build ∝ batch size; the merge is the query.
     */
-  /** The multi-segment combine probe of [[qBm25Segments]], factored
-    * over ANY segment-directory list so the post-policy index
-    * ([[qBm25Tiered]]) probes through the IDENTICAL code path: union
-    * the segments' postings (term pushdown into each scan), sum
-    * per-term dfs across dicts and n_docs/Σdl across stats at query
-    * time — legal because every BM25 statistic is additive — then the
-    * exact-rational [[qBm25]] scoring in the same fixed term order.
-    */
-  private def bm25ProbeSegments(s: org.apache.spark.sql.SparkSession,
-      segDirs: Seq[String]): DataFrame = {
-    val qterms = Seq("dup", "query", "batch", "vector")
-    def seg(p: String) =
-      segDirs.map(sd => s.read.parquet(s"$sd/$p")).reduce(_ unionAll _)
-    val posts = seg("postings.parquet").where(col("term").isin(qterms: _*))
-    val aggs =
-      max("dl").as("dl") +:
-        (qterms.map(t =>
-          coalesce(sum(when(col("term") === lit(t), col("tf"))), lit(0L))
-            .as(s"tf_$t")) :+
-          count(lit(1)).as("n_terms"))
-    val cand = posts.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-    // per-term df across segments: the union'd dicts sum naturally
-    val dfRow = seg("dict.parquet")
-      .where(col("term").isin(qterms: _*))
-      .agg(
-        coalesce(sum(when(col("term") === lit(qterms.head), col("df"))), lit(0L))
-          .as(s"df_${qterms.head}"),
-        qterms.tail.map(t =>
-          coalesce(sum(when(col("term") === lit(t), col("df"))), lit(0L))
-            .as(s"df_$t")): _*)
-    val stats = seg("stats.parquet")
-      .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
-    def termScore(t: String) = {
-      val tf = col(s"tf_$t"); val df = col(s"df_$t")
-      val num = lit(44L) * tf * col("sum_dl")
-      val den = lit(20L) * tf * col("sum_dl") + lit(6L) * col("sum_dl") +
-        lit(18L) * col("dl") * col("n_docs")
-      (num.cast("double") / den.cast("double")) *
-        ((lit(2L) * col("n_docs") - lit(2L) * df + lit(1L)).cast("double") /
-          (lit(2L) * df + lit(1L)).cast("double"))
-    }
-    cand.crossJoin(broadcast(dfRow)).crossJoin(broadcast(stats))
-      .select(col("doc_id"), col("dl"), col("n_terms"),
-        qterms.map(termScore).reduceLeft(_ + _).as("score"))
-      .orderBy(desc("score"), col("doc_id"))
-      .limit(20)
-  }
-
   val qBm25Segments = Q(
     "q_bm25_segments",
     (s, d) => {
       val ix = segmentedIndexLayout(s, d)
-      bm25ProbeSegments(s, Seq(s"$ix/seg_a", s"$ix/seg_b"))
+      probeIndex(s, Seq(s"$ix/seg_a", s"$ix/seg_b"))
     },
     Some(bm25PostingsOracle)
   )
+
+  // PAIR-METRIC STAGES — the dataflow every (candidate, reference)
+  // eval metric below shares, so each metric is a gram extractor plus
+  // its final projection. Every join side is corpus-scale (one row per
+  // doc or per (doc, gram)): NOTHING here may broadcast, whatever the
+  // test-scale size stats say, and no side is bounded, so no hash
+  // build side may be forced either — merge is the only strategy
+  // whose memory is flat in partition size (the sf10 ledger caught a
+  // forced shuffle_hash OOMing on q_bleu's ~45M-gram build side).
+
+  /** Stage 1, pairing: each doc as a candidate against each of the next
+    * `k` docs of its source by id (`ref_id`) — the fixture's
+    * deterministic (cand, ref) table; a production run swaps in its own
+    * and the algebra is unchanged. The candidate's `carry` columns ride
+    * along. k = 1 stays a plain window column (no explode).
+    */
+  private def nextDocs(docs: DataFrame, k: Int, carry: String*): DataFrame = {
+    val w = Window.partitionBy("source").orderBy("doc_id")
+    val leads = (1 to k).map(i => lead("doc_id", i).over(w))
+    val paired =
+      if (k == 1) docs.withColumn("ref_id", leads.head)
+      else docs.withColumn("rs", array(leads: _*)).withColumn("ref_id", explode(col("rs")))
+    paired.where(col("ref_id").isNotNull)
+      .select((col("doc_id").as("cand_id") +: col("ref_id") +: carry.map(col)): _*)
+  }
+
+  /** Stage 2, tagged gram counts: one explode per extractor
+    * (n, row guard, gram array over `src`), the streams union'd into
+    * ONE map-side-combined (doc_id, n, gram) → c count — grams WITH
+    * multiplicity, so a clip counts repeats. A lone stream's tag is a
+    * constant the optimizer folds out of the clip-join keys, so it is
+    * added after the count: keyed on it, the count's hash partitioning
+    * would no longer serve the (ref_id, gram) join, which would then
+    * shuffle the counts a second time.
+    */
+  private def gramCounts(src: DataFrame,
+      grams: Seq[(Int, Column, Column)]): DataFrame = {
+    val tagged = grams
+      .map { case (n, guard, g) =>
+        src.where(guard).select(col("doc_id"), lit(n).as("n"), explode(g).as("gram"))
+      }
+      .reduce(_ unionByName _)
+    if (grams.size > 1) tagged.groupBy("doc_id", "n", "gram").agg(count(lit(1)).as("c"))
+    else tagged.groupBy("doc_id", "gram").agg(count(lit(1)).as("c"))
+      .withColumn("n", lit(grams.head._1))
+  }
+
+  /** Whitespace tokens `w` per doc: the word metrics' gram source. */
+  private def wordToks(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), split(col("text"), " ").as("w"))
+
+  /** Word unigrams and bigrams over [[wordToks]] ([[wordBigramsExpr]]). */
+  private def wordGrams =
+    Seq((1, lit(true), col("w")), (2, size(col("w")) >= 2, expr(wordBigramsExpr)))
+
+  /** Per-doc word totals over [[wordToks]]: n1 tokens, n2 bigrams. */
+  private def wordLens(toks: DataFrame): DataFrame =
+    toks.select(col("doc_id"),
+      size(col("w")).cast("long").as("n1"),
+      greatest(size(col("w")) - 1, lit(0)).cast("long").as("n2"))
+
+  /** Stage 3, THE clipped-overlap join: `cand` (…, n, gram, c) ⋈ `ref`
+    * (…, n, gram, c_ref) on `on`, then per group `by` each named clip
+    * Σ_g min(c, c_ref) over its n — exact BIGINTs, map-side combined.
+    * Keyed on gram, a hot gram fans out by its pairing multiplicity,
+    * never by corpus frequency.
+    */
+  private def clipJoin(cand: DataFrame, ref: DataFrame, on: Seq[String],
+      by: Seq[String], clips: Seq[(String, Int)]): DataFrame = {
+    val sums = clips.map { case (name, n) =>
+      sum(when(col("n") === n, least(col("c"), col("c_ref"))).otherwise(lit(0L))).as(name)
+    }
+    cand.hint("merge").join(ref.hint("merge"), on)
+      .groupBy(by.map(col): _*).agg(sums.head, sums.tail: _*)
+  }
+
+  /** Stages 3 + 4 per pair: the [[clipJoin]] of every (cand_id, ref_id)
+    * pair over the gram counts `gc`, then the length-join chain — pairs
+    * ⟕ clips (a pair sharing no gram clips to 0) ⋈ candidate lengths ⋈
+    * reference lengths, `cand`/`ref` naming the `lens` columns each
+    * side carries as (lens column, output name).
+    */
+  private def pairClips(pairs: DataFrame, gc: DataFrame, clips: Seq[(String, Int)],
+      lens: DataFrame, cand: Seq[(String, String)], ref: Seq[(String, String)]): DataFrame = {
+    val clip = clipJoin(
+      pairs.hint("merge")
+        .join(gc.withColumnRenamed("doc_id", "cand_id").hint("merge"), "cand_id"),
+      gc.select(col("doc_id").as("ref_id"), col("n"), col("gram"), col("c").as("c_ref")),
+      Seq("ref_id", "n", "gram"), Seq("cand_id", "ref_id"), clips)
+    def side(id: String, cols: Seq[(String, String)]) =
+      lens.select((col("doc_id").as(id) +: cols.map { case (c, a) => col(c).as(a) }): _*)
+    pairs.hint("merge")
+      .join(clip.hint("merge"), Seq("cand_id", "ref_id"), "left")
+      .na.fill(0L, clips.map(_._1))
+      .hint("merge")
+      .join(side("cand_id", cand).hint("merge"), "cand_id")
+      .hint("merge")
+      .join(side("ref_id", ref).hint("merge"), "ref_id")
+  }
+
+  /** ROUGE's emitted triple over a hit count `hit` and the pair's
+    * `n_cand`/`n_ref`: p = hit/n_cand, r = hit/n_ref,
+    * f1 = 2·hit/(n_cand + n_ref) — each ONE IEEE division of exact
+    * integers (f1 never from the rounded p and r), round(,6) once.
+    */
+  private def prf(hit: String): Seq[Column] = {
+    val h = col(hit).cast("double")
+    Seq(
+      round(h / col("n_cand").cast("double"), 6).as("p"),
+      round(h / col("n_ref").cast("double"), 6).as("r"),
+      round(lit(2L) * h / (col("n_cand") + col("n_ref")).cast("double"), 6).as("f1"))
+  }
+
+  /** BLEU-2's emitted pieces over clip1/clip2 and the candidate's
+    * n1_cand/n2_cand: p1, p2 and bleu2 = sqrt(clip1·clip2 / (n1·n2)) —
+    * ONE division of exact integer products each, sqrt IEEE-exact —
+    * plus len_ratio = n1_cand / `refLen` for the brevity fold.
+    */
+  private def bleuCols(refLen: String): Seq[Column] = Seq(
+    round(col("clip1").cast("double") / col("n1_cand").cast("double"), 6).as("p1"),
+    round(col("clip2").cast("double")
+      / nullif(col("n2_cand"), lit(0L)).cast("double"), 6).as("p2"),
+    round(sqrt((col("clip1") * col("clip2")).cast("double")
+      / nullif(col("n1_cand") * col("n2_cand"), lit(0L)).cast("double")), 6)
+      .as("bleu2"),
+    round(col("n1_cand").cast("double") / col(refLen).cast("double"), 6)
+      .as("len_ratio"))
 
   /** EVALUATION-METRIC COMPUTATION (r10, new family surface) — ROUGE-1
     * precision/recall/F1 with CLIPPED counts (Lin 2004), the
@@ -1150,45 +1217,11 @@ object TextOps {
     "q_rouge",
     (s, d) => {
       val docs = documents(s, d)
-      val lens = docs.select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_toks"))
-      val pairs = docs
-        .withColumn("ref_id",
-          lead("doc_id", 1).over(Window.partitionBy("source").orderBy("doc_id")))
-        .where(col("ref_id").isNotNull)
-        .select(col("doc_id").as("cand_id"), col("ref_id"))
-      val tc = docs
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
-      // every join side below is corpus-scale (one row per doc or per
-      // (doc, token)) — the q_expectations rule: NOTHING here may
-      // broadcast, whatever the test-scale size stats say; and no side
-      // is bounded, so no hash build side may be forced either (merge
-      // = the only strategy whose memory is flat in partition size)
-      val clip = pairs.hint("merge")
-        .join(tc.withColumnRenamed("doc_id", "cand_id").hint("merge"), "cand_id")
-        .hint("merge")
-        .join(
-          tc.select(col("doc_id").as("ref_id"), col("tok"), col("c").as("c_ref"))
-            .hint("merge"),
-          Seq("ref_id", "tok"))
-        .groupBy("cand_id", "ref_id")
-        .agg(sum(least(col("c"), col("c_ref"))).as("clip"))
-      pairs.hint("merge")
-        .join(clip.hint("merge"), Seq("cand_id", "ref_id"), "left")
-        .na.fill(0L, Seq("clip"))
-        .hint("merge")
-        .join(lens.withColumnRenamed("doc_id", "cand_id")
-          .withColumnRenamed("n_toks", "n_cand").hint("merge"), "cand_id")
-        .hint("merge")
-        .join(lens.withColumnRenamed("doc_id", "ref_id")
-          .withColumnRenamed("n_toks", "n_ref").hint("merge"), "ref_id")
-        .select(col("cand_id"), col("ref_id"), col("clip"),
-          col("n_cand"), col("n_ref"),
-          round(col("clip").cast("double") / col("n_cand").cast("double"), 6).as("p"),
-          round(col("clip").cast("double") / col("n_ref").cast("double"), 6).as("r"),
-          round(lit(2L) * col("clip").cast("double")
-            / (col("n_cand") + col("n_ref")).cast("double"), 6).as("f1"))
+      val toks = wordToks(docs)
+      pairClips(nextDocs(docs, 1), gramCounts(toks, wordGrams.take(1)), Seq("clip" -> 1),
+        wordLens(toks), Seq("n1" -> "n_cand"), Seq("n1" -> "n_ref"))
+        .select((Seq("cand_id", "ref_id", "clip", "n_cand", "n_ref").map(col) ++
+          prf("clip")): _*)
         .orderBy("cand_id")
     },
     Some("""WITH lens AS (
@@ -1254,12 +1287,8 @@ object TextOps {
     "q_rouge_l",
     (s, d) => {
       val docs = documents(s, d)
-      val pairs = docs
-        .withColumn("ref_id",
-          lead("doc_id", 1).over(Window.partitionBy("source").orderBy("doc_id")))
-        .where(col("ref_id").isNotNull)
-        .select(col("doc_id").as("cand_id"), col("ref_id"),
-          col("text").as("cand_text"),
+      val pairs = nextDocs(docs, 1, "text")
+        .select(col("cand_id"), col("ref_id"), col("text").as("cand_text"),
           size(split(col("text"), " ")).cast("long").as("n_cand"))
       val refs = docs.select(col("doc_id").as("ref_id"),
         col("text").as("ref_text"),
@@ -1269,12 +1298,8 @@ object TextOps {
         .select(col("cand_id"), col("ref_id"),
           graft.functions.TextHash.lcsLen(col("cand_text"), col("ref_text")).as("lcs"),
           col("n_cand"), col("n_ref"))
-        .select(col("cand_id"), col("ref_id"), col("lcs"),
-          col("n_cand"), col("n_ref"),
-          round(col("lcs").cast("double") / col("n_cand").cast("double"), 6).as("p"),
-          round(col("lcs").cast("double") / col("n_ref").cast("double"), 6).as("r"),
-          round(lit(2L) * col("lcs").cast("double")
-            / (col("n_cand") + col("n_ref")).cast("double"), 6).as("f1"))
+        .select((Seq("cand_id", "ref_id", "lcs", "n_cand", "n_ref").map(col) ++
+          prf("lcs")): _*)
         .orderBy("cand_id")
     },
     Some("""WITH RECURSIVE pairs AS (
@@ -1342,55 +1367,11 @@ object TextOps {
     "q_bleu",
     (s, d) => {
       val docs = documents(s, d)
-      val toks = docs.select(col("doc_id"), split(col("text"), " ").as("w"))
-      val lens = toks.select(col("doc_id"),
-        size(col("w")).cast("long").as("n1"),
-        greatest(size(col("w")) - 1, lit(0)).cast("long").as("n2"))
-      val pairs = docs
-        .withColumn("ref_id",
-          lead("doc_id", 1).over(Window.partitionBy("source").orderBy("doc_id")))
-        .where(col("ref_id").isNotNull)
-        .select(col("doc_id").as("cand_id"), col("ref_id"))
-      val g1 = toks.select(col("doc_id"), lit(1).as("n"), explode(col("w")).as("gram"))
-      val g2 = toks.where(size(col("w")) >= 2)
-        .select(col("doc_id"), lit(2).as("n"),
-          explode(expr(wordBigramsExpr)).as("gram"))
-      val gc = g1.unionByName(g2).groupBy("doc_id", "n", "gram")
-        .agg(count(lit(1)).as("c"))
-      // the qRouge broadcast/merge rule: every side below is corpus-scale
-      val clip = pairs.hint("merge")
-        .join(gc.withColumnRenamed("doc_id", "cand_id").hint("merge"), "cand_id")
-        .hint("merge")
-        .join(
-          gc.select(col("doc_id").as("ref_id"), col("n"), col("gram"),
-            col("c").as("c_ref")).hint("merge"),
-          Seq("ref_id", "n", "gram"))
-        .groupBy("cand_id", "ref_id")
-        .agg(
-          sum(when(col("n") === 1, least(col("c"), col("c_ref"))).otherwise(lit(0L)))
-            .as("clip1"),
-          sum(when(col("n") === 2, least(col("c"), col("c_ref"))).otherwise(lit(0L)))
-            .as("clip2"))
-      pairs.hint("merge")
-        .join(clip.hint("merge"), Seq("cand_id", "ref_id"), "left")
-        .na.fill(0L, Seq("clip1", "clip2"))
-        .hint("merge")
-        .join(lens.withColumnRenamed("doc_id", "cand_id")
-          .withColumnRenamed("n1", "n1_cand").withColumnRenamed("n2", "n2_cand")
-          .hint("merge"), "cand_id")
-        .hint("merge")
-        .join(lens.select(col("doc_id").as("ref_id"), col("n1").as("n1_ref"))
-          .hint("merge"), "ref_id")
-        .select(col("cand_id"), col("ref_id"),
-          col("clip1"), col("clip2"), col("n1_cand"), col("n2_cand"), col("n1_ref"),
-          round(col("clip1").cast("double") / col("n1_cand").cast("double"), 6).as("p1"),
-          round(col("clip2").cast("double")
-            / nullif(col("n2_cand"), lit(0L)).cast("double"), 6).as("p2"),
-          round(sqrt((col("clip1") * col("clip2")).cast("double")
-            / nullif(col("n1_cand") * col("n2_cand"), lit(0L)).cast("double")), 6)
-            .as("bleu2"),
-          round(col("n1_cand").cast("double") / col("n1_ref").cast("double"), 6)
-            .as("len_ratio"))
+      val toks = wordToks(docs)
+      pairClips(nextDocs(docs, 1), gramCounts(toks, wordGrams), Seq("clip1" -> 1, "clip2" -> 2),
+        wordLens(toks), Seq("n1" -> "n1_cand", "n2" -> "n2_cand"), Seq("n1" -> "n1_ref"))
+        .select((Seq("cand_id", "ref_id", "clip1", "clip2", "n1_cand", "n2_cand", "n1_ref")
+          .map(col) ++ bleuCols("n1_ref")): _*)
         .orderBy("cand_id")
     },
     Some(s"""WITH toks AS (
@@ -1472,37 +1453,18 @@ object TextOps {
     "q_bleu_multi",
     (s, d) => {
       val docs = documents(s, d)
-      val toks = docs.select(col("doc_id"), split(col("text"), " ").as("w"))
-      val lens = toks.select(col("doc_id"),
-        size(col("w")).cast("long").as("n1"),
-        greatest(size(col("w")) - 1, lit(0)).cast("long").as("n2"))
-      val sw = Window.partitionBy("source").orderBy("doc_id")
-      val refs = docs
-        .select(col("doc_id").as("cand_id"),
-          array(lead("doc_id", 1).over(sw), lead("doc_id", 2).over(sw),
-            lead("doc_id", 3).over(sw)).as("rs"))
-        .select(col("cand_id"), explode(col("rs")).as("ref_id"))
-        .where(col("ref_id").isNotNull)
-      val g1 = toks.select(col("doc_id"), lit(1).as("n"), explode(col("w")).as("gram"))
-      val g2 = toks.where(size(col("w")) >= 2)
-        .select(col("doc_id"), lit(2).as("n"),
-          explode(expr(wordBigramsExpr)).as("gram"))
-      val gc = g1.unionByName(g2).groupBy("doc_id", "n", "gram")
-        .agg(count(lit(1)).as("c"))
-      // the qRouge/qBleu rule: every side below is corpus-scale — SMJ
-      // only, nothing broadcasts, no forced hash builds
+      val toks = wordToks(docs)
+      val lens = wordLens(toks)
+      val refs = nextDocs(docs, 3)
+      val gc = gramCounts(toks, wordGrams)
+      // the per-candidate MAX over its refs collapses the ref set to ONE
+      // row per (cand, n, gram) before the clip join
       val refmax = refs.hint("merge")
         .join(gc.select(col("doc_id").as("ref_id"), col("n"), col("gram"),
           col("c")).hint("merge"), "ref_id")
         .groupBy("cand_id", "n", "gram").agg(max(col("c")).as("c_ref"))
-      val clip = gc.withColumnRenamed("doc_id", "cand_id").hint("merge")
-        .join(refmax.hint("merge"), Seq("cand_id", "n", "gram"))
-        .groupBy("cand_id")
-        .agg(
-          sum(when(col("n") === 1, least(col("c"), col("c_ref"))).otherwise(lit(0L)))
-            .as("clip1"),
-          sum(when(col("n") === 2, least(col("c"), col("c_ref"))).otherwise(lit(0L)))
-            .as("clip2"))
+      val clip = clipJoin(gc.withColumnRenamed("doc_id", "cand_id"), refmax,
+        Seq("cand_id", "n", "gram"), Seq("cand_id"), Seq("clip1" -> 1, "clip2" -> 2))
       val reff = refs.hint("merge")
         .join(lens.select(col("doc_id").as("ref_id"), col("n1").as("n1_ref"))
           .hint("merge"), "ref_id")
@@ -1521,16 +1483,8 @@ object TextOps {
         .hint("merge")
         .join(lens.select(col("doc_id").as("cand_id"), col("n1").as("n1_cand"),
           col("n2").as("n2_cand")).hint("merge"), "cand_id")
-        .select(col("cand_id"), col("n_refs"), col("clip1"), col("clip2"),
-          col("n1_cand"), col("n2_cand"), col("r_eff"),
-          round(col("clip1").cast("double") / col("n1_cand").cast("double"), 6).as("p1"),
-          round(col("clip2").cast("double")
-            / nullif(col("n2_cand"), lit(0L)).cast("double"), 6).as("p2"),
-          round(sqrt((col("clip1") * col("clip2")).cast("double")
-            / nullif(col("n1_cand") * col("n2_cand"), lit(0L)).cast("double")), 6)
-            .as("bleu2"),
-          round(col("n1_cand").cast("double") / col("r_eff").cast("double"), 6)
-            .as("len_ratio"))
+        .select((Seq("cand_id", "n_refs", "clip1", "clip2", "n1_cand", "n2_cand", "r_eff")
+          .map(col) ++ bleuCols("r_eff")): _*)
         .orderBy("cand_id")
     },
     Some(s"""WITH toks AS (
@@ -1617,37 +1571,9 @@ object TextOps {
     "q_rouge_multi",
     (s, d) => {
       val docs = documents(s, d)
-      val lens = docs.select(col("doc_id"),
-        size(split(col("text"), " ")).cast("long").as("n_toks"))
-      val sw = Window.partitionBy("source").orderBy("doc_id")
-      val refs = docs
-        .select(col("doc_id").as("cand_id"),
-          array(lead("doc_id", 1).over(sw), lead("doc_id", 2).over(sw),
-            lead("doc_id", 3).over(sw)).as("rs"))
-        .select(col("cand_id"), explode(col("rs")).as("ref_id"))
-        .where(col("ref_id").isNotNull)
-      val tc = docs
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
-      // the qRouge rule: every side below is corpus-scale — SMJ only
-      val clip = refs.hint("merge")
-        .join(tc.withColumnRenamed("doc_id", "cand_id").hint("merge"), "cand_id")
-        .hint("merge")
-        .join(
-          tc.select(col("doc_id").as("ref_id"), col("tok"), col("c").as("c_ref"))
-            .hint("merge"),
-          Seq("ref_id", "tok"))
-        .groupBy("cand_id", "ref_id")
-        .agg(sum(least(col("c"), col("c_ref"))).as("clip"))
-      val scored = refs.hint("merge")
-        .join(clip.hint("merge"), Seq("cand_id", "ref_id"), "left")
-        .na.fill(0L, Seq("clip"))
-        .hint("merge")
-        .join(lens.select(col("doc_id").as("cand_id"), col("n_toks").as("n_cand"))
-          .hint("merge"), "cand_id")
-        .hint("merge")
-        .join(lens.select(col("doc_id").as("ref_id"), col("n_toks").as("n_ref"))
-          .hint("merge"), "ref_id")
+      val toks = wordToks(docs)
+      val scored = pairClips(nextDocs(docs, 3), gramCounts(toks, wordGrams.take(1)),
+        Seq("clip" -> 1), wordLens(toks), Seq("n1" -> "n_cand"), Seq("n1" -> "n_ref"))
       // best pair per candidate: f1 DESC compared exactly by integer
       // cross-product — f1_a > f1_b  ⇔  clip_a·(n_c+n_r_b) > clip_b·(n_c+n_r_a)
       // — which a single ORDER BY cannot express pairwise, so order by
@@ -1674,12 +1600,8 @@ object TextOps {
                 .cast("decimal(38,0)")).cast("decimal(38,0)"))
         .withColumn("rn", row_number().over(bw))
         .where(col("rn") === 1)
-        .select(col("cand_id"), col("ref_id").as("best_ref"), col("clip"),
-          col("n_cand"), col("n_ref"),
-          round(col("clip").cast("double") / col("n_cand").cast("double"), 6).as("p"),
-          round(col("clip").cast("double") / col("n_ref").cast("double"), 6).as("r"),
-          round(lit(2L) * col("clip").cast("double")
-            / col("den").cast("double"), 6).as("f1"))
+        .select((Seq(col("cand_id"), col("ref_id").as("best_ref"), col("clip"),
+          col("n_cand"), col("n_ref")) ++ prf("clip")): _*)
         .orderBy("cand_id")
     },
     Some("""WITH lens AS (
@@ -1732,6 +1654,36 @@ object TextOps {
             ORDER BY cand_id""")
   )
 
+  /** Fold N existing segments into ONE by pure index algebra (see
+    * [[qBm25Merge]]), generalized to any source count (a merged
+    * segment is itself a legal merge input — df/n_docs/Σdl stay
+    * additive monoids over the still-disjoint doc sets): postings
+    * CONCATENATE, dict dfs SUM, corpus constants SUM. Cost ∝ index
+    * size of the inputs; the corpus is never touched. Shared by
+    * [[mergedSegmentLayout]] (one pairwise merge) and
+    * [[tieredIndexLayout]] (the policy's every step).
+    */
+  private def writeMergedSegment(s: org.apache.spark.sql.SparkSession,
+      srcs: Seq[String], dir: String): Unit = {
+    def u(p: String) =
+      srcs.map(sd => s.read.parquet(s"$sd/$p")).reduce(_ unionAll _)
+    u("postings.parquet")
+      .write.mode("overwrite").parquet(s"$dir/postings.parquet")
+    u("dict.parquet")
+      .groupBy("term").agg(sum("df").as("df"))
+      .write.mode("overwrite").parquet(s"$dir/dict.parquet")
+    u("stats.parquet")
+      .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
+      .write.mode("overwrite").parquet(s"$dir/stats.parquet")
+  }
+
+  def mergedSegmentLayout(s: org.apache.spark.sql.SparkSession, d: String): String = {
+    val segs = segmentedIndexLayout(s, d)
+    Staged.layout(s, "bm25_merged", docsSrc(d), segmentMarkers("")) { tmp =>
+      writeMergedSegment(s, Seq(s"$segs/seg_a", s"$segs/seg_b"), tmp)
+    }
+  }
+
   /** SEGMENT MERGE (r10) — the index-MAINTENANCE op that keeps the
     * segmented model honest (VERDICT r9 #3, the q_dv_compact
     * debt-payment pattern): [[segmentedIndexLayout]] lets a batch be
@@ -1754,7 +1706,7 @@ object TextOps {
     * the atomic whole-layout rename, like every layout here.
     *
     * The declared query probes the MERGED segment through the
-    * IDENTICAL [[bm25Probe]] code path as q_bm25_postings and carries
+    * ONE index probe ([[probeIndex]]) as q_bm25_postings and carries
     * [[bm25PostingsOracle]] VERBATIM — the hash match proves
     * merge(seg_a, seg_b) ≡ the whole-corpus index ≡ the full scan,
     * closing the lifecycle: build segments ∝ batch, probe N segments
@@ -1763,78 +1715,26 @@ object TextOps {
     * posting/dict/stats row of the merged segment equals the
     * single-build [[invertedIndexLayout]]).
     */
-  /** Fold N existing segments into ONE by the pure index algebra above,
-    * generalized to any source count (a merged segment is itself a
-    * legal merge input — df/n_docs/Σdl stay additive monoids over the
-    * still-disjoint doc sets): postings CONCATENATE, dict dfs SUM,
-    * corpus constants SUM. Cost ∝ index size of the inputs; the corpus
-    * is never touched. Shared by [[mergedSegmentLayout]] (one pairwise
-    * merge) and [[tieredIndexLayout]] (the policy's every step).
-    */
-  private def writeMergedSegment(s: org.apache.spark.sql.SparkSession,
-      srcs: Seq[String], dir: String): Unit = {
-    def u(p: String) =
-      srcs.map(sd => s.read.parquet(s"$sd/$p")).reduce(_ unionAll _)
-    u("postings.parquet")
-      .write.mode("overwrite").parquet(s"$dir/postings.parquet")
-    u("dict.parquet")
-      .groupBy("term").agg(sum("df").as("df"))
-      .write.mode("overwrite").parquet(s"$dir/dict.parquet")
-    u("stats.parquet")
-      .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
-      .write.mode("overwrite").parquet(s"$dir/stats.parquet")
-  }
-
-  def mergedSegmentLayout(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val segs = segmentedIndexLayout(s, d)
-    val parts = Seq("postings.parquet", "dict.parquet", "stats.parquet")
-    Staged.layout(s, "bm25_merged", docsSrc(d), parts.map(p => s"$p/_SUCCESS")) { tmp =>
-      writeMergedSegment(s, Seq(s"$segs/seg_a", s"$segs/seg_b"), tmp)
-    }
-  }
-
   val qBm25Merge = Q(
     "q_bm25_merge",
-    (s, d) => bm25Probe(s, mergedSegmentLayout(s, d)),
+    (s, d) => probeIndex(s, Seq(mergedSegmentLayout(s, d))),
     Some(bm25PostingsOracle)
   )
 
   /** Six-segment index layout with UNEVEN sizes (≈ 1,1,1,2,4,7
     * sixteenths of the corpus, by doc_id % 16 ranges) — the mid-life
     * state of a segmented index that has absorbed batches of varying
-    * size, i.e. the input a merge POLICY exists to clean up. Same
-    * per-segment parts and build shape as [[segmentedIndexLayout]].
+    * size, i.e. the input a merge POLICY exists to clean up. Built by
+    * [[segmentsLayout]], like [[segmentedIndexLayout]].
     */
   private[ops] val multiSegRanges: Seq[(String, Int, Int)] = Seq(
     ("seg_00", 0, 0), ("seg_01", 1, 1), ("seg_02", 2, 2),
     ("seg_03", 3, 4), ("seg_04", 5, 8), ("seg_05", 9, 15))
 
-  def multiSegmentIndexLayout(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val parts = for {
-      (seg, _, _) <- multiSegRanges
-      p <- Seq("postings.parquet", "dict.parquet", "stats.parquet")
-    } yield s"$seg/$p"
-    Staged.layout(s, "bm25_multi", docsSrc(d), parts.map(p => s"$p/_SUCCESS")) { tmp =>
-      for ((seg, lo, hi) <- multiSegRanges) {
-        val docs = documents(s, d)
-          .where(col("doc_id") % 16 >= lo && col("doc_id") % 16 <= hi)
-        docs
-          .select(col("doc_id"),
-            size(split(col("text"), " ")).cast("long").as("dl"),
-            explode(split(col("text"), " ")).as("term"))
-          .groupBy("term", "doc_id")
-          .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
-          .write.mode("overwrite").parquet(s"$tmp/$seg/postings.parquet")
-        s.read.parquet(s"$tmp/$seg/postings.parquet")
-          .groupBy("term").agg(count(lit(1)).as("df"))
-          .write.mode("overwrite").parquet(s"$tmp/$seg/dict.parquet")
-        docs
-          .agg(count(lit(1)).as("n_docs"),
-            sum(size(split(col("text"), " ")).cast("long")).as("sum_dl"))
-          .write.mode("overwrite").parquet(s"$tmp/$seg/stats.parquet")
-      }
-    }
-  }
+  def multiSegmentIndexLayout(s: org.apache.spark.sql.SparkSession, d: String): String =
+    segmentsLayout(s, d, "bm25_multi", multiSegRanges.map { case (seg, lo, hi) =>
+      seg -> (col("doc_id") % 16 >= lo && col("doc_id") % 16 <= hi)
+    })
 
   /** TIERED MERGE POLICY (r11, VERDICT r10 next #6) — the DECISION
     * layer over the proven merge algebra: [[qBm25Merge]] proved ONE
@@ -1859,10 +1759,9 @@ object TextOps {
 
   def tieredIndexLayout(s: org.apache.spark.sql.SparkSession, d: String): String = {
     val multi = multiSegmentIndexLayout(s, d)
-    val parts = (0 until TieredK).flatMap(i =>
-      Seq("postings.parquet", "dict.parquet", "stats.parquet")
-        .map(p => s"final_$i/$p")) :+ "merge_log.parquet"
-    Staged.layout(s, "bm25_tiered", docsSrc(d), parts.map(p => s"$p/_SUCCESS")) { tmp =>
+    val parts = (0 until TieredK).flatMap(i => segmentMarkers(s"final_$i/")) :+
+      "merge_log.parquet/_SUCCESS"
+    Staged.layout(s, "bm25_tiered", docsSrc(d), parts) { tmp =>
       def nDocs(dir: String): Long =
         s.read.parquet(s"$dir/stats.parquet").head().getAs[Long]("n_docs")
       var live = multiSegRanges.map { case (seg, _, _) =>
@@ -1895,8 +1794,7 @@ object TextOps {
   }
 
   /** Post-policy retrieval: probe the [[TieredK]] `final_i` segments
-    * through the IDENTICAL multi-segment combine path as
-    * [[qBm25Segments]] ([[bm25ProbeSegments]]), carrying
+    * through THE index probe ([[probeIndex]]), carrying
     * [[bm25PostingsOracle]] VERBATIM — the hash match proves
     * policy(6 uneven segments) ≡ the whole-corpus index ≡ the full
     * scan. Probe cost is bounded by K segments whatever the absorb
@@ -1906,7 +1804,7 @@ object TextOps {
     "q_bm25_tiered",
     (s, d) => {
       val ix = tieredIndexLayout(s, d)
-      bm25ProbeSegments(s, (0 until TieredK).map(i => s"$ix/final_$i"))
+      probeIndex(s, (0 until TieredK).map(i => s"$ix/final_$i"))
     },
     Some(bm25PostingsOracle)
   )
@@ -2127,27 +2025,6 @@ object TextOps {
     }
   )
 
-  /** chrF (Popović 2015) — the CHARACTER-level member of the eval-metric
-    * family: clipped char-n-gram F_β=2 over the [[qRouge]] pairing,
-    * n = 1, 2, whitespace stripped (the chrF convention). Character
-    * grams see sub-word overlap (morphology, typos, tokenizer-robust
-    * similarity) that every word-gram metric above misses.
-    *
-    * Exactness: the β=2 F-score ALGEBRAICALLY REDUCES to one integer
-    * division — F_n = (1+β²)·P·R/(β²·P+R) with P = clip/nc, R = clip/nr
-    * simplifies to 5·clip_n/(4·nr_n + nc_n) — so each F is exact
-    * BIGINTs under ONE IEEE division (the Q discipline), with no P/R
-    * intermediate floats at all; the n-average
-    * chrf2 = (F1+F2)/2 = 5·(clip1·D2 + clip2·D1)/(2·D1·D2),
-    * D_n = 4·nr_n + nc_n, is likewise ONE division of exact integer
-    * products (c·D < 2⁶³ to ~10⁸-char documents).
-    *
-    * Scale shape: the [[qBleu]] contract verbatim — ONE union'd tagged
-    * (doc, n, gram) count with map-side combine (fan-out ∝ chars, the
-    * honest cost of a char-level metric), clip join keyed
-    * (ref_id, n, gram), every corpus-scale side SORT-MERGE (the sf10
-    * hash-build OOM rule), per-pair sums map-side combined.
-    */
   /** The chrF dataflow, factored over an optional pair SAMPLE so the
     * production-cost variant ([[qChrfSampled]]) shares the ALGEBRA
     * verbatim — the two queries differ only in which pair universe they
@@ -2160,72 +2037,42 @@ object TextOps {
     */
   private def chrfFrame(s: org.apache.spark.sql.SparkSession, d: String,
       sampled: Boolean): DataFrame = {
-      val docs = documents(s, d)
-      val charsAll = docs.select(col("doc_id"), translate(col("text"), " ", "").as("t"))
-      val pairsAll = docs
-        .withColumn("ref_id",
-          lead("doc_id", 1).over(Window.partitionBy("source").orderBy("doc_id")))
-        .where(col("ref_id").isNotNull)
-        .select(col("doc_id").as("cand_id"), col("ref_id"))
-      // exact Knuth-hash membership (the q_sample_hash discipline, own
-      // salt): deterministic, shuffle-free, identical in both dialects
-      val pairs =
-        if (sampled)
-          pairsAll.where(expr(Sampling.bucketSql("cand_id", 313L, 100L)) < 10)
-        else pairsAll
-      val chars =
-        if (sampled) {
-          val ids = pairs.select(col("cand_id").as("doc_id"))
-            .unionAll(pairs.select(col("ref_id").as("doc_id"))).distinct()
-          charsAll.hint("merge").join(ids.hint("merge"), Seq("doc_id"), "left_semi")
-        } else charsAll
-      val lens = chars.select(col("doc_id"),
-        length(col("t")).cast("long").as("n1"),
-        greatest(length(col("t")) - 1, lit(0)).cast("long").as("n2"))
-      val g1 = chars.where(length(col("t")) >= 1)
-        .select(col("doc_id"), lit(1).as("n"),
-          explode(expr("transform(sequence(1, length(t)), i -> substring(t, i, 1))"))
-            .as("gram"))
-      val g2 = chars.where(length(col("t")) >= 2)
-        .select(col("doc_id"), lit(2).as("n"),
-          explode(expr("transform(sequence(1, length(t) - 1), i -> substring(t, i, 2))"))
-            .as("gram"))
-      val gc = g1.unionByName(g2).groupBy("doc_id", "n", "gram")
-        .agg(count(lit(1)).as("c"))
-      val clip = pairs.hint("merge")
-        .join(gc.withColumnRenamed("doc_id", "cand_id").hint("merge"), "cand_id")
-        .hint("merge")
-        .join(
-          gc.select(col("doc_id").as("ref_id"), col("n"), col("gram"),
-            col("c").as("c_ref")).hint("merge"),
-          Seq("ref_id", "n", "gram"))
-        .groupBy("cand_id", "ref_id")
-        .agg(
-          sum(when(col("n") === 1, least(col("c"), col("c_ref"))).otherwise(lit(0L)))
-            .as("clip1"),
-          sum(when(col("n") === 2, least(col("c"), col("c_ref"))).otherwise(lit(0L)))
-            .as("clip2"))
-      val d1 = lit(4L) * col("nr1") + col("nc1")
-      val d2 = lit(4L) * col("nr2") + col("nc2")
-      pairs.hint("merge")
-        .join(clip.hint("merge"), Seq("cand_id", "ref_id"), "left")
-        .na.fill(0L, Seq("clip1", "clip2"))
-        .hint("merge")
-        .join(lens.withColumnRenamed("doc_id", "cand_id")
-          .withColumnRenamed("n1", "nc1").withColumnRenamed("n2", "nc2")
-          .hint("merge"), "cand_id")
-        .hint("merge")
-        .join(lens.select(col("doc_id").as("ref_id"),
-          col("n1").as("nr1"), col("n2").as("nr2")).hint("merge"), "ref_id")
-        .select(col("cand_id"), col("ref_id"),
-          col("clip1"), col("clip2"), col("nc1"), col("nc2"), col("nr1"), col("nr2"),
-          round((lit(5L) * col("clip1")).cast("double")
-            / nullif(d1, lit(0L)).cast("double"), 6).as("f1"),
-          round((lit(5L) * col("clip2")).cast("double")
-            / nullif(d2, lit(0L)).cast("double"), 6).as("f2"),
-          round((lit(5L) * (col("clip1") * d2 + col("clip2") * d1)).cast("double")
-            / nullif(lit(2L) * d1 * d2, lit(0L)).cast("double"), 6).as("chrf2"))
-        .orderBy("cand_id")
+    val docs = documents(s, d)
+    val pairsAll = nextDocs(docs, 1)
+    // exact Knuth-hash membership (the q_sample_hash discipline, own
+    // salt): deterministic, shuffle-free, identical in both dialects
+    val pairs =
+      if (sampled)
+        pairsAll.where(expr(Sampling.bucketSql("cand_id", 313L, 100L)) < 10)
+      else pairsAll
+    val charsAll = docs.select(col("doc_id"), translate(col("text"), " ", "").as("t"))
+    val chars =
+      if (sampled) {
+        val ids = pairs.select(col("cand_id").as("doc_id"))
+          .unionAll(pairs.select(col("ref_id").as("doc_id"))).distinct()
+        charsAll.hint("merge").join(ids.hint("merge"), Seq("doc_id"), "left_semi")
+      } else charsAll
+    val lens = chars.select(col("doc_id"),
+      length(col("t")).cast("long").as("n1"),
+      greatest(length(col("t")) - 1, lit(0)).cast("long").as("n2"))
+    val charGrams = Seq(
+      (1, length(col("t")) >= 1,
+        expr("transform(sequence(1, length(t)), i -> substring(t, i, 1))")),
+      (2, length(col("t")) >= 2,
+        expr("transform(sequence(1, length(t) - 1), i -> substring(t, i, 2))")))
+    val d1 = lit(4L) * col("nr1") + col("nc1")
+    val d2 = lit(4L) * col("nr2") + col("nc2")
+    pairClips(pairs, gramCounts(chars, charGrams), Seq("clip1" -> 1, "clip2" -> 2),
+      lens, Seq("n1" -> "nc1", "n2" -> "nc2"), Seq("n1" -> "nr1", "n2" -> "nr2"))
+      .select(col("cand_id"), col("ref_id"),
+        col("clip1"), col("clip2"), col("nc1"), col("nc2"), col("nr1"), col("nr2"),
+        round((lit(5L) * col("clip1")).cast("double")
+          / nullif(d1, lit(0L)).cast("double"), 6).as("f1"),
+        round((lit(5L) * col("clip2")).cast("double")
+          / nullif(d2, lit(0L)).cast("double"), 6).as("f2"),
+        round((lit(5L) * (col("clip1") * d2 + col("clip2") * d1)).cast("double")
+          / nullif(lit(2L) * d1 * d2, lit(0L)).cast("double"), 6).as("chrf2"))
+      .orderBy("cand_id")
   }
 
   /** The chrF oracle, parameterized by the same sample condition the
@@ -2279,6 +2126,27 @@ object TextOps {
             ORDER BY cand_id"""
   }
 
+  /** chrF (Popović 2015) — the CHARACTER-level member of the eval-metric
+    * family: clipped char-n-gram F_β=2 over the [[qRouge]] pairing,
+    * n = 1, 2, whitespace stripped (the chrF convention). Character
+    * grams see sub-word overlap (morphology, typos, tokenizer-robust
+    * similarity) that every word-gram metric above misses.
+    *
+    * Exactness: the β=2 F-score ALGEBRAICALLY REDUCES to one integer
+    * division — F_n = (1+β²)·P·R/(β²·P+R) with P = clip/nc, R = clip/nr
+    * simplifies to 5·clip_n/(4·nr_n + nc_n) — so each F is exact
+    * BIGINTs under ONE IEEE division (the Q discipline), with no P/R
+    * intermediate floats at all; the n-average
+    * chrf2 = (F1+F2)/2 = 5·(clip1·D2 + clip2·D1)/(2·D1·D2),
+    * D_n = 4·nr_n + nc_n, is likewise ONE division of exact integer
+    * products (c·D < 2⁶³ to ~10⁸-char documents).
+    *
+    * Scale shape: the [[qBleu]] contract verbatim — ONE union'd tagged
+    * (doc, n, gram) count with map-side combine (fan-out ∝ chars, the
+    * honest cost of a char-level metric), clip join keyed
+    * (ref_id, n, gram), every corpus-scale side SORT-MERGE (the sf10
+    * hash-build OOM rule), per-pair sums map-side combined.
+    */
   val qChrf = Q(
     "q_chrf",
     (s, d) => chrfFrame(s, d, sampled = false),

@@ -116,14 +116,20 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("bm25_postings probe equals full-scan bm25 on matched docs (the hash-oracle claim, locally)") {
-    val probe = TextOps.qBm25Postings.fn(spark, sf0001).collect()
-      .map(r => (r.getLong(0), r.getDouble(3)))
+    val rows = TextOps.qBm25Postings.fn(spark, sf0001).collect()
+    val probe = rows.map(r => (r.getLong(0), r.getDouble(3)))
     val full = TextOps.qBm25.fn(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getDouble(6))).toMap
     assert(probe.nonEmpty)
     for ((id, score) <- probe)
       assert(full.get(id).contains(score),
         s"doc $id: probe score $score != full-scan ${full.get(id)} (bit equality required)")
+    // the one probe law: every index shape — single build, two segments,
+    // their merge, the post-policy tiers — returns the same rows, bit for bit
+    val single = rows.map(_.toSeq).toSeq
+    for (q <- Seq(TextOps.qBm25Segments, TextOps.qBm25Merge, TextOps.qBm25Tiered))
+      assert(q.fn(spark, sf0001).collect().map(_.toSeq).toSeq == single,
+        s"${q.name} probe rows != q_bm25_postings rows")
   }
 
   test("segment merge preserves the index row-for-row: merged layout == single-build layout") {
@@ -563,5 +569,18 @@ class TextOpsSpec extends SparkSpec {
         assert(r.getAs[Long]("bits_total") > floor * r.getAs[Long]("n_scored"),
           s"doc ${r.get(0)}: seen-bigram score fell to the OOV floor")
       }
+  }
+
+  test("one path per family: TextOps.scala writes each BM25 and pair-metric primitive once") {
+    // the term score, the segment build, the pairing window and the clip
+    // sum each live in one shared helper; a per-query copy fails here
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/ops/TextOps.scala")), "UTF-8")
+    def occurrences(word: String) =
+      Iterator.iterate(src.indexOf(word))(i => src.indexOf(word, i + 1)).takeWhile(_ >= 0).size
+    for (word <- Seq("lit(44L) * tf", "groupBy(\"term\", \"doc_id\")",
+        "lead(\"doc_id\"", "least(col(\"c\"), col(\"c_ref\"))"))
+      assert(occurrences(word) == 1,
+        s"`$word` is written ${occurrences(word)} times in TextOps.scala: one shared helper, not a copy")
   }
 }
