@@ -22,6 +22,12 @@ object Sessions {
       // sort-based fallback; plenty of memory for object hash
       // aggregation here
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
+      // file: paths through graft.fs — Hadoop's local filesystem without
+      // the chmod/readlink process it forks per create, mkdirs and
+      // rename when libhadoop is absent
+      .config("spark.hadoop.fs.file.impl", classOf[graft.fs.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.fs.ForkFreeLocalFs].getName)
 
   /** Standard driver-contract session: local[N], shuffle=N.
     *

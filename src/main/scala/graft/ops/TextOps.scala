@@ -1751,9 +1751,12 @@ object TextOps {
     * dir), plus `merge_log.parquet` recording every decision
     * (gen, left, right, input sizes) — the audit trail TextOpsSpec
     * replays to prove each step chose the two smallest then-live
-    * segments. Driver work is |segments| one-row stats reads + the
-    * loop counter; every data move is a distributed index-algebra
-    * merge: cost ∝ index size, the corpus is never re-scanned.
+    * segments. An intermediate merge (`m<gen>`) that a later step
+    * folds again is deleted once consumed, so the published layout
+    * holds only `final_i` and the log (`_m1`). Driver work is
+    * |segments| one-row stats reads + the loop counter; every data
+    * move is a distributed index-algebra merge: cost ∝ index size, the
+    * corpus is never re-scanned.
     */
   val TieredK = 2
 
@@ -1761,9 +1764,11 @@ object TextOps {
     val multi = multiSegmentIndexLayout(s, d)
     val parts = (0 until TieredK).flatMap(i => segmentMarkers(s"final_$i/")) :+
       "merge_log.parquet/_SUCCESS"
-    Staged.layout(s, "bm25_tiered", docsSrc(d), parts) { tmp =>
+    Staged.layout(s, "bm25_tiered_m1", docsSrc(d), parts) { tmp =>
       def nDocs(dir: String): Long =
         s.read.parquet(s"$dir/stats.parquet").head().getAs[Long]("n_docs")
+      val fs = new org.apache.hadoop.fs.Path(tmp)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
       var live = multiSegRanges.map { case (seg, _, _) =>
         (s"$multi/$seg", seg, nDocs(s"$multi/$seg"))
       }.toVector
@@ -1774,12 +1779,13 @@ object TextOps {
         val a = sorted(0); val b = sorted(1)
         val name = s"m$gen"
         writeMergedSegment(s, Seq(a._1, b._1), s"$tmp/$name")
+        // a consumed intermediate merge is dead data in the layout
+        Seq(a._1, b._1).filter(_.startsWith(tmp))
+          .foreach(dir => fs.delete(new org.apache.hadoop.fs.Path(dir), true))
         log += ((gen, a._2, b._2, a._3, b._3))
         live = sorted.drop(2) :+ ((s"$tmp/$name", name, a._3 + b._3))
         gen += 1
       }
-      val fs = new org.apache.hadoop.fs.Path(tmp)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
       live.sortBy { case (_, name, n) => (-n, name) }.zipWithIndex.foreach {
         case ((dir, _, _), i) =>
           if (dir.startsWith(tmp))

@@ -130,12 +130,18 @@ object Replay {
   /** Stateful-stream state sizing for the REPLAY harness: the shuffle
     * partition count in force when a streaming query first starts is
     * BAKED INTO ITS CHECKPOINT as the state-store partition count, and
-    * every micro-batch pays per-partition store open/commit overhead —
-    * 32 stores for the replay's kilobytes of state is pure fixed cost
-    * (~3 s/query locally). A production deployment sizes this to its
-    * state volume at first start exactly the same way; 8 matches the
-    * replay corpus. Batch queries are untouched (the session value is
-    * restored after the replay completes).
+    * every micro-batch opens, writes and commits one store per
+    * partition — 32 stores for the replay's kilobytes of state is
+    * fixed cost. Measured warm at sf0.1 on a 4-core host (one
+    * `Probe time` run each, 8 vs 32 stores): q_stream_pit 2.7 vs 5.4 s,
+    * q_stream_join 3.2 vs 4.5 s. Most of the ~5 s/query gap measured
+    * before was not the stores themselves but the `chmod`/`readlink`
+    * process Hadoop forked per store file (4.7 vs 9.9 s, 4.7 vs 10.2 s),
+    * which [[graft.fs]] removed; q_stream_pit's micro-batches went from
+    * ~0.8 s to ~0.4-0.6 s each at 8 stores. A production deployment
+    * sizes this to its state volume at first start exactly the same
+    * way; 8 matches the replay corpus. Batch queries are untouched (the
+    * session value is restored after the replay completes).
     */
   private val ReplayStatePartitions = 8
 

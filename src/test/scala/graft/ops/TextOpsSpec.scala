@@ -197,11 +197,14 @@ class TextOpsSpec extends SparkSpec {
     val single = TextOps.invertedIndexLayout(spark, sf0001)
     def rows(dir: String, part: String): Seq[Seq[Any]] =
       spark.read.parquet(s"$dir/$part").collect().map(_.toSeq).toSeq
-    // (1) termination: exactly the final_i dirs, i < K — no stray segment
-    val finals = new java.io.File(tiered).listFiles()
-      .map(_.getName).filter(_.startsWith("final_")).sorted.toSeq
+    // (1) termination: exactly the final_i dirs, i < K — no stray
+    // segment, and no consumed intermediate merge left as dead data
+    val entries = new java.io.File(tiered).listFiles().map(_.getName).sorted.toSeq
+    val finals = entries.filter(_.startsWith("final_"))
     assert(finals == (0 until TextOps.TieredK).map(i => s"final_$i"),
       s"policy left the wrong segment set: $finals")
+    assert(entries == finals :+ "merge_log.parquet",
+      s"layout holds more than final_* and merge_log.parquet: $entries")
     // (2) preservation: the union of final segments IS the single-build
     // index — every posting, every df, the corpus constants
     val fp = finals.flatMap(f => rows(s"$tiered/$f", "postings.parquet")).toSet
