@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: dump formatted physical plans of headline queries to
@@ -62,8 +62,10 @@ object PlanDump {
         ("StreamingDeduplicateWithinWatermark holds one state row per live key and EVICTS on " +
           "watermark passage — the operator that keeps streaming dedup state bounded."),
       "q_dedup_cc_round" ->
-        ("ONE pointer-jumping round (repeats O(log d) times, each Materialize-checkpointed): " +
-          "neighbor-min HashAggregate, left propagation join, jump self-join on the label key."),
+        ("ONE pointer-jumping round (repeats until a round moves no label, O(log d) times, " +
+          "each Materialize-checkpointed): neighbor-min HashAggregate, left propagation join, " +
+          "jump self-join on the label key; the moved-label count is a CollectMetrics riding " +
+          "the round's own checkpoint job."),
       "q_tpch_market" ->
         ("filter-first star shape: the ASIA nation⋈region dim broadcasts onto customer AND " +
           "supplier BEFORE the orderkey/custkey/suppkey fact shuffles; r_name=ASIA is pushed " +
@@ -86,7 +88,7 @@ object PlanDump {
         ("oriented wedge-close: two ShuffledHashJoins keyed on the shared vertex / closing edge — " +
           "the a<b<c orientation enumerates each triangle once; no NestedLoop anywhere."),
       "q_pagerank_round" ->
-        ("ONE PageRank iteration (repeats 5×, each Materialize-checkpointed): edges⋈ranks " +
+        ("ONE PageRank iteration (repeats 5×; rounds 2, 4 and 5 Materialize-checkpointed): edges⋈ranks " +
           "ShuffledHashJoin on src (rank state must never broadcast), map-side-combined " +
           "contribution sum by dst, left join back onto the node set; all rank arithmetic is " +
           "BIGINT floor division."),
@@ -128,10 +130,13 @@ object PlanDump {
           "LeftAnti — the blocklist build side is bounded by the domain universe, the one " +
           "legitimately-broadcast join in the dedup/curation family."),
       "q_bpe_round" ->
-        ("ONE BPE training round (repeats 6×, each Materialize-checkpointed): map-side-combined " +
-          "pair-count HashAggregate (the only shuffle), TakeOrderedAndProject argmax (1 row), " +
-          "BroadcastNestedLoopJoin of that 1-row rule onto the corpus, shuffle-free replace " +
-          "projection."),
+        ("ONE delta-counting BPE round (repeats 5×, then a last argmax; corpus and counts " +
+          "Materialize-checkpointed each round), as two plans: the corpus rewrite — ONE " +
+          "join-free projection with the collected rule as replace LITERALS (its one Exchange " +
+          "is the fanOut repartition of the corpus scan) — then the next argmax over the " +
+          "updated counts: the initial map-side-combined pair-count HashAggregate, the " +
+          "rewrite's graft_bpe_delta change-site deltas folded in, and a 1-row " +
+          "TakeOrderedAndProject."),
       "q_mix_temperature" ->
         ("|langs|-row BroadcastExchanges (counts + 1-row min) onto a shuffle-free per-row " +
           "DECIMAL(38,0) compare — the cross-squared α=1/2 membership runs at scan speed."),
@@ -450,29 +455,21 @@ object PlanDump {
       notes.get(name.takeWhile(_ != ' ')).foreach(t => sb.append(s"> $t\n\n"))
       sb.append(s"```\n$plan```\n")
     }
-    for (n <- names)
-      section(n, SparkEntry.queries(n)(spark, d).queryExecution
-        .explainString(ExplainMode.fromString("formatted")))
-    // Iterative: one CC round — the declared q_dedup_cc result plan is a
-    // checkpoint scan; the repeated round shape lives here.
-    section("q_dedup_cc_round",
-      graft.ops.Dedup.ccRound(spark, d).queryExecution
-        .explainString(ExplainMode.fromString("formatted")))
-    section("q_pagerank_round",
-      graft.ops.Graph.pagerankRound(spark, d).queryExecution
-        .explainString(ExplainMode.fromString("formatted")))
-    section("q_bpe_round",
-      graft.ops.Vocab.bpeRound(spark, d).queryExecution
-        .explainString(ExplainMode.fromString("formatted")))
-    section("q_label_prop_round",
-      graft.ops.Graph.labelPropRound(spark, d).queryExecution
-        .explainString(ExplainMode.fromString("formatted")))
-    section("q_khop_round",
-      graft.ops.Graph.khopRound(spark, d).queryExecution
-        .explainString(ExplainMode.fromString("formatted")))
-    section("q_random_walk_round",
-      graft.ops.Graph.walkRound(spark, d).queryExecution
-        .explainString(ExplainMode.fromString("formatted")))
+    def plan(df: DataFrame): String =
+      df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    def explained(name: String, df: DataFrame): Unit = section(name, plan(df))
+    for (n <- names) explained(n, SparkEntry.queries(n)(spark, d))
+    // Iterative: each loop's own step run once on its lazy round-0 state
+    // (Iterate.Loop.once) — the declared queries' result plans are
+    // checkpoint scans; the repeated round shape lives here.
+    val (ccPairs, ccNodes) = graft.ops.Dedup.nearDupGraph(spark, d)
+    explained("q_dedup_cc_round", graft.ops.Dedup.ccLoop(ccPairs, ccNodes, identity).once)
+    explained("q_pagerank_round", graft.ops.Graph.pagerankLoop(spark, d, identity).once)
+    val bpe = graft.ops.Vocab.bpeLoop(graft.ops.Vocab.seq0(spark, d), identity).once
+    section("q_bpe_round", plan(bpe.seq) + plan(bpe.argmax))
+    explained("q_label_prop_round", graft.ops.Graph.labelPropLoop(spark, d, identity).once)
+    explained("q_khop_round", graft.ops.Graph.khopLoop(spark, d, identity).once._1)
+    explained("q_random_walk_round", graft.ops.Graph.walkLoop(spark, d, identity).once._1)
     // Streaming: the per-micro-batch IncrementalExecution plans — the
     // declared queries return the parquet-sink read-back, so the
     // stateful operators are only visible through the replay hook.

@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `graft_bpe_delta(seq, pa, pb)` returns the array of
   * `(pa, pb, d)` count adjustments that turn the pair counts of `seq`
   * into the pair counts of `replace(seq, <US a US US b US>, <US a RS
-  * b US>)` — i.e. of [[graft.ops.Vocab.mergeRewriteExpr]]'s output.
+  * b US>)` — i.e. of [[graft.ops.Vocab.mergeRewrite]]'s output.
   * Site enumeration reproduces `UTF8String.replace`'s left-to-right
   * non-overlapping scan exactly (see the encoding argument in
   * Vocab.scala): on the token list, scan left to right and take

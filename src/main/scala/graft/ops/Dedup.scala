@@ -336,105 +336,74 @@ object Dedup {
     * geometrically). The combination converges in O(log diameter)
     * rounds instead of O(diameter) — a 300-link near-dup chain closes
     * in ~9 rounds, and the 64-round budget covers any graph a 64-bit id
-    * space can express. Per round: one aggregate + two joins + a
-    * convergence count, with the round's result checkpointed (the
-    * standard iterative-algorithm shape — lineage would otherwise grow
-    * unboundedly).
+    * space can express. Per round ([[ccStep]]): one aggregate + two joins
+    * + a convergence count, with the round's result checkpointed by
+    * [[Iterate]] (lineage would otherwise grow unboundedly).
     */
-  private[ops] def connectedComponents(pairs: DataFrame, nodes: DataFrame): DataFrame = {
-    // materialize the DIRECTED pair set first, then mirror it: `pairs`
-    // is lazy, and union(pairs.select(a,b), pairs.select(b,a)) embeds
-    // the candidate-generation subtree twice — at sf1 that ran the
-    // 17 s blocked cosine cartesian two times before the first CC round
-    val p = Materialize(pairs.select(col("a_id").as("src"), col("b_id").as("dst")))
+  private[ops] def connectedComponents(pairs: DataFrame, nodes: DataFrame): DataFrame =
+    ccLoop(pairs, nodes, Materialize(_)).untilStable(64, "connectedComponents")
+
+  /** Connected components as an [[Iterate.Loop]]: the mirrored pair set
+    * and every node labelled with its own id (`stage`d: [[Materialize]]
+    * in [[connectedComponents]], `identity` in the PLANS.md hook), and
+    * [[ccStep]].
+    */
+  private[graft] def ccLoop(pairs: DataFrame, nodes: DataFrame, stage: DataFrame => DataFrame)
+      : Iterate.Loop[DataFrame] = {
+    // stage the DIRECTED pair set first, then mirror it: `pairs` is
+    // lazy, and union(pairs.select(a,b), pairs.select(b,a)) embeds the
+    // candidate-generation subtree twice — at sf1 that ran the 17 s
+    // blocked cosine cartesian two times before the first CC round
+    val p = stage(pairs.select(col("a_id").as("src"), col("b_id").as("dst")))
     val edges = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
-    var labels = Materialize(nodes.select(col("node"), col("node").as("label")))
-    var moved = 1L
-    var rounds = 0
-    val maxRounds = 64
-    while (moved > 0 && rounds < maxRounds) {
-      val neigh = edges
-        .join(labels, edges("dst") === labels("node"))
-        .groupBy(col("src"))
-        .agg(min("label").as("nl"))
-      // checkpointed: the jump below reads it twice (probe + lookup) —
-      // un-materialized it would re-run the propagation join both times
-      val propagated = Materialize(
-        labels
-          .join(neigh, labels("node") === neigh("src"), "left")
-          .select(
-            col("node"),
-            col("label"),
-            least(col("label"), coalesce(col("nl"), col("label"))).as("pl")
-          )
-      )
-      // pointer jump: label := label(label). Every label is a node id of
-      // the same component (invariant of both steps), so the lookup
-      // frame is `propagated` itself.
-      //
-      // r14 optimization: the convergence test rides the SAME action as
-      // the round checkpoint via observe() — the former separate
-      // `.where(newl < label).count()` was one extra job per round (a
-      // third of the loop's fixed cost; the wall here is job count, not
-      // data). Observation.get blocks until the checkpoint action
-      // completes and the metric is exact (CollectMetrics runs inside
-      // the executed plan), so the loop sees the identical `moved`.
-      val obs = new org.apache.spark.sql.Observation()
-      val jumped = Materialize(
-        propagated
-          .as("a")
-          .join(
-            propagated.select(col("node").as("jn"), col("pl").as("jl")).as("b"),
-            col("a.pl") === col("b.jn")
-          )
-          .select(col("a.node").as("node"), col("a.label").as("label"),
-            least(col("a.pl"), col("b.jl")).as("newl"))
-          .observe(obs,
-            sum(when(col("newl") < col("label"), 1L).otherwise(0L)).as("moved"))
-      )
-      // sum over an empty frame is SQL NULL — treat as converged
-      moved = Option(obs.get.apply("moved")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      labels = jumped.select(col("node"), col("newl").as("label"))
-      rounds += 1
-    }
-    // fail LOUDLY rather than return a silently-wrong partition of a
-    // component (unreachable under the O(log d) bound, but an invariant
-    // violation must never become a quietly-split cluster)
-    require(moved == 0,
-      s"connectedComponents did not converge in $maxRounds rounds")
-    labels
+    Iterate.Loop(stage(nodes.select(col("node"), col("node").as("label"))), ccStep(edges))
   }
 
-  /** Plan-audit hook (PLANS.md): ONE pointer-jumping round of
-    * [[connectedComponents]] as a LAZY DataFrame — the per-round shape
-    * (neighbor-min aggregate, left propagation join, jump self-join)
-    * that repeats O(log d) times. The declared query's final plan hides
-    * it: every round is checkpointed through [[Materialize]], so the
-    * result's lineage is one scan of the last checkpoint. Edges feed
-    * from the REAL candidate generator (ngramPairs), mirrored exactly
-    * as the loop does.
+  /** ONE pointer-jumping round: the neighbor-min aggregate, the left
+    * propagation join, and the jump self-join counting the labels that
+    * moved.
     */
-  private[graft] def ccRound(s: SparkSession, d: String): DataFrame = {
-    val p = ngramPairs(s, d, HOT_BUCKET_CAP)
-      .select(col("a_id").as("src"), col("b_id").as("dst"))
-    val edges = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
-    val labels = documents(s, d).select(col("doc_id").as("node"), col("doc_id").as("label"))
+  private def ccStep(edges: DataFrame)(labels: DataFrame, r: Iterate.Round): DataFrame = {
     val neigh = edges
       .join(labels, edges("dst") === labels("node"))
       .groupBy(col("src"))
       .agg(min("label").as("nl"))
-    val propagated = labels
-      .join(neigh, labels("node") === neigh("src"), "left")
-      .select(col("node"), col("label"),
-        least(col("label"), coalesce(col("nl"), col("label"))).as("pl"))
-    propagated
-      .as("a")
-      .join(
-        propagated.select(col("node").as("jn"), col("pl").as("jl")).as("b"),
-        col("a.pl") === col("b.jn"))
-      .select(col("a.node").as("node"), col("a.label").as("label"),
-        least(col("a.pl"), col("b.jl")).as("newl"))
+    // checkpointed: the jump below reads it twice (probe + lookup) —
+    // un-materialized it would re-run the propagation join both times
+    val propagated = r.keep(
+      labels
+        .join(neigh, labels("node") === neigh("src"), "left")
+        .select(
+          col("node"),
+          col("label"),
+          least(col("label"), coalesce(col("nl"), col("label"))).as("pl")
+        )
+    )
+    // pointer jump: label := label(label). Every label is a node id of
+    // the same component (invariant of both steps), so the lookup frame
+    // is `propagated` itself. The convergence count rides the round
+    // checkpoint's own action (r14: a separate count was one extra job
+    // per round — a third of the loop's fixed cost).
+    r.keepCounting(
+      propagated
+        .as("a")
+        .join(
+          propagated.select(col("node").as("jn"), col("pl").as("jl")).as("b"),
+          col("a.pl") === col("b.jn")
+        )
+        .select(col("a.node").as("node"), col("a.label").as("label"),
+          least(col("a.pl"), col("b.jl")).as("newl")),
+      col("newl") < col("label")
+    ).select(col("node"), col("newl").as("label"))
   }
+
+  /** The near-dup graph q_dedup_cc, q_split_leakproof and
+    * q_dedup_survivor cluster: hot-bucket-capped ngram pairs over every
+    * document — (pairs, nodes) as [[connectedComponents]] takes them.
+    */
+  private[graft] def nearDupGraph(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    (ngramPairs(s, d, HOT_BUCKET_CAP).select("a_id", "b_id"),
+      documents(s, d).select(col("doc_id").as("node")))
 
   /** Dedup CLUSTERS: the near-dup pair graph's connected components,
     * every doc labeled with the smallest doc_id in its component
@@ -468,8 +437,7 @@ object Dedup {
   val qDedupCc = Q(
     "q_dedup_cc",
     (s, d) => {
-      val pairs = ngramPairs(s, d, HOT_BUCKET_CAP).select("a_id", "b_id")
-      val nodes = documents(s, d).select(col("doc_id").as("node"))
+      val (pairs, nodes) = nearDupGraph(s, d)
       connectedComponents(pairs, nodes)
         .select(col("node").as("doc_id"), col("label").as("cluster_id"))
         .orderBy("doc_id")
@@ -503,8 +471,7 @@ object Dedup {
   val qSplitLeakproof = Q(
     "q_split_leakproof",
     (s, d) => {
-      val pairs = ngramPairs(s, d, HOT_BUCKET_CAP).select("a_id", "b_id")
-      val nodes = documents(s, d).select(col("doc_id").as("node"))
+      val (pairs, nodes) = nearDupGraph(s, d)
       connectedComponents(pairs, nodes)
         .select(col("node").as("doc_id"), col("label").as("cluster_id"))
         .withColumn("bucket", expr(Sampling.bucketSql("cluster_id", 0L, 100L)))
@@ -777,8 +744,7 @@ object Dedup {
   val qDedupSurvivor = Q(
     "q_dedup_survivor",
     (s, d) => {
-      val pairs = ngramPairs(s, d, HOT_BUCKET_CAP).select("a_id", "b_id")
-      val nodes = documents(s, d).select(col("doc_id").as("node"))
+      val (pairs, nodes) = nearDupGraph(s, d)
       val labeled = connectedComponents(pairs, nodes)
         .select(col("node").as("doc_id"), col("label").as("cluster_id"))
       val quality = documents(s, d)

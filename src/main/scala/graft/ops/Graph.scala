@@ -25,11 +25,14 @@ import org.apache.spark.sql.functions._
   * hash-oracled — no synthetic inputs.
   *
   * Scale discipline shared by the family: edges are built by ONE
-  * within-key equi self-join (never a cross join); iteration state is
-  * checkpointed per round ([[Materialize]]) exactly like
-  * connectedComponents, so lineage stays O(1) in the round count; and
-  * ALL ranking arithmetic is integer (`div` floor division) — no float
-  * accumulates across engine-dependent orders.
+  * within-key equi self-join (never a cross join), each graph input in
+  * one function ([[tradeEdges]], [[copurchaseEdges]], [[undirected]]);
+  * every loop runs through [[Iterate]] like connectedComponents — one
+  * step function per loop, its state checkpointed on the loop's cadence
+  * (every round, every second round for PageRank), so lineage stays
+  * O(1) in the round count; and ALL ranking arithmetic is integer
+  * (`div` floor division) — no float accumulates across
+  * engine-dependent orders.
   */
 object Graph {
   import Tables._
@@ -57,16 +60,13 @@ object Graph {
     * orders hold ≤ 7 lines; a corpus with unbounded baskets caps items
     * per basket first — the Skew.dropHotKeys idiom). shuffle_hash pin:
     * a fact-fact self-join must never become a broadcast build side.
-    */
-  private def cooccurPairs(s: SparkSession, d: String): DataFrame =
-    cooccurPairsOf(orderItems(s, d))
-
-  /** [[cooccurPairs]] over a caller-supplied basket relation — the r14
-    * optimization seam: Catalyst does not dedupe common subtrees, so a
-    * self-join over the LAZY `orderItems` scans and distincts lineitem
-    * once PER SIDE. Declared queries pass a [[Materialize]]d items
-    * frame so the basket relation is computed exactly once; the lazy
-    * plan-audit hooks keep the inline form.
+    *
+    * The basket relation is caller-supplied — the r14 optimization
+    * seam: Catalyst does not dedupe common subtrees, so a self-join over
+    * the LAZY `orderItems` scans and distincts lineitem once PER SIDE.
+    * Declared queries (all but q_triangles, see there) pass a
+    * [[Materialize]]d items frame so the basket relation is computed
+    * exactly once; the lazy plan-audit hooks keep the inline form.
     */
   private def cooccurPairsOf(items: DataFrame): DataFrame = {
     val a = items.select(col("l_orderkey").as("k"), col("l_partkey").as("pa"))
@@ -75,6 +75,37 @@ object Graph {
       .groupBy("pa", "pb")
       .agg(count(lit(1)).as("support"))
   }
+
+  /** The co-purchase graph: support-≥2 part pairs (pa < pb) over a basket
+    * relation — the edge set q_triangles, q_label_prop and q_jaccard
+    * share.
+    */
+  private def copurchaseEdges(items: DataFrame): DataFrame =
+    cooccurPairsOf(items).where(col("support") >= 2).select("pa", "pb")
+
+  /** Both directions of an edge list: (a, b) and (b, a) as (src, dst). */
+  private def undirected(e: DataFrame, a: String, b: String): DataFrame =
+    e.select(col(a).as("src"), col(b).as("dst"))
+      .union(e.select(col(b).as("src"), col(a).as("dst")))
+
+  /** The trade graph: customer ⇄ supplier through orders⋈lineitem, both
+    * directions of each distinct edge, node ids namespace-encoded
+    * 2·custkey / 2·suppkey+1. orders⋈lineitem is corpus×corpus —
+    * SORT-MERGE (the r12 full-sf10 ledger OOM'd the earlier shuffle_hash
+    * pin building 60M lineitem rows into per-task hash maps; per-round
+    * STATE joins keep shuffle_hash — their build sides are node-scale).
+    * `stage` takes the distinct one-direction base: declared queries
+    * pass [[Materialize]] (r14: the two-direction union otherwise ran
+    * the join + distinct once PER DIRECTION), plan hooks `identity`.
+    */
+  private def tradeEdges(s: SparkSession, d: String, stage: DataFrame => DataFrame)
+      : DataFrame =
+    undirected(
+      stage(orders(s, d)
+        .join(lineitem(s, d).hint("merge"), col("o_orderkey") === col("l_orderkey"))
+        .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("sp"))
+        .distinct()),
+      "c", "sp")
 
   /** Top-25 co-occurring part pairs by support — association mining
     * (the exact-count front half of PMI: support(a,b) over a basket
@@ -175,9 +206,7 @@ object Graph {
       // Exchanges either way, plans/r14) and its extra eager checkpoint
       // job measured slower than the one duplicate scan+distinct it
       // saves inside e's single materialization.
-      val e = Materialize(
-        cooccurPairsOf(orderItems(s, d))
-          .where(col("support") >= 2).select("pa", "pb"))
+      val e = Materialize(copurchaseEdges(orderItems(s, d)))
       val wedges = e.select(col("pa").as("a"), col("pb").as("b"))
         .join(
           e.select(col("pa").as("b2"), col("pb").as("c")).hint("shuffle_hash"),
@@ -236,86 +265,51 @@ object Graph {
     * linearly, and at web scale each skipped checkpoint is one fewer
     * materialization of a node-cardinality table — the same interval
     * trade GraphX ships (Pregel checkpointInterval default 10).
-    * Driver-side control, executor-side data: only the loop counter
-    * lives on the driver.
     */
   val qPagerank = Q(
     "q_pagerank",
-    (s, d) => {
-      // trade-graph base: orders⋈lineitem is corpus×corpus — SORT-MERGE
-      // at every build site in this family (the r12 full-sf10 ledger
-      // OOM'd the earlier shuffle_hash pin building 60M lineitem rows
-      // into per-task hash maps; the per-round STATE joins below keep
-      // shuffle_hash — their build sides are node-scale)
-      // base staged once (r14): the two-direction edge union otherwise
-      // ran the orders⋈lineitem SMJ + distinct once PER DIRECTION
-      val base = Materialize(orders(s, d)
-        .join(lineitem(s, d).hint("merge"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("sp"))
-        .distinct())
-      val edges = base.select(col("c").as("src"), col("sp").as("dst"))
-        .union(base.select(col("sp").as("src"), col("c").as("dst")))
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      val edgesD = Materialize(edges.join(deg, "src"))
-      val nodes = Materialize(edgesD.select(col("src").as("node")).distinct())
-      val n = nodes.count()
-      val init = SCALE / n // floor: n is a positive Long
-      val baseMass = (15L * init) / 100L
-      var ranks = Materialize(nodes.select(col("node"), lit(init).as("rank")))
-      for (k <- 1 to ITERS) {
-        val sums = edgesD
-          .join(ranks.hint("shuffle_hash"), col("src") === col("node"))
-          .select(col("dst"), expr("rank div deg").as("contrib"))
-          .groupBy("dst")
-          .agg(sum("contrib").as("m"))
-        val next =
-          nodes.join(sums.hint("shuffle_hash"), col("node") === col("dst"), "left")
-            .select(col("node"),
-              (lit(baseMass) + expr("85 * coalesce(m, 0L) div 100")).as("rank"))
-        // checkpoint every SECOND round: rank state appears once per
-        // round plan, so un-checkpointed lineage grows linearly — depth
-        // ≤ 2 rounds stays O(1) while halving the eager checkpoint jobs
-        // (the per-round fixed cost that dominates at small scale)
-        ranks = if (k % 2 == 0 || k == ITERS) Materialize(next) else next
-      }
-      ranks
+    // cadence 2: every SECOND round checkpoints (see above)
+    (s, d) =>
+      pagerankLoop(s, d, Materialize(_)).run(ITERS, 2)
         .select(
           when(col("node") % 2 === 0, lit("customer")).otherwise(lit("supplier")).as("kind"),
           expr("node div 2").as("key"),
           col("rank"))
-        .orderBy("kind", "key")
-    },
+        .orderBy("kind", "key"),
     Some(pagerankOracle)
   )
 
-  /** Plan-audit hook (PLANS.md): ONE PageRank iteration as a LAZY
-    * DataFrame — the per-round shape (edges⋈ranks shuffle_hash join,
-    * map-side-combined contribution sum, left join back onto nodes)
-    * that repeats [[ITERS]] times; the declared query's final plan
-    * hides it behind per-round [[Materialize]] checkpoints. Edges and
-    * uniform init ranks feed from the REAL trade-graph builder.
+  /** PageRank as an [[Iterate.Loop]]: the trade edges with out-degrees
+    * attached and the node set (`stage`d: [[Materialize]] in
+    * [[qPagerank]], `identity` in the PLANS.md hook), uniform round-0
+    * ranks SCALE div n, and [[pagerankStep]].
     */
-  private[graft] def pagerankRound(s: SparkSession, d: String): DataFrame = {
-    val base = orders(s, d)
-      .join(lineitem(s, d).hint("merge"),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("sp"))
-      .distinct()
-    val edges = base.select(col("c").as("src"), col("sp").as("dst"))
-      .union(base.select(col("sp").as("src"), col("c").as("dst")))
+  private[graft] def pagerankLoop(s: SparkSession, d: String, stage: DataFrame => DataFrame)
+      : Iterate.Loop[DataFrame] = {
+    val edges = tradeEdges(s, d, stage)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val edgesD = edges.join(deg, "src")
-    val nodes = edgesD.select(col("src").as("node")).distinct()
-    val ranks = nodes.select(col("node"), lit(SCALE).as("rank")) // un-normalized init: shape-identical
+    val edgesD = stage(edges.join(deg, "src"))
+    val nodes = stage(edgesD.select(col("src").as("node")).distinct())
+    val init = SCALE / nodes.count() // floor: n is a positive Long
+    Iterate.Loop(stage(nodes.select(col("node"), lit(init).as("rank"))),
+      pagerankStep(edgesD, nodes, (15L * init) / 100L))
+  }
+
+  /** ONE PageRank round: the edges⋈ranks shuffle_hash join (rank state
+    * never broadcasts), the map-side-combined contribution sum by dst,
+    * and the left join back onto the node set.
+    */
+  private def pagerankStep(edgesD: DataFrame, nodes: DataFrame, baseMass: Long)(
+      ranks: DataFrame, r: Iterate.Round): DataFrame = {
     val sums = edgesD
       .join(ranks.hint("shuffle_hash"), col("src") === col("node"))
       .select(col("dst"), expr("rank div deg").as("contrib"))
       .groupBy("dst")
       .agg(sum("contrib").as("m"))
-    nodes.join(sums.hint("shuffle_hash"), col("node") === col("dst"), "left")
-      .select(col("node"),
-        (lit(SCALE) + expr("85 * coalesce(m, 0L) div 100")).as("rank"))
+    r.keep(
+      nodes.join(sums.hint("shuffle_hash"), col("node") === col("dst"), "left")
+        .select(col("node"),
+          (lit(baseMass) + expr("85 * coalesce(m, 0L) div 100")).as("rank")))
   }
 
   /** One code path emits the iteration CTEs so the Spark loop above and
@@ -373,56 +367,38 @@ object Graph {
     */
   val qLabelProp = Q(
     "q_label_prop",
-    (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val und = Materialize {
-        // items staged once (r14): the un-staged union otherwise built
-        // the FULL pair pipeline (incl. the basket self-join) twice,
-        // once per direction
-        val e = cooccurPairsOf(Materialize(orderItems(s, d)))
-          .where(col("support") >= 2).select("pa", "pb")
-        val eM = Materialize(e)
-        eM.select(col("pa").as("src"), col("pb").as("dst"))
-          .union(eM.select(col("pb").as("src"), col("pa").as("dst")))
-      }
-      val nodes = Materialize(und.select(col("src").as("node")).distinct())
-      var labels = Materialize(nodes.select(col("node"), col("node").as("label")))
-      val w = Window.partitionBy("dst").orderBy(col("cnt").desc, col("label").asc)
-      for (k <- 1 to LP_ITERS) {
-        val next = und
-          .join(labels.hint("shuffle_hash"), col("src") === col("node"))
-          .groupBy(col("dst"), col("label"))
-          .agg(count(lit(1)).as("cnt"))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1)
-          .select(col("dst").as("node"), col("label"))
-        labels = Materialize(next)
-      }
-      labels.orderBy("node")
-    },
+    (s, d) => labelPropLoop(s, d, Materialize(_)).run(LP_ITERS, 1).orderBy("node"),
     Some(labelPropOracle)
   )
 
-  /** Plan-audit hook (PLANS.md): ONE synchronous LPA round as a LAZY
-    * DataFrame — the edges⋈labels shuffle_hash join, map-side-combined
-    * (node, label) count, and node-keyed WindowGroupLimit argmax the
-    * declared query repeats behind per-round Materialize checkpoints.
+  /** Label propagation as an [[Iterate.Loop]]: the undirected
+    * co-purchase graph and its node set (`stage`d — in [[qLabelProp]]
+    * the basket relation too, r14: the un-staged union otherwise built
+    * the FULL pair pipeline, basket self-join included, once per
+    * direction), every node labelled with its own id, and
+    * [[labelPropStep]].
     */
-  private[graft] def labelPropRound(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = cooccurPairs(s, d).where(col("support") >= 2).select("pa", "pb")
-    val und = e.select(col("pa").as("src"), col("pb").as("dst"))
-      .union(e.select(col("pb").as("src"), col("pa").as("dst")))
-    val labels = und.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-    val w = Window.partitionBy("dst").orderBy(col("cnt").desc, col("label").asc)
-    und.join(labels.hint("shuffle_hash"), col("src") === col("node"))
-      .groupBy(col("dst"), col("label"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1)
-      .select(col("dst").as("node"), col("label"))
+  private[graft] def labelPropLoop(s: SparkSession, d: String, stage: DataFrame => DataFrame)
+      : Iterate.Loop[DataFrame] = {
+    val und = stage(undirected(stage(copurchaseEdges(stage(orderItems(s, d)))), "pa", "pb"))
+    val nodes = stage(und.select(col("src").as("node")).distinct())
+    Iterate.Loop(stage(nodes.select(col("node"), col("node").as("label"))),
+      labelPropStep(und))
   }
+
+  /** ONE synchronous LPA round: the edges⋈labels shuffle_hash join, the
+    * map-side-combined (node, label) count, and the node-keyed
+    * WindowGroupLimit argmax (count desc, label asc).
+    */
+  private def labelPropStep(und: DataFrame)(labels: DataFrame, r: Iterate.Round): DataFrame =
+    r.keep(
+      und.join(labels.hint("shuffle_hash"), col("src") === col("node"))
+        .groupBy(col("dst"), col("label"))
+        .agg(count(lit(1)).as("cnt"))
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("dst").orderBy(col("cnt").desc, col("label").asc)))
+        .where(col("rn") === 1)
+        .select(col("dst").as("node"), col("label")))
 
   /** One code path emits the LPA round CTEs (q_pagerank discipline). */
   private def labelPropOracle: String = {
@@ -475,28 +451,7 @@ object Graph {
   val qKhop = Q(
     "q_khop",
     (s, d) => {
-      // base staged once (r14): the two-direction edge union otherwise
-      // ran the orders⋈lineitem SMJ + distinct once PER DIRECTION
-      val base = Materialize(orders(s, d)
-        .join(lineitem(s, d).hint("merge"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("sp"))
-        .distinct())
-      val edges = Materialize(
-        base.select(col("c").as("src"), col("sp").as("dst"))
-          .union(base.select(col("sp").as("src"), col("c").as("dst"))))
-      val seeds = customer(s, d).where(col("c_nationkey") === 1)
-        .select((col("c_custkey") * 2).as("node"))
-      var frontier = Materialize(seeds)
-      var visited = Materialize(seeds.select(col("node"), lit(0).as("dist")))
-      for (k <- 1 to KHOP) {
-        val nxt = Materialize(
-          edges.join(frontier.hint("shuffle_hash"), col("src") === col("node"))
-            .select(col("dst").as("node")).distinct()
-            .join(visited.hint("shuffle_hash"), Seq("node"), "left_anti"))
-        visited = Materialize(visited.union(nxt.select(col("node"), lit(k).as("dist"))))
-        frontier = nxt
-      }
+      val (_, visited) = khopLoop(s, d, Materialize(_)).run(KHOP, 1)
       visited
         .select(
           when(col("node") % 2 === 0, lit("customer")).otherwise(lit("supplier")).as("kind"),
@@ -507,56 +462,31 @@ object Graph {
     Some(khopOracle)
   )
 
-  /** Plan-audit hook (PLANS.md / QueriesPlanSpec): ONE BFS round as a
-    * LAZY DataFrame — the edges⋈frontier shuffle_hash join, the
-    * map-side-combined expansion distinct, and the visited anti join
-    * the declared query repeats behind per-round Materialize
-    * checkpoints. Frontier/visited feed from the REAL seed set.
+  /** K-hop BFS as an [[Iterate.Loop]] over (frontier, visited): the
+    * trade edges (`stage`d) and the seed set at distance 0, and
+    * [[khopStep]].
     */
-  private[graft] def khopRound(s: SparkSession, d: String): DataFrame = {
-    val base = orders(s, d)
-      .join(lineitem(s, d).hint("merge"),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("sp"))
-      .distinct()
-    val edges = base.select(col("c").as("src"), col("sp").as("dst"))
-      .union(base.select(col("sp").as("src"), col("c").as("dst")))
+  private[graft] def khopLoop(s: SparkSession, d: String, stage: DataFrame => DataFrame)
+      : Iterate.Loop[(DataFrame, DataFrame)] = {
+    val edges = stage(tradeEdges(s, d, stage))
     val seeds = customer(s, d).where(col("c_nationkey") === 1)
       .select((col("c_custkey") * 2).as("node"))
-    val visited = seeds.select(col("node"), lit(0).as("dist"))
-    edges.join(seeds.hint("shuffle_hash"), col("src") === col("node"))
-      .select(col("dst").as("node")).distinct()
-      .join(visited.hint("shuffle_hash"), Seq("node"), "left_anti")
+    Iterate.Loop((stage(seeds), stage(seeds.select(col("node"), lit(0).as("dist")))),
+      khopStep(edges))
   }
 
-  /** Plan-audit hook: ONE random-walk step as a LAZY DataFrame — the
-    * two keyed shuffle_hash equi-joins with bounded build sides
-    * (node-scale degree lookup; WALK-scale probe side against the
-    * streamed adjacency — see [[qRandomWalk]]'s scale note) the
-    * declared query repeats behind per-round Materialize. One row per
-    * walk crosses each exchange — never a node's fan-out.
+  /** ONE BFS round: the edges⋈frontier shuffle_hash join, the
+    * map-side-combined expansion distinct and the keyed visited anti
+    * join give the next frontier; visited gains it at distance k.
     */
-  private[graft] def walkRound(s: SparkSession, d: String): DataFrame = {
-    val base = orders(s, d)
-      .join(lineitem(s, d).hint("merge"),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("sp"))
-      .distinct()
-    val edges = base.select(col("c").as("src"), col("sp").as("dst"))
-      .union(base.select(col("sp").as("src"), col("c").as("dst")))
-    val ranked = edges.withColumn("rnk",
-      row_number().over(Window.partitionBy("src").orderBy("dst")) - 1)
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val walks = deg.select(col("src").as("node")).where(col("node") % 40 === 0)
-      .select(col("node").as("walk_id"), lit(0).as("step"), col("node").as("cur"))
-    walks
-      .join(deg.hint("shuffle_hash"), col("cur") === col("src"))
-      .select(col("walk_id"), lit(1).as("step"), col("cur"),
-        (walkChoice(col("walk_id"), lit(1L), col("cur")) % col("deg")).as("r"))
-      .hint("shuffle_hash") // build the WALK-scale side; stream the adjacency
-      .join(ranked,
-        col("cur") === ranked("src") && col("r") === ranked("rnk"))
-      .select(col("walk_id"), col("step"), col("dst").as("cur"))
+  private def khopStep(edges: DataFrame)(
+      state: (DataFrame, DataFrame), r: Iterate.Round): (DataFrame, DataFrame) = {
+    val (frontier, visited) = state
+    val nxt = r.keep(
+      edges.join(frontier.hint("shuffle_hash"), col("src") === col("node"))
+        .select(col("dst").as("node")).distinct()
+        .join(visited.hint("shuffle_hash"), Seq("node"), "left_anti"))
+    (nxt, r.keep(visited.union(nxt.select(col("node"), lit(r.k).as("dist")))))
   }
 
   /** One code path emits the BFS round CTEs (q_pagerank discipline):
@@ -612,12 +542,8 @@ object Graph {
       // e staged once (r14): the inline form rebuilt the whole pair
       // pipeline THREE times — und's two directions and the
       // existing-edge anti join below
-      val e = Materialize(
-        cooccurPairsOf(Materialize(orderItems(s, d)))
-          .where(col("support") >= 2).select("pa", "pb"))
-      val und = Materialize(
-        e.select(col("pa").as("src"), col("pb").as("dst"))
-          .union(e.select(col("pb").as("src"), col("pa").as("dst"))))
+      val e = Materialize(copurchaseEdges(Materialize(orderItems(s, d))))
+      val und = Materialize(undirected(e, "pa", "pb"))
       val deg = und.groupBy("src").agg(count(lit(1)).as("deg"))
       val wa = und.select(col("src").as("n"), col("dst").as("a"))
       val wb = und.select(col("src").as("n2"), col("dst").as("b"))
@@ -696,17 +622,7 @@ object Graph {
   val qGraphSample = Q(
     "q_graph_sample",
     (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      // base staged once (r14): the two-direction edge union otherwise
-      // ran the orders⋈lineitem SMJ + distinct once PER DIRECTION
-      val base = Materialize(orders(s, d)
-        .join(lineitem(s, d).hint("merge"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("sp"))
-        .distinct())
-      val edges = Materialize(
-        base.select(col("c").as("src"), col("sp").as("dst"))
-          .union(base.select(col("sp").as("src"), col("c").as("dst"))))
+      val edges = Materialize(tradeEdges(s, d, Materialize(_)))
       val seeds = customer(s, d).where(col("c_nationkey") === 1)
         .select((col("c_custkey") * 2).as("node"))
       val w = Window.partitionBy("src").orderBy(expr(nbrHashSql).asc, col("dst").asc)
@@ -786,40 +702,7 @@ object Graph {
   val qRandomWalk = Q(
     "q_random_walk",
     (s, d) => {
-      // base staged once (r14): the two-direction edge union otherwise
-      // ran the orders⋈lineitem SMJ + distinct once PER DIRECTION
-      val base = Materialize(orders(s, d)
-        .join(lineitem(s, d).hint("merge"),
-          col("o_orderkey") === col("l_orderkey"))
-        .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("sp"))
-        .distinct())
-      val edges = base.select(col("c").as("src"), col("sp").as("dst"))
-        .union(base.select(col("sp").as("src"), col("c").as("dst")))
-      val ranked = Materialize(edges
-        .withColumn("rnk",
-          row_number().over(Window.partitionBy("src").orderBy("dst")) - 1))
-      val deg = Materialize(edges.groupBy("src").agg(count(lit(1)).as("deg")))
-      val starts = deg.select(col("src").as("node")).where(col("node") % 40 === 0)
-      var walks = Materialize(
-        starts.select(col("node").as("walk_id"), lit(0).as("step"), col("node").as("cur")))
-      var out = walks
-      for (i <- 1 to WALK_STEPS) {
-        walks = Materialize(
-          walks
-            .join(deg.hint("shuffle_hash"), col("cur") === col("src"))
-            .select(col("walk_id"), lit(i).as("step"), col("cur"),
-              (walkChoice(col("walk_id"), lit(i.toLong), col("cur")) % col("deg")).as("r"))
-            // build the WALK-scale side and STREAM the adjacency: the
-            // r12 sf10 ledger killed both alternatives — a hash build
-            // of the edge-scale side OOMs (the r10 q_bleu class), and
-            // sort-merge re-sorts ~100M adjacency rows EVERY step for
-            // a 40k-row probe
-            .hint("shuffle_hash")
-            .join(ranked,
-              col("cur") === ranked("src") && col("r") === ranked("rnk"))
-            .select(col("walk_id"), col("step"), col("dst").as("cur")))
-        out = out.union(walks)
-      }
+      val (_, out) = walkLoop(s, d, Materialize(_)).run(WALK_STEPS, 1)
       out.select(col("walk_id"), col("step"), col("cur").as("node"))
         .orderBy("walk_id", "step")
     },
@@ -852,6 +735,46 @@ object Graph {
             SELECT walk_id, step, cur AS node FROM walk
             ORDER BY walk_id, step""")
   )
+
+  /** Random walks as an [[Iterate.Loop]] over (walks, every step so
+    * far): the trade edges' dst-ranked adjacency and degree table
+    * (`stage`d) and one walk from every 40th node, and [[walkStep]].
+    */
+  private[graft] def walkLoop(s: SparkSession, d: String, stage: DataFrame => DataFrame)
+      : Iterate.Loop[(DataFrame, DataFrame)] = {
+    val edges = tradeEdges(s, d, stage)
+    val ranked = stage(edges
+      .withColumn("rnk",
+        row_number().over(Window.partitionBy("src").orderBy("dst")) - 1))
+    val deg = stage(edges.groupBy("src").agg(count(lit(1)).as("deg")))
+    val walks = stage(deg.select(col("src").as("node")).where(col("node") % 40 === 0)
+      .select(col("node").as("walk_id"), lit(0).as("step"), col("node").as("cur")))
+    Iterate.Loop((walks, walks), walkStep(deg, ranked))
+  }
+
+  /** ONE walk step: two keyed shuffle_hash equi-joins with bounded build
+    * sides (node-scale degree lookup; WALK-scale probe side against the
+    * streamed adjacency — see [[qRandomWalk]]'s scale note). One row per
+    * walk crosses each exchange — never a node's fan-out.
+    */
+  private def walkStep(deg: DataFrame, ranked: DataFrame)(
+      state: (DataFrame, DataFrame), r: Iterate.Round): (DataFrame, DataFrame) = {
+    val (walks, out) = state
+    val next = r.keep(
+      walks
+        .join(deg.hint("shuffle_hash"), col("cur") === col("src"))
+        .select(col("walk_id"), lit(r.k).as("step"), col("cur"),
+          (walkChoice(col("walk_id"), lit(r.k.toLong), col("cur")) % col("deg")).as("r"))
+        // build the WALK-scale side and STREAM the adjacency: the r12
+        // sf10 ledger killed both alternatives — a hash build of the
+        // edge-scale side OOMs (the r10 q_bleu class), and sort-merge
+        // re-sorts ~100M adjacency rows EVERY step for a 40k-row probe
+        .hint("shuffle_hash")
+        .join(ranked,
+          col("cur") === ranked("src") && col("r") === ranked("rnk"))
+        .select(col("walk_id"), col("step"), col("dst").as("cur")))
+    (next, out.union(next))
+  }
 
   val all: Seq[Q] = Seq(qCooccur, qPmi, qTriangles, qPagerank, qLabelProp, qKhop,
     qJaccard, qGraphSample, qRandomWalk)

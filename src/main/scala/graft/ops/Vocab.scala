@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** E19 — vocabulary induction: distributed BPE merge training
@@ -40,20 +40,22 @@ import org.apache.spark.sql.functions._
   * discipline), so round count, tiebreaks, and rewrite arithmetic
   * cannot drift between engines.
   *
-  * Scale shape (the reason BPE training is a cluster job at all): each
-  * round is ONE map-side-combined pair-count aggregation (the only
-  * shuffle — pair keys, combiner collapses per-partition duplicates
-  * before the exchange), ONE TakeOrderedAndProject argmax (per-partition
-  * heap, 1 row to the driver's plan — never a global sort), and ONE
-  * shuffle-free per-row `replace` projection over the corpus with the
-  * 1-row merge rule BROADCAST onto it. State between rounds is the
-  * rewritten corpus, checkpointed per round ([[Materialize]]) so
-  * lineage stays O(1) in the round count — the same Pregel-on-DataFrames
-  * pattern as connectedComponents/PageRank. Driver-side control only:
-  * the loop counter; no corpus data ever reaches the driver. Production
-  * BPE runs thousands of merges with batched rule application
-  * (non-overlapping top-K per round); the per-round dataflow is
-  * unchanged.
+  * Scale shape (the reason BPE training is a cluster job at all): the
+  * pair counts are ONE map-side-combined aggregation over the initial
+  * corpus (pair keys, combiner collapses per-partition duplicates
+  * before the exchange); each round ([[bpeStep]]) is ONE
+  * TakeOrderedAndProject argmax collected to the driver (1 row — the
+  * rule table is vocab-sized), ONE shuffle-free, join-free per-row
+  * `replace` projection over the corpus with that rule as LITERALS
+  * ([[mergeRewrite]]) which also emits the change-site pair-count
+  * deltas, and one map-side-combined fold of those deltas into the
+  * counts. Rewritten corpus and counts are checkpointed per round by
+  * [[Iterate]] so lineage stays O(1) in the round count — the same
+  * Pregel-on-DataFrames pattern as connectedComponents/PageRank. Only
+  * the loop counter and the 1-row rules reach the driver, never corpus
+  * data. Production BPE runs thousands of merges with batched rule
+  * application (non-overlapping top-K per round); the per-round
+  * dataflow is unchanged.
   */
 object Vocab {
   import Tables._
@@ -84,7 +86,7 @@ object Vocab {
     * empties removed by the shared filter). NOTHING else changes —
     * the "swap the alphabet" claim, now executed, not asserted.
     */
-  private def seq0(s: SparkSession, d: String, delim: String = " "): DataFrame = {
+  private[graft] def seq0(s: SparkSession, d: String, delim: String = " "): DataFrame = {
     val sep2 = US.toChar.toString * 2
     fanOut(documents(s, d)).select(
       col("doc_id"),
@@ -93,104 +95,96 @@ object Vocab {
         lit(sep2)).as("seq"))
   }
 
-  /** The per-round argmax: next merge rule, tie-broken totally. */
-  private def bestPair(seqDf: DataFrame): DataFrame =
-    argmaxPair(pairCounts(seqDf))
-
-  /** The argmax over an explicit pair-count relation (freq DESC, then
-    * (pa, pb) binary string order) — TakeOrderedAndProject, 1 row.
-    */
-  private def argmaxPair(counts: DataFrame): DataFrame =
-    counts
-      .orderBy(col("freq").desc, col("pa").asc, col("pb").asc)
-      .limit(1)
-
-  /** The one-round rewrite on (seq, bpa, bpb) columns — THE expression
+  /** The one-round rewrite of `seq` under merge rule (pa, pb) —
+    * `US pa US US pb US` → `US pa RS pb US` by `replace`, THE expression
     * whose equivalence to greedy-leftmost merge application the whole
-    * encoding argument rests on. Exposed so VocabSpec's ScalaCheck
-    * sweep exercises the production string, not a test-side copy.
+    * encoding argument rests on. The BPE and WordPiece loops pass the
+    * rule as literals (constant-folded to one search and one replacement
+    * string); VocabSpec's ScalaCheck sweep passes per-row columns.
     */
-  private[ops] val mergeRewriteExpr: String =
-    "replace(seq, chr(31) || bpa || chr(31) || chr(31) || bpb || chr(31)," +
-      " chr(31) || bpa || chr(30) || bpb || chr(31))"
-
-  /** Greedy-leftmost application of the (1-row, broadcast) merge rule. */
-  private def applyMerge(seqDf: DataFrame, best: DataFrame): DataFrame =
-    seqDf
-      .crossJoin(broadcast(best.select(col("pa").as("bpa"), col("pb").as("bpb"))))
-      .select(col("doc_id"), expr(mergeRewriteExpr).as("seq"))
-
-  /** One FUSED round step: rewrite the checkpointed sequences under the
-    * round's (driver-held, literal) rule AND emit the change-site
-    * pair-count deltas ([[graft.functions.BpeDelta]] — a few
-    * (pa, pb, ±1) entries per rewrite site) in the SAME corpus pass,
-    * checkpointed together. The round's counts update then reads the
-    * tiny `ds` arrays off the checkpoint instead of re-scanning
-    * strings; the entries sum, with the previous round's counts, to
-    * exactly the full recount of the rewritten corpus (VocabSpec's
-    * delta law).
-    */
-  private def mergeStep(seqDf: DataFrame, pa: String, pb: String): DataFrame = {
-    val us = US.toChar.toString
-    val rs = RS.toChar.toString
-    seqDf.select(col("doc_id"),
-      call_function("replace", col("seq"),
-        lit(us + pa + us + us + pb + us), lit(us + pa + rs + pb + us)).as("seq"),
-      call_function("graft_bpe_delta", col("seq"), lit(pa), lit(pb)).as("ds"))
+  private[ops] def mergeRewrite(seq: Column, pa: Column, pb: Column): Column = {
+    val us = lit(US.toChar.toString)
+    call_function("replace", seq,
+      concat(us, pa, us, us, pb, us), concat(us, pa, lit(RS.toChar.toString), pb, us))
   }
 
-  /** The [[MERGES]]-round loop with DELTA pair counting (r15, guide §2:
-    * per-round work ∝ changed pairs, not corpus size): the pair counts
-    * are materialized ONCE from the initial sequences, and each round
-    * folds in the change-site deltas of its own rewrite instead of
-    * re-counting every adjacent pair of the corpus — ONE corpus pass
-    * per round ([[mergeStep]]), where the r13 loop paid the rewrite
-    * AND a full explode+recount. The per-round argmax is a 1-ROW
-    * TakeOrdered collect over the materialized counts — the sanctioned
-    * vocab-sized driver sync (the ulmTrainedVocabFast chars-collect /
-    * K×dim centroid precedent; production BPE trainers hold the rule
-    * table driver-side by design), which lets the rewrite and delta
-    * expressions take literal arguments instead of a broadcast
-    * crossJoin per round (one BroadcastExchange + its job eliminated
-    * per corpus pass). Zero-count pairs are dropped; a dropped key can
-    * only be touched again by a NEW merged symbol's increments, whose
-    * sum never depends on the dropped zero row. The LAST round's
-    * rewrite emits no delta (no round MERGES+1 consumes it) and stays
-    * lazy; the train queries skip it outright (only the merge table is
-    * consumed — one corpus job saved).
+  /** BPE loop state: the current sequences, their pair counts and the
+    * rules merged so far (pa, pb, freq).
+    */
+  private[graft] final case class BpeState(
+      seq: DataFrame, counts: DataFrame, rules: Vector[(String, String, Long)]) {
+    /** The next merge rule: freq DESC, then (pa, pb) binary string
+      * order — TakeOrderedAndProject, 1 row.
+      */
+    def argmax: DataFrame =
+      counts.orderBy(col("freq").desc, col("pa").asc, col("pb").asc).limit(1)
+    /** The next merge rule, collected. */
+    def best: (String, String, Long) = {
+      val r = argmax.collect()(0)
+      (r.getString(0), r.getString(1), r.getLong(2))
+    }
+  }
+
+  /** BPE merge training as an [[Iterate.Loop]]: `seq0`, its pair counts
+    * (`stage`d: [[Materialize]] in [[bpeDeltaLoop]], `identity` in the
+    * PLANS.md hook) and [[bpeStep]].
+    */
+  private[graft] def bpeLoop(seq0: DataFrame, stage: DataFrame => DataFrame)
+      : Iterate.Loop[BpeState] =
+    Iterate.Loop(BpeState(seq0, stage(pairCounts(seq0)), Vector.empty), bpeStep)
+
+  /** ONE BPE round with DELTA pair counting (r15, guide §2: per-round
+    * work ∝ changed pairs, not corpus size): collect the argmax rule,
+    * then ONE fused corpus pass rewrites the sequences under it AND
+    * emits the change-site pair-count deltas ([[graft.functions.BpeDelta]]
+    * — a few (pa, pb, ±1) entries per rewrite site), checkpointed
+    * together; the counts update folds the tiny `ds` arrays off that
+    * checkpoint instead of re-counting every adjacent pair of the corpus
+    * (the r13 loop paid the rewrite AND a full explode+recount). The
+    * entries sum, with the previous round's counts, to exactly the full
+    * recount of the rewritten corpus (VocabSpec's delta law). The 1-ROW
+    * TakeOrdered collect is the sanctioned vocab-sized driver sync (the
+    * ulmTrainedVocabFast chars-collect / K×dim centroid precedent;
+    * production BPE trainers hold the rule table driver-side by design),
+    * which lets the rewrite and delta expressions take literal arguments
+    * instead of a broadcast crossJoin per round (one BroadcastExchange +
+    * its job eliminated per corpus pass). Zero-count pairs are dropped;
+    * a dropped key can only be touched again by a NEW merged symbol's
+    * increments, whose sum never depends on the dropped zero row.
+    */
+  private def bpeStep(st: BpeState, r: Iterate.Round): BpeState = {
+    val (pa, pb, freq) = st.best
+    val stepped = r.keep(st.seq.select(col("doc_id"),
+      mergeRewrite(col("seq"), lit(pa), lit(pb)).as("seq"),
+      call_function("graft_bpe_delta", col("seq"), lit(pa), lit(pb)).as("ds")))
+    val counts = r.keep(
+      st.counts.unionByName(
+        stepped.select(explode(col("ds")).as("e"))
+          .select(col("e.pa").as("pa"), col("e.pb").as("pb"), col("e.d").as("freq")))
+        .groupBy("pa", "pb").agg(sum(col("freq")).as("freq"))
+        .where(col("freq") > 0))
+    BpeState(stepped.select("doc_id", "seq"), counts, st.rules :+ ((pa, pb, freq)))
+  }
+
+  /** The [[MERGES]]-round loop: [[MERGES]]−1 [[bpeStep]] rounds, then the
+    * last rule. Its rewrite emits no delta (no later round consumes
+    * it) and stays lazy; the train queries skip it outright (only the
+    * merge table is consumed — one corpus job saved).
     *
-    * `seq0` must already be materialized (callers share it with their
-    * own consumers). Returns the per-round rules with their counts and
-    * the final sequences (= `seq0` when `needFinalSeq` is false).
+    * `seq0` must already be staged as the caller wants it (callers
+    * share it with their own consumers). Returns the per-round rules
+    * with their counts and the final sequences (the round-[[MERGES]]−1
+    * sequences when `needFinalSeq` is false).
     */
   private def bpeDeltaLoop(seq0: DataFrame, needFinalSeq: Boolean)
       : (Seq[(String, String, Long)], DataFrame) = {
-    val us = US.toChar.toString
-    val rs = RS.toChar.toString
-    var seq = seq0
-    var counts = Materialize(pairCounts(seq0))
-    val bests = Seq.newBuilder[(String, String, Long)]
-    for (k <- 1 to MERGES) {
-      val r = argmaxPair(counts).collect()(0)
-      val (pa, pb, freq) = (r.getString(0), r.getString(1), r.getLong(2))
-      bests += ((pa, pb, freq))
-      if (k < MERGES) {
-        val stepped = Materialize(mergeStep(seq, pa, pb))
-        counts = Materialize(
-          counts.unionByName(
-            stepped.select(explode(col("ds")).as("e"))
-              .select(col("e.pa").as("pa"), col("e.pb").as("pb"),
-                col("e.d").as("freq")))
-            .groupBy("pa", "pb").agg(sum(col("freq")).as("freq"))
-            .where(col("freq") > 0))
-        seq = stepped.select("doc_id", "seq")
-      } else if (needFinalSeq) {
-        seq = seq.select(col("doc_id"),
-          call_function("replace", col("seq"),
-            lit(us + pa + us + us + pb + us), lit(us + pa + rs + pb + us)).as("seq"))
-      }
-    }
-    (bests.result(), seq)
+    val st = bpeLoop(seq0, Materialize(_)).run(MERGES - 1, 1)
+    val (pa, pb, freq) = st.best
+    val seq =
+      if (needFinalSeq)
+        st.seq.select(col("doc_id"), mergeRewrite(col("seq"), lit(pa), lit(pb)).as("seq"))
+      else st.seq
+    (st.rules :+ ((pa, pb, freq)), seq)
   }
 
   /** The [[MERGES]]-round training loop over an initial alphabet's
@@ -231,17 +225,6 @@ object Vocab {
     (s, d) => trainMerges(seq0(s, d, "")),
     Some(bpeOracle(""))
   )
-
-  /** Plan-audit hook (PLANS.md): ONE BPE training round as a LAZY
-    * DataFrame — the pair-count shuffle, TakeOrderedAndProject argmax,
-    * and broadcast-rule rewrite that repeat [[MERGES]] times; the
-    * declared query's final plan hides them behind per-round
-    * [[Materialize]] checkpoints.
-    */
-  private[graft] def bpeRound(s: SparkSession, d: String): DataFrame = {
-    val seq = seq0(s, d)
-    applyMerge(seq, bestPair(seq))
-  }
 
   /** The learned tokenizer APPLIED: per-document symbol counts before
     * and after the [[MERGES]] trained merge rules — the vocabulary-
@@ -839,7 +822,7 @@ object Vocab {
 
   /** The per-round likelihood argmax: join pair counts with both
     * symbols' counts (vocab-sized, broadcast), quantized-integer score,
-    * total tiebreak. Same TakeOrdered 1-row funnel as [[bestPair]].
+    * total tiebreak. Same TakeOrdered 1-row funnel as [[BpeState.argmax]].
     */
   private def wpBestPair(seqDf: DataFrame): DataFrame = {
     // r14: lazy — both broadcast sides re-aggregate the (checkpointed,
@@ -856,16 +839,10 @@ object Vocab {
   }
 
   /** Greedy-leftmost rewrite of the round's (driver-held, literal)
-    * rule — the same `replace` as [[mergeRewriteExpr]] with the
-    * search/replace pre-concatenated; wfreq carried through.
+    * rule — [[mergeRewrite]]; wfreq carried through.
     */
-  private def wpApplyMergeLit(seqDf: DataFrame, pa: String, pb: String): DataFrame = {
-    val us = US.toChar.toString
-    val rs = RS.toChar.toString
-    seqDf.select(col("word"), col("wfreq"),
-      call_function("replace", col("seq"),
-        lit(us + pa + us + us + pb + us), lit(us + pa + rs + pb + us)).as("seq"))
-  }
+  private def wpApplyMergeLit(seqDf: DataFrame, pa: String, pb: String): DataFrame =
+    seqDf.select(col("word"), col("wfreq"), mergeRewrite(col("seq"), lit(pa), lit(pb)).as("seq"))
 
   /** The [[WP_MERGES]]-round training loop: returns the word relation
     * and the per-round winners as DRIVER rows (pa, pb, freq, score) —

@@ -15,7 +15,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * change (the `plans/rNN/` artifacts). `time` runs each query twice
   * into a `noop` sink, prints both wall times (the first includes any
   * cold staging build) and then the final adaptive plan; `--jobs`
-  * prints every Spark job's wall time instead of the plan.
+  * prints every Spark job's wall time and run (`<query>/run<i>`)
+  * instead of the plan.
   * [[graft.PlanDump]] generates the curated `PLANS.md`.
   */
 object Probe {
@@ -47,15 +48,19 @@ object Probe {
       val jobs = args.drop(2).contains("--jobs")
       if (jobs)
         spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          private val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+          private val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
           override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            starts.put(j.jobId, System.nanoTime())
+            starts.put(j.jobId, (System.nanoTime(), j.properties.getProperty("spark.jobGroup.id")))
           override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val t0 = starts.remove(j.jobId)
-            println(f"JOB ${j.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.3f s")
+            val (t0, run) = starts.remove(j.jobId)
+            println(f"JOB ${j.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.3f s $run")
           }
         })
       for (n <- names; i <- 1 to 2) {
+        // the job group names the run each JOB line belongs to: the
+        // listener prints asynchronously, so a run's last JOB line can
+        // land after its TIMING line
+        spark.sparkContext.setJobGroup(s"$n/run$i", s"$n run $i")
         val t0 = System.nanoTime()
         val df = query(n)
         df.write.format("noop").mode("overwrite").save()

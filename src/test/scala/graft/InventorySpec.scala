@@ -100,7 +100,7 @@ class InventorySpec extends AnyFunSuite {
     // iterative drivers sharing an audited round body
     "q_embedding_cc" -> "r9: CC pointer-jumping rounds shared with the sectioned q_dedup_cc_round body",
     "q_kmeans" -> "r9: Lloyd rounds behind Materialize; KMeansSpec's inertia law audits the round",
-    "q_bpe_apply" -> "r9: one rule-broadcast replace over the corpus; the q_bpe_round section audits the loop body",
+    "q_bpe_apply" -> "r9: one literal-rule replace over the corpus; the q_bpe_round section audits the loop body",
     "q_bpe_train_char" -> "r9: same training loop as the sectioned q_bpe_round with the alphabet swapped",
     "q_bpe_vocab" -> "r9: post-merge groupBy over the q_bpe_round output; the round section audits the loop",
     // streaming replays covered by the audited stateful shapes

@@ -486,15 +486,25 @@ class QueriesPlanSpec extends SparkSpec {
 
   test("q_bpe_train round: one pair-count shuffle, argmax is TakeOrderedAndProject") {
     pinsViaHelper("q_bpe_train")
-    val p = graft.ops.Vocab.bpeRound(spark, sf0001)
-      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+    // the shipped round (Vocab.bpeStep) once on the lazy initial corpus
+    val seq0 = graft.ops.Vocab.seq0(spark, sf0001)
+    val next = graft.ops.Vocab.bpeLoop(seq0, identity).once
+    val p = next.argmax.queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(p.contains("TakeOrderedAndProject"),
       "per-round argmax must be a top-1 heap, never a global sort")
     assert(p.contains("partial_count") || p.contains("HashAggregate"),
       "pair counting lost its map-side combine")
-    // the 1-row merge rule is the ONLY broadcast; the corpus itself
-    // must never be a build side
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"))
+    // the corpus rewrite takes the collected rule as LITERALS: one
+    // per-row projection over the corpus, no join (no broadcast rule
+    // side) and no exchange beyond the ones the initial corpus has
+    val (pa, pb, _) = next.rules.head
+    val us = 31.toChar
+    val rw = next.seq.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    val rw0 = seq0.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert(rw.contains("replace(") && rw.contains(s"$us$pa$us$us$pb$us"),
+      "the rewrite lost its literal merge rule")
+    assert(!rw.contains("Join"), "the corpus rewrite acquired a join")
+    assert(shuffles(rw) == shuffles(rw0), "the corpus rewrite acquired an exchange")
   }
 
   test("q_join_outer: agg-below-join, full-outer SMJ reuses the groupBy partitioning") {
@@ -774,7 +784,7 @@ class QueriesPlanSpec extends SparkSpec {
 
   test("q_random_walk round: two keyed equi-joins, one row per walk — no fan-out, no broadcast") {
     pinsViaHelper("q_random_walk")
-    val p = graft.ops.Graph.walkRound(spark, sf0001)
+    val p = graft.ops.Graph.walkLoop(spark, sf0001, identity).once._1
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert("ShuffledHashJoin".r.findAllIn(p).size >= 2,
       "degree lookup and adjacency probe must both stay keyed shuffle joins")
@@ -797,7 +807,7 @@ class QueriesPlanSpec extends SparkSpec {
 
   test("q_khop round: frontier join shuffled, expansion dedup map-side, anti join keyed") {
     pinsViaHelper("q_khop")
-    val p = graft.ops.Graph.khopRound(spark, sf0001)
+    val p = graft.ops.Graph.khopLoop(spark, sf0001, identity).once._1
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(p.contains("ShuffledHashJoin"), "edges⋈frontier must not broadcast the state")
     assert(p.contains("LeftAnti"), "visited-set subtraction lost its anti join")

@@ -116,7 +116,7 @@ class VocabSpec extends SparkSpec {
     // cross-check. This sweeps 400 seeded random (sequence, rule)
     // cases — tiny alphabet to force overlap/back-to-back collisions,
     // including an already-merged symbol so later-round shapes occur —
-    // through the PRODUCTION rewrite expression (Vocab.mergeRewriteExpr,
+    // through the PRODUCTION rewrite expression (Vocab.mergeRewrite,
     // per-row rule columns) in ONE Spark job, against an index-walk
     // greedy-leftmost reference.
     import org.scalacheck.Gen
@@ -150,7 +150,9 @@ class VocabSpec extends SparkSpec {
     }.toDF("id", "seq", "bpa", "bpb")
     val got = df
       .select(org.apache.spark.sql.functions.col("id"),
-        org.apache.spark.sql.functions.expr(Vocab.mergeRewriteExpr).as("seq"))
+        Vocab.mergeRewrite(org.apache.spark.sql.functions.col("seq"),
+          org.apache.spark.sql.functions.col("bpa"),
+          org.apache.spark.sql.functions.col("bpb")).as("seq"))
       .collect()
       .map(r => r.getInt(0) -> r.getString(1).split(US).filter(_.nonEmpty).toList)
       .toMap
