@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.ExplainMode
+import graft.tools.Probe.render
 
 /** Dev tool: dump formatted physical plans of headline queries to
   * PLANS.md (plan-shape audit artifact; regenerate after plan changes).
@@ -455,9 +455,7 @@ object PlanDump {
       notes.get(name.takeWhile(_ != ' ')).foreach(t => sb.append(s"> $t\n\n"))
       sb.append(s"```\n$plan```\n")
     }
-    def plan(df: DataFrame): String =
-      df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    def explained(name: String, df: DataFrame): Unit = section(name, plan(df))
+    def explained(name: String, df: DataFrame): Unit = section(name, render(df.queryExecution))
     for (n <- names) explained(n, SparkEntry.queries(n)(spark, d))
     // Iterative: each loop's own step run once on its lazy round-0 state
     // (Iterate.Loop.once) — the declared queries' result plans are
@@ -466,7 +464,7 @@ object PlanDump {
     explained("q_dedup_cc_round", graft.ops.Dedup.ccLoop(ccPairs, ccNodes, identity).once)
     explained("q_pagerank_round", graft.ops.Graph.pagerankLoop(spark, d, identity).once)
     val bpe = graft.ops.Vocab.bpeLoop(graft.ops.Vocab.seq0(spark, d), identity).once
-    section("q_bpe_round", plan(bpe.seq) + plan(bpe.argmax))
+    section("q_bpe_round", render(bpe.seq.queryExecution) + render(bpe.argmax.queryExecution))
     explained("q_label_prop_round", graft.ops.Graph.labelPropLoop(spark, d, identity).once)
     explained("q_khop_round", graft.ops.Graph.khopLoop(spark, d, identity).once._1)
     explained("q_random_walk_round", graft.ops.Graph.walkLoop(spark, d, identity).once._1)
@@ -475,39 +473,40 @@ object PlanDump {
     // stateful operators are only visible through the replay hook.
     val glob = s"$d/events*.parquet"
     section("q_stream_join (final micro-batch)",
-      graft.streaming.Replay.lastExecutionPlan(
+      render(graft.streaming.Replay.lastExecution(
         graft.streaming.Replay.rangeJoinStream(spark, glob),
-        java.nio.file.Files.createTempDirectory("plandump-join-").toString))
+        java.nio.file.Files.createTempDirectory("plandump-join-").toString)))
     section("q_stream_dedup (final micro-batch)",
-      graft.streaming.Replay.lastExecutionPlan(
+      render(graft.streaming.Replay.lastExecution(
         graft.streaming.Replay.dedupStream(graft.streaming.Replay.readEvents(spark, glob)),
-        java.nio.file.Files.createTempDirectory("plandump-dedup-").toString))
+        java.nio.file.Files.createTempDirectory("plandump-dedup-").toString)))
     locally {
       val live = graft.streaming.Replay.docSentinelDir(spark, d)
       try section("q_stream_sample (final micro-batch)",
-        graft.streaming.Replay.lastExecutionPlan(
+        render(graft.streaming.Replay.lastExecution(
           graft.streaming.Replay.sampleStream(
             graft.streaming.Replay.weightedDocStream(spark, live.toString), 20).toDF(),
-          java.nio.file.Files.createTempDirectory("plandump-sample-").toString))
+          java.nio.file.Files.createTempDirectory("plandump-sample-").toString)))
       finally graft.FsUtil.deleteRecursively(live)
     }
     locally {
       import spark.implicits._
       val live = graft.streaming.Replay.pitReplayDir(spark, d)
       try section("q_stream_pit (final micro-batch)",
-        graft.streaming.Replay.lastExecutionPlan(
+        render(graft.streaming.Replay.lastExecution(
           graft.streaming.Replay.pitStream(
             spark.readStream
               .schema("kind INT, event_id LONG, user_id LONG, tsu LONG, wk LONG, value DOUBLE")
               .option("maxFilesPerTrigger", "1")
               .parquet(s"$live/*.parquet")
               .as[graft.streaming.Replay.PitRow]).toDF(),
-          java.nio.file.Files.createTempDirectory("plandump-pit-").toString))
+          java.nio.file.Files.createTempDirectory("plandump-pit-").toString)))
       finally graft.FsUtil.deleteRecursively(live)
     }
-    // the committed artifact is always the sf0.1 audit; an explicit dir
-    // argument is a dev probe and goes to a scratch file instead
-    val out = if (args.isEmpty) "/root/repo/PLANS.md" else "/tmp/PLANS_probe.md"
+    // the committed artifact is always the sf0.1 audit, written to the
+    // working directory's PLANS.md (the file InventorySpec reads); an
+    // explicit dir argument is a dev probe and goes to a scratch file
+    val out = if (args.isEmpty) "PLANS.md" else "/tmp/PLANS_probe.md"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)
     println(s"WROTE $out")
     spark.stop()

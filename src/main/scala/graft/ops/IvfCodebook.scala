@@ -1,7 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.functions._
-
 /** Trained IVF codebook + the deterministic k-means that produced it.
   *
   * The codebook SHIPS WITH THE JOB as a literal constant (the standard
@@ -133,8 +131,7 @@ object TrainIvfCodebook {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = graft.Sessions.local(8)
-    val vecs = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val vecs = Similarity.vectors(spark, sfDir)
       .orderBy("vec_id")
       .collect()
       .map(_.getSeq[Double](1).toArray)

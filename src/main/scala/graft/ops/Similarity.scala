@@ -14,10 +14,17 @@ import org.apache.spark.sql.functions._
   * against the corpus).
   *
   * Scale paths: brute-force kNN is the correctness baseline; the IVF
-  * variant is the 100 TB shape (assign once per vector — one broadcast
-  * join against K centroids — then search only the probed cluster,
-  * cutting compared vectors by ~K×). For web-scale, swap centroids for
-  * a trained codebook; the dataflow is identical.
+  * variant is the 100 TB shape (assign once per vector — a per-row
+  * `array_min` over the K literal centroids, no join and no shuffle —
+  * then search only the probed cluster, cutting compared vectors by
+  * ~K×).
+  *
+  * Every vector-index path is one pipeline built from shared parts:
+  * [[vectors]] projects the corpus, [[nearestCentroid]] /
+  * [[rankCentroids]] assign vectors and queries to centroids,
+  * [[blockedPairs]] is the exact all-pairs join, [[writeBuckets]]
+  * writes every `bucket=` layout, [[prunedBucketScan]] reads the probed
+  * buckets back, and [[topK]] is the exact rescoring tail.
   */
 object Similarity {
   import Tables._
@@ -27,6 +34,58 @@ object Similarity {
   private def embSrc(d: String): Seq[String] = Seq(s"$d/embeddings.parquet")
 
   private def norm2(a: Column): Column = dot(a, a)
+
+  /** The corpus as (vec_id, v: array<double>) — the one projection every
+    * vector path reads (the codebook trainers too).
+    */
+  private[ops] def vectors(s: SparkSession, d: String): DataFrame =
+    embeddings(s, d).select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+
+  /** (dist, id) structs of `in` against every codebook row, in codebook
+    * order — the input of the per-row argmin and of [[qKnnJoinAnn]]'s
+    * sorted probe list. `id` names the struct's index field.
+    */
+  private def centroidDists(in: Column, book: Array[Array[Double]], id: String): Seq[Column] =
+    book.toSeq.zipWithIndex.map { case (cv, c) =>
+      struct(sqDist(in, typedLit(cv.toSeq)).as("dist"), lit(c).as(id))
+    }
+
+  /** Nearest codebook row of `in` as a (dist, id) struct: `array_min`
+    * compares dist first, then id, exactly the oracle's row_number
+    * (dist ASC, cid ASC) rule — a per-row expression, no join, no
+    * window, no shuffle. Callers take `getField("dist")` or the id.
+    */
+  private[ops] def nearestCentroid(
+      in: Column, book: Array[Array[Double]] = IvfCodebook.centroids, id: String = "cid"): Column =
+    array_min(array(centroidDists(in, book, id): _*))
+
+  /** Driver-side twin of [[nearestCentroid]] for the query vector: every
+    * centroid id ranked by (squared distance, id), the distance folded
+    * in index order like the codegen expression.
+    */
+  private def rankCentroids(
+      qv: Seq[Double], book: Array[Array[Double]] = IvfCodebook.centroids): Seq[Int] = {
+    def sq(c: Array[Double]): Double = {
+      var acc = 0.0; var i = 0
+      while (i < c.length) { val dd = qv(i) - c(i); acc += dd * dd; i += 1 }
+      acc
+    }
+    book.toSeq.zipWithIndex.map { case (cv, cid) => (sq(cv), cid) }.sorted.map(_._2)
+  }
+
+  /** The exact top-k tail of every single-query retrieval: `score`
+    * rounded to 6 digits, ties broken on vec_id, TakeOrderedAndProject.
+    */
+  private def topK(df: DataFrame, score: Column, name: String, k: Int): DataFrame =
+    df.select(col("vec_id"), round(score, 6).as(name))
+      .orderBy(col(name).desc, col("vec_id").asc)
+      .limit(k)
+
+  private def topCos(df: DataFrame, qv: Seq[Double], k: Int): DataFrame =
+    topK(df, cosine(col("v"), typedLit(qv)), "cos_sim", k)
+
+  /** Cosine of an `x`/`y` pair whose norms were computed once per vector. */
+  private def pairCos: Column = dot(col("x.v"), col("y.v")) / (col("x.nrm") * col("y.nrm"))
 
   /** Driver-side fetch of the query vector (vec_id = 0) — ONE 1-row
     * job, shared by every single-query retrieval path. The fetch is
@@ -55,17 +114,8 @@ object Similarity {
   val qKnnCosine = Q(
     "q_knn_cosine",
     (s, d) => {
-      val emb = embeddings(s, d).select(
-        col("vec_id"),
-        col("embedding").cast("array<double>").as("v")
-      )
-      val q = queryVec(emb)
-      val qv = typedLit(q)
-      emb
-        .where(col("vec_id") =!= 0)
-        .select(col("vec_id"), round(cosine(col("v"), qv), 6).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
-        .limit(10)
+      val emb = vectors(s, d)
+      topCos(emb.where(col("vec_id") =!= 0), queryVec(emb), 10)
     },
     Some(s"""WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
              e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id <> 0)
@@ -89,17 +139,14 @@ object Similarity {
       // dot + one divide + compare. sqrt(n2a)*sqrt(n2b) here is bitwise
       // the same product the per-pair formula produced; output is ids
       // only, and the 0.45 threshold is ≥ 5·10⁻⁴ from every pair.
-      val emb = embeddings(s, d).select(
-        col("vec_id"),
-        col("embedding").cast("array<double>").as("v")
-      )
+      val emb = vectors(s, d)
       val withNorm = emb.select(col("vec_id"), col("v"), sqrt(norm2(col("v"))).as("nrm"))
       // fanOut the streamed side: the scan is one split, and the 2M-pair
       // probe must not run on one task (see Tables.fanOut).
       fanOut(withNorm)
         .as("x")
         .join(withNorm.as("y"), col("x.vec_id") < col("y.vec_id"))
-        .where(dot(col("x.v"), col("y.v")) / (col("x.nrm") * col("y.nrm")) >= 0.45)
+        .where(pairCos >= 0.45)
         .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
         .orderBy("a_id", "b_id")
     },
@@ -131,12 +178,11 @@ object Similarity {
     * moderate-threshold join is inherently all-pairs; the scalable form
     * is this blocked shuffle, not a candidate filter.
     */
-  /** Blocked exact near-pair generation shared by
-    * [[qCosineNearBlocked]] and [[qDedupEmbedding]]: all (a_id, b_id)
-    * with a_id < b_id and cosine ≥ `threshold`, as a distributed blocked
-    * cartesian (see qCosineNearBlocked's scaladoc).
+  /** The blocked exact all-pairs join behind [[nearPairsBlocked]] and
+    * [[cosPairsBlocked]]: every unordered vector pair meets exactly once
+    * as an `x`/`y` row pair, each side carrying (vec_id, v, nrm).
     */
-  private def nearPairsBlocked(s: SparkSession, d: String, threshold: Double): DataFrame = {
+  private def blockedPairs(s: SparkSession, d: String): DataFrame = {
     // Block count scales with the corpus so per-task pair work stays
     // bounded at ~targetRows² dot products (seconds per task) no matter
     // n: B = max(16, ⌈n/8192⌉). The count() is a parquet-metadata-only
@@ -149,12 +195,7 @@ object Similarity {
     // pins this).
     val n = embeddings(s, d).count()
     val B = math.max(16L, (n + 8191) / 8192).toInt
-    val emb = fanOut(
-      embeddings(s, d).select(
-        col("vec_id"),
-        col("embedding").cast("array<double>").as("v")
-      )
-    ).select(
+    val emb = fanOut(vectors(s, d)).select(
       col("vec_id"),
       col("v"),
       sqrt(norm2(col("v"))).as("nrm"),
@@ -173,12 +214,26 @@ object Similarity {
           // structure already yields each pair once (either order)
           (col("x.bid") =!= col("y.bid") || col("x.vec_id") < col("y.vec_id"))
       )
-      .where(dot(col("x.v"), col("y.v")) / (col("x.nrm") * col("y.nrm")) >= threshold)
-      .select(
-        least(col("x.vec_id"), col("y.vec_id")).as("a_id"),
-        greatest(col("x.vec_id"), col("y.vec_id")).as("b_id")
-      )
   }
+
+  private def orderedIds: Seq[Column] = Seq(
+    least(col("x.vec_id"), col("y.vec_id")).as("a_id"),
+    greatest(col("x.vec_id"), col("y.vec_id")).as("b_id"))
+
+  /** Blocked exact near-pair generation shared by
+    * [[qCosineNearBlocked]], [[qDedupEmbedding]] and [[qEmbeddingCc]]:
+    * all (a_id, b_id) with a_id < b_id and cosine ≥ `threshold`.
+    */
+  private def nearPairsBlocked(s: SparkSession, d: String, threshold: Double): DataFrame =
+    blockedPairs(s, d).where(pairCos >= threshold).select(orderedIds: _*)
+
+  /** [[blockedPairs]] without a threshold, carrying the rounded cosine —
+    * the kNN-graph candidate stream. The cosine value is
+    * orientation-independent: the dot fold and the norm product are
+    * commutative per element.
+    */
+  private def cosPairsBlocked(s: SparkSession, d: String): DataFrame =
+    blockedPairs(s, d).select(orderedIds :+ round(pairCos, 6).as("cos_sim"): _*)
 
   /** k-NN GRAPH (k=3 neighbors for EVERY vector) — the builder under
     * semantic dedup and embedding-space clustering (SemDeDup-style
@@ -290,21 +345,11 @@ object Similarity {
       // (each extra salt re-ships every probe row WITH its 64-double
       // vector) and drops to 1
       val S = math.min(8, math.max(1, 128 / (8 * (1 << b))))
-      val emb = embeddings(s, d).select(
-        col("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      val distStructs = array(IvfCodebook.centroids.zipWithIndex.map { case (cv, cid) =>
-        struct(sqDist(col("v"), typedLit(cv.toSeq)).as("dist"), lit(cid).as("cid"))
-      }: _*)
-      val sig: Column =
-        if (b == 0) lit(0)
-        else lshPlanes.take(b).zipWithIndex.map { case (pl, j) =>
-          when(dot(col("v"), typedLit(pl)) >= 0.0, lit(1 << j)).otherwise(lit(0))
-        }.reduce(_ + _)
-      val assign = Materialize(fanOut(emb).select(
+      val distStructs = array(centroidDists(col("v"), IvfCodebook.centroids, "cid"): _*)
+      val assign = Materialize(fanOut(vectors(s, d)).select(
         col("vec_id"), col("v"), sqrt(norm2(col("v"))).as("nrm"),
         transform(slice(array_sort(distStructs), 1, 3), _.getField("cid")).as("probes"),
-        sig.cast("int").as("sig")))
+        sigCol(b).cast("int").as("sig")))
       // multiprobe sub-bucket list: self + every single-bit flip
       val probeSigs = array(
         (col("sig") +: (0 until b).map(j => col("sig").bitwiseXOR(lit(1 << j)))): _*)
@@ -392,13 +437,8 @@ object Similarity {
     "q_prototype_prune",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val emb = embeddings(s, d).select(
-        col("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      val best = array_min(array(IvfCodebook.centroids.zipWithIndex.map { case (cv, cid) =>
-        struct(sqDist(col("v"), typedLit(cv.toSeq)).as("dist"), lit(cid).as("cid"))
-      }: _*))
-      val assigned = fanOut(emb).select(
+      val best = nearestCentroid(col("v"))
+      val assigned = fanOut(vectors(s, d)).select(
         col("vec_id"),
         best.getField("cid").as("cid"),
         best.getField("dist").as("dist"))
@@ -470,15 +510,9 @@ object Similarity {
     */
   private[ops] def kmeansRounds(
       s: SparkSession, d: String): (Array[Array[Double]], Array[Array[Double]]) = {
-    val emb = fanOut(embeddings(s, d).select(
-      col("vec_id"),
-      col("embedding").cast("array<double>").as("v")))
-    def assign(cents: Array[Array[Double]]) = {
-      val best = array_min(array(cents.zipWithIndex.map { case (cv, cid) =>
-        struct(sqDist(col("v"), typedLit(cv.toSeq)).as("dist"), lit(cid).as("cid"))
-      }: _*))
-      emb.select(col("vec_id"), col("v"), best.getField("cid").as("cid"))
-    }
+    val emb = fanOut(vectors(s, d))
+    def assign(cents: Array[Array[Double]]) =
+      emb.select(col("vec_id"), col("v"), nearestCentroid(col("v"), cents).getField("cid").as("cid"))
     def means(cents: Array[Array[Double]]): Array[Array[Double]] = {
       val rows = assign(cents)
         .select(col("cid"), posexplode(col("v")).as(Seq("dim", "coord")))
@@ -577,21 +611,15 @@ object Similarity {
   val qSemdedup = Q(
     "q_semdedup",
     (s, d) => {
-      val emb = embeddings(s, d).select(
-        col("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      val best = array_min(array(IvfCodebook.centroids.zipWithIndex.map { case (cv, cid) =>
-        struct(sqDist(col("v"), typedLit(cv.toSeq)).as("dist"), lit(cid).as("cid"))
-      }: _*))
-      val assign = Materialize(fanOut(emb).select(
+      val assign = Materialize(fanOut(vectors(s, d)).select(
         col("vec_id"), col("v"),
         sqrt(norm2(col("v"))).as("nrm"),
-        best.getField("cid").as("cid")))
+        nearestCentroid(col("v")).getField("cid").as("cid")))
       val pairs = assign.as("x")
         .hint("shuffle_hash")
         .join(assign.as("y"),
           col("x.cid") === col("y.cid") && col("x.vec_id") < col("y.vec_id"))
-        .where(dot(col("x.v"), col("y.v")) / (col("x.nrm") * col("y.nrm")) >= 0.45)
+        .where(pairCos >= 0.45)
         .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
       val nodes = assign.select(col("vec_id").as("node"))
       val labels = Dedup.connectedComponents(pairs, nodes)
@@ -632,42 +660,6 @@ object Similarity {
              ORDER BY a.vec_id""")
   )
 
-  /** [[nearPairsBlocked]] without the threshold, carrying the rounded
-    * cosine — the kNN-graph candidate stream. Same block-pair key
-    * structure, same exactness argument (blocking partitions the pair
-    * set; the cosine value is orientation-independent because the dot
-    * fold and the norm product are commutative per element).
-    */
-  private def cosPairsBlocked(s: SparkSession, d: String): DataFrame = {
-    val n = embeddings(s, d).count()
-    val B = math.max(16L, (n + 8191) / 8192).toInt
-    val emb = fanOut(
-      embeddings(s, d).select(
-        col("vec_id"),
-        col("embedding").cast("array<double>").as("v")
-      )
-    ).select(
-      col("vec_id"),
-      col("v"),
-      sqrt(norm2(col("v"))).as("nrm"),
-      pmod(col("vec_id"), lit(B)).cast("int").as("bid")
-    )
-    val x = emb.withColumn("kb", explode(sequence(col("bid"), lit(B - 1))))
-    val y = emb.withColumn("ka", explode(sequence(lit(0), col("bid"))))
-    x.as("x")
-      .hint("shuffle_hash")
-      .join(
-        y.as("y"),
-        col("x.bid") === col("y.ka") && col("x.kb") === col("y.bid") &&
-          (col("x.bid") =!= col("y.bid") || col("x.vec_id") < col("y.vec_id"))
-      )
-      .select(
-        least(col("x.vec_id"), col("y.vec_id")).as("a_id"),
-        greatest(col("x.vec_id"), col("y.vec_id")).as("b_id"),
-        round(dot(col("x.v"), col("y.v")) / (col("x.nrm") * col("y.nrm")), 6).as("cos_sim")
-      )
-  }
-
   val qCosineNearBlocked = Q(
     "q_cosine_near_blocked",
     (s, d) => nearPairsBlocked(s, d, 0.45).orderBy("a_id", "b_id"),
@@ -707,29 +699,14 @@ object Similarity {
       nprobe: Int,
       codebook: Array[Array[Double]] = IvfCodebook.centroids
   ): DataFrame = {
-    val emb = embeddings(s, d).select(
-      col("vec_id"),
-      col("embedding").cast("array<double>").as("v")
-    )
-    val best = array_min(array(codebook.zipWithIndex.map { case (cv, cid) =>
-      struct(sqDist(col("v"), typedLit(cv.toSeq)).as("dist"), lit(cid).as("cid"))
-    }: _*))
-    val assign = emb.select(col("vec_id"), col("v"), best.getField("cid").as("cid"))
+    val emb = vectors(s, d)
+    val assign = emb.select(col("vec_id"), col("v"),
+      nearestCentroid(col("v"), codebook).getField("cid").as("cid"))
     // 1-row fetch of the query vector (same driver-side step as
     // q_knn_cosine), then the probe list against the in-memory codebook
     val qv = queryVec(emb)
-    def sq(c: Array[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < c.length) { val dd = qv(i) - c(i); acc += dd * dd; i += 1 }
-      acc
-    }
-    val probe: Seq[Int] = codebook.zipWithIndex
-      .map { case (cv, cid) => (sq(cv), cid) }.sortBy(identity).take(nprobe).map(_._2).toSeq
-    assign
-      .where(col("cid").isin(probe: _*) && col("vec_id") =!= 0)
-      .select(col("vec_id"), round(cosine(col("v"), typedLit(qv)), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(5)
+    val probe = rankCentroids(qv, codebook).take(nprobe)
+    topCos(assign.where(col("cid").isin(probe: _*) && col("vec_id") =!= 0), qv, 5)
   }
 
   /** The trained codebook rendered as DuckDB VALUES rows — the SAME
@@ -805,14 +782,6 @@ object Similarity {
     * partition filter must never ride an implicit Long⇄Int coercion;
     * [[flatLayoutBits]]' b ≤ 27 cap keeps INT exact).
     */
-  /** The coarse-centroid assignment column — the same struct-argmin over
-    * the trained codebook every IVF path uses (ties to the lower cid).
-    */
-  private def bestCidCol: Column =
-    array_min(array(IvfCodebook.centroids.zipWithIndex.map { case (cv, cid) =>
-      struct(sqDist(col("v"), typedLit(cv.toSeq)).as("dist"), lit(cid).as("cid"))
-    }: _*)).getField("cid")
-
   /** The first-b-[[lshPlanes]]-sign-bits signature of `v` at bit width
     * b — ONE definition shared by the single-build layout, the
     * per-segment builds, the merge re-bucket, and the segmented probe's
@@ -829,13 +798,13 @@ object Similarity {
     * [[flatLayoutBits]]' b ≤ 27 cap).
     */
   private def bucketCol(b: Int): Column =
-    (bestCidCol * lit(1 << b) + sigCol(b)).cast("int")
+    (nearestCentroid(col("v")).getField("cid") * lit(1 << b) + sigCol(b)).cast("int")
 
-  /** The flat/segmented/merged layout's on-disk schema — the single
-    * definition both the write sites and [[prunedBucketScan]]'s
-    * all-buckets-empty fallback share, so the empty-probe frame can
-    * never silently diverge from what a non-empty probe reads (r12
-    * ADVICE). Write sites assert against it via [[assertLayoutSchema]].
+  /** The on-disk schema of every bucket layout (flat, segmented, merged
+    * and MaxSim) — the single definition [[writeBuckets]] asserts and
+    * [[prunedBucketScan]]'s all-buckets-empty fallback reads, so the
+    * empty-probe frame can never silently diverge from what a non-empty
+    * probe reads (r12 ADVICE).
     */
   private val flatLayoutSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("vec_id",
@@ -846,17 +815,24 @@ object Similarity {
     org.apache.spark.sql.types.StructField("bucket",
       org.apache.spark.sql.types.IntegerType)))
 
-  /** Fail a layout BUILD loudly if its frame drifts from
-    * [[flatLayoutSchema]] (names + types; nullability is writer's
-    * choice) — drift must die at write time, not as a silent
-    * empty-probe mismatch months later.
+  /** The one bucket-layout writer: (vec_id, v) rows with their INT
+    * `bucket` key, one directory per bucket value. A frame that drifts
+    * from [[flatLayoutSchema]] (names + types; nullability is the
+    * writer's choice) fails the BUILD loudly, not as a silent
+    * empty-probe mismatch months later. ONE file per bucket directory:
+    * without the repartition every write task emits a fragment into
+    * every partition dir (measured 47 705 files over 4 095 dirs at
+    * sf10 — footer reads and listing swamped the probe, 8.1 s vs plain
+    * IVF's 5.6 s). The shuffle is bounded by bucket size; a probe lists
+    * and opens only the dirs it reads.
     */
-  private def assertLayoutSchema(df: DataFrame): DataFrame = {
+  private def writeBuckets(vecs: DataFrame, bucket: Column, dir: String): Unit = {
+    val df = vecs.select(col("vec_id"), col("v"), bucket.as("bucket"))
     val got = df.schema.fields.map(f => (f.name, f.dataType)).toSeq
     val want = flatLayoutSchema.fields.map(f => (f.name, f.dataType)).toSeq
     require(got == want,
       s"layout frame schema $got drifted from flatLayoutSchema $want")
-    df
+    df.repartition(col("bucket")).write.mode("overwrite").partitionBy("bucket").parquet(dir)
   }
 
   def ivfSubLayout(s: SparkSession, d: String, b: Int): String = {
@@ -864,19 +840,7 @@ object Similarity {
     // never serve a probe computed at another (the occupancy formula is
     // a tunable, not a content property of the corpus)
     Staged.layout(s, s"ivf_sub_b$b", embSrc(d)) { tmp =>
-      val emb = embeddings(s, d)
-        .where(col("vec_id") =!= 0)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      assertLayoutSchema(
-        emb.select(col("vec_id"), col("v"), bucketCol(b).as("bucket")))
-        // ONE file per bucket directory: without this, every write
-        // task emits a fragment into every partition dir (measured
-        // 47 705 files over 4 095 dirs at sf10 — footer reads and
-        // listing swamped the probe, 8.1 s vs plain IVF's 5.6 s).
-        // The shuffle is bounded by bucket size; the probe pays
-        // directory listing ∝ |buckets| and opens 3·(b+1) files.
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
+      writeBuckets(vectors(s, d).where(col("vec_id") =!= 0), bucketCol(b), tmp)
     }
   }
 
@@ -913,13 +877,7 @@ object Similarity {
     * sign bit. Returns (probed bucket keys, query signature).
     */
   private def probeSet(qv: Seq[Double], b: Int): (Seq[Int], Int) = {
-    def sq(c: Array[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < c.length) { val dd = qv(i) - c(i); acc += dd * dd; i += 1 }
-      acc
-    }
-    val probes = IvfCodebook.centroids.zipWithIndex
-      .map { case (cv, cid) => (sq(cv), cid) }.sorted.take(3).map(_._2)
+    val probes = rankCentroids(qv).take(3)
     def dotQ(p: Seq[Double]): Double = {
       var acc = 0.0; var i = 0
       while (i < 64) { acc += qv(i) * p(i); i += 1 }
@@ -933,13 +891,14 @@ object Similarity {
     (buckets.distinct, qsig)
   }
 
-  /** Explicit-path pruned scan of the probed buckets of ONE flat
-    * layout. Open ONLY the probed bucket directories (basePath keeps
-    * the partition column): plain `read.parquet(lay)` runs partition
-    * DISCOVERY over all 8·2^b directories on every query — measured
-    * 6 s/probe at sf10's 4 096 dirs, swamping the 0.4 s scan it was
-    * meant to beat. With explicit paths the driver lists 3·(b+1)
-    * dirs, so discovery AND scan are both O(log n). The isin filter
+  /** Explicit-path pruned scan of the probed buckets of ONE bucket
+    * layout — the read every layout probe goes through. Open ONLY the
+    * probed bucket directories (basePath keeps the partition column): a
+    * plain read of the layout root runs partition DISCOVERY over every
+    * bucket directory on every query — measured 6 s/probe at sf10's
+    * 4 096 dirs, swamping the 0.4 s scan it was meant to beat. With
+    * explicit paths the driver lists only the probed dirs (3·(b+1) for
+    * IVF), so discovery AND scan are both O(log n). The isin filter
     * stays as the semantic guard (and the plan pin's witness). When
     * every probed bucket is empty the KNOWN layout schema builds the
     * empty frame — never a discovery-triggering whole-layout read
@@ -953,8 +912,8 @@ object Similarity {
       .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
     val scan =
       if (dirs.isEmpty)
-        // the ONE schema definition shared with the write site (r12
-        // ADVICE): ivfSubLayout asserts the frame it writes matches
+        // the ONE schema definition shared with the writer (r12
+        // ADVICE): writeBuckets asserts every frame it writes matches
         // flatLayoutSchema, so this empty-path frame cannot drift from
         // what a non-empty probe would read
         s.createDataFrame(
@@ -963,30 +922,11 @@ object Similarity {
     scan.where(col("bucket").isin(buckets: _*))
   }
 
-  /** The flat-probe body of [[qAnnIvfFlat]], factored over the layout
-    * directory so the MERGED layout ([[qAnnMerge]]) probes through the
-    * IDENTICAL code path — the q_bm25_postings/q_bm25_merge discipline
-    * applied to vectors: the two queries differ only in which bucket
-    * store they read, and both carry the q_ann_ivf_flat oracle verbatim.
-    */
-  private def flatProbe(s: SparkSession, d: String, b: Int, lay: String): DataFrame = {
-    val emb = embeddings(s, d).select(
-      col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val qv = queryVec(emb)
-    val (buckets, _) = probeSet(qv, b)
-    prunedBucketScan(s, lay, buckets)
-      .select(col("vec_id"), round(cosine(col("v"), typedLit(qv)), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(5)
-  }
-
   val qAnnIvfFlat = Q(
     "q_ann_ivf_flat",
     (s, d) => {
-      // metadata-only count (parquet footers) → sub-bucket bit width
-      val n = embeddings(s, d).count()
-      val b = flatLayoutBits(n)
-      flatProbe(s, d, b, ivfSubLayout(s, d, b))
+      val b = corpusBits(s, d)
+      annProbe(s, d, Seq(ivfSubLayout(s, d, b) -> b), b)
     },
     Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
              c AS (SELECT * FROM (VALUES
@@ -1045,15 +985,10 @@ object Similarity {
       for ((seg, pred) <- Seq(
           ("seg_a", col("vec_id") % 10 < 9),
           ("seg_b", col("vec_id") % 10 >= 9))) {
-        val src = embeddings(s, d)
-          .where(col("vec_id") =!= 0 && pred)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+        val src = vectors(s, d).where(col("vec_id") =!= 0 && pred)
         val n = src.count()
         val b = flatLayoutBits(n)
-        assertLayoutSchema(
-            src.select(col("vec_id"), col("v"), bucketCol(b).as("bucket")))
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(s"$tmp/$seg/data")
+        writeBuckets(src, bucketCol(b), s"$tmp/$seg/data")
         s.range(1).select(lit(n).as("n"), lit(b).as("b"))
           .write.mode("overwrite").parquet(s"$tmp/$seg/meta.parquet")
       }
@@ -1070,11 +1005,17 @@ object Similarity {
       (s"$root/$seg/data", m.getLong(0), m.getInt(1))
     }
 
-  /** SEGMENTED-INDEX ANN PROBE (r12) — q_ann_ivf_flat over
-    * [[ivfSegmentedLayout]]: probe EVERY segment at its own bit width
-    * (3·(b_seg+1) pruned bucket dirs each — a union of pruned scans,
-    * legal because ANN candidate generation is a union monoid, the way
-    * BM25's statistics are additive), then restore EXACTLY the
+  /** THE IVF LAYOUT PROBE behind [[qAnnIvfFlat]], [[qAnnSegments]] and
+    * [[qAnnMerge]] — the q_bm25_postings/q_bm25_merge discipline applied
+    * to vectors: the three queries differ only in which bucket stores
+    * they pass as (layout dir, bit width), and all carry the
+    * q_ann_ivf_flat oracle verbatim. A single store at the corpus width
+    * b_tot (the flat and merged layouts) is one pruned scan.
+    *
+    * SEGMENTED (r12, [[ivfSegmentedLayout]]): probe EVERY segment at its
+    * own bit width (3·(b_seg+1) pruned bucket dirs each — a union of
+    * pruned scans, legal because ANN candidate generation is a union
+    * monoid, the way BM25's statistics are additive), then restore EXACTLY the
     * single-build candidate set with a full-width re-filter before the
     * exact rescore. The re-filter is what makes the result independent
     * of the segmentation: b_seg ≤ b_tot (fewer vectors never need more
@@ -1089,33 +1030,33 @@ object Similarity {
     * SQL replay — the index can absorb batches segment-by-segment
     * forever and keep serving identical results.
     */
-  private def annProbeSegments(s: SparkSession, d: String,
+  private def annProbe(s: SparkSession, d: String,
       segs: Seq[(String, Int)], bTot: Int): DataFrame = {
-    val emb = embeddings(s, d).select(
-      col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val qv = queryVec(emb)
+    val qv = queryVec(vectors(s, d))
     val (_, qsigTot) = probeSet(qv, bTot)
     val cand = segs.map { case (lay, bSeg) =>
       val (buckets, _) = probeSet(qv, bSeg)
       prunedBucketScan(s, lay, buckets).select(col("vec_id"), col("v"))
     }.reduce(_ unionAll _)
+    // a store at b_tot already holds only Hamming≤1 rows: no re-filter
     val keep =
-      if (bTot == 0) lit(true)
-      else bit_count(sigCol(bTot).bitwiseXOR(lit(qsigTot))) <= 1
-    cand.where(keep)
-      .select(col("vec_id"), round(cosine(col("v"), typedLit(qv)), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(5)
+      if (segs.forall(_._2 == bTot)) cand
+      else cand.where(bit_count(sigCol(bTot).bitwiseXOR(lit(qsigTot))) <= 1)
+    topCos(keep, qv, 5)
   }
+
+  /** The corpus-wide flat-layout bit width: a metadata-only count
+    * (parquet footers) through [[flatLayoutBits]].
+    */
+  private def corpusBits(s: SparkSession, d: String): Int =
+    flatLayoutBits(embeddings(s, d).count())
 
   val qAnnSegments = Q(
     "q_ann_segments",
     (s, d) => {
       val root = ivfSegmentedLayout(s, d)
-      val n = embeddings(s, d).count()
-      annProbeSegments(s, d,
-        segMeta(s, root).map { case (dir, _, b) => (dir, b) },
-        flatLayoutBits(n))
+      val bTot = corpusBits(s, d)
+      annProbe(s, d, segMeta(s, root).map { case (dir, _, b) => (dir, b) }, bTot)
     },
     qAnnIvfFlat.oracle
   )
@@ -1141,13 +1082,10 @@ object Similarity {
       val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(conf)
       val (pass, rebucket) = segMeta(s, segRoot).partition(_._3 == bTot)
       if (rebucket.nonEmpty)
-        assertLayoutSchema(
-            rebucket.map { case (dir, _, _) =>
-              s.read.parquet(dir).select(col("vec_id"), col("v")) }
-              .reduce(_ unionAll _)
-              .select(col("vec_id"), col("v"), bucketCol(bTot).as("bucket")))
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
+        writeBuckets(
+          rebucket.map { case (dir, _, _) =>
+            s.read.parquet(dir).select(col("vec_id"), col("v")) }.reduce(_ unionAll _),
+          bucketCol(bTot), tmp)
       for (((dir, _, _), si) <- pass.zipWithIndex) {
         val segPath = new org.apache.hadoop.fs.Path(dir)
         for (st <- fs.listStatus(segPath) if st.getPath.getName.startsWith("bucket=")) {
@@ -1165,7 +1103,7 @@ object Similarity {
     }
   }
 
-  /** The post-merge probe: [[flatProbe]] — the IDENTICAL code path as
+  /** The post-merge probe: [[annProbe]] — the IDENTICAL code path as
     * [[qAnnIvfFlat]] — pointed at [[ivfMergedLayout]], carrying the
     * same oracle verbatim: the hash proves merge(segments) ≡
     * single-build, so the lifecycle absorb → segmented probe → merge →
@@ -1174,9 +1112,8 @@ object Similarity {
   val qAnnMerge = Q(
     "q_ann_merge",
     (s, d) => {
-      val n = embeddings(s, d).count()
-      val b = flatLayoutBits(n)
-      flatProbe(s, d, b, ivfMergedLayout(s, d, b))
+      val b = corpusBits(s, d)
+      annProbe(s, d, Seq(ivfMergedLayout(s, d, b) -> b), b)
     },
     qAnnIvfFlat.oracle
   )
@@ -1204,30 +1141,14 @@ object Similarity {
   private[ops] def pqSearch(s: SparkSession, d: String, rerankR: Int = 20): DataFrame = {
     import PqCodebook.{M, SubDim}
     val books = PqCodebook.books
-    val emb = embeddings(s, d).select(
-      col("vec_id"),
-      col("embedding").cast("array<double>").as("v")
-    )
-    val coarse = array_min(array(IvfCodebook.centroids.zipWithIndex.map {
-      case (cv, cid) =>
-        struct(sqDist(col("v"), typedLit(cv.toSeq)).as("dist"), lit(cid).as("cid"))
-    }: _*)).getField("cid")
-    def code(m: Int): Column = {
-      val sv = slice(col("v"), m * SubDim + 1, SubDim)
-      array_min(array(books(m).zipWithIndex.map { case (cv, c) =>
-        struct(sqDist(sv, typedLit(cv.toSeq)).as("dist"), lit(c).as("c"))
-      }: _*)).getField("c")
-    }
+    val emb = vectors(s, d)
+    val coarse = nearestCentroid(col("v")).getField("cid")
+    def code(m: Int): Column =
+      nearestCentroid(slice(col("v"), m * SubDim + 1, SubDim), books(m), "c").getField("c")
     // query vector, probe cluster, and the M×16 ADC tables: driver-side,
     // K + M·Kpq·SubDim flops — free, and shipped as literals
     val qv = queryVec(emb).toArray
-    def sqd(c: Array[Double], off: Int): Double = {
-      var a = 0.0; var i = 0
-      while (i < c.length) { val dd = qv(off + i) - c(i); a += dd * dd; i += 1 }
-      a
-    }
-    val probeCid = IvfCodebook.centroids.zipWithIndex
-      .map { case (cv, cid) => (sqd(cv, 0), cid) }.min._2
+    val probeCid = rankCentroids(qv.toSeq).head
     val lut: Array[Array[Double]] = Array.tabulate(M) { m =>
       books(m).map { cv =>
         var a = 0.0; var i = 0
@@ -1238,14 +1159,12 @@ object Similarity {
     val approx = (0 until M)
       .map(m => element_at(typedLit(lut(m).toSeq), code(m) + 1))
       .reduceLeft(_ + _) // fixed-order chain == the oracle's m-ordered list_sum
-    emb
+    val cand = emb
       .where(coarse === probeCid && col("vec_id") =!= 0)
       .select(col("vec_id"), col("v"), approx.as("adc"))
       .orderBy(col("adc").desc, col("vec_id").asc)
       .limit(rerankR)
-      .select(col("vec_id"), round(cosine(col("v"), typedLit(qv.toSeq)), 6).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(5)
+    topCos(cand, qv.toSeq, 5)
   }
 
   /** The PQ books as DuckDB VALUES rows — the same %.6f doubles the
@@ -1328,10 +1247,7 @@ object Similarity {
   val qAnnSq8 = Q(
     "q_ann_sq8",
     (s, d) => {
-      val emb = embeddings(s, d).select(
-        col("vec_id"),
-        col("embedding").cast("array<double>").as("v")
-      )
+      val emb = vectors(s, d)
       // per-dim corpus min/max: 64 rows — driver-small, the codebook idiom
       val stats = emb
         .select(posexplode(col("v")).as(Seq("i", "x")))
@@ -1339,7 +1255,8 @@ object Similarity {
         .orderBy("i").collect()
       val lo = typedLit(stats.map(_.getDouble(1)).toSeq)
       val hi = typedLit(stats.map(_.getDouble(2)).toSeq)
-      val qv = typedLit(queryVec(emb))
+      val q = queryVec(emb)
+      val qv = typedLit(q)
       // dequant(quantize(x)) per element; i is 0-based in Spark's
       // transform, the stat arrays are 1-indexed via element_at
       val dq = transform(col("v"), (x, i) => {
@@ -1349,14 +1266,12 @@ object Similarity {
           floor((x - l) * 255.0 / (h - l))))
         when(h === l, l).otherwise(l + code * (h - l) / 255.0)
       })
-      emb
+      val cand = emb
         .where(col("vec_id") =!= 0)
         .select(col("vec_id"), col("v"), dot(dq, qv).as("adc"))
         .orderBy(col("adc").desc, col("vec_id").asc)
         .limit(20)
-        .select(col("vec_id"), round(cosine(col("v"), qv), 6).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id").asc)
-        .limit(5)
+      topCos(cand, q, 5)
     },
     Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
              q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
@@ -1517,12 +1432,7 @@ object Similarity {
     "q_ann_lsh",
     (s, d) => {
       val planes = lshPlanes
-      val emb = Tables.fanOut(
-        embeddings(s, d).select(
-          col("vec_id"),
-          col("embedding").cast("array<double>").as("v")
-        )
-      )
+      val emb = Tables.fanOut(vectors(s, d))
       val sigBits = planes.zipWithIndex.map { case (p, j) =>
         when(dot(col("v"), typedLit(p)) >= 0.0, 1L << j).otherwise(0L)
       }
@@ -1690,9 +1600,7 @@ object Similarity {
   val qSqlKnn = Q(
     "q_sql_knn",
     (s, d) => {
-      embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        .createOrReplaceTempView("emb_sql")
+      vectors(s, d).createOrReplaceTempView("emb_sql")
       s.sql("""WITH q AS (SELECT v AS qv FROM emb_sql WHERE vec_id = 0)
                SELECT vec_id,
                       round(graft_dot(v, qv) /
@@ -1734,12 +1642,8 @@ object Similarity {
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val k = 20
-      val emb = embeddings(s, d).select(
-        col("vec_id"),
-        col("embedding").cast("array<double>").as("v")
-      )
-      val q = queryVec(emb)
-      val qv = typedLit(q)
+      val emb = vectors(s, d)
+      val qv = typedLit(queryVec(emb))
       val denseTop = emb
         .where(col("vec_id") =!= 0)
         .select(col("vec_id").as("id"), round(cosine(col("v"), qv), 6).as("cos_sim"))
@@ -1868,13 +1772,8 @@ object Similarity {
   val qMaxsim = Q(
     "q_maxsim",
     (s, d) => {
-      val emb = embeddings(s, d).select(
-        col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val score = maxsimCol(queryVec(emb))
-      emb.where(col("vec_id") =!= 0)
-        .select(col("vec_id"), round(score, 6).as("maxsim"))
-        .orderBy(col("maxsim").desc, col("vec_id").asc)
-        .limit(10)
+      val emb = vectors(s, d)
+      topK(emb.where(col("vec_id") =!= 0), maxsimCol(queryVec(emb)), "maxsim", 10)
     },
     Some {
       s"""WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
@@ -1978,17 +1877,13 @@ object Similarity {
   val qMaxsimAnn = Q(
     "q_maxsim_ann",
     (s, d) => {
-      val emb = embeddings(s, d).select(
-        col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val emb = vectors(s, d)
       val q = queryVec(emb)
       val probeLit = typedLit(maxsimProbe(q))
       val isCand = (0 until 4)
         .map(j => array_contains(probeLit, facetBucketCol(j)))
         .reduce(_ || _)
-      emb.where(col("vec_id") =!= 0 && isCand)
-        .select(col("vec_id"), round(maxsimCol(q), 6).as("maxsim"))
-        .orderBy(col("maxsim").desc, col("vec_id").asc)
-        .limit(10)
+      topK(emb.where(col("vec_id") =!= 0 && isCand), maxsimCol(q), "maxsim", 10)
     },
     Some(maxsimAnnOracleSql)
   )
@@ -2036,18 +1931,15 @@ object Similarity {
     */
   def maxsimBucketLayout(s: org.apache.spark.sql.SparkSession, d: String): String = {
     Staged.layout(s, "maxsim_buckets", embSrc(d)) { tmp =>
-      embeddings(s, d)
+      val posted = vectors(s, d)
         .where(col("vec_id") =!= 0)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         .select(col("vec_id"), col("v"),
           explode(array((0 until 4).map(facetBucketCol): _*)).as("bucket_l"))
-        // posted as INT explicitly: parquet partition-directory
-        // inference reads the value back as Int regardless, so an
-        // implicitly-Long posting would make the probe's INSET
-        // partition filter depend on a silent coercion (ADVICE r9)
-        .select(col("vec_id"), col("v"),
-          col("bucket_l").cast("int").as("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
+      // posted as INT explicitly: parquet partition-directory inference
+      // reads the value back as Int regardless, so an implicitly-Long
+      // posting would make the probe's INSET partition filter depend on
+      // a silent coercion (ADVICE r9)
+      writeBuckets(posted, col("bucket_l").cast("int"), tmp)
     }
   }
 
@@ -2075,19 +1967,14 @@ object Similarity {
   val qMaxsimPostings = Q(
     "q_maxsim_postings",
     (s, d) => {
-      val emb = embeddings(s, d).select(
-        col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val q = queryVec(emb)
+      val q = queryVec(vectors(s, d))
       val lay = maxsimBucketLayout(s, d)
-      s.read.parquet(lay)
-        // Int literals against the Int-posted partition column — the
-        // INSET pruning never rides an implicit Long⇄Int cast
-        .where(col("bucket").isin(maxsimProbe(q).map(_.toInt): _*))
+      // Int literals against the Int-posted partition column — the
+      // INSET pruning never rides an implicit Long⇄Int cast
+      val cand = prunedBucketScan(s, lay, maxsimProbe(q).map(_.toInt))
         .select(col("vec_id"), col("v"))
         .distinct()
-        .select(col("vec_id"), round(maxsimCol(q), 6).as("maxsim"))
-        .orderBy(col("maxsim").desc, col("vec_id").asc)
-        .limit(10)
+      topK(cand, maxsimCol(q), "maxsim", 10)
     },
     Some(maxsimAnnOracleSql)
   )
@@ -2124,13 +2011,8 @@ object Similarity {
   val qEmbeddingShift = Q(
     "q_embedding_shift",
     (s, d) => {
-      val emb = Tables.fanOut(embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
-      val best = array_min(array(IvfCodebook.centroids.zipWithIndex.map { case (cv, cid) =>
-        struct(sqDist(col("v"), typedLit(cv.toSeq)).as("dist"), lit(cid).as("cid"))
-      }: _*)).getField("cid")
-      val bycid = emb
-        .select(best.as("cid"),
+      val bycid = Tables.fanOut(vectors(s, d))
+        .select(nearestCentroid(col("v")).getField("cid").as("cid"),
           expr(Sampling.bucketSql("vec_id", 777L, 100L)).as("bucket"))
         .groupBy("cid")
         .agg(

@@ -279,17 +279,16 @@ object Replay {
 
   /** Plan-audit hook (PLANS.md): replay `stream` to exhaustion against a
     * throwaway parquet sink and return the FINAL micro-batch's executed
-    * physical plan. The stateful operators (StateStoreRestore/Save,
+    * query execution. The stateful operators (StateStoreRestore/Save,
     * StreamingSymmetricHashJoin, StreamingDeduplicateWithinWatermark)
     * exist only in the per-batch IncrementalExecution — the declared
     * queries return the sink read-back, whose plan is just a parquet
     * scan, so this is the only way to put the streaming shape on audit.
     */
-  def lastExecutionPlan(stream: DataFrame, outDir: String): String =
+  def lastExecution(stream: DataFrame, outDir: String): org.apache.spark.sql.execution.QueryExecution =
     drain(stream, outDir, None) match {
       case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
         w.streamingQuery.lastExecution
-          .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     }
 
   /** Declared query — ORACLED: a sentinel-drained Append replay is

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 
 /** Dev probe for declared queries, run against the sf dir named by
   * `SPARK_GRAFT_SF_DIR` on `SPARK_GRAFT_CPUS` cores (the
@@ -10,16 +10,46 @@ import org.apache.spark.sql.execution.ExplainMode
   *   sbt "runMain graft.tools.Probe plan q1,q2,... [outDir suffix]"
   *   sbt "runMain graft.tools.Probe time q1,q2,... [--jobs]"
   *
-  * `plan` prints each query's formatted physical plan, or writes it to
-  * `outDir/<query>_<suffix>.txt` so plans can be diffed across a
-  * change (the `plans/rNN/` artifacts). `time` runs each query twice
-  * into a `noop` sink, prints both wall times (the first includes any
-  * cold staging build) and then the final adaptive plan; `--jobs`
-  * prints every Spark job's wall time and run (`<query>/run<i>`)
-  * instead of the plan.
-  * [[graft.PlanDump]] generates the curated `PLANS.md`.
+  * `plan` prints each query's formatted physical plan ([[render]]), or
+  * writes it to `outDir/<query>_<suffix>.txt` so plans can be diffed
+  * across a change with a plain `diff` (the `plans/<dir>/` artifacts).
+  * `time` runs each query twice into a `noop` sink, prints both wall
+  * times (the first includes any cold staging build) and then the final
+  * adaptive plan; `--jobs` prints every Spark job's wall time and run
+  * (`<query>/run<i>`) instead of the plan.
+  * [[graft.PlanDump]] generates the curated `PLANS.md` with the same
+  * renderer.
   */
 object Probe {
+  private val exprId = """#(\d+)""".r
+  private val planId = """plan_id=(\d+)""".r
+  private val rddId = """RDD\[\d+\]""".r
+  private val objHash = """(?<=[\w$])@[0-9a-f]{1,8}\b""".r
+  private val lambdaId = """\$Lambda\$\d+/0x[0-9a-f]+""".r
+  private val uuid = """\b[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}\b""".r
+
+  /** A formatted physical plan with its session counters normalised,
+    * as Spark's own `PlanStabilitySuite` does: expression ids (`#123`)
+    * and Exchange `plan_id`s are renumbered in first-seen order; RDD
+    * ids, `@hash` object suffixes, lambda class numbers and per-run
+    * UUIDs (CollectMetrics names) are masked. Two runs of the same code
+    * then print the same text, and a real plan change is the only thing
+    * a `diff` shows.
+    */
+  def render(qe: QueryExecution): String = {
+    val plan = qe.explainString(ExplainMode.fromString("formatted"))
+    def renumber(text: String, re: scala.util.matching.Regex, show: Int => String): String = {
+      val seen = scala.collection.mutable.HashMap.empty[String, Int]
+      re.replaceAllIn(text, m =>
+        scala.util.matching.Regex.quoteReplacement(
+          show(seen.getOrElseUpdate(m.group(1), seen.size + 1))))
+    }
+    val ids = renumber(renumber(plan, exprId, i => s"#$i"), planId, i => s"plan_id=$i")
+    val masked = Seq(rddId -> "RDD[N]", lambdaId -> "\\$Lambda", uuid -> "<uuid>")
+      .foldLeft(ids) { case (t, (re, to)) => re.replaceAllIn(t, to) }
+    objHash.replaceAllIn(masked, "@N")
+  }
+
   def main(args: Array[String]): Unit = {
     val usage = "usage: Probe plan <q1,q2,...> [outDir suffix] | Probe time <q1,q2,...> [--jobs]"
     require(args.length >= 2 && Set("plan", "time")(args(0)), usage)
@@ -29,8 +59,6 @@ object Probe {
     val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     def query(n: String): DataFrame = graft.SparkEntry.queries(n)(spark, d)
-    def formatted(df: DataFrame): String =
-      df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
     if (args(0) == "plan") {
       val outDir = args.lift(2).map { dir =>
@@ -40,9 +68,9 @@ object Probe {
       for (n <- names) outDir match {
         case Some(dir) =>
           val f = dir.resolve(s"${n}_${args(3)}.txt")
-          java.nio.file.Files.writeString(f, formatted(query(n)))
+          java.nio.file.Files.writeString(f, render(query(n).queryExecution))
           println(s"WROTE $f")
-        case None => println(formatted(query(n)))
+        case None => println(render(query(n).queryExecution))
       }
     } else {
       val jobs = args.drop(2).contains("--jobs")
@@ -65,7 +93,7 @@ object Probe {
         val df = query(n)
         df.write.format("noop").mode("overwrite").save()
         println(f"TIMING $n run$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        if (i == 2 && !jobs) println(formatted(df))
+        if (i == 2 && !jobs) println(render(df.queryExecution))
       }
     }
     spark.stop()

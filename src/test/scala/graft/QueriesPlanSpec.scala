@@ -39,6 +39,19 @@ class QueriesPlanSpec extends SparkSpec {
   private def shuffles(p: String): Int =
     p.linesIterator.count(_.matches(""".*\(\d+\) Exchange\s*"""))
 
+  /** A bucket-layout probe opens only its probed `bucket=` directories:
+    * every scan of `layout` lists `bucket=` dirs in its Location, never
+    * the bare layout root (whose read runs partition discovery over
+    * every bucket directory of the layout).
+    */
+  private def assertListsBucketDirs(p: String, layout: String): Unit = {
+    val locs = p.linesIterator.filter(l => l.contains("Location:") && l.contains(layout)).toSeq
+    assert(locs.nonEmpty, s"no $layout scan in the probe plan")
+    for (l <- locs)
+      assert(l.contains("/bucket="),
+        s"the probe lists the bare layout root, not its probed bucket dirs: ${l.trim}")
+  }
+
   test("q_filter: predicates pushed to the parquet scan, columns pruned") {
     val p = plan("q_filter")
     assert(p.contains("PushedFilters: [IsNotNull(l_discount)"))
@@ -881,6 +894,7 @@ class QueriesPlanSpec extends SparkSpec {
     assert(pf.contains("bucket#") && pf.contains("INSET"),
       "probe buckets must prune partitions, not filter rows post-scan")
     assert(p.contains("TakeOrderedAndProject"), "top-10 must not be a global sort")
+    assertListsBucketDirs(p, "graft_maxsim_buckets_")
     assert(shuffles(p) <= 1, "only the multi-facet-hit distinct may exchange")
   }
 
@@ -1029,6 +1043,7 @@ class QueriesPlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"), "top-5 must not be a global sort")
     assert(shuffles(p) == 0,
       "one row per vector in the layout — the probe needs no exchange at all")
+    assertListsBucketDirs(p, "graft_ivf_sub_")
   }
 
   test("q_ann_segments: union of per-segment pruned scans — embeddings never scanned, zero shuffles") {
@@ -1039,6 +1054,7 @@ class QueriesPlanSpec extends SparkSpec {
     val pf = p.linesIterator.filter(_.contains("PartitionFilters")).mkString
     assert(pf.contains("bucket#") && (pf.contains("INSET") || pf.contains(" IN (")),
       "per-segment probe buckets must prune partitions, not filter rows post-scan")
+    assertListsBucketDirs(p, "graft_ivf_segs_")
     assert(!p.contains("Join") && !p.contains("HashAggregate"),
       "candidate union + re-filter is a projection — a join/agg appeared")
     assert(p.contains("TakeOrderedAndProject"), "top-5 must not be a global sort")
@@ -1057,6 +1073,7 @@ class QueriesPlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"), "top-5 must not be a global sort")
     assert(shuffles(p) == 0,
       "one row per vector in the merged layout — the probe needs no exchange at all")
+    assertListsBucketDirs(p, "graft_ivf_merged_")
   }
 
   test("q_bleu: tagged-gram clip join sort-merge both sides — corpus never broadcasts or hash-builds") {

@@ -325,4 +325,26 @@ class AnnSpec extends SparkSpec {
         s"cluster ${r.get(0)} chi2_term drifted")
     }
   }
+
+  test("one path per decision: Similarity.scala projects, assigns, pairs, writes and probes once") {
+    // the corpus projection, the centroid argmin, the blocked pair
+    // explode and the bucket write each live in one shared helper, and
+    // every layout probe lists only its probed dirs (a whole-layout read
+    // runs partition discovery over every bucket); a copy fails here
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/ops/Similarity.scala")), "UTF-8")
+    def occurrences(word: String) =
+      Iterator.iterate(src.indexOf(word))(i => src.indexOf(word, i + 1)).takeWhile(_ >= 0).size
+    val drift = for {
+      (word, want) <- Seq(
+        "partitionBy(\"bucket\")" -> 1,
+        "read.parquet(lay)" -> 0,
+        "cast(\"array<double>\").as(\"v\")" -> 1,
+        "array_min(array(" -> 1,
+        "explode(sequence(col(\"bid\")" -> 1)
+      if occurrences(word) != want
+    } yield s"`$word` ${occurrences(word)}× (want $want)"
+    assert(drift.isEmpty,
+      s"Similarity.scala copies a shared helper: ${drift.mkString(", ")}")
+  }
 }
