@@ -134,50 +134,50 @@ object Partitioned {
   private[ops] def compactedDir(d: String): String =
     Staged.path("lineitem_compacted", Seq(s"$d/lineitem.parquet"))
 
-  /** Target compacted-file payload. 4 MiB here so the test corpora
-    * actually produce a multi-file range layout; a production lake sets
-    * `spark.graft.compact.targetBytes` to ~256 MiB. The file COUNT is
-    * derived from the input bytes, so the same code sizes a 100 TB
-    * table to ~400k files instead of a constant. */
-  val COMPACT_TARGET_BYTES_CONF = "spark.graft.compact.targetBytes"
-
   /** E15 — small-file COMPACTION, the table-maintenance operator every
     * lake runs nightly: rewrite a shattered layout (64 tiny files) into
     * few size-targeted, range-clustered files. Output file count =
-    * ⌈input_bytes / targetBytes⌉ (data-derived, never a constant);
+    * ⌈input_bytes / targetBytes⌉ (data-derived, never a constant, so
+    * the same code sizes a 100 TB table to ~400k files);
     * `repartitionByRange(l_orderkey)` + `sortWithinPartitions` gives
     * each output file a disjoint, sorted key range — so downstream
     * scans get both fewer tasks AND min/max-pruned row groups (the
-    * q_zorder_key idea, applied at the file level). The oracle reads
-    * the compacted copy back and hash-compares against the original
-    * table: compaction must be byte-lossless. PartitionedSpec asserts
-    * the file-count collapse and the per-file disjoint key ranges.
+    * q_zorder_key idea, applied at the file level). Returns the
+    * compacted copy read back.
+    */
+  private[ops] def compact(s: SparkSession, d: String, targetBytes: Long): DataFrame = {
+    val small = smallFiles(s, d)
+    // Hadoop FS, not java.io: on a cluster this path is object storage
+    val smallPath = new org.apache.hadoop.fs.Path(small)
+    val fs = smallPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val inputBytes = fs.listStatus(smallPath)
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .map(_.getLen).sum
+    val nFiles = math.max(1L, (inputBytes + targetBytes - 1) / targetBytes).toInt
+    val out = compactedDir(d)
+    s.read.parquet(small)
+      .repartitionByRange(nFiles, col("l_orderkey"))
+      .sortWithinPartitions("l_orderkey", "l_linenumber")
+      .write.mode("overwrite").parquet(out)
+    s.read.parquet(out)
+  }
+
+  /** The declared compaction at a 4 MiB target, so the test corpora
+    * produce a multi-file range layout (a production lake targets
+    * ~256 MiB). The oracle reads the compacted copy back and
+    * hash-compares against the original table: compaction must be
+    * byte-lossless. PartitionedSpec asserts the file-count collapse
+    * and the per-file disjoint key ranges.
     */
   val qCompact = Q(
     "q_compact",
-    (s, d) => {
-      val small = smallFiles(s, d)
-      val targetBytes = s.conf.getOption(COMPACT_TARGET_BYTES_CONF)
-        .map(_.toLong).getOrElse(4L << 20)
-      // Hadoop FS, not java.io: on a cluster this path is object storage
-      val smallPath = new org.apache.hadoop.fs.Path(small)
-      val fs = smallPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val inputBytes = fs.listStatus(smallPath)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(_.getLen).sum
-      val nFiles = math.max(1L, (inputBytes + targetBytes - 1) / targetBytes).toInt
-      val out = compactedDir(d)
-      s.read.parquet(small)
-        .repartitionByRange(nFiles, col("l_orderkey"))
-        .sortWithinPartitions("l_orderkey", "l_linenumber")
-        .write.mode("overwrite").parquet(out)
-      s.read.parquet(out)
+    (s, d) =>
+      compact(s, d, 4L << 20)
         .where(col("l_returnflag") === "R")
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
         // TRUE total order: (orderkey, linenumber) is not unique in the
         // synthetic lineitem (the q_filter lesson) — sort every column
-        .orderBy("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-    },
+        .orderBy("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"),
     Some("""SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
             FROM lineitem WHERE l_returnflag = 'R'
             ORDER BY l_orderkey, l_linenumber, l_quantity, l_extendedprice""")
@@ -412,13 +412,15 @@ object Partitioned {
   )
 
   // ---------------------------------------------------------------------
-  // snapshot versioning (time travel)
+  // table versions (time travel, vacuum): every version of a table is a
+  // commit in its `_graft_log` (the CONCURRENT-WRITER section below),
+  // Delta's ordered add/remove log — one version format for the family
   // ---------------------------------------------------------------------
 
   /** The parquet files directly under `root/sub`, sorted, as
     * `sub/<name>` paths relative to `root` — the form every manifest
-    * here records (Delta's convention), because a staged layout is
-    * built under a directory that is renamed when it publishes.
+    * and log body here records (Delta's convention), because a staged
+    * layout is built under a directory that is renamed when it publishes.
     */
   private def listParquet(s: SparkSession, root: String, sub: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(s"$root/$sub")
@@ -431,14 +433,22 @@ object Partitioned {
       .sorted
   }
 
+  /** Per-type row count and exact value total, ordered by type — the
+    * aggregate the version reads below are hash-checked through.
+    */
+  private def typeTotals(df: DataFrame): DataFrame =
+    df.groupBy("event_type")
+      .agg(
+        count(lit(1)).as("n_events"),
+        sum(col("value").cast(org.apache.spark.sql.types.DecimalType(28, 2)))
+          .cast("double").as("total_value"))
+      .orderBy("event_type")
+
   /** Two-commit VERSIONED layout — the MVCC idiom under every lake
     * format's time travel: data files only ever ACCUMULATE in `data/`;
-    * the manifest is what makes a file visible — one row (version,
-    * file) per file VISIBLE AT that version, the Iceberg snapshot
-    * shape (a full list per version, so rewrites can retire files
-    * without tombstone algebra); and the manifest's own `_SUCCESS` is
-    * written LAST, so a reader either sees a fully committed table or
-    * none of it.
+    * a commit in the layout's log is what makes a file visible, and a
+    * version file publishes atomically after its data, so a reader
+    * either sees a fully committed version or none of it.
     *
     * Version 1 = the initial load (event_id % 10 < 8, range-clustered);
     * version 2 = an appended batch (the rest). The append never
@@ -446,73 +456,68 @@ object Partitioned {
     * the table, and every earlier version stays byte-identical on disk.
     */
   private[ops] def eventsVersioned(s: SparkSession, d: String): String =
-    // the `m3` tag (here and on the vacuum layout) names the MANIFEST
-    // FORMAT (full file list per version, Iceberg-style, root-relative
-    // names) — bumping it on a format change invalidates cached layouts
-    // written under the old reader contract
-    Staged.layout(s, "events_versioned_m3", eventsSrc(d), Seq("_graft_versions/_SUCCESS"))(
+    // complete = the last version file. The layout key covers the
+    // sources only, so a layout whose version format changes takes a
+    // name no earlier build used.
+    Staged.layout(s, "events_versioned_log", eventsSrc(d), Seq(versionFile(CommitLog, 2)))(
       buildVersioned(s, d, _, withCompaction = false))
 
-  /** Write the versioned layout under `root`; its manifest names files
-    * relative to `root`. */
+  /** Write the versioned layout under `root`, committing v1 (the load)
+    * and v2 (the append) to its log. With `withCompaction`, v3 is a
+    * COMPACTION rewrite: the head rewritten into 2 range-clustered
+    * files, retiring every v1/v2 file from the head without touching
+    * their bytes.
+    */
   private[ops] def buildVersioned(
       s: SparkSession, d: String, root: String, withCompaction: Boolean): Unit = {
+    val log = commitLogDir(root)
     val data = s"$root/data"
     val ev = Tables.events(s, d)
     ev.where(col("event_id") % 10 < 8)
       .repartitionByRange(8, col("event_id"))
       .write.mode("overwrite").parquet(data)
     val v1 = listParquet(s, root, "data")
+    commitAppend(s, log, v1)
     ev.where(col("event_id") % 10 >= 8)
       .repartition(2) // batch-sized shuffle: the append costs the batch
       .write.mode("append").parquet(data)
-    val v2 = listParquet(s, root, "data")
-    // v3 (vacuum lifecycle only): COMPACTION commit — rewrite the head
-    // into 2 range-clustered files; the new manifest lists ONLY them,
-    // retiring every v1/v2 file from the head without touching bytes
-    val v3 =
-      if (!withCompaction) Seq.empty
-      else {
-        Tables.normalizeTs(s.read.parquet(v2.map(f => s"$root/$f"): _*))
-          .repartitionByRange(2, col("event_id"))
-          .sortWithinPartitions("event_id")
-          .write.mode("append").parquet(data)
-        listParquet(s, root, "data").filterNot(v2.toSet)
-      }
-    import s.implicits._
-    (v1.map(f => (f, 1)) ++ v2.map(f => (f, 2)) ++ v3.map(f => (f, 3)))
-      .toDF("file", "version")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/_graft_versions")
+    commitAppend(s, log, listParquet(s, root, "data").filterNot(v1.toSet))
+    if (withCompaction) {
+      val v2 = manifestFiles(s, log, 2)
+      snapshotRead(s, root, 2)
+        .repartitionByRange(2, col("event_id"))
+        .sortWithinPartitions("event_id")
+        .write.mode("append").parquet(data)
+      commitRewrite(s, log, retired = v2,
+        produced = listParquet(s, root, "data").filterNot(v2.toSet))
+    }
   }
 
-  /** Snapshot read AS OF `version`: the visible file set is a manifest
-    * filter (file-count-sized metadata, driver-side planning like
-    * [[manifestSkipScan]]); the data never moves. A version, once
+  /** Snapshot read AS OF `version`: the visible file set is replayed
+    * from the commit log ([[manifestFiles]], file-count-sized metadata
+    * like [[manifestSkipScan]]'s, read without a Spark job), then one scan
+    * of exactly those files; the data never moves. A version, once
     * committed, is immutable — the property that makes a training run
     * reproducible down to the file list months after later appends.
     */
   def snapshotRead(s: SparkSession, root: String, version: Int): DataFrame = {
-    val files = s.read.parquet(s"$root/_graft_versions")
-      .where(col("version") === version)
-      .collect().map(_.getAs[String]("file")).toSeq.sorted
+    val files = manifestFiles(s, commitLogDir(root), version)
     require(files.nonEmpty, s"no files visible at version $version")
     Tables.normalizeTs(s.read.parquet(files.map(f => s"$root/$f"): _*))
   }
 
   /** VACUUM: physically delete every data file not visible at any
     * version ≥ `horizon` — the retention-driven reclamation every lake
-    * format pairs with time travel. Purely a metadata diff (manifest
-    * file set vs directory listing) followed by FS deletes: no data
-    * moves, no manifest rewrite, and versions ≥ horizon remain
-    * byte-identically readable. Time travel BELOW the horizon is
-    * intentionally destroyed — that is the storage the operation
-    * reclaims. Returns (files before, files after).
+    * format pairs with time travel. Purely a metadata diff (the files
+    * the log shows at horizon..head vs the directory listing) followed
+    * by FS deletes: no data moves, nothing is committed, and versions
+    * ≥ horizon remain byte-identically readable. Time travel BELOW the
+    * horizon is intentionally destroyed — that is the storage the
+    * operation reclaims. Returns (files before, files after).
     */
   def vacuum(s: SparkSession, root: String, horizon: Int): (Int, Int) = {
-    val keep = s.read.parquet(s"$root/_graft_versions")
-      .where(col("version") >= horizon)
-      .collect().map(_.getAs[String]("file")).toSet
+    val log = commitLogDir(root)
+    val keep = (horizon to headVersion(s, log)).flatMap(manifestFiles(s, log, _)).toSet
     require(keep.nonEmpty, s"vacuum horizon $horizon would empty the table")
     val all = listParquet(s, root, "data")
     val fs = new org.apache.hadoop.fs.Path(root)
@@ -531,16 +536,7 @@ object Partitioned {
     */
   val qTimeTravel = Q(
     "q_time_travel",
-    (s, d) => {
-      val root = eventsVersioned(s, d)
-      snapshotRead(s, root, 1)
-        .groupBy("event_type")
-        .agg(
-          count(lit(1)).as("n_events"),
-          sum(col("value").cast(org.apache.spark.sql.types.DecimalType(28, 2)))
-            .cast("double").as("total_value"))
-        .orderBy("event_type")
-    },
+    (s, d) => typeTotals(snapshotRead(s, eventsVersioned(s, d), 1)),
     Some("""SELECT event_type, count(*) AS n_events,
                    CAST(sum(CAST(value AS DECIMAL(28,2))) AS DOUBLE) AS total_value
             FROM events
@@ -552,7 +548,7 @@ object Partitioned {
   /** The full lake-maintenance LIFECYCLE on its own layout copy (so
     * [[qTimeTravel]]'s history stays intact): initial load (v1) →
     * append (v2) → compaction commit (v3, head rewritten into 2 files,
-    * old files retired from the manifest but not from disk) → VACUUM at
+    * old files retired from the head but not from disk) → VACUUM at
     * horizon 3, physically reclaiming every file below the horizon.
     * The declared query reads the head AFTER the vacuum; its oracle is
     * the full unversioned table, so the hash match proves compaction +
@@ -561,7 +557,7 @@ object Partitioned {
     * collapse, sub-horizon read failure, and vacuum idempotence).
     */
   private[ops] def vacuumedLayout(s: SparkSession, d: String): String =
-    Staged.layout(s, "events_vacuum_m3", eventsSrc(d), Seq("_graft_versions/_SUCCESS"))(
+    Staged.layout(s, "events_vacuum_log", eventsSrc(d), Seq(versionFile(CommitLog, 3)))(
       buildVersioned(s, d, _, withCompaction = true))
 
   val qVacuum = Q(
@@ -569,13 +565,7 @@ object Partitioned {
     (s, d) => {
       val root = vacuumedLayout(s, d)
       vacuum(s, root, horizon = 3)
-      snapshotRead(s, root, 3)
-        .groupBy("event_type")
-        .agg(
-          count(lit(1)).as("n_events"),
-          sum(col("value").cast(org.apache.spark.sql.types.DecimalType(28, 2)))
-            .cast("double").as("total_value"))
-        .orderBy("event_type")
+      typeTotals(snapshotRead(s, root, 3))
     },
     Some("""SELECT event_type, count(*) AS n_events,
                    CAST(sum(CAST(value AS DECIMAL(28,2))) AS DOUBLE) AS total_value
@@ -823,6 +813,15 @@ object Partitioned {
     (layout, dv)
   }
 
+  /** Apply the deletion vectors `dv` to `base`: tag each row with its
+    * parquet reader position and anti-join the (file, pos) positions.
+    */
+  private def dropDeleted(base: DataFrame, dv: String): DataFrame =
+    base
+      .withColumn("file", col("_metadata.file_path"))
+      .withColumn("pos", col("_metadata.row_index"))
+      .join(broadcast(base.sparkSession.read.parquet(dv)), Seq("file", "pos"), "left_anti")
+
   /** MERGE-ON-READ DELETE READ (r7) — the scan that applies deletion
     * vectors: base files anti-joined on (file, pos) against the DV
     * table. The reader never sees the delete PREDICATE, only positions
@@ -841,12 +840,7 @@ object Partitioned {
     "q_deletion_vectors",
     (s, d) => {
       val (layout, dv) = buildDeletionVectors(s, d)
-      val dvDf = s.read.parquet(dv)
-      Tables.normalizeTs(
-        s.read.parquet(layout)
-          .withColumn("file", col("_metadata.file_path"))
-          .withColumn("pos", col("_metadata.row_index")))
-        .join(broadcast(dvDf), Seq("file", "pos"), "left_anti")
+      dropDeleted(Tables.normalizeTs(s.read.parquet(layout)), dv)
         .select("event_id", "user_id", "event_type", "value", "ts")
         .orderBy("event_id")
     },
@@ -872,11 +866,7 @@ object Partitioned {
   private[ops] def dvCompactedLayout(s: SparkSession, d: String): String =
     Staged.layout(s, s"${ClusteredName}_dvc", eventsSrc(d)) { tmp =>
       val (layout, dv) = buildDeletionVectors(s, d)
-      val dvDf = s.read.parquet(dv)
-      s.read.parquet(layout)
-        .withColumn("file", col("_metadata.file_path"))
-        .withColumn("pos", col("_metadata.row_index"))
-        .join(broadcast(dvDf), Seq("file", "pos"), "left_anti")
+      dropDeleted(s.read.parquet(layout), dv)
         .drop("file", "pos")
         .repartitionByRange(4, col("ts"))
         .sortWithinPartitions("ts")
@@ -895,19 +885,20 @@ object Partitioned {
   )
 
   // -------------------------------------------------------------------
-  // CONCURRENT-WRITER COMMIT PROTOCOL (r13) — the optimistic-concurrency
+  // CONCURRENT-WRITER COMMIT PROTOCOL — the optimistic-concurrency
   // loop under every multi-writer lake format (Delta's
   // put-if-absent of _delta_log/N.json; Iceberg's atomic
-  // swap-table-pointer): the r12 lifecycle (time travel, vacuum, merge,
-  // change feed) assumed ONE committer; this closes the gap. A commit
-  // is: read the head version, stage your data files anywhere (appends
-  // never rewrite — data files are immutable and uniquely named), then
-  // PUT-IF-ABSENT the next version's manifest. The loser of a race gets
-  // a CAS failure (the version file already exists), re-reads the new
-  // head — which now includes the winner's files — and retries on top
-  // of it. History is therefore LINEAR: every version = its
-  // predecessor + exactly one batch, no commit is ever lost or applied
-  // twice, writers never coordinate beyond the one atomic primitive.
+  // swap-table-pointer), and the one version log of every versioned
+  // layout here (time travel and vacuum commit through it too). A
+  // commit is: read the head version, stage your data files anywhere
+  // (appends never rewrite — data files are immutable and uniquely
+  // named), then PUT-IF-ABSENT the next version's file. The loser of a
+  // race gets a CAS failure (the version file already exists), re-reads
+  // the new head — which now includes the winner's files — and retries
+  // on top of it. History is therefore LINEAR: every version applies
+  // exactly one commit's actions to its predecessor, no commit is ever
+  // lost or applied twice, writers never coordinate beyond the one
+  // atomic primitive.
   // -------------------------------------------------------------------
 
   /** Atomic PUT-IF-ABSENT of a small metadata file — THE commit
@@ -993,14 +984,14 @@ object Partitioned {
     */
   private val OpHeader = "#op="
 
-  /** Body-format header distinguishing r14 INCREMENTAL commits from the
-    * legacy full-snapshot bodies. A delta body lists ACTIONS (`+file` /
+  /** Body-format header of an INCREMENTAL commit, the only body
+    * [[tryCommitDelta]] writes. A delta body lists ACTIONS (`+file` /
     * `-file`), so a commit writes O(batch) bytes instead of re-listing
     * the whole table — the difference between an append costing its
     * batch and costing a million-line manifest rewrite at 100 TB
-    * (Delta's add/remove action log). Legacy bodies (no `#fmt` header)
-    * read as self-contained snapshots, so pre-r14 logs and the
-    * [[tryCommit]] CAS-law fixtures stay readable unchanged.
+    * (Delta's add/remove action log). A body without it is a legacy
+    * full-snapshot body, which earlier builds wrote under the same
+    * layout names, so [[manifestFiles]] still reads one as a base.
     */
   private val FmtHeader = "#fmt="
   private val FmtDelta = s"${FmtHeader}delta"
@@ -1076,28 +1067,11 @@ object Partitioned {
       .collectFirst { case l if l.startsWith(OpHeader) => l.stripPrefix(OpHeader) }
       .getOrElse("append")
 
-  /** One commit ATTEMPT at exactly version `v` with the full manifest
-    * `files` and its operation header — the LEGACY full-snapshot body,
-    * kept as the CAS-law fixture and the back-compat read case. False =
-    * CAS failure (someone else owns `v` now) — the law the race test
-    * pins.
-    */
-  private[ops] def tryCommitOp(s: SparkSession, logDir: String, v: Int,
-      files: Seq[String], op: String): Boolean =
-    casCreate(s, versionFile(logDir, v),
-      (s"$OpHeader$op" +: files.sorted).mkString("\n").getBytes("UTF-8"))
-
-  /** One APPEND attempt: manifest = the previous head's list + this
-    * batch (kept as the narrow surface the existing specs drive).
-    */
-  private[ops] def tryCommit(s: SparkSession, logDir: String, v: Int,
-      prev: Seq[String], batch: Seq[String]): Boolean =
-    tryCommitOp(s, logDir, v, prev ++ batch, "append")
-
-  /** One INCREMENTAL commit attempt: the body is the op header plus
-    * add/remove ACTIONS only — O(batch) bytes, the r14 write-side fix
-    * ([[FmtDelta]] scaladoc). The actions are sorted for bit-stable
-    * bodies, not because order matters to reconstruction.
+  /** One commit ATTEMPT at exactly version `v`: the body is the op
+    * header plus add/remove ACTIONS only — O(batch) bytes ([[FmtDelta]]
+    * scaladoc). False = CAS failure (someone else owns `v` now). The
+    * actions are sorted for bit-stable bodies, not because order
+    * matters to reconstruction.
     */
   private[ops] def tryCommitDelta(s: SparkSession, logDir: String, v: Int,
       op: String, adds: Seq[String], removes: Seq[String]): Boolean =
@@ -1217,8 +1191,8 @@ object Partitioned {
     * on real threads race to append the held-out rows (split by parity)
     * through [[commitAppend]] — whichever loses the v2 CAS rebases and
     * lands v3. Each writer stages its batch in its OWN directory (a
-    * manifest lists absolute paths, so data files never share a
-    * directory with a concurrent writer — no _temporary collisions,
+    * log body names files under any directory of the root, so data
+    * files never share a directory with a concurrent writer — no _temporary collisions,
     * the Iceberg anywhere-files shape). The final head is identical
     * regardless of who wins: base ∪ batch_a ∪ batch_b, which is what
     * makes the query deterministic and its full-table oracle a proof
@@ -1254,16 +1228,6 @@ object Partitioned {
         s"two racing appends over v1 must land v2 and v3, got head ${headVersion(s, log)}")
     }
 
-  /** Head-snapshot read through the commit log — the same
-    * metadata-then-pruned-scan shape as [[snapshotRead]].
-    */
-  private[ops] def commitHeadRead(s: SparkSession, root: String): DataFrame = {
-    val log = commitLogDir(root)
-    val files = manifestFiles(s, log, headVersion(s, log))
-    require(files.nonEmpty, s"empty commit log under $root")
-    Tables.normalizeTs(s.read.parquet(files.map(f => s"$root/$f"): _*))
-  }
-
   /** The checkpointed-log layout: ONE ranged write of the events table
     * produces 14 files, committed as 14 sequential incremental appends
     * (v1..v14) — so the log crosses the [[CheckpointInterval]] boundary
@@ -1297,7 +1261,7 @@ object Partitioned {
     "q_commit_checkpoint",
     (s, d) => {
       val root = checkpointCommitLayout(s, d)
-      commitHeadRead(s, root)
+      snapshotRead(s, root, headVersion(s, commitLogDir(root)))
         .groupBy("event_type")
         .agg(
           count(lit(1)).as("n_events"),
@@ -1320,13 +1284,7 @@ object Partitioned {
     "q_concurrent_commit",
     (s, d) => {
       val root = concurrentCommitLayout(s, d)
-      commitHeadRead(s, root)
-        .groupBy("event_type")
-        .agg(
-          count(lit(1)).as("n_events"),
-          sum(col("value").cast(org.apache.spark.sql.types.DecimalType(28, 2)))
-            .cast("double").as("total_value"))
-        .orderBy("event_type")
+      typeTotals(snapshotRead(s, root, headVersion(s, commitLogDir(root))))
     },
     // the FULL table: both racing writers' rows exactly once on top of
     // the base commit — the exactly-once law as a hash

@@ -1081,6 +1081,18 @@ object Sampling {
              FROM packed ORDER BY source""")
   )
 
+  /** The replication weight of a document: its word count, capped at 8. */
+  private[graft] def replicaWeight: Column =
+    least(size(split(col("text"), " ")).cast("long"), lit(8L))
+
+  /** The replication-min-hash priority over `doc_id` and the weight
+    * column `w`: the minimum Knuth hash of the doc's w replicas. The
+    * batch sample and its streaming twin both draw with this Column.
+    */
+  private[graft] def replicaPriority: Column =
+    array_min(transform(sequence(lit(0L), col("w") - 1),
+      r => (col("doc_id") * 8L + r) % 2147483647L * 2654435761L % 4294967296L))
+
   /** WEIGHT-PROPORTIONAL SAMPLING (r7) — documents drawn with
     * probability ∝ an integer weight (token count, capped at 8): the
     * training-mix primitive when "sample by tokens, not by documents"
@@ -1104,12 +1116,8 @@ object Sampling {
     "q_weighted_sample",
     (s, d) =>
       documents(s, d)
-        .select(col("doc_id"), col("lang"),
-          least(size(split(col("text"), " ")).cast("long"), lit(8L)).as("w"))
-        .withColumn("priority",
-          array_min(transform(sequence(lit(0L), col("w") - 1),
-            r => (col("doc_id") * 8L + r) % 2147483647L *
-              2654435761L % 4294967296L)))
+        .select(col("doc_id"), col("lang"), replicaWeight.as("w"))
+        .withColumn("priority", replicaPriority)
         .orderBy(col("priority"), col("doc_id"))
         .limit(20),
     Some("""SELECT doc_id, lang,

@@ -1650,20 +1650,17 @@ object Replay {
     s.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$live/*.parquet")
-      .select(col("doc_id"),
-        least(size(split(col("text"), " ")).cast("long"), lit(8L)).as("w"))
-      .withColumn("priority",
-        array_min(transform(sequence(lit(0L), col("w") - 1),
-          r => (col("doc_id") * 8L + r) % 2147483647L *
-            2654435761L % 4294967296L)))
+      .select(col("doc_id"), graft.ops.Sampling.replicaWeight.as("w"))
+      .withColumn("priority", graft.ops.Sampling.replicaPriority)
       .as[WDoc]
   }
 
   /** STREAMING WEIGHTED SAMPLE (E16 × E14) — q_weighted_sample as a
     * sample-on-ingest operator: the replication-min-hash priority is a
-    * pure per-row expression (identical Column tree to the batch
-    * query), so the bottom-k BY PRIORITY is a deterministic set and
-    * the streaming fold just maintains it — per shard, k rows of
+    * pure per-row expression (the batch query's own
+    * [[graft.ops.Sampling.replicaPriority]] Column), so the bottom-k BY
+    * PRIORITY is a deterministic set and the streaming fold just
+    * maintains it — per shard, k rows of
     * state, O(shards·k) total regardless of stream length. The final
     * batch step merges the 8 shard flushes (≤ 8k rows) into the global
     * bottom-20, which equals the batch bottom-20 because each shard's

@@ -42,28 +42,25 @@ class PartitionedSpec extends SparkSpec {
     def parquetFiles(p: String): Seq[java.io.File] =
       new java.io.File(p).listFiles().toSeq
         .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    // force a multi-file compaction even on the tiny corpus
-    spark.conf.set(Partitioned.COMPACT_TARGET_BYTES_CONF, (64L << 10).toString)
-    try {
-      assert(Partitioned.qCompact.fn(spark, sf0001).count() > 0)
-      val before = parquetFiles(Partitioned.smallFiles(spark, sf0001)).size
-      val afterFiles = parquetFiles(Partitioned.compactedDir(sf0001))
-      assert(before == 64, s"small-file input layout must be 64 files, was $before")
-      assert(afterFiles.size > 1, "target forced a multi-file layout")
-      assert(afterFiles.size < before / 4,
-        s"compaction must collapse the file count: $before -> ${afterFiles.size}")
-      // range clustering: per-file [min,max] of the range key do not overlap
-      val ranges = afterFiles.map { f =>
-        val df = spark.read.parquet(f.getAbsolutePath)
-          .agg(min("l_orderkey"), max("l_orderkey")).head()
-        (df.getLong(0), df.getLong(1))
-      }.sortBy(_._1)
-      ranges.sliding(2).foreach {
-        case Seq((_, aMax), (bMin, _)) =>
-          assert(aMax <= bMin, s"file key ranges overlap: $ranges")
-        case _ =>
-      }
-    } finally spark.conf.unset(Partitioned.COMPACT_TARGET_BYTES_CONF)
+    // a 64 KiB target forces a multi-file compaction even on the tiny corpus
+    assert(Partitioned.compact(spark, sf0001, 64L << 10).count() > 0)
+    val before = parquetFiles(Partitioned.smallFiles(spark, sf0001)).size
+    val afterFiles = parquetFiles(Partitioned.compactedDir(sf0001))
+    assert(before == 64, s"small-file input layout must be 64 files, was $before")
+    assert(afterFiles.size > 1, "target forced a multi-file layout")
+    assert(afterFiles.size < before / 4,
+      s"compaction must collapse the file count: $before -> ${afterFiles.size}")
+    // range clustering: per-file [min,max] of the range key do not overlap
+    val ranges = afterFiles.map { f =>
+      val df = spark.read.parquet(f.getAbsolutePath)
+        .agg(min("l_orderkey"), max("l_orderkey")).head()
+      (df.getLong(0), df.getLong(1))
+    }.sortBy(_._1)
+    ranges.sliding(2).foreach {
+      case Seq((_, aMax), (bMin, _)) =>
+        assert(aMax <= bMin, s"file key ranges overlap: $ranges")
+      case _ =>
+    }
   }
 
   test("q_manifest_skip: prunes most files, and skipping is SOUND") {
@@ -173,9 +170,9 @@ class PartitionedSpec extends SparkSpec {
       v1.select("event_id").exceptAll(again.select("event_id")).isEmpty)
 
     // append-only: every v1 file is still listed at v2
-    val m = spark.read.parquet(s"$root/_graft_versions")
-    val f1 = m.where(col("version") <= 1).collect().map(_.getString(0)).toSet
-    val f2 = m.where(col("version") <= 2).collect().map(_.getString(0)).toSet
+    val log = s"$root/_graft_log"
+    val f1 = Partitioned.manifestFiles(spark, log, 1).toSet
+    val f2 = Partitioned.manifestFiles(spark, log, 2).toSet
     assert(f1.subsetOf(f2) && f2.size > f1.size)
   }
 
@@ -246,10 +243,10 @@ class PartitionedSpec extends SparkSpec {
     assert(Partitioned.commitAppend(spark, log, Seq("base.parquet")) == 1)
     // deterministic race window: the "winner" takes v2 directly, so the
     // protocol-level attempt at v2 must CAS-fail...
-    assert(Partitioned.tryCommit(spark, log, 2,
-      Partitioned.manifestFiles(spark, log, 1), Seq("winner.parquet")))
-    assert(!Partitioned.tryCommit(spark, log, 2,
-      Partitioned.manifestFiles(spark, log, 1), Seq("loser.parquet")),
+    assert(Partitioned.tryCommitDelta(spark, log, 2, "append",
+      adds = Seq("winner.parquet"), removes = Seq.empty))
+    assert(!Partitioned.tryCommitDelta(spark, log, 2, "append",
+      adds = Seq("loser.parquet"), removes = Seq.empty),
       "v2 is taken; the loser's attempt must fail, never overwrite")
     // ...and the loop retries to v3 REBASED on v2: the winner's file is
     // in the loser's manifest
@@ -324,7 +321,8 @@ class PartitionedSpec extends SparkSpec {
 
   test("q_concurrent_commit layout: two racing writers land v2 and v3; head == base + both batches exactly once") {
     val root = Partitioned.concurrentCommitLayout(spark, sf0001)
-    val head = Partitioned.commitHeadRead(spark, root)
+    val head = Partitioned.snapshotRead(spark, root,
+      Partitioned.headVersion(spark, s"$root/_graft_log"))
     val full = graft.ops.Tables.events(spark, sf0001)
     assert(head.count() == full.count(), "head must hold every row exactly once")
     assert(head.select("event_id").distinct().count() == full.count())
@@ -443,8 +441,11 @@ class PartitionedSpec extends SparkSpec {
   test("checkpoint content includes rewrite removes; legacy full-snapshot bodies read as bases") {
     val root = java.nio.file.Files.createTempDirectory("graft_cc_mixed_")
     val log = s"$root/_graft_log"
-    // legacy full-snapshot v1 (the pre-r14 body shape)
-    assert(Partitioned.tryCommit(spark, log, 1, Seq.empty, Seq("a.parquet", "b.parquet")))
+    // legacy full-snapshot v1 (no `#fmt` header), written as earlier
+    // builds wrote it
+    Files.createDirectories(Paths.get(log))
+    Files.write(Paths.get(s"$log/v00001.txt"),
+      "#op=append\na.parquet\nb.parquet".getBytes("UTF-8"))
     // delta commits on top of the legacy base
     assert(Partitioned.commitAppend(spark, log, Seq("c.parquet")) == 2)
     assert(Partitioned.commitRewrite(spark, log,
@@ -503,7 +504,33 @@ class PartitionedSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(
       f"$log/v${Partitioned.CheckpointInterval}%05d.ckpt")))
     // exactly-once: the reconstructed read equals the raw table
-    val got = Partitioned.commitHeadRead(spark, root).count()
+    val got = Partitioned.snapshotRead(spark, root, head).count()
     assert(got == Tables.events(spark, sf0001).count())
+  }
+
+  test("one version log: Partitioned.scala keeps one version format, body writer, snapshot read and DV apply") {
+    // time travel and vacuum commit through the `_graft_log` commit log,
+    // tryCommitDelta writes every body, snapshotRead is every version
+    // read, the compaction target is a parameter, one helper applies
+    // deletion vectors, and the replication-min-hash priority is one
+    // Column shared by the batch and streaming samples; a copy fails here
+    def read(f: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"src/main/scala/graft/$f")), "UTF-8")
+    def occurrences(src: String, word: String) =
+      Iterator.iterate(src.indexOf(word))(i => src.indexOf(word, i + 1)).takeWhile(_ >= 0).size
+    val partitioned = read("ops/Partitioned.scala")
+    val samplers = read("ops/Sampling.scala") + read("streaming/Replay.scala")
+    val drift = for {
+      (src, word, want) <- Seq(
+        (partitioned, "_graft_versions", 0),
+        (partitioned, "def tryCommit(", 0),
+        (partitioned, "def tryCommitOp(", 0),
+        (partitioned, "def commitHeadRead(", 0),
+        (partitioned, "spark.graft.compact", 0),
+        (partitioned, "\"left_anti\"", 1),
+        (samplers, "2654435761L % 4294967296L", 1))
+      if occurrences(src, word) != want
+    } yield s"`$word` ${occurrences(src, word)}× (want $want)"
+    assert(drift.isEmpty, s"a second version path or copy is back: ${drift.mkString(", ")}")
   }
 }
