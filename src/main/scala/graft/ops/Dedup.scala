@@ -345,7 +345,7 @@ object Dedup {
 
   /** Connected components as an [[Iterate.Loop]]: the mirrored pair set
     * and every node labelled with its own id (`stage`d: [[Materialize]]
-    * in [[connectedComponents]], `identity` in the PLANS.md hook), and
+    * in [[connectedComponents]], `identity` in the plan-ledger hook), and
     * [[ccStep]].
     */
   private[graft] def ccLoop(pairs: DataFrame, nodes: DataFrame, stage: DataFrame => DataFrame)

@@ -281,7 +281,7 @@ object Graph {
 
   /** PageRank as an [[Iterate.Loop]]: the trade edges with out-degrees
     * attached and the node set (`stage`d: [[Materialize]] in
-    * [[qPagerank]], `identity` in the PLANS.md hook), uniform round-0
+    * [[qPagerank]], `identity` in the plan-ledger hook), uniform round-0
     * ranks SCALE div n, and [[pagerankStep]].
     */
   private[graft] def pagerankLoop(s: SparkSession, d: String, stage: DataFrame => DataFrame)

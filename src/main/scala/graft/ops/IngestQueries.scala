@@ -10,21 +10,21 @@ import graft.ingest.{Ingest, PPComplete}
   */
 object IngestQueries {
 
-  /** The fixture directory of the checkout this code was compiled in:
-    * the first ancestor of the class location
-    * (`<checkout>/target/scala-2.13/classes`) holding
-    * `src/test/resources`, else the one under the working directory.
-    * The engine and its DuckDB oracles read the same absolute files.
+  /** The checkout this code was compiled in: the first ancestor of the
+    * class location (`<checkout>/target/scala-2.13/classes`) holding
+    * `src/test/resources`, else the working directory. The engine and
+    * its DuckDB oracles read the same absolute fixture files under it.
     */
-  private val fixtureDir: String = {
+  private[graft] val checkout: String = {
     val classes = java.nio.file.Paths.get(
       getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
     Iterator.iterate(classes)(_.getParent).takeWhile(_ != null)
-      .map(_.resolve("src/test/resources"))
-      .find(java.nio.file.Files.isDirectory(_))
-      .getOrElse(java.nio.file.Paths.get("src/test/resources").toAbsolutePath)
+      .find(p => java.nio.file.Files.isDirectory(p.resolve("src/test/resources")))
+      .getOrElse(java.nio.file.Paths.get("").toAbsolutePath)
       .toString
   }
+
+  private val fixtureDir = s"$checkout/src/test/resources"
 
   val fixturePath = s"$fixtureDir/pp_complete.csv"
 

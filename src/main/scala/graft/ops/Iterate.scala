@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions.{sum, when}
   * counter and, for a converging loop, one observed count per round live
   * on the driver.
   *
-  * The PLANS.md / QueriesPlanSpec plan hooks run the SAME step once on a
-  * lazy round-0 state ([[Loop.once]]), so the audited round is the
-  * shipped round.
+  * The plan-ledger ([[graft.PlanDump]]) and QueriesPlanSpec hooks run the
+  * SAME step once on a lazy round-0 state ([[Loop.once]]), so the
+  * audited round is the shipped round.
   */
 object Iterate {
 

@@ -54,38 +54,34 @@ object Partitioned {
             ORDER BY event_id""")
   )
 
-  /** Per-sfDir catalog database holding BUCKETED copies of
-    * lineitem/orders on the join key — the second storage-layout lever
-    * (alongside day-partitioning): two tables bucketed+sorted on the
-    * same key join with ZERO exchanges, deleting the dominant cost of
-    * every fact-fact join a 100 TB pipeline repeats. Written once per sf
-    * dir (the one-shot layout job), read back through the catalog.
+  /** BUCKETED copies of lineitem/orders on the join key — the second
+    * storage-layout lever (alongside day-partitioning): two tables
+    * bucketed+sorted on the same key join with ZERO exchanges, deleting
+    * the dominant cost of every fact-fact join a 100 TB pipeline
+    * repeats. One [[Staged]] layout holds a directory per table; Spark
+    * reads bucketing from the catalog, not the files, so each session
+    * registers each directory as a table named after its location, and
+    * returns the two table names.
     */
-  private def bucketedDb(s: SparkSession, d: String): String = {
-    // content-keyed like a staged layout: regenerated source tables get
-    // a new database, never a stale bucketed copy
-    val db = "graft_bkt_" + Staged.sourceKey(Seq(s"$d/lineitem.parquet", s"$d/orders.parquet"))
-    if (!s.catalog.databaseExists(db)) {
-      // a crashed previous run can leave the warehouse dir without the
-      // catalog entry — clear it before CREATE. Resolve the REAL
-      // warehouse root from the session conf (a cwd-relative path would
-      // miss it whenever cwd differs from the session's launch dir).
-      val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir"))
-      val whPath =
-        if (wh.getScheme == "file") java.nio.file.Paths.get(wh)
-        else java.nio.file.Paths.get(s.conf.get("spark.sql.warehouse.dir"))
-      graft.FsUtil.deleteRecursively(whPath.resolve(s"$db.db"))
-      s.sql(s"CREATE DATABASE $db")
-      Tables.lineitem(s, d)
-        .select("l_orderkey", "l_extendedprice", "l_quantity")
-        .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .mode("overwrite").saveAsTable(s"$db.lineitem_b")
-      Tables.orders(s, d)
-        .select("o_orderkey", "o_orderpriority")
-        .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .mode("overwrite").saveAsTable(s"$db.orders_b")
+  private def bucketedTables(s: SparkSession, d: String): (String, String) = {
+    val tables = Seq(
+      ("lineitem_b", Tables.lineitem(s, d).select("l_orderkey", "l_extendedprice", "l_quantity"), "l_orderkey"),
+      ("orders_b", Tables.orders(s, d).select("o_orderkey", "o_orderpriority"), "o_orderkey"))
+    def named(dir: String, t: String) =
+      s"graft_bkt_${java.util.UUID.nameUUIDFromBytes(dir.getBytes("UTF-8")).toString.replace("-", "")}_$t"
+    val out = Staged.layout(s, "bkt", Seq(s"$d/lineitem.parquet", s"$d/orders.parquet"),
+        tables.map(t => s"${t._1}/_SUCCESS")) { tmp =>
+      for ((t, df, key) <- tables) {
+        df.write.bucketBy(8, key).sortBy(key).option("path", s"$tmp/$t").saveAsTable(named(tmp, t))
+        s.sql(s"DROP TABLE ${named(tmp, t)}") // an external table: the files stay
+      }
     }
-    db
+    val Seq(l, o) = tables.map { case (t, df, key) =>
+      s.sql(s"CREATE TABLE IF NOT EXISTS ${named(out, t)} (${df.schema.toDDL}) USING parquet " +
+        s"CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS LOCATION '$out/$t'")
+      named(out, t)
+    }
+    (l, o)
   }
 
   /** Fact-fact join over the bucketed layout: per-priority revenue of
@@ -97,10 +93,10 @@ object Partitioned {
   val qJoinBucketed = Q(
     "q_join_bucketed",
     (s, d) => {
-      val db = bucketedDb(s, d)
-      s.table(s"$db.lineitem_b")
+      val (lineitemB, ordersB) = bucketedTables(s, d)
+      s.table(lineitemB)
         .hint("merge") // shuffle-sensitive strategy: no broadcast
-        .join(s.table(s"$db.orders_b"), col("l_orderkey") === col("o_orderkey"))
+        .join(s.table(ordersB), col("l_orderkey") === col("o_orderkey"))
         .where(col("l_quantity") > 30)
         .groupBy("o_orderpriority")
         .agg(

@@ -17,9 +17,32 @@ import org.apache.spark.sql.SparkSession
   */
 object Staged {
 
+  /** The directory every layout lives under: `java.io.tmpdir`. */
+  def root: String = System.getProperty("java.io.tmpdir")
+
+  /** The JVM's launch tmpdir, where `Files.createTempDirectory` keeps
+    * putting replay and sink dirs: the JDK reads it once at start-up,
+    * so [[isolated]] moves [[root]] but not this.
+    */
+  private[graft] val jvmRoot: String = root
+
+  /** Runs `body` with [[root]] moved to a fresh empty directory, deleted
+    * afterwards, so every layout `body` stages is built cold whatever
+    * the JVM's tmpdir already holds.
+    */
+  private[graft] def isolated[T](body: => T): T = {
+    val (outer, dir) = (root, java.nio.file.Files.createTempDirectory("graft-isolated-"))
+    System.setProperty("java.io.tmpdir", dir.toString)
+    try body
+    finally {
+      System.setProperty("java.io.tmpdir", outer)
+      graft.FsUtil.deleteRecursively(dir)
+    }
+  }
+
   /** Location of the layout `name` over `sources`, built or not. */
   def path(name: String, sources: Seq[String]): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_${name}_${sourceKey(sources)}"
+    s"$root/graft_${name}_${sourceKey(sources)}"
 
   /** The staged layout `name` over `sources`: its path, after `build`
     * has written it into a private directory and that directory has

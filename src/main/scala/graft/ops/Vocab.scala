@@ -127,7 +127,7 @@ object Vocab {
 
   /** BPE merge training as an [[Iterate.Loop]]: `seq0`, its pair counts
     * (`stage`d: [[Materialize]] in [[bpeDeltaLoop]], `identity` in the
-    * PLANS.md hook) and [[bpeStep]].
+    * plan-ledger hook) and [[bpeStep]].
     */
   private[graft] def bpeLoop(seq0: DataFrame, stage: DataFrame => DataFrame)
       : Iterate.Loop[BpeState] =

@@ -277,7 +277,7 @@ object Replay {
     graft.FsUtil.deleteOnExit(
       java.nio.file.Files.createTempDirectory(s"replay-$tag-out-")).toString
 
-  /** Plan-audit hook (PLANS.md): replay `stream` to exhaustion against a
+  /** Plan-ledger hook ([[graft.PlanDump]]): replay `stream` to exhaustion against a
     * throwaway parquet sink and return the FINAL micro-batch's executed
     * query execution. The stateful operators (StateStoreRestore/Save,
     * StreamingSymmetricHashJoin, StreamingDeduplicateWithinWatermark)
@@ -1642,7 +1642,7 @@ object Replay {
   }
 
   /** The replication-min-hash priority stream over a staged sentinel
-    * dir — the q_stream_sample input, shared with the PlanDump audit
+    * dir — the q_stream_sample input, shared with the PlanDump ledger
     * hook so the plan on file is the plan the declared query runs.
     */
   private[graft] def weightedDocStream(s: SparkSession, live: String): Dataset[WDoc] = {

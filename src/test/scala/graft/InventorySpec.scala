@@ -7,162 +7,44 @@ import org.scalatest.funsuite.AnyFunSuite
   * every DECLARED query must be explicitly triaged into the repo's
   * verification surfaces, and a new `Q(...)` fails this suite until it
   * is. No Spark session — pure set algebra over the companion ledgers
-  * plus the committed audit artifacts, so the whole audit costs
-  * milliseconds and runs on every `sbt test`.
+  * plus the committed artifacts, so the whole audit costs milliseconds
+  * and runs on every `sbt test`.
   *
   * Surfaces audited:
-  *  - plan shape: QueriesPlanSpec.pinned (run-ledger-verified by that
-  *    suite's own meta test) ∪ a PLANS.md section ∪ a documented
-  *    exemption below;
+  *  - plan shape: exactly one `plans/current/<q>.txt` per declared query
+  *    (the [[PlanDump]] ledger), and no file for anything else;
   *  - partition invariance: PartitionInvarianceSpec.shuffleSensitive ∪
   *    a documented exemption below;
   *  - correctness oracle: SparkEntry.oracleSql ∪ the by-design
   *    engine-specific-sketch allowlist (each law-verified by its own
   *    green spec).
   *
-  * r10 hardening (VERDICT r9 missing #4): exemptions are now PER-NAME
-  * DATED REASONS, not per-block prose — each entry is
-  * `name -> "rN: why this specific query needs no pin/sweep"`, the
-  * r9-era entries are frozen in a grandfather ledger, and the ratchet
-  * meta test rejects any NEW entry whose tag predates r10 or whose
-  * reason is thin. The lists can shrink freely; growing one now costs
-  * a dated, reviewable justification in the diff.
+  * r10 hardening (VERDICT r9 missing #4): exemptions are PER-NAME DATED
+  * REASONS, not per-block prose — each entry is
+  * `name -> "rN: why this specific query needs no sweep"`, the r9-era
+  * entries are frozen in a grandfather ledger, and the ratchet meta
+  * test rejects any NEW entry whose tag predates r10 or whose reason is
+  * thin. The list can shrink freely; growing it costs a dated,
+  * reviewable justification in the diff.
   */
 class InventorySpec extends AnyFunSuite {
 
   private val declared: Set[String] = SparkEntry.queries.keySet.toSet
 
-  /** PLANS.md section names, mapped to the declared query each audits:
-    * `## q_x`, `## q_x (final micro-batch)`, and the iterative
-    * `## q_x_round` bodies (the round IS the repeated unit — the
-    * declared query's own plan is just a checkpoint scan).
-    */
-  private def plansMdAudited: Set[String] = {
-    val roundOwner = Map(
-      "q_dedup_cc_round" -> "q_dedup_cc",
-      "q_pagerank_round" -> "q_pagerank",
-      "q_bpe_round" -> "q_bpe_train",
-      "q_label_prop_round" -> "q_label_prop",
-      "q_khop_round" -> "q_khop",
-      "q_random_walk_round" -> "q_random_walk")
-    val src = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("PLANS.md")), "UTF-8")
-    "(?m)^## (q_[a-z0-9_]+)".r.findAllMatchIn(src).map(_.group(1))
-      .map(n => roundOwner.getOrElse(n, n)).toSet
-  }
-
-  /** Queries with neither a QueriesPlanSpec pin nor a PLANS.md section,
-    * each carrying its own dated structural reason. A name may live
-    * here ONLY while it stays out of both surfaces — the staleness
-    * assert below evicts it the moment a pin or section appears.
-    */
-  private val planExempt: Map[String, String] = Map(
-    // per-row projection surfaces
-    "q_scalar_array" -> "r9: per-row scalar-function projection + total-order sort; no data-scale shape to pin (pushdown pinned on siblings)",
-    "q_scalar_date" -> "r9: per-row scalar-function projection + total-order sort; no data-scale shape to pin",
-    "q_scalar_json" -> "r9: per-row get_json_object projection + total-order sort; no data-scale shape to pin",
-    "q_scalar_math" -> "r9: per-row scalar-function projection + total-order sort; no data-scale shape to pin",
-    "q_scalar_string" -> "r9: per-row scalar-function projection + total-order sort; no data-scale shape to pin",
-    "q_normalize" -> "r9: per-group moment broadcast + per-row z projection; moment shape audited on q_corr/q_winsorize siblings",
-    "q_fingerprint" -> "r9: per-row md5 projection; nothing but the output sort exchanges",
-    "q_lang_id" -> "r9: per-row stopword-profile argmax projection; no join/agg at data scale",
-    "q_token_count" -> "r9: per-row tokenizer-count projection; no join/agg at data scale",
-    "q_quality_score" -> "r9: per-row heuristic-score projection; no join/agg at data scale",
-    "q_text_stats" -> "r9: one map-side-combined groupBy to |langs| rows; the q_agg_hash pin locks the partial-agg shape",
-    // single-aggregate / window variants locked by a pinned sibling
-    "q_agg_distinct" -> "r9: count-distinct Expand over the pinned q_agg_hash aggregate shape",
-    "q_rollup" -> "r9: grouping-set Expand over the pinned q_agg_hash aggregate shape",
-    "q_cube" -> "r9: grouping-set Expand over the pinned q_agg_hash aggregate shape",
-    "q_grouping_sets" -> "r9: grouping-set Expand over the pinned q_agg_hash aggregate shape",
-    "q_window_rank" -> "r9: keyed rank window; the q_window_range/percent pins lock the keyed-window shape",
-    "q_window_lag" -> "r9: keyed lag window; same keyed-window shape as the pinned siblings",
-    "q_window_running" -> "r9: keyed running-sum window; same keyed-window shape as the pinned siblings",
-    "q_topk_per_key" -> "r9: bounded-buffer Aggregator vs the pinned q_sample_per_key WindowGroupLimit twin",
-    "q_sessions" -> "r9: single lag-gap keyed window; the q_scd2 pin locks the one-entity-exchange shape",
-    "q_winsorize" -> "r9: per-group percentile broadcast + branch-free per-row clamp; moment shape audited on siblings",
-    "q_cdc_apply" -> "r9: one entity-keyed latest-wins window; the q_scd2 pin locks the shape",
-    "q_union" -> "r9: set-op over two projections; no join/agg shape beyond the pinned scan",
-    "q_except" -> "r9: set-op anti shape over two projections; q_anti pins the anti-join strategy",
-    "q_intersect" -> "r9: set-op semi shape over two projections; q_semi pins the semi-join strategy",
-    "q_unpivot" -> "r9: per-row Expand projection; no data-scale shuffle",
-    "q_heavy_hitters" -> "r9: one map-side-combined groupBy + integer threshold; q_agg_hash locks the shape",
-    "q_top_terms" -> "r9: explode + groupBy + keyed rank; every node shape pinned on q_tfidf/q_inverted_index",
-    "q_sample_stratified" -> "r9: |langs|-row rate broadcast + per-row membership filter; q_mix_balance pins the shape",
-    "q_quantiles" -> "r9: approx-percentile sketch — engine-specific plan, law-verified in QuantileSpec",
-    "q_quantiles_exact" -> "r9: exact percentile over a global sort at correctness-anchor scale; documented anchor of the sketch",
-    "q_approx_distinct" -> "r9: HLL++ partial-agg plan; QualityProfileSpec bounds the estimates",
-    // exact brute-force baselines (documented anchors of audited twins)
-    "q_knn_cosine" -> "r9: exact brute-force anchor — one projection + TakeOrdered funnel; the ANN twins are audited",
-    "q_sql_knn" -> "r9: the same kNN baseline through pure SQL; plan identical to q_knn_cosine by construction",
-    "q_ann_lsh" -> "r9: projection + bucket filter + TakeOrdered; the IVF/PQ siblings pin the probe shapes",
-    "q_dedup_exact" -> "r9: content groupBy + min-id survivor; q_dedup_ngram pins the dedup shuffle discipline",
-    "q_dedup_key" -> "r9: entity-keyed latest-wins window; q_scd2 pins the shape",
-    // iterative drivers sharing an audited round body
-    "q_embedding_cc" -> "r9: CC pointer-jumping rounds shared with the sectioned q_dedup_cc_round body",
-    "q_kmeans" -> "r9: Lloyd rounds behind Materialize; KMeansSpec's inertia law audits the round",
-    "q_bpe_apply" -> "r9: one literal-rule replace over the corpus; the q_bpe_round section audits the loop body",
-    "q_bpe_train_char" -> "r9: same training loop as the sectioned q_bpe_round with the alphabet swapped",
-    "q_bpe_vocab" -> "r9: post-merge groupBy over the q_bpe_round output; the round section audits the loop",
-    // streaming replays covered by the audited stateful shapes
-    "q_stream_cdc" -> "r9: flatMapGroupsWithState replay; the audited join/dedup/sample micro-batch shapes cover the class, ReplaySpec holds the batch-twin law",
-    "q_stream_funnel" -> "r9: stateful suffix-fold replay; operator class on audit via the sectioned streaming shapes + ReplaySpec split law",
-    "q_stream_incremental_dedup" -> "r9: NoTimeout seen-set replay; class covered by audited stateful shapes + ReplaySpec restart law",
-    "q_stream_join_outer" -> "r9: outer range-join replay; the sectioned q_stream_join pin covers the symmetric-hash shape",
-    "q_stream_quality" -> "r9: stateless per-row streaming projection; nothing stateful to audit",
-    "q_stream_sessions" -> "r9: flatMapGroupsWithState sessionization replay; ReplaySpec arrival-order law covers it",
-    "q_stream_sliding" -> "r9: overlapping-window replay; the sectioned tumbling shape + ReplaySpec cover the state class",
-    "q_stream_topk" -> "r9: rank over the drained sink read-back; the streaming agg shape is the audited unit",
-    "q_stream_window" -> "r9: tumbling-window replay; the streaming agg micro-batch shape is on audit",
-    // reference ingest + calendar ops (IngestSpec end-to-end)
-    "q_url_source" -> "r9: DSv2 source scan; IngestSpec drives it and the ingest scan shape is pinned shuffle-free",
-    "q_url_source_unquoted" -> "r9: DSv2 source scan on the mixed-quoting fixture; same pinned scan shape",
-    "q_meta_stats" -> "r9: one-row metadata projection; driver-small by construction",
-    "q_ingest_auto_date" -> "r9: fixture max(ts) aggregate; the pinned q_ingest_pp scan is the data-scale stage",
-    "q_auto_date" -> "r9: events max(ts) aggregate; partial/final max has no plan risk beyond the pinned scan",
-    "q_auto_date_agg" -> "r9: the same aggregate through the typed Aggregator; AutoDateAggSpec proves equivalence",
-    "q_nth_working_day" -> "r9: pure calendar-scalar projection; WorkingDaysSpec holds the laws",
-    "q_publish_date" -> "r9: pure calendar-scalar projection; WorkingDaysSpec holds the laws",
-    "q_jsonl_roundtrip" -> "r9: gzip JSONL sink+source round trip; the oracle hash IS the byte-fidelity audit",
-    // multimodal object-stage decodes (MapPartitions seam)
-    "q_mm_decode" -> "r9: per-partition batch decode on the same MapPartitions seam as the sectioned q_mm_audio",
-    "q_mm_decode_ppm" -> "r9: real-codec decode on the same MapPartitions seam; MultimodalSpec drives the codec",
-    "q_mm_frames" -> "r9: frame-demux fan-out on the same MapPartitions seam",
-    "q_mm_phash" -> "r9: dHash over the decode seam; MultimodalSpec proves band soundness",
-    "q_mm_resize" -> "r9: nearest-neighbor scale on the same MapPartitions seam",
-    "q_multimodal_join" -> "r9: plain equi-join of text and vector modality; join strategy pinned on relational siblings",
-    "q_multimodal_meta" -> "r9: per-row sha256 content-address projection; no data-scale shuffle",
-    "q_split_leakproof" -> "r10: exact-integer Knuth projection over the CC label output; every data-scale stage IS the sectioned q_dedup_cc_round body it reuses",
-    "q_ingest_quarantine" -> "r12: declared surface is a sinks read-back union; the data-scale stage is a shuffle-free per-line classify projection + one reason-partitioned staging write, and IngestSpec drives the routing end to end",
-    "q_stream_dedup_queue" -> "r12: the IDENTICAL dedupStream operator as the sectioned q_stream_dedup, differing only in the DSv2 queue source feeding it; ReplaySpec holds the file-source parity and broker no-relist laws",
-    "q_unigram_lm" -> "r13: vocab-relation DP rounds behind Materialize (the q_bpe_round class); the only corpus-scale stage is one map-side-combined word count locked by the q_agg_hash pin, and VocabSpec's brute-force Viterbi-EM re-derivation fixes every round",
-    "q_concurrent_commit" -> "r13: the declared surface is a head-manifest pruned read + the q_agg_hash aggregate shape; the protocol itself is driver-side file-count metadata (CAS + retry), raced and law-tested in PartitionedSpec, not a data-scale plan",
-    "q_mm_png" -> "r13: per-row encode/decode on the same MapPartitions seam as the sectioned q_mm_audio (q_mm_decode_ppm class); MultimodalSpec drives the CRC/inflate/defilter pipeline",
-    "q_join_skew_aqe" -> "r13: the skew split exists only in the EXECUTED adaptive plan (isFinalPlan), which the lazy-plan pin surfaces cannot see; SkewSpec executes the declared join body under the scoped confs and asserts skew=true on the SMJ",
-    "q_unigram_apply" -> "r13: the q_unigram_lm training loop (q_bpe_round class) plus one vocab-sized lookup join and the q_lm_backoff per-doc aggregate shape; VocabSpec's brute-force encode pass fixes every per-doc count",
-    "q_stream_window_queue" -> "r13: the IDENTICAL windowedCountsDrained operator as the sectioned q_stream_window, differing only in the sharded queue source + per-shard drain sentinels feeding it; ReplaySpec holds the batch parity and sentinel-exclusion laws",
-    "q_stream_sessions_queue" -> "r13: the IDENTICAL sessionize flatMapGroupsWithState operator as q_stream_sessions, differing only in the sharded queue source + drain-barrier sentinels feeding it; ReplaySpec holds the batch lag-gap parity law",
-    "q_stream_join_queue" -> "r14: the IDENTICAL bucketedRangeJoin operator as the sectioned q_stream_join, differing only in the TWO sharded queue sources + drain sentinels feeding its sides; ReplaySpec holds the file-twin/batch parity law",
-    "q_avro_roundtrip" -> "r14: DSv2 container scan + per-partition sink — shuffle-free like the pinned q_url_source scan shape; AvroSourceSpec pins pruning reaching the reader and the full type-map round trip",
-    "q_mm_jpeg" -> "r14: per-row encode/entropy-decode on the same MapPartitions seam as the sectioned q_mm_audio (q_mm_png class); JpegSpec drives the Huffman/DPCM/zigzag/stuffing pipeline against a no-entropy reference",
-    "q_commit_checkpoint" -> "r14: the declared surface is a checkpoint-reconstructed pruned read + the q_agg_hash aggregate shape (the q_concurrent_commit class); the delta-log/checkpoint/truncation protocol is driver-side file-count metadata, law-tested in PartitionedSpec",
-    "q_bloom_skip" -> "r14: plan-time metadata pruning + a per-row filter on the selected files (the q_manifest_skip class); the skip ratio and no-false-negative laws live in PartitionedSpec, which the lazy-plan pin surfaces cannot see",
-    "q_wordpiece_train" -> "r14: the q_bpe_round loop class with the likelihood argmax swapped in — per-round weighted counts + broadcast joins + TakeOrdered over the distinct-word relation behind Materialize; WordpieceSpec re-derives every round driver-side",
-    "q_wordpiece_apply" -> "r14: the training loop above plus a vocab-bounded greedy unroll and the q_unigram_apply lookup-join tail; WordpieceSpec re-derives every doc's maximum-munch count driver-side")
-
-  test("plan surface: every declared query is pinned, PLANS.md-audited, or exempt") {
-    val covered = QueriesPlanSpec.pinned ++ plansMdAudited ++ planExempt.keySet
-    val missing = declared -- covered
+  test("plan surface: every declared query has exactly one plans/current file") {
+    val files = {
+      val listing = java.nio.file.Files.list(java.nio.file.Paths.get("plans/current"))
+      try {
+        import scala.jdk.CollectionConverters._
+        listing.iterator().asScala.map(_.getFileName.toString).toSeq
+      } finally listing.close()
+    }
+    val planned = files.filter(_.endsWith(".txt")).map(_.stripSuffix(".txt")).toSet
+    val missing = declared -- planned
     assert(missing.isEmpty,
-      s"declared queries with NO plan triage (pin it, PlanDump it, or exempt it " +
-        s"with a dated reason): ${missing.toSeq.sorted.mkString(", ")}")
-    val ghosts = (QueriesPlanSpec.pinned ++ planExempt.keySet) -- declared
-    assert(ghosts.isEmpty, s"ledger entries for undeclared queries: $ghosts")
-  }
-
-  test("plan exemptions are not stale: an exempt query has neither pin nor section") {
-    val stale = planExempt.keySet & (QueriesPlanSpec.pinned ++ plansMdAudited)
-    assert(stale.isEmpty,
-      s"now-covered queries still in planExempt (delete them): ${stale.toSeq.sorted}")
+      s"declared queries with no plan file (run graft.PlanDump): ${missing.toSeq.sorted.mkString(", ")}")
+    val strays = files.filterNot(f => f.endsWith(".txt") && declared(f.stripSuffix(".txt")))
+    assert(strays.isEmpty, s"plan files naming no declared query: ${strays.sorted.mkString(", ")}")
   }
 
   /** Queries outside the 4-vs-32-partition sweep, by structural class.
@@ -279,35 +161,13 @@ class InventorySpec extends AnyFunSuite {
     assert(ghosts.isEmpty, s"ledger entries for undeclared queries: $ghosts")
   }
 
-  /** The exemption names grandfathered at the r10 freeze — exactly the
-    * r9 lists, reason-tagged `r9:`. A name OUTSIDE these sets may only
-    * enter an exemption map with a tag of its own round (`r10:` or
-    * later): the dated justification the diff reviewer reads. Never add
-    * to these sets — they exist so the r9 backlog didn't need fake
-    * dates, and they only shrink (the staleness tests above evict).
+  /** The invariance-exemption names grandfathered at the r10 freeze —
+    * exactly the r9 list, reason-tagged `r9:`. A name OUTSIDE this set
+    * may only enter the exemption map with a tag of its own round
+    * (`r10:` or later): the dated justification the diff shows. Never
+    * add to this set — it exists so the r9 backlog didn't need fake
+    * dates, and it only shrinks (the staleness assert above evicts).
     */
-  private val planExemptGrandfather: Set[String] = Set(
-    "q_scalar_array", "q_scalar_date", "q_scalar_json", "q_scalar_math",
-    "q_scalar_string", "q_normalize", "q_fingerprint", "q_lang_id",
-    "q_token_count", "q_quality_score", "q_text_stats",
-    "q_agg_distinct", "q_rollup", "q_cube", "q_grouping_sets",
-    "q_window_rank", "q_window_lag", "q_window_running",
-    "q_topk_per_key", "q_sessions", "q_winsorize", "q_cdc_apply",
-    "q_union", "q_except", "q_intersect", "q_unpivot",
-    "q_heavy_hitters", "q_top_terms", "q_sample_stratified",
-    "q_quantiles", "q_quantiles_exact", "q_approx_distinct",
-    "q_knn_cosine", "q_sql_knn", "q_ann_lsh", "q_dedup_exact", "q_dedup_key",
-    "q_embedding_cc", "q_kmeans", "q_bpe_apply", "q_bpe_train_char",
-    "q_bpe_vocab",
-    "q_stream_cdc", "q_stream_funnel", "q_stream_incremental_dedup",
-    "q_stream_join_outer", "q_stream_quality", "q_stream_sessions",
-    "q_stream_sliding", "q_stream_topk", "q_stream_window",
-    "q_url_source", "q_url_source_unquoted", "q_meta_stats",
-    "q_ingest_auto_date", "q_auto_date", "q_auto_date_agg",
-    "q_nth_working_day", "q_publish_date", "q_jsonl_roundtrip",
-    "q_mm_decode", "q_mm_decode_ppm", "q_mm_frames", "q_mm_phash",
-    "q_mm_resize", "q_multimodal_join", "q_multimodal_meta")
-
   private val invarianceExemptGrandfather: Set[String] = Set(
     "q_filter", "q_topk", "q_sample_hash", "q_split_assign",
     "q_scalar_array", "q_scalar_date", "q_scalar_json", "q_scalar_math",
@@ -334,26 +194,22 @@ class InventorySpec extends AnyFunSuite {
 
   test("exemption ratchet: every exemption carries a dated per-name reason; new names need an r10+ tag") {
     val tagged = raw"^r(\d+): .{12,}".r
-    for ((label, exempt, grandfather) <- Seq(
-        ("planExempt", planExempt, planExemptGrandfather),
-        ("invarianceExempt", invarianceExempt, invarianceExemptGrandfather))) {
-      exempt.foreach { case (name, reason) =>
-        val m = tagged.findFirstMatchIn(reason)
-        assert(m.nonEmpty,
-          s"$label($name): reason must be 'rN: <specific structural justification>' — got '$reason'")
-        val round = m.get.group(1).toInt
-        if (!grandfather(name))
-          assert(round >= 10,
-            s"$label($name): a NEW exemption must carry its own round tag (r10+), " +
-              s"not inherit the grandfathered era — got r$round")
-      }
-      // the grandfather ledger may only shrink: a name in it that has
-      // left the exemption map must be deleted from the ledger too, so
-      // the frozen set can never silently re-admit an old name later
-      val gone = grandfather -- exempt.keySet
-      assert(gone.isEmpty,
-        s"$label grandfather ledger holds names no longer exempt (delete them): ${gone.toSeq.sorted}")
+    invarianceExempt.foreach { case (name, reason) =>
+      val m = tagged.findFirstMatchIn(reason)
+      assert(m.nonEmpty,
+        s"invarianceExempt($name): reason must be 'rN: <specific structural justification>' — got '$reason'")
+      val round = m.get.group(1).toInt
+      if (!invarianceExemptGrandfather(name))
+        assert(round >= 10,
+          s"invarianceExempt($name): a NEW exemption must carry its own round tag (r10+), " +
+            s"not inherit the grandfathered era — got r$round")
     }
+    // the grandfather ledger may only shrink: a name in it that has
+    // left the exemption map must be deleted from the ledger too, so
+    // the frozen set can never silently re-admit an old name later
+    val gone = invarianceExemptGrandfather -- invarianceExempt.keySet
+    assert(gone.isEmpty,
+      s"invarianceExempt grandfather ledger holds names no longer exempt (delete them): ${gone.toSeq.sorted}")
   }
 
   /** The by-design rows-only queries: engine-specific sketches with no

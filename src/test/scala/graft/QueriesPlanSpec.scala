@@ -964,8 +964,8 @@ class QueriesPlanSpec extends SparkSpec {
   }
 
   test("q_stream_pit gate: per-entity serving state — batch twin of the fold is keyed, no broadcast") {
-    // the streaming plan itself is on audit in PLANS.md (final
-    // micro-batch); here pin the staged-input derivation: one events
+    // the streaming plan itself is on audit in plans/current/q_stream_pit.txt
+    // (final micro-batch); here pin the staged-input derivation: one events
     // scan, per-row kind/week projection, no join
     pinsViaHelper("q_stream_pit")
     val p = graft.ops.Tables.events(spark, sf0001)
