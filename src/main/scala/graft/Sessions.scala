@@ -89,4 +89,7 @@ object FsUtil {
     exitDoomed.add(p)
     p
   }
+
+  private[graft] def registeredForExit(p: java.nio.file.Path): Boolean =
+    exitDoomed.contains(p)
 }

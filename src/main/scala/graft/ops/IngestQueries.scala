@@ -136,7 +136,9 @@ object IngestQueries {
   val qIngestQuarantine = Q(
     "q_ingest_quarantine",
     (s, _) => {
-      val out = java.nio.file.Files.createTempDirectory("quarantine-").toString
+      // the sinks are read back lazily, so the dir is reclaimed at JVM exit
+      val out = graft.FsUtil.deleteOnExit(
+        java.nio.file.Files.createTempDirectory("quarantine-")).toString
       val (clean, quar) = graft.ingest.Ingest.quarantineIngest(s, quarantineFixturePath, out)
       s.read.parquet(clean)
         .select(col("transaction_unique_id"), lit("ok").as("reason"))

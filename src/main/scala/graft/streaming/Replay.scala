@@ -127,30 +127,82 @@ object Replay {
     finally graft.FsUtil.deleteRecursively(live)
   }
 
-  /** Stateful-stream state sizing for the REPLAY harness: the shuffle
-    * partition count in force when a streaming query first starts is
-    * BAKED INTO ITS CHECKPOINT as the state-store partition count, and
-    * every micro-batch opens, writes and commits one store per
-    * partition — 32 stores for the replay's kilobytes of state is
-    * fixed cost. Measured warm at sf0.1 on a 4-core host (one
-    * `Probe time` run each, 8 vs 32 stores): q_stream_pit 2.7 vs 5.4 s,
-    * q_stream_join 3.2 vs 4.5 s. Most of the ~5 s/query gap measured
-    * before was not the stores themselves but the `chmod`/`readlink`
-    * process Hadoop forked per store file (4.7 vs 9.9 s, 4.7 vs 10.2 s),
-    * which [[graft.fs]] removed; q_stream_pit's micro-batches went from
-    * ~0.8 s to ~0.4-0.6 s each at 8 stores. A production deployment
-    * sizes this to its state volume at first start exactly the same
-    * way; 8 matches the replay corpus. Batch queries are untouched (the
-    * session value is restored after the replay completes).
-    */
-  private val ReplayStatePartitions = 8
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
 
-  private def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, ReplayStatePartitions.toString)
+  /** State-store sizing: the shuffle partition count in force when a
+    * streaming query first starts is BAKED INTO ITS CHECKPOINT as the
+    * state-store partition count (a restart from that checkpoint keeps
+    * it — Spark restores it from the offset log), and every micro-batch
+    * opens, writes and commits one store per partition and writes one
+    * sink file per partition. The count is therefore sized from the
+    * stream's input, before its first start, with the rule AQE's
+    * parallelism-first coalescing (`CoalesceShufflePartitions`) already
+    * applies to every batch shuffle:
+    *
+    *   target = max(minPartitionSize, min(advisoryPartitionSizeInBytes,
+    *                bytes / leaf-node parallelism))
+    *   n      = clamp(ceil(bytes / target), 1, session shuffle partitions)
+    *
+    * `bytes` sums every streaming leaf ([[streamInputBytes]]), so each
+    * side of a stream-stream join counts on its own. A stream with a
+    * leaf of unknown size runs at the session value. The rule reads
+    * only Spark's own confs: a deployment tunes it the way it tunes
+    * AQE. At sf0.1 the pit replay's 0.7 MB gives 1 partition (one
+    * state-store task and one sink file per micro-batch) and each
+    * stream-stream join's two ~2 MB sides give 4.
+    */
+  private def statePartitions(stream: DataFrame): Option[Int] = {
+    val s = stream.sparkSession
+    def bytesConf(key: String) =
+      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s.conf.get(key))
+    streamInputBytes(stream).map { bytes =>
+      val parallelism = s.conf.getOption("spark.sql.leafNodeDefaultParallelism")
+        .fold(s.sparkContext.defaultParallelism)(_.toInt)
+      val target = math.max(
+        bytesConf("spark.sql.adaptive.coalescePartitions.minPartitionSize"),
+        math.min(bytesConf("spark.sql.adaptive.advisoryPartitionSizeInBytes"),
+          bytes / parallelism))
+      val n = (bytes + target - 1) / target
+      math.min(math.max(n, 1L), s.conf.get(ShufflePartitions).toLong).toInt
+    }
+  }
+
+  /** Bytes behind every streaming leaf of `stream`'s logical plan: a
+    * file source's path or glob (directories summed recursively) and a
+    * [[graft.sources.QueueBroker.LogQueue]]'s shard logs. None when a
+    * leaf's size is unknown — the iterator-fed
+    * [[graft.sources.QueueBroker.Queue]] or any other source.
+    */
+  private def streamInputBytes(stream: DataFrame): Option[Long] = {
+    import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+    val hadoop = stream.sparkSession.sparkContext.hadoopConfiguration
+    def pathBytes(path: String): Long = {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(hadoop)
+      Option(fs.globStatus(p)).toSeq.flatten.map { st =>
+        if (st.isDirectory) fs.getContentSummary(st.getPath).getLength else st.getLen
+      }.sum
+    }
+    val leaves = stream.queryExecution.logical.collectLeaves().filter(_.isStreaming).map {
+      case r: StreamingRelation => r.dataSource.options.get("path").map(pathBytes)
+      case r: StreamingRelationV2 if r.table.isInstanceOf[graft.sources.QueueTable] =>
+        graft.sources.QueueBroker.get(r.extraOptions.get("queue")) match {
+          case q: graft.sources.QueueBroker.LogQueue =>
+            Some((0 until q.nShards).map(i => q.shard(i).path.toFile.length).sum)
+          case _ => None
+        }
+      case _ => None
+    }
+    if (leaves.forall(_.isDefined)) Some(leaves.flatten.sum) else None
+  }
+
+  private def withStatePartitions[T](stream: DataFrame)(body: => T): T = {
+    val s = stream.sparkSession
+    val prev = s.conf.get(ShufflePartitions)
+    statePartitions(stream).foreach(n => s.conf.set(ShufflePartitions, n.toString))
     try body
-    finally spark.conf.set(key, prev)
+    finally s.conf.set(ShufflePartitions, prev)
   }
 
   /** Eagerly unload every loaded state-store provider once a finite
@@ -225,7 +277,7 @@ object Replay {
     }
     val ckpt = ckptDir.getOrElse(
       java.nio.file.Files.createTempDirectory("replay-ckpt-").toString)
-    try withStatePartitions(stream.sparkSession) {
+    try withStatePartitions(stream) {
       val q = stream.writeStream
         .format("parquet")
         .outputMode(OutputMode.Append())
@@ -284,9 +336,12 @@ object Replay {
     * exist only in the per-batch IncrementalExecution — the declared
     * queries return the sink read-back, whose plan is just a parquet
     * scan, so this is the only way to put the streaming shape on audit.
+    * A given `ckptDir` is kept and resumed, as in the
+    * checkpoint-explicit [[replayToParquet]].
     */
-  def lastExecution(stream: DataFrame, outDir: String): org.apache.spark.sql.execution.QueryExecution =
-    drain(stream, outDir, None) match {
+  def lastExecution(stream: DataFrame, outDir: String,
+      ckptDir: Option[String] = None): org.apache.spark.sql.execution.QueryExecution =
+    drain(stream, outDir, ckptDir) match {
       case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
         w.streamingQuery.lastExecution
     }
@@ -1588,9 +1643,11 @@ object Replay {
 
   /** Shard count for the streaming sampler's bottom-k state — the
     * parallelism knob: state is k rows PER SHARD, shards hash across
-    * the state-store partitions, and the final merge reads shards·k
-    * rows. 8 matches the replay harness (ReplayStatePartitions); a
-    * production deployment sizes it to its executor count.
+    * the state-store partitions (sized from the replay's input, see
+    * [[statePartitions]]), and the final merge reads shards·k rows. It
+    * is part of the query's plan, not of its sizing: the sentinel dir
+    * writes one drain row per shard, so the count is fixed here, and 8
+    * shards spread over up to 8 state-store partitions.
     */
   private val SampleShards = 8L
 

@@ -195,6 +195,23 @@ class IngestSpec extends SparkSpec {
     assert(spark.read.parquet(quar).count() == 0)
   }
 
+  test("q_ingest_quarantine registers its sink dir for reclamation at JVM exit") {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def sinkDirs(): Set[java.nio.file.Path] = {
+      val listing = Files.list(tmp)
+      try {
+        import scala.jdk.CollectionConverters._
+        listing.iterator().asScala.filter(_.getFileName.toString.startsWith("quarantine-")).toSet
+      } finally listing.close()
+    }
+    val before = sinkDirs()
+    assert(graft.SparkEntry.queries("q_ingest_quarantine")(spark, sf0001).count() == 69)
+    val made = sinkDirs() -- before
+    assert(made.size == 1, s"one sink dir per call, got $made")
+    assert(graft.FsUtil.registeredForExit(made.head),
+      s"${made.head} is not registered for deletion at JVM exit")
+  }
+
   test("strict mode contrast: the SAME fixture aborts the reference path (§1.6 fail-on-malformed)") {
     val fix = graft.ops.IngestQueries.quarantineFixturePath
     assertThrows[IllegalArgumentException] {

@@ -711,6 +711,85 @@ class ReplaySpec extends SparkSpec {
     } finally graft.sources.QueueBroker.remove(queue)
   }
 
+  /** The distinct state-store partition counts of a replay's stateful
+    * operators, read from its final micro-batch.
+    */
+  private def statePartitions(qe: org.apache.spark.sql.execution.QueryExecution): Seq[Int] = {
+    import org.apache.spark.sql.execution.streaming.operators.stateful.StatefulOperator
+    val counts = qe.executedPlan.collect { case op: StatefulOperator => op.stateInfo.map(_.numPartitions) }
+    assert(counts.nonEmpty && counts.forall(_.isDefined), s"no stateful operator in ${qe.executedPlan}")
+    counts.flatten.distinct
+  }
+
+  private def dirBytes(dir: String): Long = {
+    val walk = Files.walk(Paths.get(dir))
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
+    } finally walk.close()
+  }
+
+  /** Run `body` with Spark's coalescing target pinned to `bytes`, so the
+    * state sizing rule yields ceil(input bytes / `bytes`) partitions.
+    */
+  private def withCoalesceTarget[T](bytes: Long)(body: => T): T = {
+    val keys = Seq("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, bytes.toString))
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  private def sinkOut(tag: String) = Files.createTempDirectory(s"sizing-$tag-").toString + "/rows"
+
+  test("state sizing: a replay of less than 1 MB runs its state stores at 1 partition") {
+    val dir = sliceEvents(4, sentinel = true)
+    assert(dirBytes(dir) < (1L << 20))
+    assert(spark.conf.get("spark.sql.shuffle.partitions").toInt > 1,
+      "the session must allow more than one partition for the law to bite")
+    val qe = Replay.lastExecution(
+      Replay.windowedCountsDrained(Replay.readEvents(spark, dir)), sinkOut("small"))
+    assert(statePartitions(qe) == Seq(1))
+  }
+
+  test("state sizing: a stream-stream join counts the bytes of both sides") {
+    val dir = sliceEvents(4, sentinel = false)
+    withCoalesceTarget(dirBytes(dir)) {
+      val one = Replay.lastExecution(
+        Replay.windowedCounts(Replay.readEvents(spark, dir)), sinkOut("side"))
+      assert(statePartitions(one) == Seq(1), "one side is one target's worth of bytes")
+      val both = Replay.lastExecution(Replay.rangeJoinStream(spark, dir), sinkOut("join"))
+      assert(statePartitions(both) == Seq(2), "the join reads the dir twice: two targets")
+    }
+  }
+
+  test("state sizing: a restart from a caller checkpoint keeps its first-start count after more files land") {
+    val src = sliceEvents(4, sentinel = false)
+    val live = Files.createTempDirectory("sizing-live-")
+    def deliver(names: String*): Unit = names.foreach { n =>
+      val dest = live.resolve(n)
+      Files.copy(Paths.get(src, n), dest, StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(dest,
+        FileTime.fromMillis(1000000000000L + n.takeWhile(_.isDigit).toInt * 60000L))
+    }
+    deliver("00.parquet", "01.parquet")
+    val out = sinkOut("restart")
+    val ckpt = Files.createTempDirectory("sizing-ckpt-").toString
+    withCoalesceTarget(dirBytes(live.toString)) {
+      val first = Replay.lastExecution(Replay.rangeJoinStream(spark, live.toString), out, Some(ckpt))
+      assert(statePartitions(first) == Seq(2))
+      deliver("02.parquet", "03.parquet")
+      val fresh = Replay.lastExecution(Replay.rangeJoinStream(spark, live.toString), sinkOut("fresh"))
+      assert(statePartitions(fresh).head > 2, "a first start over the grown input sizes up")
+      val resumed = Replay.lastExecution(Replay.rangeJoinStream(spark, live.toString), out, Some(ckpt))
+      assert(statePartitions(resumed) == Seq(2), "the checkpoint's count wins on restart")
+    }
+  }
+
   test("one sink: src/main starts a stream only in Replay's drain, and names sink dirs only in sinkDir") {
     val walk = Files.walk(Paths.get("src/main"))
     val sources =
@@ -736,6 +815,33 @@ class ReplaySpec extends SparkSpec {
     val sinkDirs = occurrences(src, "-out-")
     assert(sinkDirs.size == 1 && inside("sinkDir", sinkDirs.head),
       "a declared replay's sink dir must come from sinkDir, which registers it for exit cleanup")
+  }
+
+  test("state sizing ratchet: no integer literal sets spark.sql.shuffle.partitions under src/main/scala/graft/streaming") {
+    val walk = Files.walk(Paths.get("src/main/scala/graft/streaming"))
+    val sources =
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      } finally walk.close()
+    val key = "\"spark.sql.shuffle.partitions\""
+    val sets = sources.flatMap { f =>
+      val t = new String(Files.readAllBytes(f), "UTF-8")
+      def boundTo(rhs: String) =
+        (raw"val\s+(\w+)\s*(?::\s*\w+)?\s*=\s*" + rhs).r.findAllMatchIn(t).map(_.group(1)).toSet
+      val keyNames = boundTo(java.util.regex.Pattern.quote(key)) + key
+      val intNames = boundTo(raw"-?\d+L?\b")
+      raw"conf\.set\(\s*([^,]+?)\s*,\s*([^)]*)\)".r.findAllMatchIn(t)
+        .filter(m => keyNames(m.group(1)))
+        .map(m => (f.toString, m.group(2), intNames))
+        .toSeq
+    }
+    assert(sets.nonEmpty, "the replay's state sizing sets the shuffle partitions somewhere")
+    sets.foreach { case (f, value, intNames) =>
+      val literal = raw"\b\d+\b".r.findFirstIn(value).isDefined
+      val named = raw"\w+".r.findAllIn(value).exists(intNames)
+      assert(!literal && !named, s"$f sets the shuffle partitions from an integer literal: $value")
+    }
   }
 
   test("state-store unload resolution degrades to a no-op when the private API is absent") {
