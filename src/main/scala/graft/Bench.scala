@@ -82,9 +82,8 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    // Optional comma-separated subset (profiling aid): bench only these.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+    // Optional subset (profiling aid): bench only these.
+    val only = SparkEntry.only
 
     // Warm the session (codegen compiler, parquet footer reads, shuffle
     // machinery) so per-query numbers are steady-state. Under a subset

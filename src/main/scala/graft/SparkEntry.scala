@@ -41,4 +41,13 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     declared.collect { case Q(n, _, Some(sql)) => n -> sql }.toMap
+
+  /** The dev subset filter of `Bench` and `Verify`:
+    * `SPARK_GRAFT_ONLY=q_a, q_b` selects those queries; unset, all.
+    */
+  def only: Option[Set[String]] = subset(sys.env.get("SPARK_GRAFT_ONLY"))
+
+  /** A comma list of query names, each trimmed, empty entries dropped. */
+  private[graft] def subset(spec: Option[String]): Option[Set[String]] =
+    spec.map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
 }

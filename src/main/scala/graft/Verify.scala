@@ -9,8 +9,8 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.local(cpus.toInt)
     new java.io.File(outDir).mkdirs()
-    // optional dev filter: SPARK_GRAFT_ONLY=q_a,q_b (driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
+    // optional dev subset (SparkEntry.only)
+    val only = SparkEntry.only
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

@@ -35,16 +35,8 @@ final case class Config(
   def connectionKeyValue: String =
     s"user=$user password=$password host=$host dbname=$database port=$port"
 
-  /** The engine-native equivalent: a JDBC URL + properties for
-    * `DataFrameWriter.jdbc` (what a real Postgres sink would use).
-    */
+  /** The engine-native equivalent: a JDBC URL (pgjdbc's form). */
   def jdbcUrl: String = s"jdbc:postgresql://$host:$port/$database"
-  def jdbcProperties: java.util.Properties = {
-    val p = new java.util.Properties()
-    p.setProperty("user", user)
-    p.setProperty("password", password)
-    p
-  }
 }
 
 object Config {

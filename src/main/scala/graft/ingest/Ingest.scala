@@ -260,24 +260,6 @@ object Ingest {
         }
     }
 
-  /** op-13 stage-metric recovery: the reference measures read /
-    * datetime-convert / write / upload as separate wall-clock spans
-    * (`main.py:211-249`); Spark FUSES scan→convert→write into one
-    * whole-stage-codegen pipeline, so the engine-honest equivalents come
-    * from the write job's own metric system (QueryExecutionListener):
-    * `pipelineTime` = the executor-side fused scan+convert pipeline
-    * duration (ms). Returns it in microseconds.
-    */
-  private def recoverStageMetrics(
-      qe: org.apache.spark.sql.execution.QueryExecution
-  ): Long = {
-    var pipelineMs = 0L
-    qe.executedPlan.foreach { n =>
-      n.metrics.get("pipelineTime").foreach(m => pipelineMs += math.max(0L, m.value))
-    }
-    pipelineMs * 1000
-  }
-
   /** Full run (op-15 orchestration): fetch → scan → type → write with the
     * max(transaction_date) observed on the same pass (op-7 "auto_date"),
     * floored to a calendar date (op-8) — then append one provenance row
@@ -291,8 +273,20 @@ object Ingest {
   ): RunResult =
     run(spark, sourceUrl, ParquetSink(outDir), ParquetSink(metaDir))
 
-  /** Sink-parameterized run (SURVEY §7.1: swap in a JDBC/COPY sink for
+  /** Sink-parameterized run (SURVEY §7.1: swap in a COPY sink for
     * real-Postgres parity without touching the pipeline).
+    *
+    * op-13 provenance: one driver clock read in consecutive laps, so each
+    * duration column times its own part of the run, no two overlap, and
+    * their sum never exceeds `process_duration_us` — wall-clock spans, as
+    * the reference's are (`main.py:211-249`):
+    *  - `download_duration_us`: [[fetchToLocal]];
+    *  - `read_duration_us`: [[readRaw]], i.e. opening, listing and
+    *    resolving the scan on the driver;
+    *  - `datetime_convert_duration_us`: [[typed]] plus the `observe`;
+    *  - `write_duration_us`: the sink's overwrite, the one fused
+    *    scan→parse→convert→write job in which every row is read and typed.
+    * The metadata append itself stays unmeasured, as in the reference.
     */
   def run(
       spark: SparkSession,
@@ -302,63 +296,36 @@ object Ingest {
   ): RunResult = {
     val t0 = System.nanoTime()
     val start = new Timestamp(System.currentTimeMillis())
+    var mark = t0
+    def lapUs(): Long = {
+      val now = System.nanoTime()
+      val us = (now - mark) / 1000
+      mark = now
+      us
+    }
 
-    val dl0 = System.nanoTime()
     val local = fetchToLocal(sourceUrl)
-    val dlUs = (System.nanoTime() - dl0) / 1000
-    val sizeMB = Files.size(Paths.get(local)) / (1024L * 1024L)
+    val dlUs = lapUs()
 
     try {
+      val sizeMB = Files.size(Paths.get(local)) / (1024L * 1024L)
       val raw = readRaw(spark, local)
-      val data = typed(raw)
-
+      val readUs = lapUs()
       // op-7 fused with the load pass: observe piggybacks the aggregate on
       // the write job — no second scan (reference computes the running max
-      // while uploading, `main.py:228-230`).
-      val wr0 = System.nanoTime()
-      // Observation (not raw observe + queryExecution.observedMetrics: the
-      // write command runs its own QueryExecution, so the DataFrame's QE
-      // would never see the metrics — Observation registers a listener).
-      // Unique observation name per run: the listener below uses it to
-      // recognize THIS write's QueryExecution on the async bus — a
-      // late-delivered event from a previous query (e.g. the prior
-      // run's 1-row meta append in back-to-back runs) must not be
-      // captured in its place.
-      val obsName = s"ingest_stats_${java.util.UUID.randomUUID()}"
-      val obs = org.apache.spark.sql.Observation(obsName)
-      val observed = data.observe(
+      // while uploading, `main.py:228-230`). An Observation, because the
+      // write command runs its own QueryExecution.
+      val obs = org.apache.spark.sql.Observation()
+      val observed = typed(raw).observe(
         obs,
         max(col("transaction_date")).as("max_ts"),
         count(lit(1)).as("n_rows")
       )
-      // Capture the write's QueryExecution for op-13 metric recovery
-      // (the listener bus is async — latch before reading). Ownership
-      // check: the analyzed plan must carry this run's observation. The
-      // plan STRING is matched (CollectMetrics prints its name) because
-      // write commands hold their query as innerChildren, which tree
-      // traversal skips but toString prints.
-      def ownsObservation(q: org.apache.spark.sql.execution.QueryExecution): Boolean =
-        scala.util.Try(q.analyzed.toString.contains(obsName)).getOrElse(false)
-      val qeLatch = new java.util.concurrent.CountDownLatch(1)
-      @volatile var writeQe: org.apache.spark.sql.execution.QueryExecution = null
-      val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
-        def onSuccess(f: String, q: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit = {
-          if (writeQe == null && ownsObservation(q)) { writeQe = q; qeLatch.countDown() }
-        }
-        def onFailure(f: String, q: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
-          ()
-      }
-      spark.listenerManager.register(qeListener)
-      val pipelineUs =
-        try {
-          // ops 10-11: full-refresh bulk load — the ONE job over the input
-          // (strict-date abort fires in this scan, §1.6).
-          rethrowMalformed(dataSink.overwrite(observed))
-          if (qeLatch.await(10, java.util.concurrent.TimeUnit.SECONDS) && writeQe != null)
-            recoverStageMetrics(writeQe)
-          else 0L
-        } finally spark.listenerManager.unregister(qeListener)
-      val wrUs = (System.nanoTime() - wr0) / 1000
+      val convertUs = lapUs()
+      // ops 10-11: full-refresh bulk load — the ONE job over the input
+      // (strict-date abort fires in this scan, §1.6).
+      rethrowMalformed(dataSink.overwrite(observed))
+      val writeUs = lapUs()
 
       val stats = obs.get
       val maxTs = Option(stats("max_ts").asInstanceOf[Timestamp])
@@ -377,21 +344,12 @@ object Ingest {
         process_complete_timestamp = end,
         process_duration_us = (System.nanoTime() - t0) / 1000,
         download_duration_us = dlUs,
-        // op-13 recovery: the fused scan+datetime-convert executor
-        // pipeline, from the engine's own metrics (ms granularity — can
-        // legitimately be 0 for sub-ms pipelines). The convert share is
-        // not separable from the read (whole-stage codegen), so it is
-        // reported fused here and 0 below, documented. NOTE: pipelineTime
-        // sums across concurrent tasks — on multi-split input this is
-        // AGGREGATE EXECUTOR TIME and can exceed the write's wall clock
-        // (upload_duration_us then clamps to 0); the reference's
-        // single-threaded run has no such distinction to preserve.
-        read_duration_us = pipelineUs,
-        datetime_convert_duration_us = 0L, // fused into read_duration_us
-        write_duration_us = wrUs,
-        // sink-side share of the write job: wall minus the fused
-        // scan/convert pipeline (reference: database_upload_duration)
-        upload_duration_us = math.max(0L, wrUs - pipelineUs)
+        read_duration_us = readUs,
+        datetime_convert_duration_us = convertUs,
+        write_duration_us = writeUs,
+        // the sink's load (reference: database_upload_duration) runs
+        // inside the overwrite, so it is part of write_duration_us
+        upload_duration_us = 0L
       )
       // op-12: single-row append to the metadata table.
       import spark.implicits._

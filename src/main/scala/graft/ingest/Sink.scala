@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 /** Sink abstraction (SURVEY §7.1): isolates the reference's two write
   * targets — the TRUNCATE+COPY full refresh of `pp_complete_data`
   * (ops 10-11, `main.py:194-251`) and the append-only metadata insert
-  * (op-12, `main.py:274-295`) — so a JDBC/COPY implementation can drop
-  * in where Parquet stands in for Postgres.
+  * (op-12, `main.py:274-295`) — so the COPY implementation
+  * ([[CopySink]]) can drop in where Parquet stands in for Postgres.
   */
 trait Sink {
   /** Full-refresh write (reference: TRUNCATE + COPY in one txn). */
@@ -25,21 +25,6 @@ final case class ParquetSink(path: String) extends Sink {
     df.write.mode(SaveMode.Overwrite).parquet(path)
   def append(df: DataFrame): Unit =
     df.write.mode(SaveMode.Append).parquet(path)
-}
-
-/** JDBC sink shape for real-Postgres parity. Plain JDBC batching for
-  * appends; the full refresh uses the writer's `truncate` option
-  * (reference op-11). For true `COPY FROM STDIN` speed use [[CopySink]].
-  */
-final case class JdbcSink(cfg: Config, table: String) extends Sink {
-  def overwrite(df: DataFrame): Unit =
-    df.write
-      .mode(SaveMode.Overwrite)
-      .option("truncate", "true") // TRUNCATE + reload, not DROP+CREATE
-      .jdbc(cfg.jdbcUrl, table, cfg.jdbcProperties)
-
-  def append(df: DataFrame): Unit =
-    df.write.mode(SaveMode.Append).jdbc(cfg.jdbcUrl, table, cfg.jdbcProperties)
 }
 
 /** One executor-side COPY channel. The pgjdbc adapter is

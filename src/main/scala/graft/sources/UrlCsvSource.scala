@@ -19,9 +19,9 @@ import graft.ingest.PPComplete
   * Reads a headerless CSV from any `http(s)://` or `file://` URL with
   * the reference's exact NULL discipline (§1.5: quoted-empty stays '',
   * the bare token `\N` is the only NULL) straight into the 16-column
-  * all-string pp-complete schema. Unlike the driver-side
-  * `Ingest.fetchToLocal` + `spark.read.csv` two-step, the transfer
-  * happens inside an executor task.
+  * all-string pp-complete schema. Unlike `Ingest.run`, which fetches
+  * on the driver (`Ingest.fetchToLocal`) and then text-scans the local
+  * copy (`Ingest.readRaw`), the transfer happens inside an executor task.
   *
   * Scale notes: a single URL is one InputPartition — a remote CSV
   * stream has no split points (no range requests assumed, and quoted

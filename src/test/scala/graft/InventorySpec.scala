@@ -253,4 +253,9 @@ class InventorySpec extends AnyFunSuite {
       case None => fail("SURVEY.md closing gate sentence not found / format drifted")
     }
   }
+
+  test("subset filter: SPARK_GRAFT_ONLY names are trimmed and empty entries dropped") {
+    assert(SparkEntry.subset(None).isEmpty)
+    assert(SparkEntry.subset(Some(" q_a, q_b,,q_c ,")).contains(Set("q_a", "q_b", "q_c")))
+  }
 }
