@@ -166,71 +166,44 @@ object Ingest {
         try_to_timestamp(element_at(parts, 3), lit(PPComplete.dateTimeFormat))).isNull,
         lit("bad_date"))
       .otherwise(lit("ok"))
-    // the three sinks publish ATOMICALLY (r12 ADVICE): all writes land
-    // in a scratch sibling and ONE rename exposes them, so a crash
-    // between the staging write and the sink writes can never leave a
-    // partially-routed outDir that a path-reusing caller reads as
-    // complete. Completeness = all three sinks' _SUCCESS markers AND a
-    // content key of the INPUT (path + size + mtime, the sourceKey
-    // idiom) published with the layout — without it, a caller reusing
-    // an outDir with a different source file silently got the previous
-    // run's routing (r13 ADVICE).
-    val inputKey = graft.ops.Staged.sourceKey(Seq(path))
-    val keyFile = "_graft_input_key"
-    def publishedKey(): Option[String] = {
-      val kp = new org.apache.hadoop.fs.Path(s"$outDir/$keyFile")
-      val kfs = kp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!kfs.exists(kp)) None
-      else {
-        val in = kfs.open(kp)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-        finally in.close()
+    // the three sinks publish together through Staged: a crash between
+    // the staging write and the sink writes never leaves a routed
+    // outDir that reads as complete, and a reused outDir over a changed
+    // input (or an edited build) is rebuilt
+    graft.ops.Staged.publish(s, outDir, Seq(path)) { tmp =>
+      val staging = s"$tmp/staging"
+      s.read.text(path)
+        .select(col("value"), reason.as("reason"))
+        .write.mode("overwrite").partitionBy("reason").parquet(staging)
+      val fs = new org.apache.hadoop.fs.Path(staging)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      def stagedOr(reasons: Seq[String], schema: org.apache.spark.sql.types.StructType): DataFrame = {
+        val dirs = reasons.map(r => s"$staging/reason=$r")
+          .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+        if (dirs.isEmpty)
+          s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
+        else s.read.option("basePath", staging).parquet(dirs: _*)
       }
-    }
-    def complete() = Seq("staging", "clean", "quarantine")
-      .forall(p => graft.ops.Staged.successExists(s, s"$outDir/$p")) &&
-      publishedKey().contains(inputKey)
-    if (!complete()) {
-      graft.ops.Staged.buildAtomically(s, outDir, () => complete()) { tmp =>
-        val staging = s"$tmp/staging"
-        s.read.text(path)
-          .select(col("value"), reason.as("reason"))
-          .write.mode("overwrite").partitionBy("reason").parquet(staging)
-        val fs = new org.apache.hadoop.fs.Path(staging)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        def stagedOr(reasons: Seq[String], schema: org.apache.spark.sql.types.StructType): DataFrame = {
-          val dirs = reasons.map(r => s"$staging/reason=$r")
-            .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-          if (dirs.isEmpty)
-            s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
-          else s.read.option("basePath", staging).parquet(dirs: _*)
-        }
-        val stagedSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("value",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("reason",
-            org.apache.spark.sql.types.StringType)))
-        // clean: §1.5 projection (split again — scan-speed, columnar input)
-        // + §1.6 strict typing; by construction every date here parses, so
-        // the ANSI to_timestamp cannot throw
-        val cleanCols = PPComplete.columns.zipWithIndex.map { case (name, i) =>
-          val f = element_at(split(col("value"), ",", -1), i + 1)
-          when(f === "\\N", lit(null)).otherwise(f).as(name)
-        }
-        typed(stagedOr(Seq("ok"), stagedSchema).select(cleanCols: _*))
-          .write.mode("overwrite").parquet(s"$tmp/clean")
-        stagedOr(Seq("bad_columns", "bad_date"), stagedSchema)
-          .select(
-            element_at(split(col("value"), ",", -1), 1).as("transaction_unique_id"),
-            col("reason"),
-            col("value").as("raw"))
-          .write.mode("overwrite").parquet(s"$tmp/quarantine")
-        // the input's content key rides the atomic publish: a reused
-        // outDir over a CHANGED input reads as incomplete and rebuilds
-        val kp = new org.apache.hadoop.fs.Path(s"$tmp/$keyFile")
-        val kout = kp.getFileSystem(s.sparkContext.hadoopConfiguration).create(kp, true)
-        try kout.write(inputKey.getBytes("UTF-8")) finally kout.close()
+      val stagedSchema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("value",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("reason",
+          org.apache.spark.sql.types.StringType)))
+      // clean: §1.5 projection (split again — scan-speed, columnar input)
+      // + §1.6 strict typing; by construction every date here parses, so
+      // the ANSI to_timestamp cannot throw
+      val cleanCols = PPComplete.columns.zipWithIndex.map { case (name, i) =>
+        val f = element_at(split(col("value"), ",", -1), i + 1)
+        when(f === "\\N", lit(null)).otherwise(f).as(name)
       }
+      typed(stagedOr(Seq("ok"), stagedSchema).select(cleanCols: _*))
+        .write.mode("overwrite").parquet(s"$tmp/clean")
+      stagedOr(Seq("bad_columns", "bad_date"), stagedSchema)
+        .select(
+          element_at(split(col("value"), ",", -1), 1).as("transaction_unique_id"),
+          col("reason"),
+          col("value").as("raw"))
+        .write.mode("overwrite").parquet(s"$tmp/quarantine")
     }
     (s"$outDir/clean", s"$outDir/quarantine")
   }

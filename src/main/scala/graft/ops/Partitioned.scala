@@ -69,8 +69,7 @@ object Partitioned {
       ("orders_b", Tables.orders(s, d).select("o_orderkey", "o_orderpriority"), "o_orderkey"))
     def named(dir: String, t: String) =
       s"graft_bkt_${java.util.UUID.nameUUIDFromBytes(dir.getBytes("UTF-8")).toString.replace("-", "")}_$t"
-    val out = Staged.layout(s, "bkt", Seq(s"$d/lineitem.parquet", s"$d/orders.parquet"),
-        tables.map(t => s"${t._1}/_SUCCESS")) { tmp =>
+    val out = Staged.layout(s, "bkt", Seq(s"$d/lineitem.parquet", s"$d/orders.parquet")) { tmp =>
       for ((t, df, key) <- tables) {
         df.write.bucketBy(8, key).sortBy(key).option("path", s"$tmp/$t").saveAsTable(named(tmp, t))
         s.sql(s"DROP TABLE ${named(tmp, t)}") // an external table: the files stay
@@ -188,9 +187,6 @@ object Partitioned {
   // column; the manifest prunes on any clustered column at FILE
   // granularity without moving data into directories.
 
-  // `m1`: manifest rows name files relative to the layout root
-  private val ClusteredName = "events_clustered_m1"
-
   private[ops] def manifestDir(layout: String): String = s"$layout/_graft_manifest"
 
   /** ts-range-clustered events copy (16 files, disjoint ts ranges) plus
@@ -203,7 +199,7 @@ object Partitioned {
     * manifest files hold. Staged once per sf dir.
     */
   def eventsClustered(s: SparkSession, d: String): String =
-    Staged.layout(s, ClusteredName, eventsSrc(d)) { tmp =>
+    Staged.layout(s, "events_clustered", eventsSrc(d)) { tmp =>
       Tables.events(s, d)
         .repartitionByRange(16, col("ts"))
         .sortWithinPartitions("ts")
@@ -325,8 +321,7 @@ object Partitioned {
     * manifest rows per file instead of the whole manifest.
     */
   private[ops] def eventsBloomLayout(s: SparkSession, d: String): String =
-    // `m1`: manifest rows name files relative to the layout root
-    Staged.layout(s, "events_bloom_m1", eventsSrc(d), Seq("_graft_manifest/_SUCCESS")) { tmp =>
+    Staged.layout(s, "events_bloom", eventsSrc(d)) { tmp =>
       val ev = Tables.events(s, d)
       val mid = ev.agg(max(col("event_id"))).head().getLong(0) / 2
       ev.where(col("event_id") <= mid).repartition(8, col("user_id"))
@@ -452,10 +447,7 @@ object Partitioned {
     * the table, and every earlier version stays byte-identical on disk.
     */
   private[ops] def eventsVersioned(s: SparkSession, d: String): String =
-    // complete = the last version file. The layout key covers the
-    // sources only, so a layout whose version format changes takes a
-    // name no earlier build used.
-    Staged.layout(s, "events_versioned_log", eventsSrc(d), Seq(versionFile(CommitLog, 2)))(
+    Staged.layout(s, "events_versioned_log", eventsSrc(d))(
       buildVersioned(s, d, _, withCompaction = false))
 
   /** Write the versioned layout under `root`, committing v1 (the load)
@@ -553,7 +545,7 @@ object Partitioned {
     * collapse, sub-horizon read failure, and vacuum idempotence).
     */
   private[ops] def vacuumedLayout(s: SparkSession, d: String): String =
-    Staged.layout(s, "events_vacuum_log", eventsSrc(d), Seq(versionFile(CommitLog, 3)))(
+    Staged.layout(s, "events_vacuum_log", eventsSrc(d))(
       buildVersioned(s, d, _, withCompaction = true))
 
   val qVacuum = Q(
@@ -587,7 +579,7 @@ object Partitioned {
     * hash-verifies both the union schema and the null-filling.
     */
   private[ops] def eventsEvolved(s: SparkSession, d: String): DataFrame = {
-    val out = Staged.layout(s, "events_evolved_m1", eventsSrc(d)) { tmp =>
+    val out = Staged.layout(s, "events_evolved", eventsSrc(d)) { tmp =>
       val ev = Tables.events(s, d)
       // old batch: written before `value` existed
       ev.where(col("event_id") % 10 < 8)
@@ -795,7 +787,7 @@ object Partitioned {
     */
   private[ops] def buildDeletionVectors(s: SparkSession, d: String): (String, String) = {
     val layout = eventsClustered(s, d)
-    val dv = Staged.layout(s, s"${ClusteredName}_dv", eventsSrc(d)) { tmp =>
+    val dv = Staged.layout(s, "events_clustered_dv", eventsSrc(d)) { tmp =>
       s.read.parquet(layout)
         .select(
           col("_metadata.file_path").as("file"),
@@ -860,7 +852,7 @@ object Partitioned {
     * surviving row.
     */
   private[ops] def dvCompactedLayout(s: SparkSession, d: String): String =
-    Staged.layout(s, s"${ClusteredName}_dvc", eventsSrc(d)) { tmp =>
+    Staged.layout(s, "events_clustered_dvc", eventsSrc(d)) { tmp =>
       val (layout, dv) = buildDeletionVectors(s, d)
       dropDeleted(s.read.parquet(layout), dv)
         .drop("file", "pos")
@@ -952,8 +944,7 @@ object Partitioned {
     }
   }
 
-  private val CommitLog = "_graft_log"
-  private def commitLogDir(root: String): String = s"$root/$CommitLog"
+  private def commitLogDir(root: String): String = s"$root/_graft_log"
   private def versionFile(logDir: String, v: Int): String =
     f"$logDir/v$v%05d.txt"
 
@@ -1196,10 +1187,7 @@ object Partitioned {
     * doubles them, and either breaks the hash.
     */
   private[ops] def concurrentCommitLayout(s: SparkSession, d: String): String =
-    // completeness = the v3 manifest exists (base + two racing appends);
-    // version files publish atomically LAST per commit, so this is the
-    // layout's _SUCCESS analogue
-    Staged.layout(s, "events_cc_commit", eventsSrc(d), Seq(versionFile(CommitLog, 3))) { tmp =>
+    Staged.layout(s, "events_cc_commit", eventsSrc(d)) { tmp =>
       val log = commitLogDir(tmp)
       val ev = Tables.events(s, d)
       ev.where(col("event_id") % 10 < 8)
@@ -1237,8 +1225,7 @@ object Partitioned {
     * replay breaks the hash.
     */
   private[ops] def checkpointCommitLayout(s: SparkSession, d: String): String =
-    Staged.layout(s, "events_ckpt_commit", eventsSrc(d),
-        Seq(checkpointFile(CommitLog, CheckpointInterval))) { tmp =>
+    Staged.layout(s, "events_ckpt_commit", eventsSrc(d)) { tmp =>
       val log = commitLogDir(tmp)
       Tables.events(s, d)
         .repartitionByRange(14, col("event_id"))

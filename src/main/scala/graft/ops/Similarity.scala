@@ -977,11 +977,8 @@ object Similarity {
     * invalidates every bucket key in the store. Content-keyed cache +
     * atomic whole-layout publish, as [[ivfSubLayout]].
     */
-  def ivfSegmentedLayout(s: SparkSession, d: String): String = {
-    val parts = for {
-      seg <- Seq("seg_a", "seg_b"); p <- Seq("data", "meta.parquet")
-    } yield s"$seg/$p"
-    Staged.layout(s, "ivf_segs", embSrc(d), parts.map(p => s"$p/_SUCCESS")) { tmp =>
+  def ivfSegmentedLayout(s: SparkSession, d: String): String =
+    Staged.layout(s, "ivf_segs", embSrc(d)) { tmp =>
       for ((seg, pred) <- Seq(
           ("seg_a", col("vec_id") % 10 < 9),
           ("seg_b", col("vec_id") % 10 >= 9))) {
@@ -993,7 +990,6 @@ object Similarity {
           .write.mode("overwrite").parquet(s"$tmp/$seg/meta.parquet")
       }
     }
-  }
 
   /** Segment metadata (dataDir, n, b) read back from the layout's 1-row
     * meta files — two 1-row driver reads per probe, never a
@@ -1098,8 +1094,6 @@ object Similarity {
               false, conf)
         }
       }
-      if (rebucket.isEmpty)
-        fs.create(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")).close()
     }
   }
 

@@ -1,19 +1,27 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Staged input layouts: the one place that decides how a derived
+/** Staged input layouts: the one place that decides whether a derived
   * input layout (a partitioned or clustered copy, an index, a replay
-  * staging) is named, keyed, guarded and published.
+  * staging, the quarantine ingest's sinks) is current and complete.
   *
-  * A layout lives at `${java.io.tmpdir}/graft_<name>_<key>`, where the
-  * key is an md5 of every source's path, size and mtime ([[sourceKey]]),
-  * so regenerated source data always gets a fresh directory. A miss
-  * builds the layout in a private sibling directory and publishes it
-  * with one rename ([[buildAtomically]]), so readers see a complete
-  * layout or none. The key does not cover the build code: a change to
-  * what a layout's build writes must rename the layout (the `_m1`,
-  * `_m2` suffixes), or the old layout keeps serving.
+  * The key is an md5 over every source's path, size and mtime, and over
+  * the bytes of the class that defines the `build` closure: the
+  * lambda's implementation class, such as `graft.ops.Partitioned$` for a
+  * closure written in `Partitioned`. So regenerated source data and an
+  * edited build class both get a fresh key. Helpers the build calls in
+  * other classes (`Tables.events`, `QueueBroker.writeShardLogs`,
+  * `AvroIo.write`) are not covered: an edit there keeps the old key.
+  *
+  * A miss builds into a private sibling directory, writes the marker
+  * [[Marker]] holding the key into it, and publishes it with one rename
+  * ([[buildAtomically]]). A layout is complete exactly when its marker
+  * holds the expected key, so readers see a complete, current layout or
+  * none. A layout that records paths of its own files must record them
+  * relative to its root, because `build` writes under a directory that
+  * is renamed afterwards.
   */
 object Staged {
 
@@ -40,40 +48,59 @@ object Staged {
     }
   }
 
-  /** Location of the layout `name` over `sources`, built or not. */
-  def path(name: String, sources: Seq[String]): String =
-    s"$root/graft_${name}_${sourceKey(sources)}"
+  /** The file, at a layout's root, whose content is the layout's key. */
+  private[ops] val Marker = "_graft_staged"
 
-  /** The staged layout `name` over `sources`: its path, after `build`
-    * has written it into a private directory and that directory has
-    * been published, unless a complete layout is already there.
-    * `complete` lists the files, relative to the layout root, whose
-    * presence marks the layout complete. A layout that records paths
-    * of its own files must record them relative to its root, because
-    * `build` writes under a directory that is renamed afterwards.
+  /** A per-run output location named after `sources` only; nothing is
+    * built or cached there.
     */
-  def layout(s: SparkSession, name: String, sources: Seq[String],
-      complete: Seq[String] = Seq("_SUCCESS"))(build: String => Unit): String = {
-    val out = path(name, sources)
-    def done() = complete.forall { f =>
-      val p = new org.apache.hadoop.fs.Path(s"$out/$f")
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-    }
-    if (!done()) buildAtomically(s, out, () => done())(build)
+  def path(name: String, sources: Seq[String]): String =
+    s"$root/graft_${name}_${md5(signature(sources))}"
+
+  /** The staged layout `name` over `sources`, at
+    * `${root}/graft_<name>_<key>`: built by `build` unless it is
+    * already current.
+    */
+  def layout(s: SparkSession, name: String, sources: Seq[String])(build: String => Unit): String = {
+    val k = key(sources, build)
+    val out = s"$root/graft_${name}_$k"
+    ensure(s, out, k)(build)
     out
   }
 
-  /** Cache key for a derived layout: the SOURCE PATH plus the source
-    * file's size and mtime — regenerated testdata at the same path gets
-    * a fresh key, so a stale /tmp layout from a previous corpus can
-    * never serve (it would silently diverge from the oracle, which
-    * always reads the live file). Full md5 of the signature, not a
-    * 32-bit hash: at 2³² a birthday collision between two corpora is a
-    * real hazard for a shared tmpdir, and a collision here silently
-    * serves the WRONG index.
+  /** Publishes `build`'s output at the caller-chosen `out` under the
+    * same rule as [[layout]]: nothing runs while `out` is current for
+    * `sources` and `build`, and an `out` of any other key is replaced.
     */
-  private[graft] def sourceKey(paths: Seq[String]): String = {
-    val sig = paths.map { p =>
+  def publish(s: SparkSession, out: String, sources: Seq[String])(build: String => Unit): Unit =
+    ensure(s, out, key(sources, build))(build)
+
+  private def ensure(s: SparkSession, out: String, k: String)(build: String => Unit): Unit =
+    if (!current(s, out, k)) buildAtomically(s, out, k, () => current(s, out, k))(build)
+
+  /** Whether `out`'s marker holds `k`, read through the Hadoop
+    * FileSystem (a `java.io.File` check always misses on a non-local
+    * deployment and would rebuild on every call).
+    */
+  private[ops] def current(s: SparkSession, out: String, k: String): Boolean = {
+    val p = new Path(out, Marker)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    try {
+      val in = fs.open(p)
+      try new String(in.readAllBytes(), "UTF-8") == k finally in.close()
+    } catch { case _: java.io.FileNotFoundException => false }
+  }
+
+  private[ops] def key(sources: Seq[String], build: AnyRef): String =
+    md5(s"${signature(sources)}|${buildDigest(build)}")
+
+  /** Every source's path, size and mtime: regenerated data at the same
+    * path gets a fresh key, so a layout of a previous corpus never
+    * serves (it would silently diverge from the oracle, which always
+    * reads the live file).
+    */
+  private def signature(paths: Seq[String]): String =
+    paths.map { p =>
       val f = java.nio.file.Paths.get(p)
       val (sz, mt) =
         if (java.nio.file.Files.exists(f))
@@ -81,81 +108,88 @@ object Staged {
         else (0L, 0L)
       s"$p:$sz:$mt"
     }.mkString("|")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(sig.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  /** Full md5, not a 32-bit hash: at 2³² a birthday collision between
+    * two corpora is a real hazard for a shared tmpdir, and a collision
+    * here silently serves the WRONG layout.
+    */
+  private def md5(bytes: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("MD5").digest(bytes).map("%02x".format(_)).mkString
+
+  private def md5(text: String): String = md5(text.getBytes("UTF-8"))
+
+  private val classDigests = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** md5 of the class file that defines `build`, read once per JVM. A
+    * Scala lambda's own class is a hidden class whose name carries a
+    * per-JVM counter, so the key takes its implementation class from
+    * the lambda's serialized form (every Scala lambda is serializable).
+    * A build whose class file cannot be read fails: a key of the
+    * sources alone could serve a stale layout.
+    */
+  private def buildDigest(build: AnyRef): String = {
+    val c = build.getClass
+    val replace = c.getDeclaredMethod("writeReplace")
+    replace.setAccessible(true)
+    val defining = replace.invoke(build).asInstanceOf[java.lang.invoke.SerializedLambda].getImplClass
+    classDigests.computeIfAbsent(defining, name => {
+      val in = c.getClassLoader.getResourceAsStream(s"$name.class")
+      if (in == null)
+        throw new IllegalStateException(s"cannot read $name.class, which defines a staged layout's build")
+      try md5(in.readAllBytes()) finally in.close()
+    })
   }
 
-  /** Multi-file layout builds are NOT atomic by default: a concurrent
-    * builder of the same key (or a crash between part writes) could
-    * leave a partially-overwritten layout whose parts disagree. This
-    * helper gives the standard fix — build every part under a private
-    * temp dir, then RENAME the whole dir into place (one FS metadata op
-    * on a local/HDFS filesystem); a racer that finds the target already
-    * renamed discards its own build. Readers therefore only ever see a
-    * complete layout or none.
-    *
-    * `complete` is the caller's layout-completeness predicate (defaults
-    * to a top-level `_SUCCESS` probe; multi-part layouts pass their own
-    * all-parts check). A pre-existing target is deleted ONLY while it
-    * is known-incomplete (a crashed earlier build) — a PUBLISHED layout
-    * is never deleted, so a concurrent reader of the live path cannot
-    * hit missing files mid-swap.
+  /** Runs `build` into a private sibling of `out`, writes the marker
+    * holding `k` into it, then RENAMES the whole directory into place
+    * (one FS metadata op on a local/HDFS filesystem), so a concurrent
+    * builder of the same key or a crash between part writes never
+    * leaves a layout whose parts disagree. A target that is not
+    * current (a crashed earlier build, or a caller-chosen `out` of
+    * another key) is deleted first; a current one is never touched, so
+    * a concurrent reader cannot hit missing files mid-swap.
     *
     * Race handling is Hadoop-rename-aware: `fs.rename(tmp, out)` onto
     * an EXISTING directory does not refuse — HDFS (and the local FS's
     * copy fallback) moves tmp INTO the target as a child and returns
     * true, which would silently nest a loser's full duplicate build
     * inside the published layout (duplicate rows on recursive
-    * listings). So a racer (1) re-checks completeness immediately
+    * listings). So a racer (1) re-checks `isCurrent` immediately
     * before renaming and discards its tmp if a winner is already in
     * place, and (2) after a "successful" rename verifies that
     * `out/<tmp-basename>` does NOT exist — if it does, the rename was
     * actually a nest-into-winner, so the nested copy is deleted and
-    * the race treated as lost. A rename failure with a complete winner
+    * the race treated as lost. A rename failure with a current winner
     * in place is likewise a lost race (discard tmp); a rename failure
     * with NO winner throws instead of silently returning a path that
     * doesn't exist.
     */
-  private[graft] def buildAtomically(s: SparkSession, out: String,
-      complete: () => Boolean = null)(
-      build: String => Unit): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val outPath = new org.apache.hadoop.fs.Path(out)
-    val fs = outPath.getFileSystem(conf)
-    val isComplete: () => Boolean =
-      if (complete != null) complete else () => successExists(s, out)
-    val tmp = new org.apache.hadoop.fs.Path(
-      out + ".build-" + java.util.UUID.randomUUID().toString)
+  private[ops] def buildAtomically(s: SparkSession, out: String, k: String,
+      isCurrent: () => Boolean)(build: String => Unit): Unit = {
+    val outPath = new Path(out)
+    val fs = outPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val tmp = new Path(out + ".build-" + java.util.UUID.randomUUID().toString)
     build(tmp.toString)
-    if (fs.exists(outPath) && !isComplete()) fs.delete(outPath, true)
-    // lost-race fast path: a complete winner published while we built
-    if (isComplete()) { fs.delete(tmp, true); return }
+    val marker = fs.create(new Path(tmp, Marker), true)
+    try marker.write(k.getBytes("UTF-8")) finally marker.close()
+    if (fs.exists(outPath) && !isCurrent()) fs.delete(outPath, true)
+    // lost-race fast path: a current winner published while we built
+    if (isCurrent()) { fs.delete(tmp, true); return }
     if (!fs.rename(tmp, outPath)) {
       fs.delete(tmp, true)
-      if (!isComplete())
+      if (!isCurrent())
         throw new java.io.IOException(
-          s"atomic publish of $out failed: rename refused and no complete layout occupies the target")
+          s"atomic publish of $out failed: rename refused and no current layout occupies the target")
     } else {
       // rename returned true — but if a winner appeared between the
-      // completeness check and the rename, Hadoop moved tmp INTO it as
-      // a child rather than refusing. Detect and discard the nested
-      // duplicate; the winner's layout stays published.
-      val nested = new org.apache.hadoop.fs.Path(outPath, tmp.getName)
+      // check and the rename, Hadoop moved tmp INTO it as a child
+      // rather than refusing. Detect and discard the nested duplicate;
+      // the winner's layout stays published.
+      val nested = new Path(outPath, tmp.getName)
       if (fs.exists(nested)) fs.delete(nested, true)
-      if (!isComplete())
+      if (!isCurrent())
         throw new java.io.IOException(
-          s"atomic publish of $out failed: rename landed but the layout is incomplete")
+          s"atomic publish of $out failed: rename landed but the layout is not current")
     }
-  }
-
-  /** Cached-layout guard through the HADOOP FileSystem, not java.io —
-    * on any non-local deployment (the object-store layouts these
-    * queries model) a `java.io.File` check always misses, silently
-    * rewriting the layout on every invocation. Same FS resolution as
-    * the writes/listings it guards.
-    */
-  private[graft] def successExists(s: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
   }
 }

@@ -865,13 +865,6 @@ object TextOps {
             ORDER BY term, block_id""")
   )
 
-  /** The three parts of an index segment, each a parquet directory. */
-  private val segmentParts = Seq("postings.parquet", "dict.parquet", "stats.parquet")
-
-  /** The completion markers of the segment parts under `prefix`. */
-  private def segmentMarkers(prefix: String): Seq[String] =
-    segmentParts.map(p => s"$prefix$p/_SUCCESS")
-
   /** THE segment writer: index `docs` into `dir` as the three files a
     * lexical index actually ships —
     *
@@ -918,7 +911,7 @@ object TextOps {
     * system amortizes across queries.
     */
   def invertedIndexLayout(s: org.apache.spark.sql.SparkSession, d: String): String =
-    Staged.layout(s, "bm25_index", docsSrc(d), segmentMarkers("")) { tmp =>
+    Staged.layout(s, "bm25_index", docsSrc(d)) { tmp =>
       writeSegment(s, documents(s, d), tmp)
     }
 
@@ -930,7 +923,7 @@ object TextOps {
     */
   private def segmentsLayout(s: org.apache.spark.sql.SparkSession, d: String,
       name: String, segs: Seq[(String, Column)]): String =
-    Staged.layout(s, name, docsSrc(d), segs.flatMap { case (seg, _) => segmentMarkers(s"$seg/") }) { tmp =>
+    Staged.layout(s, name, docsSrc(d)) { tmp =>
       for ((seg, pred) <- segs) writeSegment(s, documents(s, d).where(pred), s"$tmp/$seg")
     }
 
@@ -1679,7 +1672,7 @@ object TextOps {
 
   def mergedSegmentLayout(s: org.apache.spark.sql.SparkSession, d: String): String = {
     val segs = segmentedIndexLayout(s, d)
-    Staged.layout(s, "bm25_merged", docsSrc(d), segmentMarkers("")) { tmp =>
+    Staged.layout(s, "bm25_merged", docsSrc(d)) { tmp =>
       writeMergedSegment(s, Seq(s"$segs/seg_a", s"$segs/seg_b"), tmp)
     }
   }
@@ -1753,7 +1746,7 @@ object TextOps {
     * replays to prove each step chose the two smallest then-live
     * segments. An intermediate merge (`m<gen>`) that a later step
     * folds again is deleted once consumed, so the published layout
-    * holds only `final_i` and the log (`_m1`). Driver work is
+    * holds only `final_i` and the log. Driver work is
     * |segments| one-row stats reads + the loop counter; every data
     * move is a distributed index-algebra merge: cost ∝ index size, the
     * corpus is never re-scanned.
@@ -1762,9 +1755,7 @@ object TextOps {
 
   def tieredIndexLayout(s: org.apache.spark.sql.SparkSession, d: String): String = {
     val multi = multiSegmentIndexLayout(s, d)
-    val parts = (0 until TieredK).flatMap(i => segmentMarkers(s"final_$i/")) :+
-      "merge_log.parquet/_SUCCESS"
-    Staged.layout(s, "bm25_tiered_m1", docsSrc(d), parts) { tmp =>
+    Staged.layout(s, "bm25_tiered", docsSrc(d)) { tmp =>
       def nDocs(dir: String): Long =
         s.read.parquet(s"$dir/stats.parquet").head().getAs[Long]("n_docs")
       val fs = new org.apache.hadoop.fs.Path(tmp)

@@ -738,7 +738,6 @@ object Replay {
       val p = Paths.get(tmp)
       Files.createDirectories(p)
       build(p)
-      Files.write(p.resolve("_SUCCESS"), Array.emptyByteArray)
     }
     val live = Files.createTempDirectory(s"replay-$tag-in-")
     val listing = Files.list(Paths.get(root))
@@ -771,7 +770,7 @@ object Replay {
       import java.nio.file.{Files, Paths, StandardCopyOption}
       // Files.copy on a DIRECTORY-style dataset would copy an empty dir
       // entry and the replay source would silently read zero data rows —
-      // fail loudly instead (the successExists hadoop-FS discipline)
+      // fail loudly instead
       require(Files.isRegularFile(Paths.get(src)),
         s"replay fixture must be a single-file parquet dataset: $src")
       Files.copy(Paths.get(src), live.resolve("00.parquet"), StandardCopyOption.REPLACE_EXISTING)
@@ -836,8 +835,6 @@ object Replay {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tmp))
       val n = graft.sources.QueueBroker.writeShardLogs(df, tmp)
       require(n == nShards, s"staged $n shards, expected $nShards")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(tmp, "_SUCCESS"), Array.emptyByteArray)
     }
     linkInto(liveDir, (0 until nShards).flatMap(i =>
       Seq(f"shard-$i%05d.log", f"shard-$i%05d.count").map(java.nio.file.Paths.get(root, _))))
@@ -1781,12 +1778,7 @@ object Replay {
     * identical serve contract.)
     */
   private[graft] def pitReplayDir(s: SparkSession, d: String): java.nio.file.Path =
-    // the weekly layout is a pure function of events.parquet, so it
-    // publishes once under the content-keyed cache and each replay
-    // links it (r15 — the r14 VERDICT ruling extending the queue-shard
-    // staging idiom to this layout; the maxFilesPerTrigger=1 per-week
-    // commit ordering below is SEMANTIC and unchanged)
-    linkedStagedLayout(s, "pit_m1", Seq(s"$d/events.parquet")) { live =>
+    linkedStagedLayout(s, "pit", Seq(s"$d/events.parquet")) { live =>
       val staged = graft.ops.Tables.events(s, d)
         .where(col("event_type").isin("purchase", "click"))
         .select(

@@ -213,6 +213,27 @@ class IngestSpec extends SparkSpec {
     assert(spark.read.parquet(quar).count() == 0)
   }
 
+  test("quarantine ingest: a reused outDir is rebuilt only for a different input") {
+    val fix = graft.ops.IngestQueries.quarantineFixturePath
+    val out = Files.createTempDirectory("quarantine-spec5-").toString
+    val marker = java.nio.file.Paths.get(out, "_graft_staged")
+    Ingest.quarantineIngest(spark, fix, out)
+    val built = Files.getLastModifiedTime(marker)
+    val cleanFiles = new java.io.File(s"$out/clean").list().toSet
+    // the same input: no build runs, so the marker and the sink files stay
+    Ingest.quarantineIngest(spark, fix, out)
+    assert(Files.getLastModifiedTime(marker) == built)
+    assert(new java.io.File(s"$out/clean").list().toSet == cleanFiles)
+    // a different input: rebuilt, and routes the new input's rows
+    val lines = Files.readAllLines(java.nio.file.Paths.get(fix)).toArray(Array.empty[String])
+    val other = Files.createTempFile("quarantine-other-", ".csv")
+    Files.writeString(other, (lines.filter(_.startsWith("{Q")).take(4) ++
+      lines.filter(_.startsWith("{R")).take(1)).mkString("\n"))
+    val (clean, quar) = Ingest.quarantineIngest(spark, other.toString, out)
+    assert(spark.read.parquet(clean).count() == 4)
+    assert(spark.read.parquet(quar).collect().map(_.getString(1)).toSeq == Seq("bad_date"))
+  }
+
   test("q_ingest_quarantine registers its sink dir for reclamation at JVM exit") {
     val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
     def sinkDirs(): Set[java.nio.file.Path] = {

@@ -199,7 +199,9 @@ class TextOpsSpec extends SparkSpec {
       spark.read.parquet(s"$dir/$part").collect().map(_.toSeq).toSeq
     // (1) termination: exactly the final_i dirs, i < K — no stray
     // segment, and no consumed intermediate merge left as dead data
-    val entries = new java.io.File(tiered).listFiles().map(_.getName).sorted.toSeq
+    // (the Staged marker and its checksum are the layout's own metadata)
+    val entries = new java.io.File(tiered).listFiles().map(_.getName)
+      .filterNot(_.contains(Staged.Marker)).sorted.toSeq
     val finals = entries.filter(_.startsWith("final_"))
     assert(finals == (0 until TextOps.TieredK).map(i => s"final_$i"),
       s"policy left the wrong segment set: $finals")
